@@ -313,14 +313,11 @@ class RestCatalog:
         local-only refs survive). Remote refs whose snapshot is missing
         from this warehouse's metadata are skipped — shared-storage
         deployments never hit this, it guards a partial mirror."""
-        import fcntl
         import os
 
         table = self.load_table(namespace, name)
         remote, _ = self.remote_refs(namespace, name)
-        lock_path = os.path.join(table.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with table._commit_lock():
             tags, branches = table._load_refs()
             skipped = {}
             for kind, local in (("tags", tags), ("branches", branches)):

@@ -33,7 +33,9 @@ Layout per table::
 Commit protocol: writers stage parquet under ``data/`` (invisible —
 readers only see files listed in committed metadata), then write
 ``v{N+1}.metadata.json`` and atomically swap ``VERSION`` from N to
-N+1 under an O_EXCL lock with a parent-version check — the same
+N+1 under the table's flock'd ``_commit.lock`` with a parent-version
+check (all through the I/O seam: ``_locked`` / ``_atomic_write`` /
+``_move_staged``) — the same
 optimistic pattern as the reference's SELECT FOR UPDATE + requirements
 validation + pointer UPDATE (pg_catalog.cpp:264-325).
 
@@ -58,6 +60,7 @@ Scale posture (100 TB):
 from __future__ import annotations
 
 import contextlib
+import copy
 import fcntl
 import glob
 import json
@@ -122,6 +125,50 @@ def _segment_seed(abs_path: str, entries: list[dict]) -> None:
     with _SEG_CACHE_LOCK:
         if len(_SEG_CACHE) < _SEG_CACHE_MAX:
             _SEG_CACHE[abs_path] = entries
+
+
+# --- commit I/O seam ---------------------------------------------------
+# Every lock, every durable metadata write and every staged-file move in
+# this module goes through these three helpers, so the lock/fsync
+# protocol lives in one place (and one place is where a test fails it).
+
+
+@contextlib.contextmanager
+def _locked(path: str):
+    """Hold an exclusive ``flock`` on ``path`` (created on demand)."""
+    with open(path, "w") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX)
+        yield
+
+
+def _atomic_write(path: str, data) -> None:
+    """Replace ``path`` with ``data`` (text as is, anything else as
+    JSON) so a crash leaves the old or the new content, never a torn
+    file: write ``path.tmp``, fsync it, rename it over ``path``, then
+    fsync the directory so the rename itself is durable."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        if isinstance(data, str):
+            f.write(data)
+        else:
+            json.dump(data, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    fd = os.open(os.path.dirname(path), os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _move_staged(staging: str, dest_dir: str, name: str) -> str:
+    """Rename one staged file into ``dest_dir`` as ``name``; returns the
+    new path. The file stays invisible until a commit lists it."""
+    os.makedirs(dest_dir, exist_ok=True)
+    dst = os.path.join(dest_dir, name)
+    os.rename(staging, dst)
+    return dst
 
 
 _SQL_STR_LIT = __import__("re").compile(r"'(?:[^']|'')*'")
@@ -666,6 +713,11 @@ class LakeTable:
     def _pointer_path(self) -> str:
         return os.path.join(self.meta_dir, _POINTER)
 
+    def _commit_lock(self):
+        """The table's commit lock: every metadata, ref and pointer
+        mutation of this table happens under it."""
+        return _locked(os.path.join(self.meta_dir, "_commit.lock"))
+
     def current_version(self) -> int:
         """Head version of THIS handle's ref — the pointer file for
         main, the branch ref otherwise."""
@@ -714,38 +766,30 @@ class LakeTable:
     def branches(self) -> dict[str, int]:
         return self._load_refs()[1]
 
-    def _write_refs(self, tags: dict, branches: dict | None = None) -> None:
-        if branches is None:  # legacy single-arg call sites
-            branches = self._load_refs()[1]
-        tmp = self._refs_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"__format__": 2, "tags": tags, "branches": branches}, f
-            )
-        os.replace(tmp, self._refs_path())
+    def _write_refs(self, tags: dict, branches: dict) -> None:
+        _atomic_write(
+            self._refs_path(),
+            {"__format__": 2, "tags": tags, "branches": branches},
+        )
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Pin a snapshot under a stable name (`VERSION AS OF 'name'`
         reads; expiry never drops a tagged snapshot)."""
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             v = self.current_version() if version is None else version
             self.snapshot(v)  # must exist
-            refs = self.tags()
-            refs[name] = v
-            self._write_refs(refs)
+            tags, branches = self._load_refs()
+            tags[name] = v
+            self._write_refs(tags, branches)
             return v
 
     def drop_tag(self, name: str) -> None:
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            refs = self.tags()
-            if name not in refs:
+        with self._commit_lock():
+            tags, branches = self._load_refs()
+            if name not in tags:
                 raise LakehouseError(f"no such tag: {name!r}")
-            del refs[name]
-            self._write_refs(refs)
+            del tags[name]
+            self._write_refs(tags, branches)
 
     def _resolve_version(self, version) -> int:
         if isinstance(version, str):
@@ -766,20 +810,16 @@ class LakeTable:
         every write API (append/delete/update/merge/compact/...)
         advances the branch ref and leaves main untouched — the WAP
         (write-audit-publish) staging surface."""
-        import copy as _copy
-
         if name != "main" and name not in self.branches():
             raise LakehouseError(f"no such branch: {name!r}")
-        t = _copy.copy(self)
+        t = copy.copy(self)
         t.branch = name
         return t
 
     def create_branch(self, name: str, at: int | str | None = None) -> int:
         """Fork a writable branch at a snapshot (default: current
         main head). Metadata-only — no data is copied."""
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             tags, branches = self._load_refs()
             if name == "main" or name in branches or name in tags:
                 raise LakehouseError(f"ref already exists: {name!r}")
@@ -794,9 +834,7 @@ class LakeTable:
             return v
 
     def drop_branch(self, name: str) -> None:
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             tags, branches = self._load_refs()
             if name not in branches:
                 raise LakehouseError(f"no such branch: {name!r}")
@@ -817,15 +855,13 @@ class LakeTable:
         — legal only when main is an ancestor of the head (no commits
         landed on main since the fork), which makes the publish a pure
         pointer move, exactly Iceberg's ``fast_forward``."""
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        main = self.for_branch("main")
+        with self._commit_lock():
             tags, branches = self._load_refs()
             if branch not in branches:
                 raise LakehouseError(f"no such branch: {branch!r}")
             head = branches[branch]
-            with open(self._pointer_path()) as f:
-                main_v = int(f.read().strip())
+            main_v = main.current_version()
             if main_v != head and main_v not in self._ancestry(head):
                 raise LakehouseError(
                     f"cannot fast-forward: main v{main_v} is not an "
@@ -833,10 +869,7 @@ class LakeTable:
                     "landed on main since the fork (cherry-pick or "
                     "re-branch instead)"
                 )
-            ptr_tmp = self._pointer_path() + ".tmp"
-            with open(ptr_tmp, "w") as f:
-                f.write(str(head))
-            os.replace(ptr_tmp, self._pointer_path())
+            main._set_head(head)
             return head
 
     def cherry_pick(self, version: int | str) -> Snapshot:
@@ -1115,9 +1148,7 @@ class LakeTable:
         ``schema_meta`` (schema_id / field_ids / schemas /
         next_field_id) is set by the evolve operations; every other
         commit carries the parent's evolution state forward."""
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             snap = self._prepare_snapshot(
                 base_version, operation, files, schema_json,
                 summary=summary, properties=properties,
@@ -1254,10 +1285,7 @@ class LakeTable:
             )
             abs_path = os.path.join(self.meta_dir, rel)
             os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-            tmp = abs_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(delta, f)
-            os.rename(tmp, abs_path)
+            _atomic_write(abs_path, delta)
             _segment_seed(abs_path, delta)
             bounds, seg_sid = _segment_bounds(delta)
             descriptors.append(
@@ -1287,25 +1315,24 @@ class LakeTable:
         """Write the metadata file, then swap this ref's pointer — the
         swap IS the commit (ref pg_catalog.cpp:315-325). Caller must
         hold the commit lock."""
-        meta_path = self._meta_path(snap.version)
         inline_files, descriptors = self._segment_files(snap)
         snap.manifests = descriptors
         d = dict(snap.__dict__)
         d["files"] = inline_files
         d["manifests"] = descriptors
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(d, f)
-        os.rename(tmp, meta_path)
+        _atomic_write(self._meta_path(snap.version), d)
+        self._set_head(snap.version)
+
+    def _set_head(self, version: int) -> None:
+        """Point this handle's ref at ``version``: the pointer file for
+        main, the branch ref otherwise. Caller must hold the commit
+        lock."""
         if self.branch != "main":
             tags, branches = self._load_refs()
-            branches[self.branch] = snap.version
+            branches[self.branch] = version
             self._write_refs(tags, branches)
-            return
-        ptr_tmp = self._pointer_path() + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(str(snap.version))
-        os.replace(ptr_tmp, self._pointer_path())
+        else:
+            _atomic_write(self._pointer_path(), str(version))
 
     # ------------------------------------------------------------------
     # write paths
@@ -1608,7 +1635,6 @@ class LakeTable:
             if part_cols:
                 writer = writer.partitionBy(*part_cols)
             writer.save(staging)
-        os.makedirs(self.data_dir, exist_ok=True)
         entries = []
         data_files = sorted(
             glob.glob(os.path.join(staging, "**", f"*.{fmt}"), recursive=True)
@@ -1619,9 +1645,7 @@ class LakeTable:
             rel_dir = _DATA_DIR if part_dirs == "." else os.path.join(
                 _DATA_DIR, part_dirs
             )
-            os.makedirs(os.path.join(self.location, rel_dir), exist_ok=True)
-            dst = os.path.join(self.location, rel_dir, name)
-            os.rename(src, dst)
+            dst = _move_staged(src, os.path.join(self.location, rel_dir), name)
             if fmt == "parquet":
                 rows, nbytes, ranges, nulls = _parquet_footer_stats(dst)
             else:
@@ -3097,13 +3121,11 @@ class LakeTable:
             f"_staging-del-{snapshot_hint}-{uuid.uuid4().hex[:8]}",
         )
         keys.coalesce(1).write.mode("overwrite").parquet(staging)
-        os.makedirs(deletes_dir, exist_ok=True)
         total = 0
         rel = None
         for src in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
             name = f"d{snapshot_hint}-{uuid.uuid4().hex[:8]}.parquet"
-            dst = os.path.join(deletes_dir, name)
-            os.rename(src, dst)
+            dst = _move_staged(src, deletes_dir, name)
             total += _file_stats(dst)[0]
             rel = os.path.join("_deletes", name)
         shutil.rmtree(staging, ignore_errors=True)
@@ -3510,13 +3532,12 @@ class LakeTable:
             self.location, f"_staging-chg-{snapshot_hint}-{uuid.uuid4().hex[:8]}"
         )
         df.write.mode("overwrite").parquet(staging)
-        os.makedirs(changes_dir, exist_ok=True)
         rels = []
         for i, src in enumerate(
             sorted(glob.glob(os.path.join(staging, "*.parquet")))
         ):
             name = f"c{snapshot_hint}-{uuid.uuid4().hex[:8]}-part{i:05d}.parquet"
-            os.rename(src, os.path.join(changes_dir, name))
+            _move_staged(src, changes_dir, name)
             rels.append(os.path.join("_changes", name))
         shutil.rmtree(staging, ignore_errors=True)
         return rels
@@ -3770,11 +3791,9 @@ class LakeTable:
         # validations it degrades to validating UNDER the lock once,
         # which guarantees progress on a pathologically busy table at
         # the old cost.
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
         probes = 2
         while True:
-            with open(lock_path, "w") as lock:
-                fcntl.flock(lock, fcntl.LOCK_EX)
+            with self._commit_lock():
                 head = self.current_version()
                 if head != base and probes <= 0:
                     # last resort: validate while holding the lock
@@ -4712,9 +4731,7 @@ class LakeTable:
         # delete) merge, whose read set is the whole table — discards
         # this attempt and re-executes against the fresh head.
         touched_paths = {f["path"] for f in touched}
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             stale = False
             if self.current_version() != base:
                 try:
@@ -5056,9 +5073,7 @@ class LakeTable:
             # manifest segments referenced only by expired snapshots —
             # under the commit lock, so a concurrent commit's freshly
             # written (not yet referenced) segment can't be swept
-            lock_path = os.path.join(self.meta_dir, "_commit.lock")
-            with open(lock_path, "w") as lock:
-                fcntl.flock(lock, fcntl.LOCK_EX)
+            with self._commit_lock():
                 live_segs = {
                     m["path"]
                     for s in self.snapshots()
@@ -5086,20 +5101,31 @@ class LakeTable:
         return expired
 
     def remove_orphan_files(self) -> list[str]:
-        """Delete data files referenced by no live snapshot (ref
-        iceberg_cleanup_orphan_files, commit_ops.c:243-272)."""
-        live = {
-            f["path"] for s in self.snapshots() for f in s.files
-        }
+        """Delete data, delete and change files referenced by no live
+        snapshot, and the staging directories of writers that died
+        before publishing (ref iceberg_cleanup_orphan_files,
+        commit_ops.c:243-272). A running writer's staged files are
+        orphans too until it commits: run this with no writer active."""
+        live = set()
+        for s in self.snapshots():
+            live |= {f["path"] for f in s.files}
+            live |= {d["path"] for d in s.delete_files}
+            live |= set(s.change_files)
         removed = []
-        for ext in ("parquet", "orc", "avro"):
-            for p in glob.glob(
-                os.path.join(self.data_dir, "**", f"*.{ext}"), recursive=True
-            ):
+        for pattern in (
+            *(os.path.join(self.data_dir, "**", f"*.{ext}")
+              for ext in ("parquet", "orc", "avro")),
+            os.path.join(self.location, "_deletes", "*.parquet"),
+            os.path.join(self.location, "_changes", "*.parquet"),
+        ):
+            for p in glob.glob(pattern, recursive=True):
                 rel = os.path.relpath(p, self.location)
                 if rel not in live:
                     os.remove(p)
                     removed.append(rel)
+        for p in glob.glob(os.path.join(self.location, "_staging-*")):
+            shutil.rmtree(p)
+            removed.append(os.path.relpath(p, self.location))
         return removed
 
     def _gc_orphan_segments(self) -> list[str]:
@@ -5110,10 +5136,8 @@ class LakeTable:
         seg_dir = os.path.join(self.meta_dir, _MANIFEST_DIR)
         if not os.path.isdir(seg_dir):
             return []
-        lock_path = os.path.join(self.meta_dir, "_commit.lock")
         removed = []
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with self._commit_lock():
             live = {
                 m["path"] for s in self.snapshots() for m in s.manifests
             }
@@ -5135,19 +5159,6 @@ class LakeTable:
             "removed_files": removed,
             "removed_segments": seg_removed,
         }
-
-    def _restore_head(self, version: int) -> None:
-        """Point this ref back at ``version`` (transaction rollback
-        path). Caller must hold the commit lock."""
-        if self.branch != "main":
-            tags, branches = self._load_refs()
-            branches[self.branch] = version
-            self._write_refs(tags, branches)
-            return
-        ptr_tmp = self._pointer_path() + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(str(version))
-        os.replace(ptr_tmp, self._pointer_path())
 
 
 class LakeTransaction:
@@ -5290,10 +5301,7 @@ class LakeTransaction:
         (FileNotFoundError, or a doomed-file set computed from a torn
         view). Every caller (abort, commit-failure path, _replay) has
         the publish locks released, so taking it here cannot deadlock."""
-        t: LakeTable = st["table"]
-        lock_path = os.path.join(t.meta_dir, "_commit.lock")
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with st["table"]._commit_lock():
             self._cleanup_branch_locked(st, drop_files)
 
     def _cleanup_branch_locked(self, st: dict, drop_files: bool) -> None:
@@ -5303,10 +5311,16 @@ class LakeTransaction:
         chain = [v for v in b._ancestry(head) if v != st["fork"] and v > 0]
         chain = [v for v in chain if v not in b._ancestry(st["fork"])]
         self._drop_chain_locked(t, b, chain, drop_files)
-        # drop the ref (the caller holds the table's commit lock, so
-        # this read-modify-write cannot race concurrent create_branch
-        # calls — an unlocked stale write here used to erase another
-        # transaction's fresh branch ref: "no such branch" mid-txn)
+        self._drop_ref_locked(st)
+
+    @staticmethod
+    def _drop_ref_locked(st: dict) -> None:
+        """Remove the txn branch's ref. The caller holds the table's
+        commit lock, so this read-modify-write cannot race concurrent
+        create_branch calls — an unlocked stale write here used to
+        erase another transaction's fresh branch ref ("no such branch"
+        mid-txn)."""
+        t: LakeTable = st["table"]
         tags, branches = t._load_refs()
         if st["bname"] in branches:
             del branches[st["bname"]]
@@ -5416,9 +5430,7 @@ class LakeTransaction:
             if b.current_version() == head_then:
                 continue
             t: LakeTable = st["table"]
-            lock_path = os.path.join(t.meta_dir, "_commit.lock")
-            with open(lock_path, "w") as lock:
-                fcntl.flock(lock, fcntl.LOCK_EX)
+            with t._commit_lock():
                 cur = b.current_version()
                 keep = set(b._ancestry(head_then))
                 chain = [v for v in b._ancestry(cur) if v not in keep]
@@ -5438,35 +5450,34 @@ class LakeTransaction:
         self._savepoints.clear()  # conflict replays invalidate them
         try:
             out = self._commit_inner()
-            self._tables = {}
-            for fn in self._post_commit:
-                fn()
-            self._post_commit = []
-            return out
         except BaseException:
             for st in self._tables.values():
                 self._cleanup_branch(st)
             self._tables = {}
             self._post_commit = []
             raise
+        # every pointer is swapped: the transaction has committed, and
+        # nothing below may roll it back or drop its files
+        states, self._tables = list(self._tables.values()), {}
+        post, self._post_commit = self._post_commit, []
+        for fn in post:
+            fn()
+        for st in states:
+            with st["table"]._commit_lock():
+                self._drop_ref_locked(st)
+        return out
 
     def _commit_inner(self) -> list[Snapshot]:
         states = list(self._tables.values())
         if not states:
             return []
-        lock_paths = sorted(
-            {
-                os.path.join(st["table"].meta_dir, "_commit.lock")
-                for st in states
-            }
-        )
+        # one lock per table directory, taken in sorted order (no
+        # deadlocks between transactions over overlapping tables)
+        by_dir = {st["table"].meta_dir: st["table"] for st in states}
         for attempt in range(self._max_retries + 1):
-            locks = []
-            try:
-                for p in lock_paths:
-                    fh = open(p, "w")
-                    fcntl.flock(fh, fcntl.LOCK_EX)
-                    locks.append(fh)
+            with contextlib.ExitStack() as locks:
+                for d in sorted(by_dir):
+                    locks.enter_context(by_dir[d]._commit_lock())
                 stale = [
                     st
                     for st in states
@@ -5479,9 +5490,7 @@ class LakeTransaction:
                             f"fork after {attempt} replays"
                         )
                     # release locks before replaying (Spark jobs inside)
-                    for fh in locks:
-                        fh.close()
-                    locks = []
+                    locks.close()
                     for st in stale:
                         self._replay(st)
                     continue
@@ -5503,30 +5512,16 @@ class LakeTransaction:
                             getattr(op, "_verb", "op") for op in st["ops"]
                         ]
                         d["summary"].pop("branch", None)
-                        with open(meta + ".tmp", "w") as f:
-                            json.dump(d, f)
-                        os.replace(meta + ".tmp", meta)
-                        t._restore_head(head_v)  # the publish pointer move
+                        _atomic_write(meta, d)
+                        t._set_head(head_v)  # the publish pointer move
                         published.append((t, st["fork"]))
                         heads.append(Snapshot(**d))
-                    for st in states:
-                        self._cleanup_branch_ref_only(st)
                     return heads
                 except BaseException:
                     for t, old in reversed(published):
-                        t._restore_head(old)
+                        t._set_head(old)
                     raise
-            finally:
-                for fh in locks:
-                    fh.close()
         raise AssertionError("unreachable")
-
-    def _cleanup_branch_ref_only(self, st: dict) -> None:
-        t: LakeTable = st["table"]
-        tags, branches = t._load_refs()
-        if st["bname"] in branches:
-            del branches[st["bname"]]
-            t._write_refs(tags, branches)
 
     def abort(self) -> None:
         """Delete every staged file and the txn branches (ref orphan
@@ -5710,10 +5705,10 @@ def init_table_at(
         properties=props,
         partition_spec=list(partition_by or []),
     )
-    with open(table._meta_path(1), "w") as f:
-        json.dump(snap.__dict__, f)
-    with open(table._pointer_path(), "w") as f:
-        f.write("1")
+    # metadata first: a table exists once its pointer does, so a crash
+    # between the two writes leaves no table at all
+    _atomic_write(table._meta_path(1), snap.__dict__)
+    _atomic_write(table._pointer_path(), "1")
     return table
 
 
@@ -5810,10 +5805,7 @@ class LakeCatalog:
         # old name would drop/restart the renamed table's live
         # sequence (r11 judge ADVICE: cross-table interference).
         pfx = f"{namespace}.{name}."
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
-            changed = False
+        with self._registry("sequences") as seqs:
             for s in seqs.values():
                 ob = s.get("owned_by") or ""
                 if ob.startswith(pfx):
@@ -5821,9 +5813,6 @@ class LakeCatalog:
                         f"{new_namespace}.{new_name}."
                         + ob[len(pfx):]
                     )
-                    changed = True
-            if changed:
-                self._write_seqs(seqs)
 
     def transaction(self) -> LakeTransaction:
         """Begin a multi-table atomic transaction (see
@@ -5837,26 +5826,32 @@ class LakeCatalog:
     # Registry = one warehouse-level JSON, lock-guarded like refs; the
     # metadata plane is bytes per view, never on the data path.
 
-    def _views_path(self) -> str:
-        return os.path.join(self.warehouse, "_views.json")
-
-    def _load_views(self) -> dict:
-        if not os.path.exists(self._views_path()):
+    def _read_registry(self, name: str) -> dict:
+        """Warehouse registry ``_<name>.json`` (views, sequences,
+        types, funcs) as a dict; ``{}`` before its first write."""
+        path = os.path.join(self.warehouse, f"_{name}.json")
+        if not os.path.exists(path):
             return {}
-        with open(self._views_path()) as f:
+        with open(path) as f:
             return json.load(f)
 
-    def _write_views(self, views: dict) -> None:
-        tmp = self._views_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(views, f)
-        os.replace(tmp, self._views_path())
-
-    def _views_lock(self):
-        return open(os.path.join(self.warehouse, "_views.lock"), "w")
+    @contextlib.contextmanager
+    def _registry(self, name: str, lock: str = "sequences"):
+        """Yield registry ``name`` under ``_<lock>.lock`` for a read-
+        modify-write; a changed dict is written back on normal exit
+        only (an exception leaves the file untouched). Views have their
+        own lock; sequences, types and funcs share ``_sequences.lock``."""
+        with _locked(os.path.join(self.warehouse, f"_{lock}.lock")):
+            reg = self._read_registry(name)
+            before = copy.deepcopy(reg)
+            yield reg
+            if reg != before:
+                _atomic_write(
+                    os.path.join(self.warehouse, f"_{name}.json"), reg
+                )
 
     def view_exists(self, namespace: str, name: str) -> bool:
-        return f"{namespace}.{name}" in self._load_views()
+        return f"{namespace}.{name}" in self._read_registry("views")
 
     def create_view(
         self,
@@ -5872,9 +5867,7 @@ class LakeCatalog:
             raise LakehouseError(
                 f"{namespace}.{name} is a table; views cannot shadow tables"
             )
-        with self._views_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            views = self._load_views()
+        with self._registry("views", lock="views") as views:
             key = f"{namespace}.{name}"
             if key in views and not or_replace:
                 raise LakehouseError(f"view {key} already exists")
@@ -5882,10 +5875,9 @@ class LakeCatalog:
                 "sql": sql_text,
                 "created_ms": int(time.time() * 1000),
             }
-            self._write_views(views)
 
     def view_sql(self, namespace: str, name: str) -> str:
-        views = self._load_views()
+        views = self._read_registry("views")
         key = f"{namespace}.{name}"
         if key not in views:
             raise LakehouseError(f"view {key} does not exist")
@@ -5894,20 +5886,17 @@ class LakeCatalog:
     def drop_view(
         self, namespace: str, name: str, if_exists: bool = False
     ) -> None:
-        with self._views_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            views = self._load_views()
+        with self._registry("views", lock="views") as views:
             key = f"{namespace}.{name}"
             if key not in views:
                 if if_exists:
                     return
                 raise LakehouseError(f"view {key} does not exist")
             del views[key]
-            self._write_views(views)
 
     def list_views(self, namespace: str | None = None) -> list[tuple[str, str]]:
         out = []
-        for key in sorted(self._load_views()):
+        for key in sorted(self._read_registry("views")):
             ns, name = key.split(".", 1)
             if namespace is None or ns == namespace:
                 out.append((ns, name))
@@ -5921,26 +5910,8 @@ class LakeCatalog:
     # read-modify-write regardless of how many values the statement
     # consumes.
 
-    def _seqs_path(self) -> str:
-        return os.path.join(self.warehouse, "_sequences.json")
-
-    def _load_seqs(self) -> dict:
-        if not os.path.exists(self._seqs_path()):
-            return {}
-        with open(self._seqs_path()) as f:
-            return json.load(f)
-
-    def _write_seqs(self, seqs: dict) -> None:
-        tmp = self._seqs_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(seqs, f)
-        os.replace(tmp, self._seqs_path())
-
-    def _seqs_lock(self):
-        return open(os.path.join(self.warehouse, "_sequences.lock"), "w")
-
     def sequence_exists(self, namespace: str, name: str) -> bool:
-        return f"{namespace}.{name}" in self._load_seqs()
+        return f"{namespace}.{name}" in self._read_registry("sequences")
 
     def create_sequence(
         self, namespace: str, name: str, start: int = 1,
@@ -5952,9 +5923,7 @@ class LakeCatalog:
         RESTART IDENTITY restarts them."""
         if increment == 0:
             raise LakehouseError("INCREMENT must not be zero")
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._registry("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key in seqs:
                 if if_not_exists:
@@ -5965,14 +5934,13 @@ class LakeCatalog:
                 "start": start,
                 **({"owned_by": owned_by} if owned_by else {}),
             }
-            self._write_seqs(seqs)
 
     def list_sequences_meta(self) -> list[tuple[str, str, dict]]:
         """(namespace, name, state) per sequence — the reflection
         surface (pg_sequences / information_schema.sequences)."""
         return [
             (*key.split(".", 1), dict(s))
-            for key, s in sorted(self._load_seqs().items())
+            for key, s in sorted(self._read_registry("sequences").items())
         ]
 
     def sequences_owned_by(
@@ -5981,7 +5949,7 @@ class LakeCatalog:
         pfx = f"{namespace}.{table}."
         return [
             tuple(k.split(".", 1))
-            for k, s in self._load_seqs().items()
+            for k, s in self._read_registry("sequences").items()
             if (s.get("owned_by") or "").startswith(pfx)
         ]
 
@@ -5991,39 +5959,31 @@ class LakeCatalog:
         """ALTER SEQUENCE RESTART [WITH n] / TRUNCATE RESTART
         IDENTITY: next value becomes ``value`` (default: the
         sequence's START)."""
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._registry("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key not in seqs:
                 raise LakehouseError(f"sequence {key} does not exist")
             s = seqs[key]
             s["next"] = s.get("start", 1) if value is None else value
             s["called"] = False
-            self._write_seqs(seqs)
 
     def drop_sequence(
         self, namespace: str, name: str, if_exists: bool = False
     ) -> None:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._registry("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key not in seqs:
                 if if_exists:
                     return
                 raise LakehouseError(f"sequence {key} does not exist")
             del seqs[key]
-            self._write_seqs(seqs)
 
     def sequence_nextval(
         self, namespace: str, name: str, n: int = 1
     ) -> int:
         """Reserve ``n`` consecutive values; returns the FIRST. One
         locked read-modify-write per statement, not per row."""
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._registry("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key not in seqs:
                 raise LakehouseError(f"sequence {key} does not exist")
@@ -6031,30 +5991,26 @@ class LakeCatalog:
             first = s["next"]
             s["next"] = first + n * s["increment"]
             s["called"] = True
-            self._write_seqs(seqs)
-            return first
+        return first
 
     def sequence_setval(
         self, namespace: str, name: str, value: int,
         is_called: bool = True,
     ) -> int:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            seqs = self._load_seqs()
+        with self._registry("sequences") as seqs:
             key = f"{namespace}.{name}"
             if key not in seqs:
                 raise LakehouseError(f"sequence {key} does not exist")
             s = seqs[key]
             s["next"] = value + s["increment"] if is_called else value
             s["called"] = is_called
-            self._write_seqs(seqs)
-            return value
+        return value
 
     def list_sequences(
         self, namespace: str | None = None
     ) -> list[tuple[str, str]]:
         out = []
-        for key in sorted(self._load_seqs()):
+        for key in sorted(self._read_registry("sequences")):
             ns, name = key.split(".", 1)
             if namespace is None or ns == namespace:
                 out.append((ns, name))
@@ -6062,84 +6018,50 @@ class LakeCatalog:
 
     # -- enum types (PG CREATE TYPE ... AS ENUM) -----------------------
 
-    def _types_path(self) -> str:
-        return os.path.join(self.warehouse, "_types.json")
-
-    def _load_types(self) -> dict:
-        if not os.path.exists(self._types_path()):
-            return {}
-        with open(self._types_path()) as f:
-            return json.load(f)
-
     def create_enum_type(
         self, name: str, labels: list[str],
         if_not_exists: bool = False,
     ) -> None:
-        with self._seqs_lock() as lock:  # shared aux lock is fine
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            types = self._load_types()
+        with self._registry("types") as types:
             if name in types:
                 if if_not_exists:
                     return
                 raise LakehouseError(f"type {name!r} already exists")
             types[name] = labels
-            tmp = self._types_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(types, f)
-            os.replace(tmp, self._types_path())
 
     def drop_enum_type(self, name: str, if_exists: bool = False) -> None:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            types = self._load_types()
+        with self._registry("types") as types:
             if name not in types:
                 if if_exists:
                     return
                 raise LakehouseError(f"type {name!r} does not exist")
             del types[name]
-            tmp = self._types_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(types, f)
-            os.replace(tmp, self._types_path())
+
+    def enum_types(self) -> dict[str, list[str]]:
+        """Every enum type: name -> labels in declaration order."""
+        return self._read_registry("types")
 
     def enum_labels(self, name: str) -> list[str] | None:
-        return self._load_types().get(name)
+        return self.enum_types().get(name)
 
     # -- SQL functions (PG CREATE FUNCTION ... LANGUAGE SQL; the
     # single-expression subset macro-expands at call sites, r10)
-
-    def _funcs_path(self) -> str:
-        return os.path.join(self.warehouse, "_funcs.json")
-
-    def _load_funcs(self) -> dict:
-        if not os.path.exists(self._funcs_path()):
-            return {}
-        with open(self._funcs_path()) as f:
-            return json.load(f)
 
     def create_sql_function(
         self, name: str, params: list[str], body: str,
         replace: bool = False,
     ) -> None:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            funcs = self._load_funcs()
+        with self._registry("funcs") as funcs:
             if name in funcs and not replace:
                 raise LakehouseError(
                     f"function {name!r} already exists"
                 )
             funcs[name] = {"params": params, "body": body}
-            tmp = self._funcs_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(funcs, f)
-            os.replace(tmp, self._funcs_path())
 
     def drop_sql_function(
         self, name: str, if_exists: bool = False
     ) -> None:
-        with self._seqs_lock() as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            funcs = self._load_funcs()
+        with self._registry("funcs") as funcs:
             if name not in funcs:
                 if if_exists:
                     return
@@ -6147,13 +6069,9 @@ class LakeCatalog:
                     f"function {name!r} does not exist"
                 )
             del funcs[name]
-            tmp = self._funcs_path() + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(funcs, f)
-            os.replace(tmp, self._funcs_path())
 
     def sql_functions(self) -> dict:
-        return self._load_funcs()
+        return self._read_registry("funcs")
 
     # -- namespaces (PG CREATE/DROP SCHEMA; ref maps PG schema ≡
     # Iceberg namespace, catalog/pg_catalog.h:29)

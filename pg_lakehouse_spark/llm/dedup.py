@@ -199,29 +199,6 @@ def jaccard_near_duplicates(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """MinHash signatures: h_i(doc) = min over shingles of
-    xxhash64(seed=i, shingle). One explode + one hash-agg with
-    ``num_hashes`` min() columns.
-
-    Why explode+agg and not a per-row array fold: the min() aggs are
-    map-side combined, so the shuffle carries only docs×num_hashes
-    aggregated values (not exploded shingles), and the hash evaluation
-    stays inside whole-stage codegen. The fold formulation (aggregate/
-    zip_with) avoids the shuffle entirely but runs interpreted —
-    measured 2× slower at sf0.1 (13.3s vs 6.9s end-to-end)."""
-    sh = _exploded_shingles(df, id_col, text_col, n, hashed=True)
-    fam = prefixed_xxhash64_family(list(range(num_hashes)), F.col("__sh"))
-    aggs = [F.min(h).alias(f"h{i}") for i, h in enumerate(fam)]
-    return sh.groupBy(F.col("__id").alias(id_col)).agg(*aggs)
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",

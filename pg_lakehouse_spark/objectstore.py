@@ -24,8 +24,6 @@ from __future__ import annotations
 
 import os
 
-S3_SCHEMES = ("s3://", "s3a://", "s3n://")
-
 
 def s3_conf(
     access_key: str | None = None,
@@ -102,10 +100,6 @@ def normalize_path(path: str) -> str:
     if "://" in path:
         return path
     return os.path.abspath(path)
-
-
-def is_object_store(path: str) -> bool:
-    return path.startswith(S3_SCHEMES)
 
 
 def bucket_key(path: str) -> tuple[str, str]:

@@ -12303,8 +12303,7 @@ class LakeSQL:
                 1042: "bpchar", 16: "bool", 1082: "date",
                 1114: "timestamp", 1700: "numeric", 17: "bytea",
             }
-            lt = getattr(self.catalog, "_load_types", None)
-            enums = sorted((lt() if lt else {}).items())
+            enums = sorted(self.catalog.enum_types().items())
             if rel == "pg_type":
                 rows = [
                     (oid, nm, "b", 11) for oid, nm in pg_names.items()

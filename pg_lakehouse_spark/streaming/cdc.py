@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from pg_lakehouse_spark.lakehouse import LakeTable
+from pg_lakehouse_spark.lakehouse import LakeTable, _atomic_write
 
 _VERSION_RE = re.compile(r"v(\d+)\.metadata\.json$")
 
@@ -100,10 +100,7 @@ def stream_changes(
             return json.load(f)
 
     def save_pending(versions: list[int]) -> None:
-        tmp = pending_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(sorted(versions), f)
-        os.replace(tmp, pending_path)
+        _atomic_write(pending_path, sorted(versions))
 
     def deliver(versions: set, batch_id: int) -> None:
         if not versions:

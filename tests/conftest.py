@@ -15,6 +15,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: Spark-heavy property test (still runs by default)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("pg_lakehouse_spark-tests", cpus=8, shuffle_partitions=8)

@@ -154,6 +154,64 @@ def test_no_unbounded_collect_list():
     assert not offenders, f"unbounded collect_list/set in: {offenders}"
 
 
+def test_commit_io_only_through_the_seam():
+    """The lock and durability protocol lives in lakehouse.py's I/O
+    seam: ``fcntl.flock`` only inside ``_locked``, and temp-file
+    renames (``os.replace``, or any ``.tmp`` file) only inside
+    ``_atomic_write`` — a hand-rolled tmp+rename skips its fsyncs and
+    escapes the crash-matrix test."""
+    import ast
+
+    allowed = {
+        "fcntl.flock": "_locked",
+        "os.replace": "_atomic_write",
+        ".tmp": "_atomic_write",
+    }
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self):
+            self.scope: list[str] = []
+            self.hits: list[tuple[str, str]] = []
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            f = node.func
+            if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+                self.hit(f"{f.value.id}.{f.attr}")
+            self.generic_visit(node)
+
+        def visit_Constant(self, node):
+            if isinstance(node.value, str) and ".tmp" in node.value:
+                self.hit(".tmp")
+
+        def hit(self, what):
+            if what in allowed:
+                self.hits.append((what, self.scope[-1] if self.scope else ""))
+
+    offenders = []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, PKG_ROOT)
+            with open(path) as f:
+                finder = Finder()
+                finder.visit(ast.parse(f.read()))
+            offenders += [
+                (rel, fn, what)
+                for what, fn in finder.hits
+                if (rel, fn) != ("lakehouse.py", allowed[what])
+            ]
+    assert not offenders, f"commit I/O outside the seam: {offenders}"
+
+
 def test_broadcast_hints_on_dim_joins(spark, sf_dir):
     """q5's nation/region/supplier/customer joins must end up
     broadcast, not shuffled — r7 dropped the forced hints on the

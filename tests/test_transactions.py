@@ -79,18 +79,18 @@ def test_publish_failure_rolls_back_published_tables(catalog, orders_df):
     tx.append(t1, orders_df.limit(20).subtract(orders_df.limit(10)))
     tx.append(t2, orders_df.limit(20).subtract(orders_df.limit(10)))
 
-    real_restore = type(t1)._restore_head
+    real_set_head = type(t1)._set_head
     calls = {"n": 0}
 
-    def failing_restore(self, version):
-        # _restore_head is the publish pointer move; fail the SECOND
+    def failing_set_head(self, version):
+        # _set_head is the publish pointer move; fail the SECOND
         # table's publish after the first already swapped
         calls["n"] += 1
         if calls["n"] == 2:
             raise OSError("disk full")
-        return real_restore(self, version)
+        return real_set_head(self, version)
 
-    with mock.patch.object(type(t1), "_restore_head", failing_restore):
+    with mock.patch.object(type(t1), "_set_head", failing_set_head):
         with pytest.raises(OSError, match="disk full"):
             tx.commit()
     # the FIRST table's already-swapped pointer was restored: no reader
