@@ -78,24 +78,33 @@ _SEEDED_OK: bool | None = None
 _JVM_HANDLES: tuple | None = None
 
 
+class _NoJvmClass(Exception):
+    """A JVM class the seeded path needs is absent from this Spark."""
+
+
 def _seeded_handles():
     """(jvm, ExpressionUtils, XxHash64, PythonUtils) for the active
-    gateway, cached. Raises when no active classic session exists."""
+    gateway, cached; None when no active classic session (or no JVM)
+    exists yet. Raises ``_NoJvmClass`` when a class is missing."""
     global _JVM_HANDLES
+    from py4j.java_gateway import JavaClass
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
-    jvm = spark._jvm
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return None
     if _JVM_HANDLES is not None and _JVM_HANDLES[0] is jvm:
         return _JVM_HANDLES
-    handles = (
-        jvm,
+    classes = (
         jvm.org.apache.spark.sql.classic.ExpressionUtils,
         jvm.org.apache.spark.sql.catalyst.expressions.XxHash64,
         jvm.PythonUtils,
     )
-    _JVM_HANDLES = handles
-    return handles
+    if not all(isinstance(c, JavaClass) for c in classes):
+        raise _NoJvmClass  # py4j resolves an unknown name to a package
+    _JVM_HANDLES = (jvm, *classes)
+    return _JVM_HANDLES
 
 
 def xxhash64_seeded(col: Column, seed: int) -> Column | None:
@@ -111,18 +120,29 @@ def seeded_xxhash64_family(
     """One ``XxHash64([col], seed)`` column per seed, sharing a single
     resolved child expression (2 py4j round-trips per member instead
     of ~20 — catalyst expressions are immutable, so the shared child
-    instance is safe). None when the internals are unavailable."""
+    instance is safe). None when the internals are unavailable.
+
+    Only a missing module or JVM class (Spark Connect, a refactored
+    Spark) disables the fast path for the rest of the process. No
+    active session yet, or any other failure, returns None for THIS
+    call only, so a later call with a live session still takes it."""
     global _SEEDED_OK, _JVM_HANDLES
     if _SEEDED_OK is False:
         return None
+    try:
+        from pyspark.sql.classic.column import (
+            Column as CCol,
+            _to_java_column,
+        )
+    except ImportError:
+        _SEEDED_OK = False
+        return None
     for _attempt in (0, 1):
         try:
-            from pyspark.sql.classic.column import (
-                Column as CCol,
-                _to_java_column,
-            )
-
-            _jvm, utils, jxxh, pyutils = _seeded_handles()
+            handles = _seeded_handles()
+            if handles is None:
+                return None
+            _jvm, utils, jxxh, pyutils = handles
             child = utils.expression(_to_java_column(col))
             seq = pyutils.toSeq([child])
             out = [
@@ -131,11 +151,13 @@ def seeded_xxhash64_family(
             ]
             _SEEDED_OK = True
             return out
-        except Exception:  # noqa: BLE001 — any internals drift → fallback
+        except _NoJvmClass:
+            _SEEDED_OK = False
+            return None
+        except Exception:  # noqa: BLE001 — fall back for this call
             # a restarted JVM leaves stale handles: drop them and retry
-            # once before disabling the fast path for good
+            # once
             _JVM_HANDLES = None
-    _SEEDED_OK = False
     return None
 
 

@@ -74,7 +74,7 @@ from dataclasses import dataclass, field
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import NumericType, StructField, StructType
 
 _META_DIR = "_lakehouse"
 _DATA_DIR = "data"
@@ -366,6 +366,11 @@ _TIME_TRANSFORMS = {
 }
 
 
+# a stats/dir key derived by a partition transform from its source
+# column (``ts_day``, ``k_bucket16``, ``name_trunc4``)
+_DERIVED_KEY = re.compile(r"^(.+)_(day|month|hour|bucket\d+|trunc\d+)$")
+
+
 def _partition_field(spec: str):
     """Parse one partition-spec entry (Iceberg hidden-partitioning
     transforms or an identity column name).
@@ -461,6 +466,17 @@ def _bloom_pack(positions) -> str:
         p = int(p)
         buf[p >> 3] |= 1 << (p & 7)
     return bytes(buf).hex()
+
+
+def _bloom_positions(col: Column) -> Column:
+    """The k bit positions of ``col``'s value: the one hash expression
+    behind the write side, the equality probe and the MERGE probe."""
+    return F.array(
+        *[
+            F.pmod(F.xxhash64(col, F.lit(i)), F.lit(_BLOOM_BITS)).cast("int")
+            for i in range(_BLOOM_K)
+        ]
+    )
 
 
 def _bloom_might_contain(hex_bits: str, positions) -> bool:
@@ -563,25 +579,6 @@ def _condition_ranges(condition: Column) -> dict[str, tuple]:
     except Exception:
         return {}
     return out
-
-
-def _entry_range_overlaps(entry: dict, ranges: dict[str, tuple]) -> bool:
-    """True unless some required range provably excludes the file —
-    missing stats or cross-type comparisons keep it (conservative)."""
-    st = entry.get("ranges") or {}
-    for col, (lo, hi) in ranges.items():
-        bounds = st.get(col)
-        if bounds is None:
-            continue
-        fmin, fmax = bounds
-        try:
-            if hi is not None and fmin > hi:
-                return False
-            if lo is not None and fmax < lo:
-                return False
-        except TypeError:
-            continue
-    return True
 
 
 def _parquet_footer_stats(
@@ -1357,10 +1354,9 @@ class LakeTable:
         these columns cannot be renamed or dropped until the files are
         rewritten by compaction). Transform-derived dir names map back
         to their source column (conservatively)."""
-        import re as _re
 
         def sources(name: str) -> set[str]:
-            m = _re.match(r"^(.+)_(day|month|hour|bucket\d+|trunc\d+)$", name)
+            m = _DERIVED_KEY.match(name)
             return {name, m.group(1)} if m else {name}
 
         cols = set()
@@ -1778,13 +1774,9 @@ class LakeTable:
             return
         probes = [
             F.struct(
-                F.lit(c).alias("c"),
-                F.pmod(F.xxhash64(F.col(c), F.lit(i)), F.lit(_BLOOM_BITS))
-                .cast("int")
-                .alias("p"),
+                F.lit(c).alias("c"), _bloom_positions(F.col(c)).alias("ps")
             )
             for c in bloom_cols
-            for i in range(_BLOOM_K)
         ]
         from pyspark.sql.functions import pandas_udf
 
@@ -1801,8 +1793,9 @@ class LakeTable:
         # per segment on demand)
         rows = (
             base.select("f", F.explode(F.array(*probes)).alias("x"))
-            .groupBy("f", "x.c")
-            .agg(F.collect_set("x.p").alias("ps"))
+            .select("f", "x.c", F.explode("x.ps").alias("p"))
+            .groupBy("f", "c")
+            .agg(F.collect_set("p").alias("ps"))
             .select("f", "c", pack("ps").alias("bits"))
             .collect()
         )
@@ -1867,10 +1860,17 @@ class LakeTable:
         global min/max from per-file ranges, row count, and — for
         ``ndv_stats_columns`` — an NDV estimate range (max per-file
         NDV = lower bound, sum = upper bound). Metadata-only: no data
-        file is opened."""
+        file is opened.
+
+        One row per CURRENT column (plus partition-derived keys such as
+        ``ts_day``): each file's stats resolve through ``_entry_stats``,
+        so a renamed column reports under its new name and a dropped
+        column not at all, whatever name its files were written with."""
         s = self.snapshot(snapshot)
         agg: dict[str, dict] = {}
+        epochs: dict = {}
         for f in s.files:
+            f = self._entry_stats(s, f, epochs)
             for col_name, bounds in (f.get("ranges") or {}).items():
                 a = agg.setdefault(
                     col_name,
@@ -2214,7 +2214,6 @@ class LakeTable:
         new_schema: StructType,
         new_field_ids: dict,
         next_field_id: int,
-        files: list[dict] | None = None,
         properties: dict | None = None,
     ) -> Snapshot:
         base = self.current_version()
@@ -2229,7 +2228,7 @@ class LakeTable:
         return self._commit(
             base,
             operation,
-            files if files is not None else snap.files,
+            snap.files,
             new_schema.json(),
             summary={"schema_change": operation},
             schema_meta={
@@ -2458,8 +2457,10 @@ class LakeTable:
 
     def rename_column(self, old: str, new: str) -> Snapshot:
         """RENAME COLUMN: the field id is stable, so files written
-        under the old name keep resolving; per-file range stats are
-        re-keyed in metadata (metadata-only, no file rewrite). Dotted
+        under the old name keep resolving — their data by
+        ``_read_entries``, their stats by ``_entry_stats``. A
+        metadata-only commit: no file and no manifest entry is
+        rewritten, so every manifest segment is reused as is. Dotted
         paths rename a struct field in place at ANY depth (``new`` may
         be the bare child name or the full path with the same parent;
         cross-struct moves are rejected)."""
@@ -2529,16 +2530,7 @@ class LakeTable:
             return n
 
         new_ids = {rekey(n): fid for n, fid in ids.items()}
-        files = [
-            {**e, "ranges": {
-                (new if k == old else k): v
-                for k, v in (e.get("ranges") or {}).items()
-            }}
-            for e in snap.files
-        ]
-        return self._evolve(
-            "rename-column", StructType(fields), new_ids, nxt, files
-        )
+        return self._evolve("rename-column", StructType(fields), new_ids, nxt)
 
     @staticmethod
     def _promotable(old_type, new_type) -> bool:
@@ -2630,8 +2622,9 @@ class LakeTable:
 
     def drop_column(self, name: str) -> Snapshot:
         """DROP COLUMN: metadata-only; the column's id is retired and
-        old files simply stop selecting it. Dotted paths drop a struct
-        field at ANY depth."""
+        old files simply stop selecting it (and ``_entry_stats`` stops
+        reporting their stats for it). Dotted paths drop a struct field
+        at ANY depth."""
         self._guard_constrained_column(name, "drop")
         snap = self.snapshot()
         schema = StructType.fromJson(json.loads(snap.schema_json))
@@ -2675,15 +2668,7 @@ class LakeTable:
             n: fid for n, fid in ids.items()
             if n != name and not n.startswith(name + ".")
         }
-        files = [
-            {**e, "ranges": {
-                k: v for k, v in (e.get("ranges") or {}).items() if k != name
-            }}
-            for e in snap.files
-        ]
-        return self._evolve(
-            "drop-column", StructType(fields), new_ids, nxt, files
-        )
+        return self._evolve("drop-column", StructType(fields), new_ids, nxt)
 
     # ------------------------------------------------------------------
     # read paths
@@ -3216,87 +3201,17 @@ class LakeTable:
         therefore have an empty ``files`` list; callers use the entry
         list, never ``s.files``."""
         s = self.snapshot(snapshot, hydrate=False)
-        beq = self._bloom_eq_positions(s, filters)
-
-        # Stats in old-epoch file entries are keyed by the names the
-        # file was WRITTEN with. Resolve current names to those by
-        # FIELD ID (exactly how `_read_entries` resolves the data):
-        # after a drop-and-re-add the same name means a DIFFERENT
-        # column, and trusting the stale entry (r4 ADVICE: null_count=0
-        # of the retired column vs an is_null read of the new one)
-        # silently lost rows. A name with no id match in the file's
-        # epoch contributes no stats — conservative keep.
-        cur_ids, _ = self._effective_field_ids(s)
-        epoch_maps: dict[int, dict] = {}
-
-        def entry_names(e: dict) -> dict | None:
-            """cur name -> stats key for this entry; None = identity."""
-            sid = e.get("schema_id", 0)
-            if sid == s.schema_id:
-                return None
-            m = epoch_maps.get(sid)
-            if m is None:
-                epoch = s.schemas.get(str(sid)) or s.schemas.get(sid)
-                if epoch is None:
-                    m = {}
-                else:
-                    old_schema = StructType.fromJson(
-                        json.loads(epoch["schema_json"])
-                    )
-                    eids = self._augment_nested_ids(
-                        old_schema, epoch["field_ids"]
-                    )
-                    id_to_old = {fid: n for n, fid in eids.items()}
-                    m = {
-                        n: id_to_old[fid]
-                        for n, fid in cur_ids.items()
-                        if fid in id_to_old
-                    }
-                epoch_maps[sid] = m
-            return m
-
-        def xlate(d: dict, m: dict | None) -> dict:
-            if m is None:
-                return d
-            return {m[c]: v for c, v in d.items() if c in m}
-
-        def null_ok(f: dict, m: dict | None) -> bool:
-            nulls = f.get("nulls") or {}
-
-            def nm(c):
-                return c if m is None else m.get(c)
-
-            for c in is_null or []:
-                cn = nm(c)
-                if cn is not None and cn in nulls and nulls[cn] == 0:
-                    return False
-            for c in not_null or []:
-                cn = nm(c)
-                if cn is not None and cn in nulls and nulls[cn] == f["rows"]:
-                    return False
-            # a range predicate never matches NULL: an all-null file
-            # (which also carries no min/max bounds to overlap-check)
-            # can be skipped outright
-            for c, (lo, hi) in filters.items():
-                cn = nm(c)
-                if (
-                    (lo is not None or hi is not None)
-                    and cn is not None
-                    and cn in nulls
-                    and nulls[cn] == f["rows"]
-                ):
-                    return False
-            return True
-
+        is_null, not_null = is_null or (), not_null or ()
+        probes = self._bloom_eq_probes(s, filters)
+        entries = s.files
         if s.manifests and not s.files:
             # segment-level skip: a pseudo-entry built from the
-            # descriptor's aggregated bounds runs through the SAME
-            # overlap predicate as a file entry (blooms/buckets/nulls
-            # absent → conservative keep); a non-overlapping segment's
-            # entries are never parsed
-            candidates: list[dict] = []
-            for m in s.manifests:
-                pseudo = {
+            # descriptor's aggregated bounds and blooms runs through the
+            # SAME rule as a file entry (buckets/nulls absent →
+            # conservative keep); a skipped segment is never parsed
+            pseudo = [
+                {
+                    "path": m["path"],
                     "schema_id": (
                         m["schema_id"]
                         if m.get("schema_id") is not None
@@ -3306,47 +3221,114 @@ class LakeTable:
                     "blooms": m.get("blooms") or {},
                     "rows": m.get("row_count", 0),
                 }
-                pm = entry_names(pseudo)
-                if self._entry_overlaps(
-                    pseudo, xlate(filters, pm), None, xlate(beq, pm)
-                ) and null_ok(pseudo, pm):
-                    candidates.extend(
-                        _segment_read(
-                            os.path.join(self.meta_dir, m["path"])
-                        )
-                    )
-        else:
-            candidates = s.files
-        eq = self._bucket_eq_values(s, filters, candidates)
+                for m in s.manifests
+            ]
+            entries = [
+                e
+                for m in self._select_entries(
+                    s, pseudo, filters, is_null, not_null, probes
+                )
+                for e in _segment_read(os.path.join(self.meta_dir, m["path"]))
+            ]
+        return s, self._select_entries(
+            s, entries, filters, is_null, not_null, probes
+        )
 
-        def overlaps(f: dict) -> bool:
-            m = entry_names(f)
-            return self._entry_overlaps(
-                f, xlate(filters, m), eq, xlate(beq, m)
-            ) and null_ok(f, m)
+    def _entry_stats(
+        self, snap: Snapshot, entry: dict, epochs: dict | None = None
+    ) -> dict:
+        """The ONLY reader of a manifest entry's statistics: its
+        ``ranges``, ``nulls``, ``blooms`` and ``ndv`` (plus ``rows``),
+        keyed by ``snap``'s CURRENT column names.
 
-        selected = [f for f in candidates if overlaps(f)]
-        return s, selected
+        On disk, stats stay keyed by the name the file was WRITTEN
+        with, so rename and drop never rewrite an entry. A
+        current-epoch entry is returned as is. An older epoch's names
+        resolve written name → field id → current name, exactly how
+        ``_read_entries`` resolves the data: a name whose id is no
+        longer live is dropped (after drop-and-re-add the same name is
+        a DIFFERENT column — r4 ADVICE), and partition-derived keys
+        (``ts_day``, ``k_bucket4``) pass through unchanged, because
+        their source columns can be neither renamed nor dropped.
+        ``epochs`` memoizes the per-epoch name maps within one call."""
+        sid = entry.get("schema_id", 0)
+        if sid == snap.schema_id:
+            return entry
+        epochs = {} if epochs is None else epochs
+        names = epochs.get(sid)
+        if names is None:
+            names = {}
+            epoch = snap.schemas.get(str(sid)) or snap.schemas.get(sid)
+            if epoch is not None:
+                cur_ids, _ = self._effective_field_ids(snap)
+                id_to_cur = {fid: n for n, fid in cur_ids.items()}
+                old_schema = StructType.fromJson(
+                    json.loads(epoch["schema_json"])
+                )
+                eids = self._augment_nested_ids(
+                    old_schema, epoch["field_ids"]
+                )
+                names = {n: id_to_cur.get(fid) for n, fid in eids.items()}
+            epochs[sid] = names
 
-    def _bucket_eq_values(
+        def rekey(d: dict | None) -> dict:
+            out = {}
+            for k, v in (d or {}).items():
+                cur = names[k] if k in names else (
+                    k if _DERIVED_KEY.match(k) else None
+                )
+                if cur is not None:
+                    out[cur] = v
+            return out
+
+        return {"rows": entry.get("rows")} | {
+            k: rekey(entry.get(k)) for k in ("ranges", "nulls", "blooms", "ndv")
+        }
+
+    def _select_entries(
         self,
         snap: Snapshot,
-        filters: dict[str, tuple],
-        entries: list[dict] | None = None,
+        entries: list[dict],
+        ranges: dict[str, tuple],
+        is_null=(),
+        not_null=(),
+        bloom_probes: dict | None = None,
+    ) -> list[dict]:
+        """The ONLY file-selection rule: the ``entries`` (file entries
+        or segment pseudo-entries) that may hold a row satisfying every
+        predicate, by ``_entry_overlaps`` over the stats
+        ``_entry_stats`` resolves. ``ranges`` are {col: (lo, hi)} over
+        current column names; an equality range also prunes bucket
+        partitions and — unless the caller passes ``bloom_probes``
+        {col: [positions, ...]} — probes the column's blooms.
+        Metadata-only apart from the one-row bucket/bloom hash jobs."""
+        if not (ranges or is_null or not_null or bloom_probes):
+            return list(entries)
+        if bloom_probes is None:
+            bloom_probes = self._bloom_eq_probes(snap, ranges)
+        bucket_eq = self._bucket_eq_values(snap, ranges, entries)
+        epochs: dict = {}
+        return [
+            e
+            for e in entries
+            if self._entry_overlaps(
+                self._entry_stats(snap, e, epochs), ranges, bucket_eq,
+                bloom_probes, is_null, not_null,
+            )
+        ]
+
+    def _bucket_eq_values(
+        self, snap: Snapshot, filters: dict[str, tuple], entries: list[dict]
     ) -> dict:
         """{derived_bucket_key: bucket_of_filter_value} for every
         EQUALITY filter (lo == hi) on a column that bucket-partitions
-        some live file. The hash must match the write side exactly
+        one of ``entries``. The hash must match the write side exactly
         (JVM xxhash64 on the column's type), so it's evaluated in one
-        single-row Spark job — metadata-scale, never data-scale.
-        ``entries`` scopes the width scan to the candidate set (the
-        segment-pruned path passes its survivors; bucket widths only
-        matter for files that are still in play)."""
+        single-row Spark job — metadata-scale, never data-scale."""
         import re as _re
 
-        schema = StructType.fromJson(json.loads(snap.schema_json))
         widths: dict[str, set[int]] = {}
-        for e in entries if entries is not None else snap.files:
+        for e in entries:
             for name in self._entry_spec(e):
                 m = _re.match(r"^(.+)_bucket(\d+)$", name)
                 if m and m.group(1) in filters:
@@ -3357,6 +3339,7 @@ class LakeTable:
                         )
         if not widths:
             return {}
+        schema = StructType.fromJson(json.loads(snap.schema_json))
         exprs = []
         for col, ns in widths.items():
             v = F.lit(filters[col][0])
@@ -3374,14 +3357,14 @@ class LakeTable:
         row = self.spark.range(1).select(*exprs).collect()[0]
         return {k: v for k, v in row.asDict().items() if v is not None}
 
-    def _bloom_eq_positions(
+    def _bloom_eq_probes(
         self, snap: Snapshot, filters: dict[str, tuple]
-    ) -> dict[str, list[int]]:
-        """{column: k bit positions} for every EQUALITY filter on a
-        bloom-indexed column. The filter value is hashed by the SAME
-        Spark expression the write path used (xxhash64 over the
-        column's type), via a one-row local plan — constant-folded,
-        no shuffle, no file read."""
+    ) -> dict[str, list[list[int]]]:
+        """{column: [k bit positions]} — one probe — for every EQUALITY
+        filter on a bloom-indexed column. The filter value is hashed by
+        ``_bloom_positions`` over the column's type, exactly as the
+        write side hashed it, via a one-row local plan —
+        constant-folded, no shuffle, no file read."""
         props = snap.properties.get("bloom_filter_columns", "")
         bcols = {c.strip() for c in props.split(",") if c.strip()}
         if not bcols:
@@ -3407,67 +3390,79 @@ class LakeTable:
                 .select(F.lit(lo).try_cast(dtype).alias("v"))
                 .select(
                     F.col("v").isNull().alias("miss"),
-                    F.array(
-                        *[
-                            F.pmod(
-                                F.xxhash64(F.col("v"), F.lit(i)),
-                                F.lit(_BLOOM_BITS),
-                            ).cast("int")
-                            for i in range(_BLOOM_K)
-                        ]
-                    ).alias("ps"),
+                    _bloom_positions(F.col("v")).alias("ps"),
                 )
                 .first()
             )
-            if row["miss"]:
-                continue
-            out[col_name] = list(row["ps"])
+            if not row["miss"]:
+                out[col_name] = [list(row["ps"])]
         return out
 
     @staticmethod
     def _entry_overlaps(
-        entry: dict,
+        stats: dict,
         filters: dict[str, tuple],
         bucket_eq: dict | None = None,
-        bloom_eq: dict | None = None,
+        bloom_probes: dict | None = None,
+        is_null=(),
+        not_null=(),
     ) -> bool:
-        """True if the file may contain rows in every filter range.
+        """False only when ``stats`` (an entry's stats, resolved by
+        ``_entry_stats``) prove that no row satisfies every predicate.
 
-        Checks direct column bounds AND transform-derived bounds from
-        hidden-partition dirs: a filter on ``ts`` skips files via their
-        ``ts_day``/``ts_month``/``ts_hour`` dir value, and a filter on
-        a truncate-partitioned column via its ``col_truncW`` prefix —
-        the Iceberg hidden-partition-pruning behavior (predicates on
-        the SOURCE column prune, the user never names the transform).
-        Bucket dirs are not range-prunable (hash order ≠ value order),
-        but EQUALITY filters prune them via ``bucket_eq`` (the filter
-        value's bucket, precomputed by ``_bucket_eq_values``)."""
+        - ``filters`` {col: (lo, hi)} check the column's own bounds AND
+          transform-derived bounds from hidden-partition dirs: a filter
+          on ``ts`` skips files via their ``ts_day``/``ts_month``/
+          ``ts_hour`` dir value, and a filter on a truncate-partitioned
+          column via its ``col_truncW`` prefix — the Iceberg
+          hidden-partition-pruning behavior (predicates on the SOURCE
+          column prune, the user never names the transform).
+        - Bucket dirs are not range-prunable (hash order ≠ value
+          order), but EQUALITY filters prune them via ``bucket_eq``
+          (the filter value's bucket, from ``_bucket_eq_values``).
+        - ``bloom_probes`` {col: [positions, ...]}: the file stays if
+          ANY probe may hit its bloom (an equality filter has one
+          probe, a MERGE key one per distinct source value).
+        - Null counts: IS NULL needs a null, IS NOT NULL a non-null,
+          and a range never matches NULL, so an all-null file (which
+          carries no bounds) skips too.
+
+        Missing stats and incomparable values (a str literal against
+        int bounds: TypeError) keep the file — the full predicate
+        re-applies row-level, so pruning only has to be conservative."""
         import re as _re
 
-        ranges = entry.get("ranges") or {}
-        for col_name, ps in (bloom_eq or {}).items():
-            bits = (entry.get("blooms") or {}).get(col_name)
-            if bits is not None and not _bloom_might_contain(bits, ps):
+        def disjoint(lo, hi, fmin, fmax) -> bool:
+            try:
+                return (lo is not None and fmax < lo) or (
+                    hi is not None and fmin > hi
+                )
+            except TypeError:
+                return False
+
+        ranges = stats.get("ranges") or {}
+        nulls = stats.get("nulls") or {}
+        rows = stats.get("rows")
+        blooms = stats.get("blooms") or {}
+        for col_name, probes in (bloom_probes or {}).items():
+            bits = blooms.get(col_name)
+            if bits is None or not probes:
+                continue
+            if not any(_bloom_might_contain(bits, ps) for ps in probes):
                 return False
         for key, want in (bucket_eq or {}).items():
             b = ranges.get(key)
             if b is not None and b[0] == b[1] and b[0] != want:
                 return False
+        if any(nulls.get(c) == 0 for c in is_null):
+            return False
+        ranged = [c for c, b in filters.items() if tuple(b) != (None, None)]
+        if any(c in nulls and nulls[c] == rows for c in (*not_null, *ranged)):
+            return False
         for col_name, (lo, hi) in filters.items():
             bounds = ranges.get(col_name)
-            if bounds is not None:
-                fmin, fmax = bounds
-                # cross-type bounds (e.g. a str literal vs int stats)
-                # are incomparable → may-overlap, never a crash: the
-                # full predicate re-applies row-level so pruning only
-                # ever has to be conservative
-                try:
-                    if lo is not None and fmax < lo:
-                        return False
-                    if hi is not None and fmin > hi:
-                        return False
-                except TypeError:
-                    pass
+            if bounds is not None and disjoint(lo, hi, *bounds):
+                return False
             prefix = col_name + "_"
             for key, (fmin, fmax) in ranges.items():
                 if not key.startswith(prefix):
@@ -3497,25 +3492,21 @@ class LakeTable:
                         thi = (
                             (hi // w) * w if isinstance(hi, int) else None
                         )
-                try:
-                    if tlo is not None and fmax < tlo:
-                        return False
-                    if thi is not None and fmin > thi:
-                        return False
-                except TypeError:
-                    pass
+                if disjoint(tlo, thi, fmin, fmax):
+                    return False
         return True
 
     def pruned_file_count(self, filters: dict[str, tuple]) -> tuple[int, int]:
         """(selected, total) file counts for a pruned scan — the
-        observable data-skipping metric."""
-        s = self.snapshot()
-        eq = self._bucket_eq_values(s, filters)
-        beq = self._bloom_eq_positions(s, filters)
-        return (
-            sum(1 for f in s.files if self._entry_overlaps(f, filters, eq, beq)),
-            len(s.files),
+        observable data-skipping metric: :meth:`pruned_entries` plus
+        the table's file count."""
+        s, selected = self.pruned_entries(filters)
+        total = (
+            sum(m["file_count"] for m in s.manifests)
+            if s.manifests and not s.files
+            else len(s.files)
         )
+        return len(selected), total
 
     # ------------------------------------------------------------------
     # DML — copy-on-write (the reference declares these via TAM
@@ -3640,29 +3631,15 @@ class LakeTable:
     ) -> list[dict]:
         """Manifest-level shortlist of ``snap.files`` for a DML
         predicate: `_condition_ranges` extracts necessary [lo, hi]
-        ranges; files whose bounds can't overlap drop, and EQUALITY
-        conjuncts on bloom-indexed columns additionally probe each
-        file's bloom. Strictly conservative (opaque predicates,
-        old-epoch stats, missing stats → keep), so every DML entry
-        point — CoW probe AND the MoR match scans (r14, VERDICT #6) —
-        can scan the shortlist instead of the table."""
-        ranges = _condition_ranges(condition)
-        if not ranges:
-            return snap.files
-        bloom_eq = self._bloom_eq_positions(snap, ranges)
-
-        def may_match(f: dict) -> bool:
-            if f.get("schema_id", 0) != snap.schema_id:
-                return True  # stale stat names: conservative keep
-            if not _entry_range_overlaps(f, ranges):
-                return False
-            for col_name, ps in bloom_eq.items():
-                bits = (f.get("blooms") or {}).get(col_name)
-                if bits is not None and not _bloom_might_contain(bits, ps):
-                    return False
-            return True
-
-        return [f for f in snap.files if may_match(f)]
+        ranges and ``_select_entries`` applies the read path's rule to
+        them (bounds, transforms, buckets, blooms, null counts, old
+        epochs resolved by field id). Strictly conservative (opaque
+        predicates and missing stats keep), so every DML entry point —
+        CoW probe AND the MoR match scans (r14, VERDICT #6) — can scan
+        the shortlist instead of the table."""
+        return self._select_entries(
+            snap, snap.files, _condition_ranges(condition)
+        )
 
     def _affected_files(self, condition: Column) -> list[str]:
         """Relative paths of data files containing matching rows.
@@ -3681,9 +3658,7 @@ class LakeTable:
         probe each file's bloom (same machinery as the read path's
         ``pruned_entries``): a point DELETE on a bloom column opens
         only files that might contain the key, even when the column
-        is not clustered and every file's min/max straddles it.
-        Old-epoch entries keep conservatively (their stats are keyed
-        by retired names — same rule as ``pruned_entries``)."""
+        is not clustered and every file's min/max straddles it."""
         snap = self.snapshot()
         files = self._shortlist_by_condition(snap, condition)
         if not files:
@@ -4558,46 +4533,9 @@ class LakeTable:
         the merge_schema realignment — r5 ADVICE)."""
         base = self.current_version()
         snap = self.snapshot(base)
-
-        # ONE agg job over the source computes the key bounds the file
-        # pruning needs, plus (for free, same job) the exact row count
-        # and per-key NDV — the stats that drive the broadcast decision
-        # and the bloom refinement below. No second source scan.
-        agg_exprs = [F.count(F.lit(1)).alias("__rows")]
-        for c in on:
-            agg_exprs += [
-                F.min(c).alias(f"__min_{c}"),
-                F.max(c).alias(f"__max_{c}"),
-                F.approx_count_distinct(c).alias(f"__ndv_{c}"),
-            ]
-        b = source.agg(*agg_exprs).collect()[0]
-        src_bounds = {
-            c: (_json_stat(b[f"__min_{c}"]), _json_stat(b[f"__max_{c}"]))
-            for c in on
-        }
-        src_rows = int(b["__rows"])
-        src_ndv = {c: int(b[f"__ndv_{c}"]) for c in on}
-
-        def overlaps(entry: dict) -> bool:
-            ranges = entry.get("ranges") or {}
-            for c, (lo, hi) in src_bounds.items():
-                if lo is None or hi is None:
-                    return True  # null/empty source keys → no pruning
-                bounds = ranges.get(c)
-                if bounds is None:
-                    return True  # no stats → conservative
-                fmin, fmax = bounds
-                if fmax < lo or fmin > hi:
-                    return False
-            return True
-
-        if when_not_matched_by_source_delete:
-            touched = list(snap.files)  # every row is a candidate
-        else:
-            touched = [f for f in snap.files if overlaps(f)]
-            touched = self._merge_bloom_refine(
-                touched, source, on, src_ndv
-            )
+        touched, key_ranges, key_probes, src_rows = self._merge_candidates(
+            snap, source, on, when_not_matched_by_source_delete
+        )
         keep = [f for f in snap.files if f not in touched]
         target = self._read_entries(snap, touched)
         src = source.select(
@@ -4743,12 +4681,16 @@ class LakeTable:
                         snap, touched_paths, None
                     )
                     snap_paths = {f["path"] for f in snap.files}
-                    for f in cur.files:
-                        if f["path"] not in snap_paths and overlaps(f):
-                            raise CommitConflict(
-                                "merge is stale: a concurrently-added "
-                                "file overlaps the source key range"
-                            )
+                    added = [
+                        f for f in cur.files if f["path"] not in snap_paths
+                    ]
+                    if self._select_entries(
+                        cur, added, key_ranges, bloom_probes=key_probes
+                    ):
+                        raise CommitConflict(
+                            "merge is stale: a concurrently-added "
+                            "file may hold a source key"
+                        )
                 except CommitConflict:
                     stale = True
                 else:
@@ -4808,91 +4750,128 @@ class LakeTable:
             _attempts=_attempts - 1,
         )
 
-    _MERGE_BLOOM_NDV_CAP = 1024
-
-    def _merge_bloom_refine(
+    def _merge_candidates(
         self,
-        touched: list[dict],
+        snap: Snapshot,
         source: DataFrame,
         on: list[str],
-        src_ndv: dict[str, int],
-    ) -> list[dict]:
-        """NDV-driven merge file pruning: when a merge-key column is
-        SPARSE (source NDV under the cap) and touched files carry
-        blooms for it, probe every distinct source value of that
-        column against each file's bloom. Min/max bounds can't help
-        when keys interleave across files (the bloom's whole reason to
-        exist); for the CDC-apply-with-few-keys shape this collapses
-        the rewrite set from 'every overlapping file' to 'files
-        actually holding a key'.
+        full_sync: bool,
+    ) -> tuple[list[dict], dict, dict, int]:
+        """(candidate files, key ranges, bloom probes, source row
+        count) for a copy-on-write MERGE — EXPLAIN MERGE reports the
+        same candidate set. A target row matching a source key must
+        live in a file that ``_select_entries`` keeps for the source's
+        key ranges and key probes, so every other file carries over by
+        reference; the ranges and probes also judge files a concurrent
+        commit adds. ``full_sync`` (WHEN NOT MATCHED BY SOURCE) makes
+        every file a candidate.
+
+        ONE agg job over the source computes the key bounds plus (same
+        job) the exact row count and per-key NDV that drive the
+        broadcast decision and the bloom probes. A key column prunes
+        only when the source's type compares like the target's (the
+        same type, or both numeric): the join coerces other pairs, e.g.
+        a string source key into a date column, in a way the stats
+        comparison cannot follow."""
+        agg_exprs = [F.count(F.lit(1)).alias("__rows")]
+        for c in on:
+            agg_exprs += [
+                F.min(c).alias(f"__min_{c}"),
+                F.max(c).alias(f"__max_{c}"),
+                F.approx_count_distinct(c).alias(f"__ndv_{c}"),
+            ]
+        b = source.agg(*agg_exprs).collect()[0]
+        src_rows = int(b["__rows"])
+        if full_sync:
+            return list(snap.files), {}, {}, src_rows
+        schema = StructType.fromJson(json.loads(snap.schema_json))
+        src_types = {f.name: f.dataType for f in source.schema.fields}
+        usable = [
+            c for c in on
+            if c in schema.names and (
+                src_types.get(c) == schema[c].dataType
+                or all(
+                    isinstance(t, NumericType)
+                    for t in (src_types.get(c), schema[c].dataType)
+                )
+            )
+        ]
+        ranges = {}
+        for c in usable:
+            lo, hi = _json_stat(b[f"__min_{c}"]), _json_stat(b[f"__max_{c}"])
+            if lo is not None and hi is not None:
+                ranges[c] = (lo, hi)
+        touched = self._select_entries(
+            snap, snap.files, ranges, bloom_probes={}
+        )
+        sparse = [
+            c for c in usable
+            if int(b[f"__ndv_{c}"]) <= self._MERGE_BLOOM_NDV_CAP
+        ]
+        probes = self._merge_bloom_probes(snap, touched, source, sparse)
+        if probes:
+            touched = self._select_entries(
+                snap, touched, {}, bloom_probes=probes
+            )
+        return touched, ranges, probes, src_rows
+
+    _MERGE_BLOOM_NDV_CAP = 1024
+
+    def _merge_bloom_probes(
+        self,
+        snap: Snapshot,
+        touched: list[dict],
+        source: DataFrame,
+        cols: list[str],
+    ) -> dict[str, list[list[int]]]:
+        """{column: one probe per distinct source value} for the
+        SPARSE merge-key ``cols`` (source NDV under the cap) that some
+        ``touched`` file carries a bloom for. Values are cast to the
+        target column's type first, because the write side hashed that
+        type (a value no target value can equal casts to NULL and
+        drops out; a truncating cast only adds a probe). Min/max
+        bounds can't help when keys interleave across files (the
+        bloom's whole reason to exist); for the CDC-apply-with-few-keys
+        shape the probes collapse the rewrite set from 'every
+        overlapping file' to 'files actually holding a key'.
 
         Multi-column keys use conjunction semantics: a target row
         matches only if it equals the source on EVERY key column, so a
         file whose bloom rules out all source values of ANY one key
-        column cannot hold a match and is pruned (blooms have no false
-        negatives). Each column is probed independently; dense
-        (over-cap) or bloom-less columns simply don't contribute.
-        Costs one bounded distinct-collect (≤ cap rows) + one local
-        hash plan per sparse column — nothing data-scale. NDV keeps
-        the driver safe: a fully dense source skips the refinement."""
+        column cannot hold a match (blooms have no false negatives).
+        Costs one bounded distinct-collect (≤ cap rows) per sparse
+        column — nothing data-scale; a column whose distinct count
+        turns out over the cap (NDV is an estimate) or is all-null
+        gets no probes."""
         cap = self._MERGE_BLOOM_NDV_CAP
-        schema = self.schema()
-        cand = [
+        schema = StructType.fromJson(json.loads(snap.schema_json))
+        epochs: dict = {}
+        bloomed = {
             c
-            for c in on
-            if src_ndv.get(c, cap + 1) <= cap
-            and c in schema.names
-            and any(c in (f.get("blooms") or {}) for f in touched)
-        ]
-        if not cand:
-            return touched
-        col_probes: dict[str, list[list[int]]] = {}
-        for c in cand:
-            # one job per sparse column: the distinct scan computes the
-            # bloom probe positions in the same pass (previously a
-            # second local createDataFrame+collect round-trip per
-            # column); only (value-NULLness, K positions) rows reach
-            # the driver
+            for f in touched
+            for c in self._entry_stats(snap, f, epochs).get("blooms") or {}
+        }
+        out = {}
+        for c in cols:
+            if c not in bloomed:
+                continue
             # NULL-filter BEFORE distinct().limit(): with exactly cap+1
             # distinct non-null values plus a NULL, the limit could
             # return NULL + cap values and silently drop one real key
             # from the probe set — a file holding only that key would
             # be wrongly pruned (r13 VERDICT "what's wrong" #2)
             rows = (
-                source.select(F.col(c).alias("v"))
+                source.select(
+                    F.col(c).try_cast(schema[c].dataType).alias("v")
+                )
                 .filter(F.col("v").isNotNull())
                 .distinct()
                 .limit(cap + 1)
-                .select(
-                    F.array(
-                        *[
-                            F.pmod(
-                                F.xxhash64(F.col("v"), F.lit(i)),
-                                F.lit(_BLOOM_BITS),
-                            ).cast("int")
-                            for i in range(_BLOOM_K)
-                        ]
-                    ).alias("ps"),
-                )
+                .select(_bloom_positions(F.col("v")).alias("ps"))
                 .collect()
             )
-            probes = [list(r["ps"]) for r in rows]
-            if not probes or len(probes) > cap:
-                continue  # NDV under-estimated / all-null — skip column
-            col_probes[c] = probes
-        if not col_probes:
-            return touched
-        out = []
-        for f in touched:
-            blooms = f.get("blooms") or {}
-            for c, probes in col_probes.items():
-                bits = blooms.get(c)
-                if bits is not None and not any(
-                    _bloom_might_contain(bits, ps) for ps in probes
-                ):
-                    break  # no source value of c in this file → prune
-            else:
-                out.append(f)
+            if rows and len(rows) <= cap:
+                out[c] = [list(r["ps"]) for r in rows]
         return out
 
     # ------------------------------------------------------------------
@@ -4918,9 +4897,10 @@ class LakeTable:
         columns (Iceberg/Delta 'rewrite with zorder' analog): range
         filters on any participating column prune. Mutually exclusive.
 
-        ``filters`` scopes the rewrite to files whose manifest bounds
-        overlap the given {col: (lo, hi)} ranges (hidden-partition
-        transforms included) — the at-scale shape 'compact only
+        ``filters`` scopes the rewrite to the files the read path's
+        ``_select_entries`` keeps for the given {col: (lo, hi)} ranges
+        (bounds, transforms, buckets, blooms) — the at-scale shape
+        'compact only
         yesterday's partition' instead of scanning a petabyte table's
         whole manifest worth of small files.
         """
@@ -4928,14 +4908,7 @@ class LakeTable:
             raise LakehouseError("sort_by and zorder_by are mutually exclusive")
         base = self.current_version()
         snap = self.snapshot(base)
-        in_scope = snap.files
-        if filters is not None:
-            eq = self._bucket_eq_values(snap, filters)
-            beq = self._bloom_eq_positions(snap, filters)
-            in_scope = [
-                f for f in snap.files
-                if self._entry_overlaps(f, filters, eq, beq)
-            ]
+        in_scope = self._select_entries(snap, snap.files, filters or {})
         small = [f for f in in_scope if f["bytes"] < small_file_bytes]
         if len(small) < min_files:
             return snap
@@ -5129,19 +5102,22 @@ class LakeTable:
         return removed
 
     def _gc_orphan_segments(self) -> list[str]:
-        """Remove manifest segments referenced by NO snapshot (crashed
-        commits leave them). Under the commit lock so a concurrent
-        commit's freshly written, not-yet-referenced segment can't be
-        swept."""
+        """Remove manifest segments referenced by NO snapshot, and the
+        ``.tmp`` files of metadata and segment writes (crashed commits
+        leave both). Under the commit lock so a concurrent commit's
+        freshly written, not-yet-referenced segment or half-written
+        tmp file can't be swept."""
         seg_dir = os.path.join(self.meta_dir, _MANIFEST_DIR)
-        if not os.path.isdir(seg_dir):
-            return []
         removed = []
         with self._commit_lock():
             live = {
                 m["path"] for s in self.snapshots() for m in s.manifests
             }
-            for p in glob.glob(os.path.join(seg_dir, "*.json")):
+            for p in (
+                glob.glob(os.path.join(seg_dir, "*.json"))
+                + glob.glob(os.path.join(seg_dir, "*.tmp"))
+                + glob.glob(os.path.join(self.meta_dir, "*.tmp"))
+            ):
                 rel = os.path.relpath(p, self.meta_dir)
                 if rel not in live:
                     os.remove(p)

@@ -90,6 +90,17 @@ def _exploded_shingles(
     )
 
 
+def _min_overlap(threshold: float, n: Column) -> Column:
+    """ceil(t·N), the overlap a set of N shingles needs with any
+    partner at Jaccard ≥ t, with a downward epsilon RELATIVE to t·N:
+    IEEE t·N can land just above an integer — 0.1*30, or one ulp
+    (3.7e-9) past i at N ≈ 3.4e7, beyond any fixed epsilon — and erring
+    SMALLER lengthens the prefix: more candidates, never a missed
+    pair."""
+    tn = F.lit(threshold) * n
+    return F.ceil(tn - tn * F.lit(1e-12))
+
+
 def jaccard_near_duplicates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -158,12 +169,10 @@ def jaccard_near_duplicates(
             "__N",
         )
     )
-    # ceil(t·N) with a tiny downward epsilon: IEEE t·N can land just
-    # above an integer (e.g. 0.1*30); erring SMALLER lengthens the
-    # prefix — more candidates, never a missed pair
-    alpha = F.ceil(F.lit(threshold) * F.col("__N") - F.lit(1e-9))
     pref_len = F.greatest(
-        (F.size("__arr") - alpha + 1).cast("int"), F.lit(0)
+        (F.size("__arr") - _min_overlap(threshold, F.col("__N")) + 1)
+        .cast("int"),
+        F.lit(0),
     )
     pref = docs_sorted.select(
         "__id", F.explode(F.slice("__arr", 1, pref_len)).alias("__sh")

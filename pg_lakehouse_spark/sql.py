@@ -10801,7 +10801,8 @@ class LakeSQL:
                     )
                     lines.append(
                         "candidate set: files overlapping the source "
-                        "key bounds (one stats job over the source)"
+                        "key bounds (one stats job over the source; "
+                        "bloom probes for sparse keys)"
                     )
                 except Exception:  # noqa: BLE001 — estimate only
                     lines.append(
@@ -10830,15 +10831,17 @@ class LakeSQL:
     def _explain_merge_candidates(
         self, tbl: LakeTable, snap, mm: re.Match, lits: list[str]
     ) -> list[dict]:
-        """MERGE rewrite-candidate estimate: parse the USING source
-        and the ON keys exactly like ``_merge``, run ONE min/max agg
-        over the source (the stats lookup PG's planner does from
-        pg_statistic), and keep the files whose manifest bounds
-        overlap — the same overlap rule the real merge prunes with."""
+        """MERGE rewrite candidates: parse the USING source and the ON
+        keys exactly like ``_merge``, then ask the table for the SAME
+        candidate set the executed copy-on-write MERGE rewrites
+        (``LakeTable._merge_candidates``: one stats job over the
+        source — the lookup PG's planner does from pg_statistic — plus
+        bloom probes for sparse keys)."""
         U = lambda t: self._unmask_strings(t, lits)  # noqa: E731
-        _ns, _nm, _br, talias, src_ref, salias, on_cond, _cl = (
+        _ns, _nm, _br, talias, src_ref, salias, on_cond, clauses = (
             mm.groups()
         )
+        talias, salias = talias.lower(), salias.lower()  # as ``_merge``
         source = (
             self._select(U(src_ref[1:-1].strip()))
             if src_ref.startswith("(")
@@ -10857,37 +10860,10 @@ class LakeSQL:
             if set(pair) != {talias, salias} or pair[talias] != pair[salias]:
                 raise LakehouseError("asymmetric ON")
             keys.append(pair[talias])
-        from pg_lakehouse_spark.lakehouse import _json_stat
-
-        b = source.agg(
-            *[
-                f
-                for c in keys
-                for f in (
-                    F.min(c).alias(f"__min_{c}"),
-                    F.max(c).alias(f"__max_{c}"),
-                )
-            ]
-        ).collect()[0]
-        src_bounds = {
-            c: (_json_stat(b[f"__min_{c}"]), _json_stat(b[f"__max_{c}"]))
-            for c in keys
-        }
-
-        def overlaps(entry: dict) -> bool:
-            ranges = entry.get("ranges") or {}
-            for c, (lo, hi) in src_bounds.items():
-                if lo is None or hi is None:
-                    return True
-                bounds = ranges.get(c)
-                if bounds is None:
-                    return True
-                fmin, fmax = bounds
-                if fmax < lo or fmin > hi:
-                    return False
-            return True
-
-        return [f for f in snap.files if overlaps(f)]
+        full_sync = re.search(
+            r"\bNOT\s+MATCHED\s+BY\s+SOURCE\b", clauses, re.IGNORECASE
+        )
+        return tbl._merge_candidates(snap, source, keys, bool(full_sync))[0]
 
     @staticmethod
     def _depth0_kw(text: str, kw: str) -> re.Match | None:

@@ -328,3 +328,33 @@ def test_create_table_crash_leaves_no_torn_table(spark, tmp_path, k):
         t = cat.create_table("db", "a", df.schema, if_not_exists=True)
         t.append(df)
         assert _rows(t) == BASE
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_vacuum_removes_tmp_files_of_a_crashed_write(spark, tmp_path, k):
+    """An append writes a segment, the metadata and the pointer, each
+    through ``_atomic_write``. A crash between one's tmp write and its
+    rename leaves a ``*.tmp`` behind; ``vacuum()`` removes it, and the
+    table stays readable at the old or the new snapshot."""
+    wh = str(tmp_path / "wh")
+    t = _create(LakeCatalog(spark, wh), "a", BASE)
+    real_replace = os.replace
+    replaced = []
+
+    def replace(src, dst):
+        replaced.append(dst)
+        if len(replaced) == k:
+            raise _Crash()
+        return real_replace(src, dst)
+
+    with mock.patch.object(os, "replace", replace), pytest.raises(_Crash):
+        t.append(_df(spark, DELTA))
+
+    def tmp_files():
+        return glob.glob(os.path.join(wh, "**", "*.tmp"), recursive=True)
+
+    assert tmp_files()
+    t = LakeCatalog(spark, wh).load_table("db", "a")
+    t.vacuum()
+    assert tmp_files() == []
+    assert _rows(t) in (BASE, sorted(BASE + DELTA))

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 
 from pg_lakehouse_spark.lakehouse import (
     LakeCatalog,
+    LakeTable,
     _condition_ranges,
-    _entry_range_overlaps,
 )
 
 
@@ -49,16 +49,18 @@ def test_condition_ranges_conservative(spark):
 
 
 def test_entry_range_overlaps():
+    # the DML shortlist's range check is the shared rule now
+    overlaps = LakeTable._entry_overlaps
     e = {"ranges": {"k": [10, 20], "s": ["a", "f"]}}
-    assert _entry_range_overlaps(e, {"k": (15, None)})
-    assert not _entry_range_overlaps(e, {"k": (21, None)})
-    assert not _entry_range_overlaps(e, {"k": (None, 9)})
-    assert _entry_range_overlaps(e, {"k": (20, 20)})
-    assert not _entry_range_overlaps(e, {"s": ("g", "z")})
+    assert overlaps(e, {"k": (15, None)})
+    assert not overlaps(e, {"k": (21, None)})
+    assert not overlaps(e, {"k": (None, 9)})
+    assert overlaps(e, {"k": (20, 20)})
+    assert not overlaps(e, {"s": ("g", "z")})
     # missing stats / cross-type: conservative keep
-    assert _entry_range_overlaps(e, {"other": (1, 2)})
-    assert _entry_range_overlaps(e, {"k": ("a", "b")})
-    assert _entry_range_overlaps({}, {"k": (1, 2)})
+    assert overlaps(e, {"other": (1, 2)})
+    assert overlaps(e, {"k": ("a", "b")})
+    assert overlaps({}, {"k": (1, 2)})
 
 
 def test_delete_prunes_probe_to_overlapping_files(spark, tmp_path):
@@ -176,13 +178,15 @@ def test_merge_bloom_refine_null_cap_edge(spark, tmp_path):
     )
     for k in range(5):  # one file per key: any missed key = a lost file
         tbl.append(df.filter(F.col("k") == k).coalesce(1))
-    touched = list(tbl.snapshot().files)
+    snap = tbl.snapshot()
+    touched = list(snap.files)
     assert len(touched) == 5
     source = spark.createDataFrame(
         [(None, 0)] + [(k, k * 10) for k in range(5)], "k long, v long"
     )
     tbl._MERGE_BLOOM_NDV_CAP = 4  # cap below the true non-null NDV (5)
-    out = tbl._merge_bloom_refine(touched, source, ["k"], {"k": 4})
+    probes = tbl._merge_bloom_probes(snap, touched, source, ["k"])
+    out = tbl._select_entries(snap, touched, {}, bloom_probes=probes)
     assert out == touched
 
 

@@ -101,6 +101,56 @@ def test_prefixed_xxhash64_family_bit_identical(spark):
     assert base.filter(mismatch).count() == 0
 
 
+def test_seeded_hash_fallback_does_not_latch(spark, monkeypatch):
+    """A call with no active session (e.g. from a thread before the
+    session exists) falls back for THAT call only: a later call with a
+    live session takes the seeded path again, bit-identical to the
+    public two-field form. Only a missing JVM class disables the seeded
+    path for the rest of the process."""
+    from pyspark.sql import SparkSession
+
+    from pg_lakehouse_spark.functions import hashing
+
+    monkeypatch.setattr(hashing, "_SEEDED_OK", hashing._SEEDED_OK)
+    with monkeypatch.context() as m:
+        m.setattr(
+            SparkSession, "getActiveSession", classmethod(lambda cls: None)
+        )
+        assert hashing.seeded_xxhash64_family(F.col("sh"), [1]) is None
+        fallback = hashing.prefixed_xxhash64(5, F.col("sh"))
+    assert hashing._SEEDED_OK is not False
+    seeded = hashing.seeded_xxhash64_family(
+        F.col("sh"), [hashing.xxh64_int(5, 42)]
+    )
+    assert seeded is not None
+    want = F.xxhash64(F.lit(5), F.col("sh"))
+    base = spark.range(500).select(
+        F.xxhash64(F.concat(F.lit("sh-"), F.col("id"))).alias("sh")
+    )
+    assert base.filter((seeded[0] != want) | (fallback != want)).count() == 0
+
+    def missing_class():
+        raise hashing._NoJvmClass
+
+    monkeypatch.setattr(hashing, "_seeded_handles", missing_class)
+    assert hashing.seeded_xxhash64_family(F.col("sh"), [1]) is None
+    assert hashing._SEEDED_OK is False
+
+
+def test_jaccard_min_overlap_epsilon_is_relative(spark):
+    """At N ≈ 3.4e7 the IEEE product t·N lands one ulp (3.7e-9) above
+    the overlap i of a pair whose Jaccard is exactly t = i/N: a fixed
+    1e-9 epsilon rounded the required overlap up to i + 1 and so cut
+    the prefix one shingle short. The relative epsilon keeps it at i."""
+    from pg_lakehouse_spark.llm.dedup import _min_overlap
+
+    n, i = 33_579_289, 26_678_207
+    t = i / n
+    assert t * n > i + 1e-9  # the case a fixed epsilon gets wrong
+    got = spark.range(1).select(_min_overlap(t, F.lit(n)).alias("a"))
+    assert got.first().a == i
+
+
 def _naive_jaccard_pairs(spark, df, threshold, cap):
     """The pre-r14 inverted-index formulation (shingle self-join +
     intersection count), kept as the equivalence oracle for the

@@ -95,10 +95,8 @@ def test_no_driver_side_collects_in_operators():
         "rollup.py",         # partial invalidation: the distinct
         # AFFECTED BUCKET timestamps of a DML window — bucket count,
         # not rows
-        "sql.py",            # EXPLAIN MERGE: ONE min/max row over the
-        # source's join keys to report the pruned candidate set —
-        # a single stats row, never table data; FK point-lookup path
-        # collects the write delta's distinct keys, hard-capped at
+        "sql.py",            # FK point-lookup path collects the
+        # write delta's distinct keys, hard-capped at
         # _FK_POINT_LOOKUP_MAX + 1
         "lake_q.py",         # lake_segment_bloom_prune collects its
         # PROBE KEY list: o_orderkey <= 3000 AND % 997 = 0 — at most
@@ -159,13 +157,14 @@ def test_commit_io_only_through_the_seam():
     seam: ``fcntl.flock`` only inside ``_locked``, and temp-file
     renames (``os.replace``, or any ``.tmp`` file) only inside
     ``_atomic_write`` — a hand-rolled tmp+rename skips its fsyncs and
-    escapes the crash-matrix test."""
+    escapes the crash-matrix test. ``_gc_orphan_segments`` may name
+    ``.tmp`` files too: it deletes the ones a crash left behind."""
     import ast
 
     allowed = {
-        "fcntl.flock": "_locked",
-        "os.replace": "_atomic_write",
-        ".tmp": "_atomic_write",
+        "fcntl.flock": {"_locked"},
+        "os.replace": {"_atomic_write"},
+        ".tmp": {"_atomic_write", "_gc_orphan_segments"},
     }
 
     class Finder(ast.NodeVisitor):
@@ -207,9 +206,72 @@ def test_commit_io_only_through_the_seam():
             offenders += [
                 (rel, fn, what)
                 for what, fn in finder.hits
-                if (rel, fn) != ("lakehouse.py", allowed[what])
+                if rel != "lakehouse.py" or fn not in allowed[what]
             ]
     assert not offenders, f"commit I/O outside the seam: {offenders}"
+
+
+def test_pruning_only_through_one_rule():
+    """File selection has one rule and one hash: a bloom is probed
+    (``_bloom_might_contain``) only inside ``_entry_overlaps``, the
+    bloom hash (``F.xxhash64`` with ``_BLOOM_BITS``) is built only in
+    ``_bloom_positions``, and the per-caller overlap check
+    ``_entry_range_overlaps`` is gone — a second copy of either is
+    how the read, DML, MERGE and EXPLAIN paths drifted apart."""
+    import ast
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self):
+            self.scope: list[str] = []
+            self.probes: list[str] = []  # scopes calling the probe
+            self.names: dict[str, set] = {}  # scope -> names it uses
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def here(self) -> str:
+            return self.scope[-1] if self.scope else ""
+
+        def visit_Call(self, node):
+            f = node.func
+            if isinstance(f, ast.Name) and f.id == "_bloom_might_contain":
+                self.probes.append(self.here())
+            if isinstance(f, ast.Attribute) and f.attr == "xxhash64":
+                self.names.setdefault(self.here(), set()).add("xxhash64")
+            self.generic_visit(node)
+
+        def visit_Name(self, node):
+            self.names.setdefault(self.here(), set()).add(node.id)
+
+    bad_probes, bad_hashes, old_check = [], [], []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, PKG_ROOT)
+            with open(path) as f:
+                src = f.read()
+            if "_entry_range_overlaps" in src:
+                old_check.append(rel)
+            finder = Finder()
+            finder.visit(ast.parse(src))
+            bad_probes += [
+                (rel, fn) for fn in finder.probes if fn != "_entry_overlaps"
+            ]
+            bad_hashes += [
+                (rel, fn)
+                for fn, used in finder.names.items()
+                if {"xxhash64", "_BLOOM_BITS"} <= used
+                and fn != "_bloom_positions"
+            ]
+    assert not old_check, f"_entry_range_overlaps still present: {old_check}"
+    assert not bad_probes, f"bloom probed outside _entry_overlaps: {bad_probes}"
+    assert not bad_hashes, f"bloom hash outside _bloom_positions: {bad_hashes}"
 
 
 def test_broadcast_hints_on_dim_joins(spark, sf_dir):
