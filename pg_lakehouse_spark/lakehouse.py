@@ -37,7 +37,10 @@ N+1 under the table's flock'd ``_commit.lock`` with a parent-version
 check (all through the I/O seam: ``_locked`` / ``_atomic_write`` /
 ``_move_staged``) — the same
 optimistic pattern as the reference's SELECT FOR UPDATE + requirements
-validation + pointer UPDATE (pg_catalog.cpp:264-325).
+validation + pointer UPDATE (pg_catalog.cpp:264-325). Every
+data-writing commit goes through one loop, ``LakeTable._commit_op``:
+a writer that lost the race is rebased by one rule, re-executed or
+refused, and its staged files are removed.
 
 Scale posture (100 TB):
 
@@ -62,6 +65,7 @@ from __future__ import annotations
 import contextlib
 import copy
 import fcntl
+import functools
 import glob
 import json
 import os
@@ -288,11 +292,6 @@ class CommitConflict(LakehouseError):
     (ref: requirements validation failure, pg_catalog.cpp:277-285)."""
 
 
-class _StaleRewrite(Exception):
-    """Internal: a row-level rewrite's read set changed under it —
-    the statement re-executes against the fresh head."""
-
-
 @dataclass
 class Snapshot:
     version: int
@@ -341,6 +340,31 @@ class Snapshot:
     @property
     def total_bytes(self) -> int:
         return sum(f["bytes"] for f in self.files)
+
+
+# ``_Pending.clash`` value: every concurrent commit conflicts
+_ANY = "any"
+
+
+@dataclass
+class _Pending:
+    """What one attempt of a data-writing commit staged against its
+    base snapshot, for ``LakeTable._commit_op`` to publish or discard.
+
+    ``reads``: paths of live files whose rows the writer copied or
+    matched; ``replaces``: paths it drops from the head. ``clash``
+    says how files a concurrent commit added conflict with it: None
+    (never), ``_ANY`` (any concurrent commit does), or a callable
+    ``(head, added_entries)`` returning the reason for a conflict or
+    a falsy value."""
+
+    summary: dict
+    adds: list = field(default_factory=list)  # staged data-file entries
+    deletes: list = field(default_factory=list)  # staged delete-file entries
+    change_files: list = field(default_factory=list)
+    reads: set = field(default_factory=set)
+    replaces: set = field(default_factory=set)
+    clash: object = None
 
 
 def _file_stats(path: str, fmt: str = "parquet") -> tuple[int, int]:
@@ -487,7 +511,9 @@ def _bloom_might_contain(hex_bits: str, positions) -> bool:
 def _json_stat(v):
     """Make a parquet min/max statistic JSON-serializable while keeping
     its ordering: numbers stay numbers; bytes decode to str; temporal
-    values become ISO strings (lexicographic == chronological)."""
+    values become ISO strings (lexicographic == chronological); a
+    zoned timestamp (a TIMESTAMP_MICROS file's) is stored as naive UTC,
+    the form `_stat_literal` gives a literal."""
     import datetime
 
     if isinstance(v, bytes):
@@ -495,6 +521,8 @@ def _json_stat(v):
             return v.decode("utf-8")
         except UnicodeDecodeError:
             return None
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     if isinstance(v, (datetime.datetime, datetime.date)):
         return v.isoformat()
     if isinstance(v, (int, float, str, bool)) or v is None:
@@ -502,25 +530,155 @@ def _json_stat(v):
     return None
 
 
-def _condition_ranges(condition: Column) -> dict[str, tuple]:
+def _stat_literal(v, dtype):
+    """Coerce a predicate literal to the manifest's representation for
+    the bound column's Spark type, mirroring how file stats are stored
+    (`_json_stat`: ints as int, floats as float, dates and naive
+    timestamps as ``isoformat()`` strings). Returns None when the
+    literal can't be coerced soundly — the caller drops the conjunct,
+    which is always safe (the full predicate re-applies in Spark).
+    The one rule for both SQL SELECT pruning and the DML shortlist.
+
+    Date/timestamp strings are zero-padded and 'T'-separated so the
+    lexicographic compare against stored ISO strings is order-correct
+    (PG accepts '2024-1-1' and '2024-01-01 09:00'; a naive string
+    compare against '2024-01-05' or '2024-01-01T00:00:00' would
+    wrongly skip files). A string column only takes a string literal
+    (``s = 3`` compares numerically in Spark, not by text order). A
+    TIMESTAMP literal prunes only in a UTC session (the zone
+    ``get_spark`` pins): Spark reads it in the session zone, while
+    `_json_stat` stores zoned stats as naive UTC."""
+    from pyspark.sql import types as T
+
+    try:
+        if isinstance(
+            dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+        ):
+            return int(str(v).strip())
+        if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
+            return float(v)
+        if isinstance(dtype, T.BooleanType):
+            s = str(v).strip().lower()
+            if s in ("true", "t", "1"):
+                return True
+            if s in ("false", "f", "0"):
+                return False
+            return None
+        if isinstance(dtype, T.DateType):
+            m = re.match(r"(\d{4})-(\d{1,2})-(\d{1,2})$", str(v).strip())
+            if not m:
+                return None
+            y, mo, d = (int(g) for g in m.groups())
+            return f"{y:04d}-{mo:02d}-{d:02d}"
+        if isinstance(dtype, T.TimestampType):
+            spark = SparkSession.getActiveSession()
+            zone = spark and spark.conf.get("spark.sql.session.timeZone")
+            if zone not in ("UTC", "Etc/UTC", "GMT", "Z"):
+                return None
+        if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+            m = re.match(
+                r"(\d{4})-(\d{1,2})-(\d{1,2})"
+                r"(?:[T ](\d{1,2}):(\d{1,2})(?::(\d{1,2}))?(\.\d+)?)?$",
+                str(v).strip(),
+            )
+            if not m:
+                return None
+            y, mo, d = int(m.group(1)), int(m.group(2)), int(m.group(3))
+            hh = int(m.group(4) or 0)
+            mi = int(m.group(5) or 0)
+            ss = int(m.group(6) or 0)
+            # normalize the fraction to datetime.isoformat() semantics:
+            # omitted when zero, else exactly 6 digits — '.5' kept
+            # verbatim would compare lexicographically wrong vs a
+            # stored '.500000'
+            digits = (m.group(7) or ".")[1:]
+            micros = int((digits + "000000")[:6]) if digits else 0
+            frac = f".{micros:06d}" if micros else ""
+            return (
+                f"{y:04d}-{mo:02d}-{d:02d}T{hh:02d}:{mi:02d}:{ss:02d}" + frac
+            )
+        if isinstance(dtype, T.StringType):
+            return v if isinstance(v, str) else None
+    except (ValueError, TypeError):
+        return None
+    return None
+
+
+# catalyst comparison nodes (a parsed SQL predicate) -> the operator
+# name the Column API's function nodes carry
+_CATALYST_OPS = {
+    "And": "and", "In": "in", "EqualTo": "=", "LessThan": "<",
+    "LessThanOrEqual": "<=", "GreaterThan": ">", "GreaterThanOrEqual": ">=",
+}
+# a parsed literal's value is its internal form: only these types map
+# to a Python value (a DATE is an int of days, a decimal a Decimal)
+_STAT_LITERAL_TYPES = {
+    "tinyint", "smallint", "int", "bigint", "float", "double", "string",
+    "boolean",
+}
+
+
+def _condition_ranges(
+    condition: Column, schema: StructType | None = None
+) -> dict[str, tuple]:
     """Best-effort necessary-condition ranges {col: (lo, hi)} from a
     DML predicate (None side = unbounded).
 
     Walks the Column's node tree for top-level AND conjuncts of the
     forms ``col <op> literal`` (op in =, <, <=, >, >=), ``literal
-    <op> col`` and ``col IN (literals)`` — plain int/float/str/bool
-    literals only (casts, expressions, timestamps contribute
-    nothing). Every extracted range is a NECESSARY condition of the
-    predicate: a row can only match inside it, so files whose
-    manifest bounds lie wholly outside cannot hold a match (rows
-    where the column is NULL never satisfy a comparison, so NULL-
-    blind min/max bounds are sufficient). Anything unexpected —
-    other node kinds, OR at the top, mixed literal types — degrades
-    to {} (no pruning), never to a wrong prune."""
+    <op> col``, ``col IN (literals)`` and ``col BETWEEN lo AND hi`` —
+    plain int/float/str/bool literals only (casts, expressions,
+    decimals, typed date/timestamp literals contribute nothing). SQL
+    text (``F.expr``, as the SQL frontend passes) is parsed with the
+    session's parser and its catalyst tree walked the same way.
+
+    With ``schema``, every literal is coerced to its column's manifest
+    form by `_stat_literal` (the SELECT path's rule) BEFORE conjuncts
+    combine, and a conjunct on an unknown column or with a literal
+    that can't be coerced contributes nothing; without it, literals
+    are returned as written.
+
+    Every extracted range is a NECESSARY condition of the predicate: a
+    row can only match inside it, so files whose manifest bounds lie
+    wholly outside cannot hold a match (rows where the column is NULL
+    never satisfy a comparison, so NULL-blind min/max bounds are
+    sufficient). Anything unexpected — other node kinds, OR at the
+    top, mixed literal types — degrades to {} (no pruning), never to
+    a wrong prune."""
     out: dict[str, tuple] = {}
+    types = None if schema is None else {
+        f.name: f.dataType for f in schema.fields
+    }
 
     def kind(node) -> str:
         return node.getClass().getSimpleName()
+
+    def catalyst(node) -> bool:
+        return node.getClass().getName().startswith(
+            "org.apache.spark.sql.catalyst."
+        )
+
+    def call(node) -> tuple[str | None, list]:
+        """(operator name, argument nodes) of a function-like node."""
+        k = kind(node)
+        if k == "SqlExpression":
+            return call(
+                SparkSession.active()._jsparkSession.sessionState()
+                .sqlParser()
+                .parseExpression(node.expression())
+            )
+        if k in _CATALYST_OPS and catalyst(node):
+            ch = node.children()
+            return _CATALYST_OPS[k], [ch.apply(i) for i in range(ch.size())]
+        if k != "UnresolvedFunction":
+            return None, []
+        if catalyst(node):
+            parts = node.nameParts()
+            fn = parts.apply(0).lower() if parts.size() == 1 else None
+        else:
+            fn = node.functionName()
+        args = node.arguments()
+        return fn, [args.apply(i) for i in range(args.size())]
 
     def attr_name(node):
         if kind(node) != "UnresolvedAttribute":
@@ -532,7 +690,26 @@ def _condition_ranges(condition: Column) -> dict[str, tuple]:
         if kind(node) != "Literal":
             return None
         v = node.value()
+        if catalyst(node):
+            dt = node.dataType().simpleString()
+            if dt not in _STAT_LITERAL_TYPES or v is None:
+                return None
+            if dt == "string":
+                v = v.toString()
         return v if isinstance(v, (bool, int, float, str)) else None
+
+    def bound(col, nodes) -> list | None:
+        """The literal values of one conjunct on ``col``, in the
+        column's manifest form; None drops the conjunct."""
+        vals = [lit_value(n) for n in nodes]
+        if col is None or not vals or None in vals:
+            return None
+        if types is None:
+            return vals
+        if col not in types:
+            return None
+        vals = [_stat_literal(v, types[col]) for v in vals]
+        return None if None in vals else vals
 
     def add(col: str, lo, hi) -> None:
         plo, phi = out.get(col, (None, None))
@@ -545,28 +722,29 @@ def _condition_ranges(condition: Column) -> dict[str, tuple]:
     _FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}
 
     def walk(node) -> None:
-        if kind(node) != "UnresolvedFunction":
-            return
-        fn = node.functionName()
-        args = node.arguments()
+        fn, args = call(node)
         if fn == "and":
-            walk(args.apply(0))
-            walk(args.apply(1))
+            walk(args[0])
+            walk(args[1])
             return
-        if fn == "in":
-            col = attr_name(args.apply(0))
-            vals = [lit_value(args.apply(i)) for i in range(1, args.size())]
-            if col and vals and all(v is not None for v in vals):
-                add(col, min(vals), max(vals))
-            return
-        if fn in ("=", "==", "<", "<=", ">", ">="):
-            col, v = attr_name(args.apply(0)), lit_value(args.apply(1))
-            op = fn
-            if col is None or v is None:
-                col, v = attr_name(args.apply(1)), lit_value(args.apply(0))
-                op = _FLIP.get(fn, fn)
-            if col is None or v is None:
+        if fn in ("in", "between") and args:
+            col = attr_name(args[0])
+            vals = bound(col, args[1:])
+            if vals is None:
                 return
+            if fn == "in":
+                add(col, min(vals), max(vals))
+            elif len(vals) == 2:
+                add(col, vals[0], vals[1])
+            return
+        if fn in ("=", "==", "<", "<=", ">", ">=") and len(args) == 2:
+            col, lit, op = attr_name(args[0]), args[1], fn
+            if col is None or lit_value(lit) is None:
+                col, lit, op = attr_name(args[1]), args[0], _FLIP.get(fn, fn)
+            vals = bound(col, [lit])
+            if vals is None:
+                return
+            (v,) = vals
             if op in ("=", "=="):
                 add(col, v, v)
             elif op in (">", ">="):
@@ -1155,6 +1333,124 @@ class LakeTable:
             self._publish(snap)
             return snap
 
+    # Statement DML (delete / update / merge / delete_by_keys) that
+    # loses a race runs again on the fresh head at most this often.
+    _DML_ATTEMPTS = 5
+
+    def _commit_op(self, operation: str, stage, rerun: bool = False) -> Snapshot:
+        """The one optimistic-concurrency loop for data-writing commits.
+
+        ``stage(snap)`` runs the Spark work against ``snap`` and
+        returns a :class:`_Pending` (or None for a no-op, which returns
+        ``snap``). If another commit lands first, the one rebase rule
+        (``_rebase``) either carries the staged work onto the new head
+        or raises :class:`CommitConflict`. On a conflict the staged
+        files are removed here; then a ``rerun`` writer (statement DML)
+        re-executes ``stage`` on the fresh head — as if the statement
+        had started after the winning commit — and every other writer
+        re-raises."""
+        for _ in range(self._DML_ATTEMPTS if rerun else 1):
+            snap = self.snapshot()
+            op = stage(snap)
+            if op is None:
+                return snap
+            try:
+                return self._rebase_and_publish(operation, snap, op)
+            except CommitConflict:
+                self._discard_staged(op)
+                if not rerun:
+                    raise
+        raise CommitConflict(
+            f"{operation} kept conflicting with concurrent commits "
+            "(retries exhausted)"
+        )
+
+    def _rebase_and_publish(
+        self, operation: str, snap: Snapshot, op: _Pending
+    ) -> Snapshot:
+        """Publish ``op`` onto the head, rebasing it first if the head
+        moved past ``snap``. A callable ``clash`` may run a Spark job,
+        so it is checked OUTSIDE the commit lock — holding the flock
+        through a scan would stall every other writer on the table —
+        and the lock is re-taken to publish; each pass validates only
+        the files added since the last. After two such free-running
+        passes the rule is checked once under the lock, which
+        guarantees progress on a busy table."""
+        probes = 2
+        while True:
+            with self._commit_lock():
+                head = self.current_version()
+                if head != snap.version and (
+                    not callable(op.clash) or probes <= 0
+                ):
+                    snap = self._rebase(operation, op, snap, self.snapshot(head))
+                if head == snap.version:
+                    # the data sequence number is assigned at commit:
+                    # a MoR delete committed before this one can never
+                    # apply to the rows it adds
+                    seq = {"seq": head + 1}
+                    files = [
+                        f for f in snap.files if f["path"] not in op.replaces
+                    ] + [e | seq for e in op.adds]
+                    out = self._prepare_snapshot(
+                        head, operation, files, snap.schema_json,
+                        summary=op.summary, change_files=op.change_files,
+                        delete_files=self._live_deletes(
+                            snap.delete_files, files
+                        ) + [d | seq for d in op.deletes],
+                    )
+                    self._publish(out)
+                    return out
+            probes -= 1
+            snap = self._rebase(operation, op, snap, self.snapshot())
+
+    @staticmethod
+    def _rebase(
+        operation: str, op: _Pending, snap: Snapshot, head: Snapshot
+    ) -> Snapshot:
+        """The one rebase rule: ``op``, staged against ``snap``, may
+        move onto ``head`` (returned) or raises :class:`CommitConflict`.
+        A writer that read live files needs (a) all of them still live
+        — nobody rewrote or removed them, (b) the schema unchanged and
+        (c) the delete files unchanged (a MoR delete that landed would
+        target rows it copied into new files, which carry a higher
+        sequence number and would dodge it). Then no file the
+        concurrent commits added may clash with ``op``."""
+        if op.clash == _ANY:
+            raise CommitConflict(
+                f"table advanced to v{head.version} since base v{snap.version}"
+            )
+        stale = f"{operation} is stale: "
+        if op.reads:
+            if not op.reads <= {f["path"] for f in head.files}:
+                raise CommitConflict(
+                    stale + "a concurrent commit rewrote or removed files "
+                    "it read"
+                )
+            if head.schema_id != snap.schema_id:
+                raise CommitConflict(stale + "schema evolved concurrently")
+            if {d["path"] for d in head.delete_files} != {
+                d["path"] for d in snap.delete_files
+            }:
+                raise CommitConflict(
+                    stale + "delete files changed concurrently"
+                )
+        if callable(op.clash):
+            known = {f["path"] for f in snap.files}
+            added = [f for f in head.files if f["path"] not in known]
+            why = added and op.clash(head, added)
+            if why:
+                raise CommitConflict(stale + why)
+        return head
+
+    def _discard_staged(self, op: _Pending) -> None:
+        """Remove a lost attempt's staged data, delete and change files
+        (no snapshot lists them; the reference's abort does the same,
+        commit_ops.c:217-272)."""
+        for rel in [e["path"] for e in op.adds + op.deletes] + op.change_files:
+            with contextlib.suppress(OSError):
+                os.remove(os.path.join(self.location, rel))
+
     def _prepare_snapshot(
         self,
         base_version: int,
@@ -1661,10 +1957,6 @@ class LakeTable:
                     "ranges": ranges,
                     "nulls": nulls,
                     "schema_id": schema_id,
-                    # sequence number: MoR delete files apply only to
-                    # data files with a lower seq (pre-feature files
-                    # default to 0 via .get)
-                    "seq": snapshot_hint,
                 }
             )
         shutil.rmtree(staging, ignore_errors=True)
@@ -2051,10 +2343,14 @@ class LakeTable:
     ) -> Snapshot:
         """INSERT/append (ref A9+A10: write_ops.c buffering + commit).
 
-        Optimistic-commit retry (ref A19 / Iceberg fast-append): an
-        append conflicts with nothing — on CommitConflict the staged
-        files are re-based onto the new current snapshot and the
-        commit retried; the data files are never rewritten.
+        An append conflicts with nothing (Iceberg fast-append): when
+        another commit lands between staging and commit, the staged
+        files are rebased onto the new head — never rewritten — and
+        take their sequence number at commit, so a merge-on-read delete
+        committed first never applies to them. ``retries=0`` refuses
+        the rebase and raises :class:`CommitConflict` instead; every
+        positive value behaves the same (one rebase always suffices: it
+        is validated under the commit lock).
         ``summary_extra`` stamps application metadata (e.g. a streaming
         sink's batch id) atomically with the commit. ``merge_schema``
         (Delta mergeSchema): new df columns evolve the table first,
@@ -2063,47 +2359,46 @@ class LakeTable:
             df = self._merge_write_schema(df)
         self._check_schema(df)
         df = self._sort_for_write(self._distribute_for_write(df))
-        base = self.current_version()
-        new_files = self._stage_dataframe(
-            df, base + 1, self.snapshot(base).partition_spec,
-            schema_id=self.snapshot(base).schema_id,
-        )
-        while True:
-            files = (
-                self.snapshot(base).files + new_files if base > 0 else new_files
+
+        def stage(snap: Snapshot) -> _Pending:
+            adds = self._stage_dataframe(
+                df, snap.version + 1, snap.partition_spec,
+                schema_id=snap.schema_id,
             )
-            try:
-                return self._commit(
-                    base, "append", files, self.snapshot(base).schema_json
-                    if base > 0 else df.schema.json(),
-                    summary={"added_files": len(new_files),
-                             "added_rows": sum(f["rows"] for f in new_files)}
-                    | (summary_extra or {}),
-                )
-            except CommitConflict:
-                if retries <= 0:
-                    raise
-                retries -= 1
-                base = self.current_version()
+            return _Pending(
+                summary={"added_files": len(adds),
+                         "added_rows": sum(f["rows"] for f in adds)}
+                | (summary_extra or {}),
+                adds=adds,
+                clash=None if retries > 0 else _ANY,
+            )
+
+        return self._commit_op("append", stage)
 
     def overwrite(
         self, df: DataFrame, summary_extra: dict | None = None
     ) -> Snapshot:
         """Full-table overwrite (new snapshot; old files stay until expiry).
         ``summary_extra`` lets callers stamp application metadata (e.g. a
-        rollup's source-version watermark) atomically with the commit."""
+        rollup's source-version watermark) atomically with the commit.
+        Any concurrent commit makes it raise :class:`CommitConflict`."""
         self._check_schema(df)
         df = self._sort_for_write(self._distribute_for_write(df))
-        base = self.current_version()
-        new_files = self._stage_dataframe(
-            df, base + 1, self.snapshot(base).partition_spec,
-            schema_id=self.snapshot(base).schema_id,
-        )
-        return self._commit(
-            base, "overwrite", new_files, self.snapshot(base).schema_json,
-            summary={"added_files": len(new_files)} | (summary_extra or {}),
-            delete_files=[],  # every pre-overwrite delete is retired
-        )
+
+        def stage(snap: Snapshot) -> _Pending:
+            adds = self._stage_dataframe(
+                df, snap.version + 1, snap.partition_spec,
+                schema_id=snap.schema_id,
+            )
+            # every pre-overwrite file and delete file is retired
+            return _Pending(
+                summary={"added_files": len(adds)} | (summary_extra or {}),
+                adds=adds,
+                replaces={f["path"] for f in snap.files},
+                clash=_ANY,
+            )
+
+        return self._commit_op("overwrite", stage)
 
     def overwrite_partitions(
         self, df: DataFrame, summary_extra: dict | None = None
@@ -2119,7 +2414,12 @@ class LakeTable:
         tables (files written under an older partition spec) are
         rejected: a directory match against the current layout cannot
         see logically-overlapping rows filed under the old one —
-        compact first to upgrade layouts."""
+        compact first to upgrade layouts.
+
+        A concurrent commit rebases under the overwrite unless it added
+        a file to a replaced partition: the rebase would then silently
+        drop its rows, so the overwrite raises :class:`CommitConflict`
+        instead (Iceberg's overwrite-conflict semantics)."""
         snap = self.snapshot()
         if not snap.partition_spec:
             raise LakehouseError(
@@ -2143,61 +2443,43 @@ class LakeTable:
                 )
         self._check_schema(df)
         df = self._sort_for_write(self._distribute_for_write(df))
-        base = self.current_version()
-        new_files = self._stage_dataframe(
-            df, base + 1, snap.partition_spec, schema_id=snap.schema_id
-        )
-        new_dirs = {os.path.dirname(f["path"]) for f in new_files}
-        # optimistic retry: a concurrent commit re-bases this replace
-        # onto the new snapshot UNLESS it also wrote into a replaced
-        # partition (then the rebase would silently drop its rows —
-        # abort instead, Iceberg's overwrite-conflict semantics)
-        retries = 3
-        while True:
-            keep = [
-                f
-                for f in snap.files
-                if os.path.dirname(f["path"]) not in new_dirs
-            ]
-            final = keep + new_files
-            try:
-                return self._commit(
-                    base, "overwrite-partitions", final, snap.schema_json,
-                    summary={
-                        "replaced_partitions": sorted(new_dirs),
-                        "added_files": len(new_files),
-                        "kept_files": len(keep),
-                    }
-                    | (summary_extra or {}),
-                    delete_files=self._live_deletes(snap.delete_files, final),
-                )
-            except CommitConflict:
-                if retries <= 0:
-                    raise
-                retries -= 1
-                base = self.current_version()
-                cur = self.snapshot(base)
-                prev_paths = {f["path"] for f in snap.files}
-                added_concurrently = [
-                    f
-                    for f in cur.files
-                    if f["path"] not in prev_paths
-                    and os.path.dirname(f["path"]) in new_dirs
-                ]
-                if added_concurrently:
-                    raise CommitConflict(
-                        "dynamic overwrite is stale: a concurrent commit "
-                        "wrote into a replaced partition"
-                    )
-                snap = cur
+
+        def stage(snap: Snapshot) -> _Pending:
+            adds = self._stage_dataframe(
+                df, snap.version + 1, snap.partition_spec,
+                schema_id=snap.schema_id,
+            )
+            dirs = {os.path.dirname(f["path"]) for f in adds}
+            replaces = {
+                f["path"] for f in snap.files
+                if os.path.dirname(f["path"]) in dirs
+            }
+            return _Pending(
+                summary={
+                    "replaced_partitions": sorted(dirs),
+                    "added_files": len(adds),
+                    "kept_files": len(snap.files) - len(replaces),
+                }
+                | (summary_extra or {}),
+                adds=adds,
+                replaces=replaces,
+                clash=lambda head, added: any(
+                    os.path.dirname(f["path"]) in dirs for f in added
+                ) and "a concurrent commit wrote into a replaced partition",
+            )
+
+        return self._commit_op("overwrite-partitions", stage)
 
     def truncate(self) -> Snapshot:
         """TRUNCATE (ref A14, iceberg_am.c:245-249) — empty snapshot,
         history retained (time travel still sees old data)."""
-        base = self.current_version()
-        return self._commit(
-            base, "truncate", [], self.snapshot(base).schema_json,
-            delete_files=[],
+        return self._commit_op(
+            "truncate",
+            lambda snap: _Pending(
+                summary={},
+                replaces={f["path"] for f in snap.files},
+                clash=_ANY,
+            ),
         )
 
     # ------------------------------------------------------------------
@@ -3129,7 +3411,7 @@ class LakeTable:
     def lineage_scan(self) -> DataFrame:
         """Current-snapshot scan with ``__file``/``__pos`` row-identity
         columns appended (existing deletes applied) — the frame a
-        caller filters to hand ``_mor_positional_dml`` a pre-computed
+        caller filters to hand ``_mor_dml(positional=True)`` a pre-computed
         match set (r9 subquery-DML path)."""
         s = self.snapshot()
         return self._read_entries(s, s.files, with_lineage=True)
@@ -3513,11 +3795,16 @@ class LakeTable:
     # callbacks but never implemented them: iceberg_am.c:141-159)
     # ------------------------------------------------------------------
 
-    def _stage_changes(self, df: DataFrame, snapshot_hint: int) -> list[str]:
-        """Write a change-feed frame (rows + ``_change_type``) as
-        parquet under ``_changes/``; returns relative paths. Written
-        BEFORE the commit (invisible unless the commit lists them) —
-        same staging discipline as data files."""
+    def _stage_changes(
+        self, parts: list[DataFrame], snapshot_hint: int
+    ) -> list[str]:
+        """Write change-feed frames (rows + ``_change_type``) as one
+        parquet set under ``_changes/``; returns relative paths ([] for
+        no parts). Written BEFORE the commit (invisible unless the
+        commit lists them) — same staging discipline as data files."""
+        if not parts:
+            return []
+        df = functools.reduce(DataFrame.unionByName, parts)
         changes_dir = os.path.join(self.location, "_changes")
         staging = os.path.join(
             self.location, f"_staging-chg-{snapshot_hint}-{uuid.uuid4().hex[:8]}"
@@ -3637,11 +3924,14 @@ class LakeTable:
         predicates and missing stats keep), so every DML entry point —
         CoW probe AND the MoR match scans (r14, VERDICT #6) — can scan
         the shortlist instead of the table."""
+        schema = StructType.fromJson(json.loads(snap.schema_json))
         return self._select_entries(
-            snap, snap.files, _condition_ranges(condition)
+            snap, snap.files, _condition_ranges(condition, schema)
         )
 
-    def _affected_files(self, condition: Column) -> list[str]:
+    def _affected_files(
+        self, condition: Column, snap: Snapshot | None = None
+    ) -> list[str]:
         """Relative paths of data files containing matching rows.
         File-level pruning: everything else is carried by reference.
         Runs on the RAW scan (MoR deletes not applied): a superset is
@@ -3658,8 +3948,9 @@ class LakeTable:
         probe each file's bloom (same machinery as the read path's
         ``pruned_entries``): a point DELETE on a bloom column opens
         only files that might contain the key, even when the column
-        is not clustered and every file's min/max straddles it."""
-        snap = self.snapshot()
+        is not clustered and every file's min/max straddles it.
+        ``snap`` defaults to the head."""
+        snap = snap or self.snapshot()
         files = self._shortlist_by_condition(snap, condition)
         if not files:
             return []
@@ -3705,170 +3996,54 @@ class LakeTable:
         v = self.snapshot().properties.get("change_data_feed", "false")
         return str(v).lower() in ("true", "on", "1")
 
-    def _rewrite(
-        self, operation: str, condition: Column, transform, changes=None,
-        retries: int = 5,
-    ) -> Snapshot:
-        # Optimistic concurrency (ref A10's retry/re-base posture;
-        # Iceberg row-delta semantics), two tiers per conflict:
-        # 1. REBASE — the concurrent commit left our rewritten files
-        #    alone and added no rows matching the predicate: our read
-        #    set is intact, re-point keep at the new head and recommit.
-        # 2. RE-EXECUTE — our read set changed (files rewritten by
-        #    compaction/another DML, matching rows appended, schema or
-        #    delete files moved): discard the staged output and run the
-        #    whole statement against the fresh head — equivalent to the
-        #    statement having started after the conflicting commit,
-        #    which is exactly serializable re-execution.
-        while True:
-            try:
-                return self._rewrite_once(
-                    operation, condition, transform, changes
-                )
-            except _StaleRewrite:
-                if retries <= 0:
-                    raise CommitConflict(
-                        f"{operation} kept conflicting with concurrent "
-                        "commits (retries exhausted)"
-                    )
-                retries -= 1
-
-    def _rewrite_once(
+    def _cow_dml(
         self, operation: str, condition: Column, transform, changes
     ) -> Snapshot:
-        base = self.current_version()
-        snap = self.snapshot(base)
-        affected = set(self._affected_files(condition))
-        if not affected:
-            return snap  # no-op: nothing matched
-        keep = [f for f in snap.files if f["path"] not in affected]
-        touched_entries = [f for f in snap.files if f["path"] in affected]
-        touched = self._read_entries(snap, touched_entries)
-        rewritten = transform(touched)
-        # guard=False: the staged frame is dominated by pre-existing
-        # carry-over rows; transforms that modify rows (UPDATE) apply
-        # check guards to exactly those rows themselves
-        new_files = self._stage_dataframe(
-            rewritten, base + 1, snap.partition_spec,
-            schema_id=snap.schema_id, guard=False,
-        )
-        feed = changes is not None and self.change_feed_enabled()
-        change_files = (
-            self._stage_changes(changes(touched), base + 1) if feed else []
-        )
-        # Validate-and-publish: the rebase validation includes a Spark
-        # job (predicate probe over concurrently-added files), so it
-        # runs OUTSIDE the commit lock — holding the exclusive flock
-        # through a scan would stall every other writer on the table
-        # (r5 ADVICE). The loop re-acquires the lock after each probe;
-        # if yet another commit landed meanwhile, it re-validates the
-        # (incremental) delta. Bounded: after `probes` free-running
-        # validations it degrades to validating UNDER the lock once,
-        # which guarantees progress on a pathologically busy table at
-        # the old cost.
-        probes = 2
-        while True:
-            with self._commit_lock():
-                head = self.current_version()
-                if head != base and probes <= 0:
-                    # last resort: validate while holding the lock
-                    try:
-                        snap = self._validate_dml_rebase(
-                            snap, affected, condition
-                        )
-                    except CommitConflict:
-                        self._discard_staged(new_files, change_files)
-                        raise _StaleRewrite() from None
-                    base = snap.version
-                    keep = [
-                        f for f in snap.files if f["path"] not in affected
-                    ]
-                    head = base
-                if head == base:
-                    final = keep + new_files
-                    out = self._prepare_snapshot(
-                        base, operation, final, snap.schema_json,
-                        summary={"rewritten_files": len(affected),
-                                 "added_files": len(new_files)}
-                        | ({"change_feed": "exact"} if feed else {}),
-                        change_files=change_files,
-                        delete_files=self._live_deletes(
-                            snap.delete_files, final
-                        ),
-                    )
-                    self._publish(out)
-                    return out
-            # lock released — probe the new head without blocking
-            # other writers. Validation is incremental: `snap` advances
-            # to each validated head, so the next pass scans only files
-            # added since.
-            probes -= 1
-            try:
-                snap = self._validate_dml_rebase(snap, affected, condition)
-            except CommitConflict:
-                # read set changed — drop this attempt's staged files
-                # (they'd be orphans) and re-execute
-                self._discard_staged(new_files, change_files)
-                raise _StaleRewrite() from None
-            base = snap.version
-            keep = [f for f in snap.files if f["path"] not in affected]
+        """Copy-on-write DELETE/UPDATE: rewrite the files holding
+        matching rows (``transform`` maps their rows to the new
+        content; ``changes`` maps them to change-feed parts). A
+        concurrent commit rebases under it unless it touched the read
+        set or added rows matching ``condition``; then the statement
+        re-executes on the fresh head (serializable re-execution)."""
 
-    def _discard_staged(self, new_files, change_files) -> None:
-        """Remove a lost DML attempt's staged data/change parquet so a
-        conflict-heavy table doesn't accumulate orphans until vacuum."""
-        for e in new_files:
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(self.location, e["path"]))
-        for p in change_files:
-            with contextlib.suppress(OSError):
-                os.remove(os.path.join(self.location, p))
+        def clash(head: Snapshot, added: list[dict]):
+            hit = (
+                self._read_entries(head, added, apply_deletes=False)
+                .filter(condition)
+                .limit(1)
+                .count()
+            )
+            return hit and "concurrently-added rows match the predicate"
 
-    def _validate_dml_rebase(
-        self, snap: Snapshot, affected: set[str], condition
-    ) -> Snapshot:
-        """Validate that a row-level rewrite staged against ``snap``
-        may rebase onto the current head; returns the head snapshot or
-        raises :class:`CommitConflict`. Safe iff (a) every file the
-        rewrite replaces is still live (nobody else rewrote it), (b)
-        the schema didn't evolve, (c) no MoR delete files landed (they
-        would target the pre-images we carried into new files — our
-        copies would dodge them), and (d) when a predicate is given,
-        no concurrently-added file holds a matching row (otherwise the
-        DML would silently miss rows committed before it)."""
-        cur = self.snapshot(self.current_version())
-        cur_paths = {f["path"] for f in cur.files}
-        if not affected <= cur_paths:
-            raise CommitConflict(
-                "row-level rewrite is stale: a concurrent commit rewrote "
-                "or removed files this DML read"
+        def stage(snap: Snapshot) -> _Pending | None:
+            affected = set(self._affected_files(condition, snap))
+            if not affected:
+                return None  # no-op: nothing matched
+            touched = self._read_entries(
+                snap, [f for f in snap.files if f["path"] in affected]
             )
-        if cur.schema_id != snap.schema_id:
-            raise CommitConflict(
-                "row-level rewrite is stale: schema evolved concurrently"
+            # guard=False: the staged frame is dominated by pre-existing
+            # carry-over rows; transforms that modify rows (UPDATE)
+            # apply check guards to exactly those rows themselves
+            adds = self._stage_dataframe(
+                transform(touched), snap.version + 1, snap.partition_spec,
+                schema_id=snap.schema_id, guard=False,
             )
-        if {d["path"] for d in (cur.delete_files or [])} != {
-            d["path"] for d in (snap.delete_files or [])
-        }:
-            raise CommitConflict(
-                "row-level rewrite is stale: delete files changed "
-                "concurrently"
+            feed = self.change_feed_enabled()
+            return _Pending(
+                summary={"rewritten_files": len(affected),
+                         "added_files": len(adds)}
+                | ({"change_feed": "exact"} if feed else {}),
+                adds=adds,
+                change_files=self._stage_changes(
+                    changes(touched) if feed else [], snap.version + 1
+                ),
+                reads=affected,
+                replaces=affected,
+                clash=clash,
             )
-        if condition is not None:
-            snap_paths = {f["path"] for f in snap.files}
-            added = [f for f in cur.files if f["path"] not in snap_paths]
-            if added:
-                hit = (
-                    self._read_entries(cur, added, apply_deletes=False)
-                    .filter(condition)
-                    .limit(1)
-                    .count()
-                )
-                if hit:
-                    raise CommitConflict(
-                        "row-level rewrite is stale: concurrently-added "
-                        "rows match the predicate"
-                    )
-        return cur
+
+        return self._commit_op(operation, stage, rerun=True)
 
     def _delete_mode(self, mode: str | None) -> str:
         mode = mode or self.snapshot().properties.get(
@@ -3902,88 +4077,129 @@ class LakeTable:
                 raise LakehouseError(f"row_key column {c!r} not in schema")
         return cols
 
+    def _stage_mor(
+        self,
+        snap: Snapshot,
+        retire: list[DataFrame],
+        changes,
+        positional: bool = False,
+        post: DataFrame | None = None,
+        inserts: DataFrame | None = None,
+        summary_extra: dict | None = None,
+    ) -> _Pending | None:
+        """The one merge-on-read stager (Iceberg v2 delete files; the
+        reference's merge-on-read intent, pg_lakehouse_iceberg/
+        README.md:15): the rows of the ``retire`` frames land as ONE
+        delete file — their ``row_key`` columns (equality delete) or,
+        ``positional``, their ``__file``/``__pos`` (position delete) —
+        O(retired rows), never a data-file rewrite. ``post`` (images of
+        retired rows; skipped when nothing retired) and ``inserts``
+        land as ordinary data files, which take a higher sequence
+        number than the delete at commit and so are exempt from it.
+        ``changes()`` builds the change-feed parts, only when the table
+        has the feed on. None when nothing is retired or added."""
+        hint = snap.version + 1
+        cols = ["__file", "__pos"] if positional else self._row_key(snap)
+        deletes, rows = [], 0
+        if retire:
+            keys = functools.reduce(
+                DataFrame.unionByName, [p.select(*cols) for p in retire]
+            )
+            rel, rows = self._stage_delete_file(keys.distinct(), hint)
+            if rows:
+                ids, _ = self._effective_field_ids(snap)
+                deletes = [
+                    {"path": rel, "rows": rows}
+                    | (
+                        {"kind": "position"} if positional
+                        else {"key_names": cols,
+                              "key_ids": [ids[c] for c in cols]}
+                    )
+                ]
+            elif rel is not None:
+                os.remove(os.path.join(self.location, rel))
+        frames = [f for f in (post if rows else None, inserts) if f is not None]
+        adds = (
+            self._stage_dataframe(
+                self._align_to_schema(
+                    functools.reduce(DataFrame.unionByName, frames)
+                ),
+                hint, snap.partition_spec, schema_id=snap.schema_id,
+            )
+            if frames
+            else []
+        )
+        if not deletes and not adds:
+            return None
+        feed = self.change_feed_enabled()
+        mode, counted = (
+            ("merge-on-read-positional", "delete_positions") if positional
+            else ("merge-on-read", "delete_keys")
+        )
+        return _Pending(
+            summary={"delete_mode": mode, counted: rows,
+                     "added_files": len(adds)}
+            | ({"change_feed": "exact"} if feed else {})
+            | (summary_extra or {}),
+            adds=adds,
+            deletes=deletes,
+            change_files=self._stage_changes(
+                changes() if feed else [], hint
+            ),
+            clash=_ANY,
+        )
+
     def _mor_dml(
         self,
         operation: str,
         condition: Column | None,
         postimage=None,
         matched: DataFrame | None = None,
+        positional: bool = False,
     ) -> Snapshot:
-        """Merge-on-read DML (Iceberg v2 equality deletes; the
-        reference's merge-on-read intent, pg_lakehouse_iceberg/
-        README.md:15): write the matched rows' KEYS as a delete file —
-        O(matches), never a data-file rewrite — plus, for UPDATE, the
-        postimage rows as ordinary appends. The new data files carry a
-        HIGHER sequence number than the delete, so they are exempt
-        from it (Iceberg's sequence-number rule). ``matched`` (r9)
-        lets a caller supply the match frame directly — the subquery
-        DML path computes it through the SQL frontend, where the
-        predicate is not expressible as a Column."""
-        base = self.current_version()
-        snap = self.snapshot(base)
-        key_cols = self._row_key(snap)
-        ids, _ = self._effective_field_ids(snap)
-        if matched is None:
-            # manifest-range/bloom shortlist before the match scan —
-            # the same pruning the CoW probe gets (r14, VERDICT #6): a
-            # keyed MoR DELETE/UPDATE opens the candidate slice, not
-            # the table. Deletes still apply (live rows only).
-            matched = self._read_entries(
-                snap, self._shortlist_by_condition(snap, condition)
-            ).filter(condition)
-        rel, rows = self._stage_delete_file(
-            matched.select(*key_cols).distinct(), base + 1
-        )
-        if rows == 0:
-            if rel is not None:
-                os.remove(os.path.join(self.location, rel))
-            return snap  # no-op: nothing matched
-        entry = {
-            "path": rel,
-            "rows": rows,
-            "key_names": key_cols,
-            "key_ids": [ids[c] for c in key_cols],
-            "seq": base + 1,
-        }
-        new_files = []
-        change_parts = []
-        feed = self.change_feed_enabled()
-        if postimage is not None:
-            post = self._align_to_schema(postimage(matched))
-            new_files = self._stage_dataframe(
-                post, base + 1, snap.partition_spec,
-                schema_id=snap.schema_id,
+        """Merge-on-read DELETE/UPDATE: the matched rows retire through
+        a delete file — equality (needs the ``row_key`` table property)
+        or, ``positional``, position deletes recorded as (file name,
+        row index), which work on tables with no identifier columns.
+        UPDATE's ``postimage`` maps the matched rows to their new
+        images. ``matched`` (r9) lets a caller supply the match frame
+        directly (carrying ``__file``/``__pos`` from
+        ``lineage_scan()`` when positional) — the subquery DML path
+        computes it through the SQL frontend, where the predicate is
+        not expressible as a Column. Such a frame is bound to its
+        snapshot, so a lost race raises :class:`CommitConflict`;
+        otherwise the statement re-executes on the fresh head."""
+
+        def stage(snap: Snapshot) -> _Pending | None:
+            m = matched
+            if m is None:
+                # manifest-range/bloom shortlist before the match scan
+                # (r14, VERDICT #6): a keyed MoR DELETE/UPDATE opens
+                # the candidate slice, not the table. Deletes still
+                # apply (live rows only).
+                m = self._read_entries(
+                    snap, self._shortlist_by_condition(snap, condition),
+                    with_lineage=positional,
+                ).filter(condition)
+            rows = m.drop("__file", "__pos") if positional else m
+            post = (
+                self._align_to_schema(postimage(rows))
+                if postimage is not None else None
             )
-            if feed:
-                change_parts = [
-                    matched.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ),
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    ),
+
+            def changes() -> list[DataFrame]:
+                if post is None:
+                    return [rows.withColumn("_change_type", F.lit("delete"))]
+                return [
+                    rows.withColumn("_change_type", F.lit("update_preimage")),
+                    post.withColumn("_change_type", F.lit("update_postimage")),
                 ]
-        elif feed:
-            change_parts = [
-                matched.withColumn("_change_type", F.lit("delete"))
-            ]
-        change_files = []
-        if change_parts:
-            chg = change_parts[0]
-            for p in change_parts[1:]:
-                chg = chg.unionByName(p)
-            change_files = self._stage_changes(chg, base + 1)
-        return self._commit(
-            base, operation, snap.files + new_files, snap.schema_json,
-            summary={
-                "delete_mode": "merge-on-read",
-                "delete_keys": rows,
-                "added_files": len(new_files),
-            }
-            | ({"change_feed": "exact"} if feed else {}),
-            change_files=change_files,
-            delete_files=snap.delete_files + [entry],
-        )
+
+            return self._stage_mor(
+                snap, [m], changes, positional, post=post
+            )
+
+        return self._commit_op(operation, stage, rerun=matched is None)
 
     def delete_by_keys(self, keys: DataFrame) -> Snapshot:
         """Equality-delete by a KEY FRAME — the CDC-apply / tombstone
@@ -3996,145 +4212,47 @@ class LakeTable:
         feed enabled, the exact deleted pre-images are recorded (that
         path does join the target — feed correctness costs the scan).
         """
-        base = self.current_version()
-        snap = self.snapshot(base)
-        key_cols = self._row_key(snap)
-        ids, _ = self._effective_field_ids(snap)
-        rel, rows = self._stage_delete_file(
-            keys.select(*key_cols).distinct(), base + 1
-        )
-        if rows == 0:
-            if rel is not None:
-                os.remove(os.path.join(self.location, rel))
-            return snap  # no-op: empty key frame
-        entry = {
-            "path": rel,
-            "rows": rows,
-            "key_names": key_cols,
-            "key_ids": [ids[c] for c in key_cols],
-            "seq": base + 1,
-        }
-        change_files = []
-        feed = self.change_feed_enabled()
-        if feed:
-            matched = self.read().join(
-                keys.select(*key_cols).distinct(), on=key_cols, how="semi"
-            )
-            change_files = self._stage_changes(
-                matched.withColumn("_change_type", F.lit("delete")),
-                base + 1,
-            )
-        return self._commit(
-            base, "delete", snap.files, snap.schema_json,
-            summary={
-                "delete_mode": "merge-on-read",
-                "delete_keys": rows,
-                "added_files": 0,
-            }
-            | ({"change_feed": "exact"} if feed else {}),
-            change_files=change_files,
-            delete_files=snap.delete_files + [entry],
-        )
 
-    def _mor_positional_dml(
-        self,
-        operation: str,
-        condition: Column | None,
-        postimage=None,
-        matched: DataFrame | None = None,
-    ) -> Snapshot:
-        """Merge-on-read DML via POSITION deletes (Iceberg v2's second
-        delete type): matched rows are recorded as (file name, row
-        index) — no ``row_key`` table property needed, which is the
-        point: positional MoR works on tables with no identifier
-        columns. Costs one scan to find the rows (inherent — the
-        positions must be discovered) and writes O(matches).
-        ``matched`` (r9) supplies a pre-computed match frame carrying
-        ``__file``/``__pos`` (from ``lineage_scan()``) for predicates
-        the Column algebra can't express (subquery DML)."""
-        base = self.current_version()
-        snap = self.snapshot(base)
-        if matched is None:
-            # manifest shortlist before the position-discovery scan
-            # (r14, VERDICT #6) — positions are per-file, so skipping
-            # non-overlapping files cannot lose a match
-            scan = self._read_entries(
-                snap,
-                self._shortlist_by_condition(snap, condition),
-                with_lineage=True,
+        def stage(snap: Snapshot) -> _Pending | None:
+            key_cols = self._row_key(snap)
+            return self._stage_mor(
+                snap, [keys],
+                lambda: [
+                    self._read_entries(snap, snap.files)
+                    .join(
+                        keys.select(*key_cols).distinct(),
+                        on=key_cols, how="semi",
+                    )
+                    .withColumn("_change_type", F.lit("delete"))
+                ],
             )
-            matched = scan.filter(condition)
-        rel, rows = self._stage_delete_file(
-            matched.select("__file", "__pos").distinct(), base + 1
-        )
-        if rows == 0:
-            if rel is not None:
-                os.remove(os.path.join(self.location, rel))
-            return snap  # no-op: nothing matched
-        entry = {
-            "path": rel,
-            "rows": rows,
-            "kind": "position",
-            "seq": base + 1,
-        }
-        matched_rows = matched.drop("__file", "__pos")
-        new_files = []
-        change_parts = []
-        feed = self.change_feed_enabled()
-        if postimage is not None:
-            post = self._align_to_schema(postimage(matched_rows))
-            new_files = self._stage_dataframe(
-                post, base + 1, snap.partition_spec,
-                schema_id=snap.schema_id,
-            )
-            if feed:
-                change_parts = [
-                    matched_rows.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ),
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    ),
-                ]
-        elif feed:
-            change_parts = [
-                matched_rows.withColumn("_change_type", F.lit("delete"))
-            ]
-        change_files = []
-        if change_parts:
-            chg = change_parts[0]
-            for c in change_parts[1:]:
-                chg = chg.unionByName(c)
-            change_files = self._stage_changes(chg, base + 1)
-        return self._commit(
-            base, operation, snap.files + new_files, snap.schema_json,
-            summary={
-                "delete_mode": "merge-on-read-positional",
-                "delete_positions": rows,
-                "added_files": len(new_files),
-            }
-            | ({"change_feed": "exact"} if feed else {}),
-            change_files=change_files,
-            delete_files=snap.delete_files + [entry],
-        )
+
+        return self._commit_op("delete", stage, rerun=True)
 
     def delete(self, condition: Column, mode: str | None = None) -> Snapshot:
         """DELETE FROM t WHERE ... (ref A12). Copy-on-write rewrites
         matching files; merge-on-read (``mode='merge-on-read'`` or
         table property ``write_delete_mode``) writes an equality-delete
         key file; ``'merge-on-read-positional'`` writes (file, row
-        index) position deletes — no row_key property required."""
+        index) position deletes — no row_key property required.
+
+        Concurrent commits: copy-on-write rebases over any commit that
+        leaves its read set, the schema and the delete files alone and
+        adds no matching row; otherwise — and in merge-on-read mode
+        always — the statement re-executes on the fresh head."""
         dm = self._delete_mode(mode)
-        if dm == "mor":
-            return self._mor_dml("delete", condition)
-        if dm == "mor-pos":
-            return self._mor_positional_dml("delete", condition)
-        return self._rewrite(
+        if dm in ("mor", "mor-pos"):
+            return self._mor_dml(
+                "delete", condition, positional=dm == "mor-pos"
+            )
+        return self._cow_dml(
             "delete", condition,
             lambda df: df.filter(~condition),
-            changes=lambda df: df.filter(condition).withColumn(
-                "_change_type", F.lit("delete")
-            ),
+            lambda df: [
+                df.filter(condition).withColumn(
+                    "_change_type", F.lit("delete")
+                )
+            ],
         )
 
     def update(
@@ -4149,7 +4267,8 @@ class LakeTable:
         from the delete. Post-image frames align to the table schema
         (``_align_to_schema``, the PG assignment cast) — without it a
         wider-typed assignment (array<double> onto array<float>) would
-        silently write type-drifted files."""
+        silently write type-drifted files. Concurrent commits are
+        handled as for :meth:`delete`."""
         known = set(self.schema().names)
         bad = sorted(set(assignments) - known)
         if bad:
@@ -4159,19 +4278,21 @@ class LakeTable:
             raise LakehouseError(
                 f"UPDATE assigns to unknown column(s): {bad}"
             )
-        dm = self._delete_mode(mode)
-        if dm in ("mor", "mor-pos"):
-            postimage = lambda m: m.select(  # noqa: E731
+
+        def post(df: DataFrame) -> DataFrame:
+            return df.select(
                 *[
                     assignments[c].alias(c) if c in assignments
                     else F.col(c)
-                    for c in m.columns
+                    for c in df.columns
                 ]
             )
-            if dm == "mor":
-                return self._mor_dml("update", condition, postimage=postimage)
-            return self._mor_positional_dml(
-                "update", condition, postimage=postimage
+
+        dm = self._delete_mode(mode)
+        if dm in ("mor", "mor-pos"):
+            return self._mor_dml(
+                "update", condition, postimage=post,
+                positional=dm == "mor-pos",
             )
 
         def transform(df: DataFrame) -> DataFrame:
@@ -4196,21 +4317,16 @@ class LakeTable:
                 marked, only=F.col("__modified")
             ).drop("__modified")
 
-        def changes(df: DataFrame) -> DataFrame:
+        def changes(df: DataFrame) -> list[DataFrame]:
             pre = df.filter(condition)
-            post = pre.select(
-                *[
-                    assignments[c].alias(c) if c in assignments else F.col(c)
-                    for c in df.columns
-                ]
-            )
-            return pre.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn("_change_type", F.lit("update_postimage"))
-            )
+            return [
+                pre.withColumn("_change_type", F.lit("update_preimage")),
+                post(pre).withColumn(
+                    "_change_type", F.lit("update_postimage")
+                ),
+            ]
 
-        return self._rewrite("update", condition, transform, changes=changes)
+        return self._cow_dml("update", condition, transform, changes)
 
     def _merge_insert_values(
         self, tcols: list[str], values: dict[str, Column] | None
@@ -4245,30 +4361,28 @@ class LakeTable:
 
     def _mor_merge(
         self,
+        snap: Snapshot,
         source: DataFrame,
         on: list[str],
+        *,
         when_matched_update: dict[str, Column] | None,
         when_matched_delete: bool,
+        when_matched_condition: Column | None,
         when_not_matched_insert: bool,
-        when_not_matched_by_source_delete: bool = False,
-        when_not_matched_by_source_condition: Column | None = None,
-        summary_extra: dict | None = None,
-        when_matched_condition: Column | None = None,
-        when_not_matched_condition: Column | None = None,
-        when_not_matched_values: dict[str, Column] | None = None,
-    ) -> Snapshot:
-        """Merge-on-read MERGE: matched target rows retire via an
+        when_not_matched_by_source_delete: bool,
+        when_not_matched_by_source_condition: Column | None,
+        when_not_matched_condition: Column | None,
+        when_not_matched_values: dict[str, Column] | None,
+        summary_extra: dict | None,
+    ) -> _Pending | None:
+        """Merge-on-read MERGE body: matched target rows retire via an
         equality-delete key file; updated postimages and unmatched
         inserts land as ordinary appends (seq-exempt from the delete).
         Writes O(matched + inserted) rows — no target file rewrite —
         the CDC-apply-at-scale shape. ``when_not_matched_by_source_
         delete`` additionally retires target rows with no source match
         (O(unmatched) keys — inherent to full-sync semantics)."""
-        base = self.current_version()
-        snap = self.snapshot(base)
-        key_cols = self._row_key(snap)
-        ids, _ = self._effective_field_ids(snap)
-        target = self.read()
+        target = self._read_entries(snap, snap.files)
         src = source.select(
             F.struct(*[F.col(c) for c in source.columns]).alias("__src"),
             *[F.col(c).alias(f"__k_{c}") for c in on],
@@ -4280,11 +4394,12 @@ class LakeTable:
         matched = target.join(src, cond, "inner")
         if when_matched_condition is not None:
             matched = matched.filter(when_matched_condition)
-        retire_parts = []
+        retire = []
         if when_matched_update or when_matched_delete:
             # matched rows retire only when a matched clause replaces or
             # deletes them — an insert-only merge must leave them alone
-            retire_parts.append(matched.select(*key_cols))
+            retire.append(matched)
+        unmatched = None
         if when_not_matched_by_source_delete:
             anti_keys = src.select(*[F.col(f"__k_{c}").alias(c) for c in on])
             if small_src:
@@ -4295,27 +4410,17 @@ class LakeTable:
                 unmatched = unmatched.filter(
                     when_not_matched_by_source_condition
                 )
-            retire_parts.append(unmatched.select(*key_cols))
-        retire = (
-            retire_parts[0]
-            if retire_parts
-            else target.select(*key_cols).limit(0)
-        )
-        for p in retire_parts[1:]:
-            retire = retire.unionByName(p)
-        rel, rows = self._stage_delete_file(retire.distinct(), base + 1)
-        new_parts = []
+            retire.append(unmatched)
         tcols = target.columns
+        post = inserts = None
         if when_matched_update:
-            new_parts.append(
-                matched.select(
-                    *[
-                        when_matched_update[c].alias(c)
-                        if c in when_matched_update
-                        else F.col(c)
-                        for c in tcols
-                    ]
-                )
+            post = matched.select(
+                *[
+                    when_matched_update[c].alias(c)
+                    if c in when_matched_update
+                    else F.col(c)
+                    for c in tcols
+                ]
             )
         if when_not_matched_insert:
             ins_frame = src.join(
@@ -4330,83 +4435,34 @@ class LakeTable:
             ins_vals = self._merge_insert_values(
                 tcols, when_not_matched_values
             )
-            new_parts.append(
-                ins_frame.select(*[ins_vals[c].alias(c) for c in tcols])
-            )
-        new_files = []
-        if new_parts:
-            rows_df = new_parts[0]
-            for p in new_parts[1:]:
-                rows_df = rows_df.unionByName(p)
-            new_files = self._stage_dataframe(
-                self._align_to_schema(rows_df), base + 1,
-                snap.partition_spec, schema_id=snap.schema_id,
-            )
-        delete_files = snap.delete_files
-        if rows == 0:
-            if rel is not None:
-                os.remove(os.path.join(self.location, rel))
-        else:
-            delete_files = delete_files + [
-                {
-                    "path": rel,
-                    "rows": rows,
-                    "key_names": key_cols,
-                    "key_ids": [ids[c] for c in key_cols],
-                    "seq": base + 1,
-                }
-            ]
-        if rows == 0 and not new_files:
-            return snap  # no-op
-        feed = self.change_feed_enabled()
-        change_files = []
-        if feed:
-            change_parts = []
+            inserts = ins_frame.select(*[ins_vals[c].alias(c) for c in tcols])
+
+        def changes() -> list[DataFrame]:
+            parts = []
             if when_matched_delete:
-                change_parts.append(
-                    matched.select(*tcols).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
+                parts.append(matched.select(*tcols).withColumn(
+                    "_change_type", F.lit("delete")
+                ))
+            elif post is not None:
+                parts.append(matched.select(*tcols).withColumn(
+                    "_change_type", F.lit("update_preimage")
+                ))
+                parts.append(post.withColumn(
+                    "_change_type", F.lit("update_postimage")
+                ))
+            if inserts is not None:
+                parts.append(
+                    inserts.withColumn("_change_type", F.lit("insert"))
                 )
-            elif when_matched_update:
-                change_parts.append(
-                    matched.select(*tcols).withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                )
-                change_parts.append(
-                    new_parts[0].withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-            if when_not_matched_insert:
-                change_parts.append(
-                    new_parts[-1].withColumn(
-                        "_change_type", F.lit("insert")
-                    )
-                )
-            if when_not_matched_by_source_delete:
-                change_parts.append(
-                    unmatched.select(*tcols).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            if change_parts:
-                chg = change_parts[0]
-                for p in change_parts[1:]:
-                    chg = chg.unionByName(p)
-                change_files = self._stage_changes(chg, base + 1)
-        return self._commit(
-            base, "merge", snap.files + new_files, snap.schema_json,
-            summary={
-                "delete_mode": "merge-on-read",
-                "delete_keys": rows,
-                "added_files": len(new_files),
-            }
-            | ({"change_feed": "exact"} if feed else {})
-            | (summary_extra or {}),
-            change_files=change_files,
-            delete_files=delete_files,
+            if unmatched is not None:
+                parts.append(unmatched.select(*tcols).withColumn(
+                    "_change_type", F.lit("delete")
+                ))
+            return parts
+
+        return self._stage_mor(
+            snap, retire, changes, post=post, inserts=inserts,
+            summary_extra=summary_extra,
         )
 
     def merge(
@@ -4424,7 +4480,6 @@ class LakeTable:
         merge_schema: bool = False,
         when_not_matched_condition: Column | None = None,
         when_not_matched_values: dict[str, Column] | None = None,
-        _attempts: int = 2,
     ) -> Snapshot:
         """MERGE INTO (upsert) — ref A13's roadmap 'MERGE for upsert'.
 
@@ -4462,6 +4517,14 @@ class LakeTable:
         Positional-mode tables fall back to copy-on-write here: MERGE
         is key-addressed, so the equality-delete form is the natural
         MoR encoding; position deletes cover delete/update.
+
+        Concurrent commits: a copy-on-write MERGE rebases over a commit
+        that leaves its rewritten files, the schema and the delete
+        files alone and adds no file that may hold a source key (a
+        full-sync MERGE reads the whole table: any commit conflicts).
+        Otherwise — and in merge-on-read mode always — the MERGE
+        re-executes on the fresh head over the same materialized
+        source.
         """
         if merge_schema:
             source = self._merge_write_schema(source)
@@ -4473,6 +4536,23 @@ class LakeTable:
                 raise LakehouseError(
                     f"MERGE UPDATE SET assigns to unknown column(s): {bad}"
                 )
+        clauses = dict(
+            when_matched_update=when_matched_update,
+            when_matched_delete=when_matched_delete,
+            when_matched_condition=when_matched_condition,
+            when_not_matched_insert=when_not_matched_insert,
+            when_not_matched_by_source_delete=when_not_matched_by_source_delete,
+            when_not_matched_by_source_condition=(
+                when_not_matched_by_source_condition
+            ),
+            when_not_matched_condition=when_not_matched_condition,
+            when_not_matched_values=when_not_matched_values,
+            summary_extra=summary_extra,
+        )
+        body = (
+            self._mor_merge if self._delete_mode(mode) == "mor"
+            else self._merge_cow
+        )
         # Materialize the source ONCE for the whole statement (Delta's
         # merge-source materialization). Both merge paths otherwise
         # re-evaluate the source plan several times — the key-bounds/
@@ -4487,56 +4567,41 @@ class LakeTable:
         owns_cache = not source.is_cached
         if owns_cache:
             source = source.persist(StorageLevel.MEMORY_AND_DISK)
+
+        def stage(snap: Snapshot) -> _Pending | None:
+            # a re-execution after a concurrent schema evolution must
+            # reshape the source to the evolved schema again (r5 ADVICE)
+            src = self._merge_write_schema(source) if merge_schema else source
+            return body(snap, src, on, **clauses)
+
         try:
-            if self._delete_mode(mode) == "mor":
-                return self._mor_merge(
-                    source, on, when_matched_update, when_matched_delete,
-                    when_not_matched_insert,
-                    when_not_matched_by_source_delete,
-                    when_not_matched_by_source_condition, summary_extra,
-                    when_matched_condition, when_not_matched_condition,
-                    when_not_matched_values,
-                )
-            return self._merge_cow(
-                source, on, when_matched_update, when_matched_delete,
-                when_matched_condition, when_not_matched_insert,
-                when_not_matched_by_source_delete,
-                when_not_matched_by_source_condition, summary_extra,
-                when_not_matched_condition, when_not_matched_values,
-                _attempts, mode, merge_schema,
-            )
+            return self._commit_op("merge", stage, rerun=True)
         finally:
             if owns_cache:
                 source.unpersist()
 
     def _merge_cow(
         self,
+        snap: Snapshot,
         source: DataFrame,
         on: list[str],
+        *,
         when_matched_update: dict[str, Column] | None,
         when_matched_delete: bool,
         when_matched_condition: Column | None,
         when_not_matched_insert: bool,
         when_not_matched_by_source_delete: bool,
         when_not_matched_by_source_condition: Column | None,
-        summary_extra: dict | None,
         when_not_matched_condition: Column | None,
         when_not_matched_values: dict[str, Column] | None,
-        _attempts: int,
-        mode: str | None,
-        merge_schema: bool,
-    ) -> Snapshot:
+        summary_extra: dict | None,
+    ) -> _Pending:
         """Copy-on-write MERGE body (source already validated and
-        materialized by :meth:`merge`). ``mode``/``merge_schema`` are
-        carried only for the stale-retry re-entry into :meth:`merge`
-        (a lost race against concurrent schema evolution must re-run
-        the merge_schema realignment — r5 ADVICE)."""
-        base = self.current_version()
-        snap = self.snapshot(base)
+        materialized by :meth:`merge`): rewrite the candidate files
+        ``_merge_candidates`` selects against ``snap``."""
         touched, key_ranges, key_probes, src_rows = self._merge_candidates(
             snap, source, on, when_not_matched_by_source_delete
         )
-        keep = [f for f in snap.files if f not in touched]
         target = self._read_entries(snap, touched)
         src = source.select(
             F.struct(*[F.col(c) for c in source.columns]).alias("__src"),
@@ -4606,8 +4671,8 @@ class LakeTable:
         result = self._apply_check_guards(
             marked, only=F.col("__modified")
         ).drop("__modified")
-        new_files = self._stage_dataframe(
-            result, base + 1, snap.partition_spec,
+        adds = self._stage_dataframe(
+            result, snap.version + 1, snap.partition_spec,
             schema_id=snap.schema_id, guard=False,
         )
 
@@ -4653,101 +4718,25 @@ class LakeTable:
                 .select(*tcols)
                 .withColumn("_change_type", F.lit("delete"))
             )
-        change_files = []
-        if change_parts:
-            chg = change_parts[0]
-            for p in change_parts[1:]:
-                chg = chg.unionByName(p)
-            change_files = self._stage_changes(chg, base + 1)
-
-        # Optimistic concurrency, same two tiers as `_rewrite` and
-        # validated ATOMICALLY under the commit lock: concurrent
-        # commits that left the touched files alone and added only
-        # files whose key bounds CANNOT hold a source key rebase
-        # cleanly (they can't change the match set); anything else —
-        # including any conflict against a full-sync (by-source
-        # delete) merge, whose read set is the whole table — discards
-        # this attempt and re-executes against the fresh head.
         touched_paths = {f["path"] for f in touched}
-        with self._commit_lock():
-            stale = False
-            if self.current_version() != base:
-                try:
-                    if when_not_matched_by_source_delete:
-                        raise CommitConflict(
-                            "full-sync merge cannot rebase"
-                        )
-                    cur = self._validate_dml_rebase(
-                        snap, touched_paths, None
-                    )
-                    snap_paths = {f["path"] for f in snap.files}
-                    added = [
-                        f for f in cur.files if f["path"] not in snap_paths
-                    ]
-                    if self._select_entries(
-                        cur, added, key_ranges, bloom_probes=key_probes
-                    ):
-                        raise CommitConflict(
-                            "merge is stale: a concurrently-added "
-                            "file may hold a source key"
-                        )
-                except CommitConflict:
-                    stale = True
-                else:
-                    snap = cur
-                    base = snap.version
-                    keep = [
-                        f
-                        for f in snap.files
-                        if f["path"] not in touched_paths
-                    ]
-            if not stale:
-                final = keep + new_files
-                out = self._prepare_snapshot(
-                    base, "merge", final, snap.schema_json,
-                    summary={
-                        "added_files": len(new_files),
-                        "rewritten_files": len(touched),
-                        "pruned_files": len(keep),
-                    }
-                    | ({"change_feed": "exact"} if feed else {})
-                    | (summary_extra or {}),
-                    change_files=change_files,
-                    delete_files=self._live_deletes(
-                        snap.delete_files, final
-                    ),
-                )
-                self._publish(out)
-                return out
-        # lock released — re-execute the whole merge against the fresh
-        # head (serializable re-execution). Drop this attempt's staged
-        # data and change files first (same as _rewrite_once's stale
-        # path): under sustained contention each lost attempt would
-        # otherwise leak a full rewrite-set of parquet until vacuum.
-        self._discard_staged(new_files, change_files)
-        if _attempts <= 0:
-            raise CommitConflict(
-                "merge kept conflicting with concurrent commits "
-                "(retries exhausted)"
-            )
-        return self.merge(
-            source, on,
-            when_matched_update=when_matched_update,
-            when_matched_delete=when_matched_delete,
-            when_matched_condition=when_matched_condition,
-            when_not_matched_insert=when_not_matched_insert,
-            when_not_matched_by_source_delete=(
-                when_not_matched_by_source_delete
+        return _Pending(
+            summary={
+                "added_files": len(adds),
+                "rewritten_files": len(touched),
+                "pruned_files": len(snap.files) - len(touched),
+            }
+            | ({"change_feed": "exact"} if feed else {})
+            | (summary_extra or {}),
+            adds=adds,
+            change_files=self._stage_changes(change_parts, snap.version + 1),
+            reads=touched_paths,
+            replaces=touched_paths,
+            # a full-sync merge reads the whole table
+            clash=_ANY if when_not_matched_by_source_delete else (
+                lambda head, added: self._select_entries(
+                    head, added, key_ranges, bloom_probes=key_probes
+                ) and "a concurrently-added file may hold a source key"
             ),
-            when_not_matched_by_source_condition=(
-                when_not_matched_by_source_condition
-            ),
-            summary_extra=summary_extra,
-            mode=mode,
-            when_not_matched_condition=when_not_matched_condition,
-            when_not_matched_values=when_not_matched_values,
-            merge_schema=merge_schema,
-            _attempts=_attempts - 1,
         )
 
     def _merge_candidates(
@@ -4903,94 +4892,72 @@ class LakeTable:
         'compact only
         yesterday's partition' instead of scanning a petabyte table's
         whole manifest worth of small files.
+
+        A concurrent commit rebases under the compaction (Iceberg
+        rewrite_data_files semantics) unless it rewrote or removed a
+        compacted file, evolved the schema or changed the delete files
+        — the rewritten rows would then resurrect deleted rows or
+        dodge a new delete — and the compaction raises
+        :class:`CommitConflict` instead.
         """
         if sort_by and zorder_by:
             raise LakehouseError("sort_by and zorder_by are mutually exclusive")
-        base = self.current_version()
-        snap = self.snapshot(base)
-        in_scope = self._select_entries(snap, snap.files, filters or {})
-        small = [f for f in in_scope if f["bytes"] < small_file_bytes]
-        if len(small) < min_files:
-            return snap
-        small_paths = {f["path"] for f in small}
-        keep = [f for f in snap.files if f["path"] not in small_paths]
-        df = self._read_entries(snap, small)
-        if target_files is None:
-            target_files = max(
+
+        def stage(snap: Snapshot) -> _Pending | None:
+            in_scope = self._select_entries(snap, snap.files, filters or {})
+            small = [f for f in in_scope if f["bytes"] < small_file_bytes]
+            if len(small) < min_files:
+                return None
+            df = self._read_entries(snap, small)
+            n = target_files if target_files is not None else max(
                 1, (sum(f["bytes"] for f in small) + small_file_bytes - 1)
                 // small_file_bytes,
             )
-        if zorder_by:
-            from pg_lakehouse_spark.operators.zorder import zorder_key
+            if zorder_by:
+                from pg_lakehouse_spark.operators.zorder import zorder_key
 
-            df, zkey = zorder_key(df, zorder_by)
-            df = (
-                df.withColumn("__z", zkey)
-                .repartitionByRange(target_files, F.col("__z"))
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        elif sort_by:
-            df = df.repartitionByRange(
-                target_files, *[F.col(c) for c in sort_by]
-            ).sortWithinPartitions(*sort_by)
-        elif snap.partition_spec:
-            # cluster by partition values so each output task writes
-            # one file per partition instead of files × partitions
-            # (transforms evaluate to their derived dir value)
-            exprs = [
-                fn(df) if fn is not None else F.col(s)
-                for s in snap.partition_spec
-                for (_src, _name, fn) in (_partition_field(s),)
-            ]
-            df = df.repartition(target_files, *exprs)
-        else:
-            df = df.repartition(target_files)
-        # compaction reads epoch-aware and writes back under the
-        # current schema — it doubles as an epoch-upgrade pass.
-        # guard=False: every row is pre-existing; re-checking CHECK
-        # constraints here made a NOT VALID constraint over an old
-        # violating row fail compaction permanently (r4 ADVICE defect)
-        new_files = self._stage_dataframe(
-            df, base + 1, snap.partition_spec, schema_id=snap.schema_id,
-            guard=False, size=False,
-        )
-        # optimistic-commit retry with validation (Iceberg
-        # rewrite_data_files semantics): a concurrent APPEND is fine —
-        # rebase keeps its files; a concurrent commit that removed any
-        # compacted source file (DML rewrite, another compaction) makes
-        # this rewrite stale — abort, never silently resurrect rows.
-        small_paths = {f["path"] for f in small}
-        retries = 3
-        while True:
-            try:
-                final = keep + new_files
-                return self._commit(
-                    base, "compact", final, snap.schema_json,
-                    summary={"compacted_files": len(small),
-                             "added_files": len(new_files)},
-                    delete_files=self._live_deletes(
-                        snap.delete_files, final
-                    ),
+                df, zkey = zorder_key(df, zorder_by)
+                df = (
+                    df.withColumn("__z", zkey)
+                    .repartitionByRange(n, F.col("__z"))
+                    .sortWithinPartitions("__z")
+                    .drop("__z")
                 )
-            except CommitConflict:
-                if retries <= 0:
-                    raise
-                retries -= 1
-                base = self.current_version()
-                cur = self.snapshot(base)
-                cur_paths = {f["path"] for f in cur.files}
-                if not small_paths <= cur_paths:
-                    raise CommitConflict(
-                        "compaction is stale: a concurrent commit rewrote "
-                        "or removed compacted source files"
-                    )
-                if cur.schema_id != snap.schema_id:
-                    raise CommitConflict(
-                        "compaction is stale: schema evolved concurrently"
-                    )
-                keep = [f for f in cur.files if f["path"] not in small_paths]
-                snap = cur
+            elif sort_by:
+                df = df.repartitionByRange(
+                    n, *[F.col(c) for c in sort_by]
+                ).sortWithinPartitions(*sort_by)
+            elif snap.partition_spec:
+                # cluster by partition values so each output task writes
+                # one file per partition instead of files × partitions
+                # (transforms evaluate to their derived dir value)
+                exprs = [
+                    fn(df) if fn is not None else F.col(s)
+                    for s in snap.partition_spec
+                    for (_src, _name, fn) in (_partition_field(s),)
+                ]
+                df = df.repartition(n, *exprs)
+            else:
+                df = df.repartition(n)
+            # compaction reads epoch-aware and writes back under the
+            # current schema — it doubles as an epoch-upgrade pass.
+            # guard=False: every row is pre-existing; re-checking CHECK
+            # constraints here made a NOT VALID constraint over an old
+            # violating row fail compaction permanently (r4 ADVICE)
+            adds = self._stage_dataframe(
+                df, snap.version + 1, snap.partition_spec,
+                schema_id=snap.schema_id, guard=False, size=False,
+            )
+            paths = {f["path"] for f in small}
+            return _Pending(
+                summary={"compacted_files": len(small),
+                         "added_files": len(adds)},
+                adds=adds,
+                reads=paths,
+                replaces=paths,
+            )
+
+        return self._commit_op("compact", stage)
 
     def maybe_compact(
         self,
@@ -5816,15 +5783,19 @@ class LakeCatalog:
         """Yield registry ``name`` under ``_<lock>.lock`` for a read-
         modify-write; a changed dict is written back on normal exit
         only (an exception leaves the file untouched). Views have their
-        own lock; sequences, types and funcs share ``_sequences.lock``."""
+        own lock; sequences, types and funcs share ``_sequences.lock``.
+        A ``.tmp`` that a crash inside ``_atomic_write`` left behind is
+        removed first: every writer of the registry holds this lock, so
+        none can be writing it now."""
+        path = os.path.join(self.warehouse, f"_{name}.json")
         with _locked(os.path.join(self.warehouse, f"_{lock}.lock")):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path + ".tmp")
             reg = self._read_registry(name)
             before = copy.deepcopy(reg)
             yield reg
             if reg != before:
-                _atomic_write(
-                    os.path.join(self.warehouse, f"_{name}.json"), reg
-                )
+                _atomic_write(path, reg)
 
     def view_exists(self, namespace: str, name: str) -> bool:
         return f"{namespace}.{name}" in self._read_registry("views")

@@ -87,6 +87,7 @@ from pg_lakehouse_spark.lakehouse import (
     LakehouseError,
     LakeTable,
     Snapshot,
+    _stat_literal,
     assignment_cast,
 )
 
@@ -6673,69 +6674,6 @@ class LakeSQL:
             masked, [lit.replace("\\", "\\\\") for lit in lits]
         )
 
-    @staticmethod
-    def _cast_prune_literal(v, dtype):
-        """Coerce a SQL literal to the manifest's representation for
-        the bound column's Spark type, mirroring how file stats are
-        stored (`_file_column_ranges`: ints as int, floats as float,
-        date/timestamp as ``isoformat()`` strings). Returns None when
-        the literal can't be coerced — the caller drops the conjunct,
-        which is always safe (the full predicate re-applies in Spark).
-        Date/timestamp literals are zero-padded so the lexicographic
-        compare against stored ISO strings is order-correct (PG accepts
-        '2024-1-1'; naive string compare against '2024-01-05' would
-        wrongly skip every file)."""
-        from pyspark.sql import types as T
-
-        try:
-            if isinstance(
-                dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-            ):
-                return int(str(v).strip())
-            if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
-                return float(v)
-            if isinstance(dtype, T.BooleanType):
-                s = str(v).strip().lower()
-                if s in ("true", "t", "1"):
-                    return True
-                if s in ("false", "f", "0"):
-                    return False
-                return None
-            if isinstance(dtype, T.DateType):
-                m = re.match(r"(\d{4})-(\d{1,2})-(\d{1,2})$", str(v).strip())
-                if not m:
-                    return None
-                y, mo, d = (int(g) for g in m.groups())
-                return f"{y:04d}-{mo:02d}-{d:02d}"
-            if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-                m = re.match(
-                    r"(\d{4})-(\d{1,2})-(\d{1,2})"
-                    r"(?:[T ](\d{1,2}):(\d{1,2})(?::(\d{1,2}))?(\.\d+)?)?$",
-                    str(v).strip(),
-                )
-                if not m:
-                    return None
-                y, mo, d = int(m.group(1)), int(m.group(2)), int(m.group(3))
-                hh = int(m.group(4) or 0)
-                mi = int(m.group(5) or 0)
-                ss = int(m.group(6) or 0)
-                # normalize the fraction to datetime.isoformat() semantics
-                # (manifest stats are stored via isoformat()): omitted when
-                # zero, else exactly 6 digits — '.5' kept verbatim would
-                # compare lexicographically wrong vs a stored '.500000'
-                digits = (m.group(7) or ".")[1:]
-                micros = int((digits + "000000")[:6]) if digits else 0
-                frac = f".{micros:06d}" if micros else ""
-                return (
-                    f"{y:04d}-{mo:02d}-{d:02d}T{hh:02d}:{mi:02d}:{ss:02d}"
-                    + frac
-                )
-            if isinstance(dtype, T.StringType):
-                return str(v)
-        except (ValueError, TypeError):
-            return None
-        return None
-
     def _where_filters(
         self, stmt: str, schema: StructType,
         quals: frozenset[str] | set[str] = frozenset(),
@@ -6748,7 +6686,7 @@ class LakeSQL:
         extraction can only skip files that cannot match — never
         change results). Strict >/< relax to inclusive bounds (a
         superset of files). Literals are cast to the bound column's
-        type first (`_cast_prune_literal`) so manifest comparisons are
+        type first (`_stat_literal`) so manifest comparisons are
         type-correct; un-castable literals drop their conjunct.
 
         ``quals`` is the set of lowercase correlation names known to
@@ -6799,8 +6737,8 @@ class LakeSQL:
             # anything else is another relation's column or a
             # struct-field access — skip
             if col in types and (qual is None or qual.lower() in quals):
-                lo = self._cast_prune_literal(lit(bm.group(3)), types[col])
-                hi = self._cast_prune_literal(lit(bm.group(4)), types[col])
+                lo = _stat_literal(lit(bm.group(3)), types[col])
+                hi = _stat_literal(lit(bm.group(4)), types[col])
                 if lo is not None and hi is not None:
                     narrow(col, lo, hi)
             # neutral token, NOT "": an empty hole would merge the two
@@ -6821,7 +6759,7 @@ class LakeSQL:
             if cm.group(1) is not None and cm.group(1).lower() not in quals:
                 continue  # other relation / struct field — not ours
             col, op = cm.group(2), cm.group(3)
-            v = self._cast_prune_literal(lit(cm.group(4)), types[col])
+            v = _stat_literal(lit(cm.group(4)), types[col])
             if v is None:
                 continue
             if op in (">=", ">", "="):
@@ -11071,13 +11009,9 @@ class LakeSQL:
                     )
                 )
             postimage = (lambda _m: post) if post is not None else None
-            if dm == "mor-pos":
-                return tbl._mor_positional_dml(
-                    verb.lower(), None, postimage=postimage,
-                    matched=matched,
-                )
             return tbl._mor_dml(
-                verb.lower(), None, postimage=postimage, matched=matched
+                verb.lower(), None, postimage=postimage, matched=matched,
+                positional=dm == "mor-pos",
             )
         finally:
             self.spark.catalog.dropTempView(view)

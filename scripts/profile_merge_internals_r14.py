@@ -66,7 +66,7 @@ def main() -> None:
         "_prepare_snapshot", "_publish", "_apply_check_guards",
         "_align_to_schema", "merge", "append", "overwrite",
         "create_table_as", "read_incremental", "_read_entries",
-        "_validate_dml_rebase",
+        "_rebase",
     ):
         if hasattr(lh.LakeTable, name):
             wrap_method(lh.LakeTable, name)

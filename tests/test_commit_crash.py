@@ -358,3 +358,30 @@ def test_vacuum_removes_tmp_files_of_a_crashed_write(spark, tmp_path, k):
     t.vacuum()
     assert tmp_files() == []
     assert _rows(t) in (BASE, sorted(BASE + DELTA))
+
+
+@pytest.mark.parametrize("registry", ["views", "sequences", "types", "funcs"])
+def test_registry_removes_tmp_of_a_crashed_write(spark, tmp_path, registry):
+    """The warehouse registries write through ``_atomic_write`` too. A
+    crash between a registry's tmp write and its rename leaves
+    ``_<registry>.json.tmp``; the next access to that registry under
+    its lock removes it, and the registry keeps the old or the new
+    content."""
+    cat = LakeCatalog(spark, str(tmp_path / "wh"))
+    write = {
+        "views": lambda i: cat.create_view("db", f"v{i}", "SELECT 1"),
+        "sequences": lambda i: cat.create_sequence("db", f"s{i}"),
+        "types": lambda i: cat.create_enum_type(f"e{i}", ["a"]),
+        "funcs": lambda i: cat.create_sql_function(f"f{i}", [], "1"),
+    }[registry]
+    tmp = os.path.join(cat.warehouse, f"_{registry}.json.tmp")
+
+    def replace(src, dst):
+        raise _Crash()
+
+    with mock.patch.object(os, "replace", replace), pytest.raises(_Crash):
+        write(1)
+    assert os.path.exists(tmp)
+    write(2)
+    assert not os.path.exists(tmp)
+    assert len(cat._read_registry(registry)) in (1, 2)

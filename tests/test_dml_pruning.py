@@ -11,6 +11,7 @@ from pg_lakehouse_spark.lakehouse import (
     LakeCatalog,
     LakeTable,
     _condition_ranges,
+    _json_stat,
 )
 
 
@@ -205,3 +206,170 @@ def test_delete_with_opaque_predicate_still_exact(spark, tmp_path):
     tbl.delete(F.length(F.col("s")) == 1)  # k in 0..9
     got = sorted(r["k"] for r in tbl.read().collect())
     assert got == list(range(10, 60))
+
+
+def test_condition_ranges_walks_sql_text(spark):
+    """The SQL frontend hands DML a parsed ``F.expr`` predicate; it
+    must yield the same ranges as the Column form — and a DATE
+    literal, whose parsed value is a raw day count, none at all."""
+    import datetime
+
+    pairs = [
+        ("k = 3", F.col("k") == 3),
+        ("k BETWEEN 1 AND 5", F.col("k").between(1, 5)),
+        ("k IN (4, 2, 9)", F.col("k").isin(4, 2, 9)),
+        ("k >= 2 AND s = 'x'", (F.col("k") >= 2) & (F.col("s") == "x")),
+    ]
+    for text, col in pairs:
+        assert _condition_ranges(F.expr(text)) == _condition_ranges(col)
+        assert _condition_ranges(F.expr(text)), text
+    assert _condition_ranges(F.expr("d = DATE'2024-01-01'")) == {}
+    assert _condition_ranges(
+        F.col("d") == F.lit(datetime.date(2024, 1, 1))
+    ) == {}
+
+
+def test_sql_delete_scans_only_the_shortlisted_file(spark, tmp_path):
+    from pg_lakehouse_spark.sql import LakeSQL
+
+    cat = LakeCatalog(spark, str(tmp_path / "whs"))
+    df = spark.range(0, 40).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    tbl = cat.create_table(
+        "db", "ts", df.schema,
+        properties={"row_key": "k", "write_delete_mode": "merge-on-read"},
+    )
+    for lo in (0, 10, 20, 30):
+        tbl.append(
+            df.filter((F.col("k") >= lo) & (F.col("k") < lo + 10))
+            .coalesce(1)
+        )
+    assert len(tbl.snapshot().files) == 4
+    scanned = []
+    real = LakeTable._read_entries
+
+    def spy(self, snap, entries, *a, **k):
+        scanned.append(len(entries))
+        return real(self, snap, entries, *a, **k)
+
+    LakeTable._read_entries = spy
+    try:
+        LakeSQL(spark, cat).sql("DELETE FROM db.ts WHERE k = 3")
+    finally:
+        LakeTable._read_entries = real
+    assert scanned == [1]
+    got = sorted(r["k"] for r in tbl.read().collect())
+    assert got == [k for k in range(40) if k != 3]
+
+
+def test_condition_ranges_coerce_literals_to_the_column_type(spark):
+    """Given the table's schema, every literal takes its column's
+    manifest form before conjuncts combine — the SELECT path's rule:
+    dates zero-padded, timestamps 'T'-separated, and a number against
+    a string column (a numeric compare in Spark) contributes nothing."""
+    from pyspark.sql.types import (
+        DateType, LongType, StringType, StructField, StructType,
+        TimestampNTZType, TimestampType,
+    )
+
+    schema = StructType([
+        StructField("k", LongType()), StructField("s", StringType()),
+        StructField("d", DateType()), StructField("ts", TimestampType()),
+        StructField("n", TimestampNTZType()),
+    ])
+
+    def ranges(text):
+        return _condition_ranges(F.expr(text), schema)
+
+    assert ranges("n = '2024-01-01 09:00:00'") == {
+        "n": ("2024-01-01T09:00:00", "2024-01-01T09:00:00")
+    }
+    assert ranges("ts < '2024-1-1 10:00'") == {
+        "ts": (None, "2024-01-01T10:00:00")
+    }
+    assert ranges("d IN ('2024-1-5', '2024-01-10')") == {
+        "d": ("2024-01-05", "2024-01-10")
+    }
+    assert ranges("d BETWEEN '2024-1-5' AND '2024-1-9'") == {
+        "d": ("2024-01-05", "2024-01-09")
+    }
+    assert ranges("k = '3' AND d >= '2024-1-15'") == {
+        "k": (3, 3), "d": ("2024-01-15", None)
+    }
+    assert ranges("s = 3") == {}
+    assert ranges("d = 'not a date'") == {}
+    assert ranges("missing = 3") == {}
+    assert _condition_ranges(F.col("d") >= "2024-1-15", schema) == {
+        "d": ("2024-01-15", None)
+    }
+    # a zoned stat is stored as naive UTC, the form a TIMESTAMP literal
+    # takes in a UTC session; in any other zone it does not prune
+    import datetime
+
+    assert _json_stat(datetime.datetime(
+        2024, 1, 1, 10, tzinfo=datetime.timezone(datetime.timedelta(hours=1))
+    )) == "2024-01-01T09:00:00"
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        assert ranges("ts = '2024-01-01 09:00:00'") == {}
+        assert ranges("n = '2024-01-01 09:00:00'") != {}
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_sql_dml_with_untyped_temporal_literals(spark, tmp_path, mode):
+    """SQL DELETE/UPDATE with untyped string literals on DATE,
+    TIMESTAMP and TIMESTAMP_NTZ columns touch exactly the rows
+    ``read().filter`` matches: a space-separated timestamp or an
+    unpadded date must not shortlist away the file holding the match
+    (4 files of 6 hours / 6 days each, so a wrong prune shows)."""
+    from pg_lakehouse_spark.sql import LakeSQL
+
+    cat = LakeCatalog(spark, str(tmp_path / "whs"))
+    lsql = LakeSQL(spark, cat)
+    def batch(lo):
+        return spark.sql(
+            "SELECT id AS k, 0 AS v, "
+            "date_add(DATE'2024-01-01', CAST(id AS INT)) AS d, "
+            "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, "
+            "CAST(id AS INT)) AS ts, "
+            "TIMESTAMP_NTZ'2024-01-01 00:00:00' + make_interval(0, 0, 0, "
+            f"0, CAST(id AS INT)) AS n FROM range({lo}, {lo + 6})"
+        ).coalesce(1)
+
+    tbl = cat.create_table(
+        "db", "tt", batch(0).schema,
+        properties={"row_key": "k", "write_delete_mode": mode},
+    )
+    for lo in (0, 6, 12, 18):
+        tbl.append(batch(lo))
+    assert len(tbl.snapshot().files) == 4
+    preds = [
+        "n = '2024-01-01 09:00:00'",
+        "n < '2024-01-01 02:00' AND ts >= '2024-1-1 1:00'",
+        "d >= '2024-1-22'",
+        "d IN ('2024-1-15', '2024-01-18')",
+    ]
+
+    def keys(pred=None):
+        df = tbl.read()
+        if pred is not None:
+            df = df.filter(F.expr(pred))
+        return sorted(r["k"] for r in df.select("k").collect())
+
+    bumped = set()
+    for pred in preds:
+        want = keys(pred)
+        assert want, pred
+        lsql.sql(f"UPDATE db.tt SET v = v + 1 WHERE {pred}")
+        bumped.update(want)
+        got = {r["k"]: r["v"] for r in tbl.read().collect()}
+        assert {k for k, v in got.items() if v} == bumped, pred
+    for pred in preds:
+        want = keys(pred)
+        before = keys()
+        lsql.sql(f"DELETE FROM db.tt WHERE {pred}")
+        assert keys() == sorted(set(before) - set(want)), pred

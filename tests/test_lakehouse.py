@@ -185,12 +185,12 @@ def test_commit_conflict(catalog, orders_df):
 
 
 def _inject_before_commit(tbl, side_effect):
-    """Run ``side_effect()`` right before tbl's next _commit attempt
-    (once) — deterministically simulates a concurrent committer
-    winning the race."""
+    """Run ``side_effect()`` right before tbl's next commit attempt
+    (once), after its staging — deterministically simulates a
+    concurrent committer winning the race."""
     import types
 
-    orig = type(tbl)._commit
+    orig = type(tbl)._rebase_and_publish
     state = {"fired": False}
 
     def racy(self, *a, **k):
@@ -199,7 +199,7 @@ def _inject_before_commit(tbl, side_effect):
             side_effect()
         return orig(self, *a, **k)
 
-    tbl._commit = types.MethodType(racy, tbl)
+    tbl._rebase_and_publish = types.MethodType(racy, tbl)
 
 
 def test_append_retries_on_conflict(catalog, orders_df):
@@ -2537,11 +2537,11 @@ def test_dynamic_overwrite_rebases_or_aborts(spark, tmp_path):
     tbl.append(df)
     repl = spark.createDataFrame([(100, "p1")], "k long, day string")
 
-    real_commit = LakeTable._commit
+    real_commit = LakeTable._rebase_and_publish
     state = {"fired": False}
 
     def race_other_partition(self, *a, **kw):
-        if not state["fired"] and a[1] == "overwrite-partitions":
+        if not state["fired"] and a[0] == "overwrite-partitions":
             state["fired"] = True
             other = LakeTable(spark, self.location)
             other.append(
@@ -2549,11 +2549,11 @@ def test_dynamic_overwrite_rebases_or_aborts(spark, tmp_path):
             )
         return real_commit(self, *a, **kw)
 
-    LakeTable._commit = race_other_partition
+    LakeTable._rebase_and_publish = race_other_partition
     try:
         tbl.overwrite_partitions(repl)
     finally:
-        LakeTable._commit = real_commit
+        LakeTable._rebase_and_publish = real_commit
     got = tbl.read()
     assert got.filter("day = 'p1'").count() == 1      # replaced
     assert got.filter("k = 200").count() == 1         # concurrent survived
@@ -2561,7 +2561,7 @@ def test_dynamic_overwrite_rebases_or_aborts(spark, tmp_path):
     state2 = {"fired": False}
 
     def race_same_partition(self, *a, **kw):
-        if not state2["fired"] and a[1] == "overwrite-partitions":
+        if not state2["fired"] and a[0] == "overwrite-partitions":
             state2["fired"] = True
             other = LakeTable(spark, self.location)
             other.append(
@@ -2569,12 +2569,12 @@ def test_dynamic_overwrite_rebases_or_aborts(spark, tmp_path):
             )
         return real_commit(self, *a, **kw)
 
-    LakeTable._commit = race_same_partition
+    LakeTable._rebase_and_publish = race_same_partition
     try:
         with pytest.raises(CommitConflict, match="replaced partition"):
             tbl.overwrite_partitions(repl)
     finally:
-        LakeTable._commit = real_commit
+        LakeTable._rebase_and_publish = real_commit
     assert tbl.read().filter("k = 300").count() == 1  # nothing lost
 
 
@@ -2708,10 +2708,10 @@ def test_dml_rebase_probe_runs_outside_commit_lock(catalog, orders_df):
     tbl._stage_dataframe = types.MethodType(racy, tbl)
 
     # spy: every free-running validation must find the lock acquirable
-    orig_val = type(tbl)._validate_dml_rebase
+    orig_val = type(tbl)._rebase
     seen = {"free": 0, "held": 0}
 
-    def spy(self, snap, affected, condition):
+    def spy(self, *args):
         with open(
             os.path.join(self.meta_dir, "_commit.lock"), "w"
         ) as fh:
@@ -2721,9 +2721,9 @@ def test_dml_rebase_probe_runs_outside_commit_lock(catalog, orders_df):
                 fcntl.flock(fh, fcntl.LOCK_UN)
             except BlockingIOError:
                 seen["held"] += 1
-        return orig_val(self, snap, affected, condition)
+        return orig_val(*args)
 
-    tbl._validate_dml_rebase = types.MethodType(spy, tbl)
+    tbl._rebase = types.MethodType(spy, tbl)
 
     keys = [r.o_orderkey for r in orders_df.limit(5).collect()]
     tbl.update(

@@ -157,14 +157,15 @@ def test_commit_io_only_through_the_seam():
     seam: ``fcntl.flock`` only inside ``_locked``, and temp-file
     renames (``os.replace``, or any ``.tmp`` file) only inside
     ``_atomic_write`` — a hand-rolled tmp+rename skips its fsyncs and
-    escapes the crash-matrix test. ``_gc_orphan_segments`` may name
-    ``.tmp`` files too: it deletes the ones a crash left behind."""
+    escapes the crash-matrix test. ``_gc_orphan_segments`` and
+    ``_registry`` may name ``.tmp`` files too: they delete the ones a
+    crash left behind."""
     import ast
 
     allowed = {
         "fcntl.flock": {"_locked"},
         "os.replace": {"_atomic_write"},
-        ".tmp": {"_atomic_write", "_gc_orphan_segments"},
+        ".tmp": {"_atomic_write", "_gc_orphan_segments", "_registry"},
     }
 
     class Finder(ast.NodeVisitor):
@@ -272,6 +273,98 @@ def test_pruning_only_through_one_rule():
     assert not old_check, f"_entry_range_overlaps still present: {old_check}"
     assert not bad_probes, f"bloom probed outside _entry_overlaps: {bad_probes}"
     assert not bad_hashes, f"bloom hash outside _bloom_positions: {bad_hashes}"
+
+
+def test_commit_conflicts_only_through_one_loop():
+    """Optimistic concurrency has one loop and one rebase rule: inside
+    ``LakeTable`` only ``_commit_op`` catches ``CommitConflict`` and
+    discards staged files, a staged entry's ``"seq"`` is assigned only
+    at commit in ``_rebase_and_publish`` (``cherry_pick`` re-sequences
+    files an earlier commit already published), and the per-writer
+    copies ``_rewrite``, ``_rewrite_once``, ``_validate_dml_rebase``
+    and ``_StaleRewrite`` are gone — a second copy of the loop is how
+    the writers' retry budgets, validators and cleanup drifted apart."""
+    import ast
+
+    allowed = {
+        "except CommitConflict": {"_commit_op"},
+        "_discard_staged()": {"_commit_op"},
+        "seq": {"_rebase_and_publish", "cherry_pick"},
+    }
+    gone = {"_rewrite", "_rewrite_once", "_validate_dml_rebase", "_StaleRewrite"}
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self):
+            self.scope: list[str] = []
+            self.hits: list[tuple[str, str]] = []
+            self.defined: set[str] = set()
+
+        def visit_FunctionDef(self, node):
+            self.defined.add(node.name)
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_ClassDef(self, node):
+            self.defined.add(node.name)
+            self.generic_visit(node)
+
+        def hit(self, what):
+            self.hits.append((what, self.scope[-1] if self.scope else ""))
+
+        def visit_ExceptHandler(self, node):
+            types_ = node.type.elts if isinstance(node.type, ast.Tuple) else [
+                node.type
+            ]
+            if any(
+                isinstance(t, ast.Name) and t.id == "CommitConflict"
+                for t in types_
+            ):
+                self.hit("except CommitConflict")
+            self.generic_visit(node)
+
+        def visit_Call(self, node):
+            f = node.func
+            if isinstance(f, ast.Attribute) and f.attr == "_discard_staged":
+                self.hit("_discard_staged()")
+            if any(kw.arg == "seq" for kw in node.keywords):
+                self.hit("seq")
+            self.generic_visit(node)
+
+        def visit_Dict(self, node):
+            if any(
+                isinstance(k, ast.Constant) and k.value == "seq"
+                for k in node.keys
+            ):
+                self.hit("seq")
+            self.generic_visit(node)
+
+        def visit_Subscript(self, node):
+            if (
+                isinstance(node.ctx, ast.Store)
+                and isinstance(node.slice, ast.Constant)
+                and node.slice.value == "seq"
+            ):
+                self.hit("seq")
+            self.generic_visit(node)
+
+    with open(os.path.join(PKG_ROOT, "lakehouse.py")) as f:
+        tree = ast.parse(f.read())
+    finder = Finder()
+    finder.visit(tree)
+    table = next(
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "LakeTable"
+    )
+    in_table = Finder()
+    in_table.visit(table)
+    offenders = [
+        (what, fn) for what, fn in in_table.hits if fn not in allowed[what]
+    ]
+    assert not offenders, f"commit-conflict policy outside the loop: {offenders}"
+    assert not gone & finder.defined, sorted(gone & finder.defined)
 
 
 def test_broadcast_hints_on_dim_joins(spark, sf_dir):
