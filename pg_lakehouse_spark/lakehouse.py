@@ -64,6 +64,7 @@ from __future__ import annotations
 
 import contextlib
 import copy
+import decimal
 import fcntl
 import functools
 import glob
@@ -611,7 +612,8 @@ _CATALYST_OPS = {
     "LessThanOrEqual": "<=", "GreaterThan": ">", "GreaterThanOrEqual": ">=",
 }
 # a parsed literal's value is its internal form: only these types map
-# to a Python value (a DATE is an int of days, a decimal a Decimal)
+# to a Python value (a DATE is an int of days; a decimal is read from
+# its text)
 _STAT_LITERAL_TYPES = {
     "tinyint", "smallint", "int", "bigint", "float", "double", "string",
     "boolean",
@@ -619,24 +621,31 @@ _STAT_LITERAL_TYPES = {
 
 
 def _condition_ranges(
-    condition: Column, schema: StructType | None = None
+    condition, schema: StructType | None = None,
+    quals: frozenset[str] | set[str] = frozenset(),
 ) -> dict[str, tuple]:
     """Best-effort necessary-condition ranges {col: (lo, hi)} from a
-    DML predicate (None side = unbounded).
+    predicate (None side = unbounded) — the one place a predicate
+    becomes manifest ranges, for the DML shortlist and SQL SELECT
+    pruning alike.
 
-    Walks the Column's node tree for top-level AND conjuncts of the
-    forms ``col <op> literal`` (op in =, <, <=, >, >=), ``literal
-    <op> col``, ``col IN (literals)`` and ``col BETWEEN lo AND hi`` —
-    plain int/float/str/bool literals only (casts, expressions,
-    decimals, typed date/timestamp literals contribute nothing). SQL
-    text (``F.expr``, as the SQL frontend passes) is parsed with the
-    session's parser and its catalyst tree walked the same way.
+    ``condition`` is a Column or a catalyst expression (a parsed
+    plan's ``Filter`` condition). Walks its node tree for top-level
+    AND conjuncts of the forms ``col <op> literal`` (op in =, <, <=,
+    >, >=), ``literal <op> col``, ``col IN (literals)`` and ``col
+    BETWEEN lo AND hi`` — plain int/float/decimal/str/bool literals
+    only (casts, expressions and typed date/timestamp literals
+    contribute nothing). SQL text (``F.expr``, as the SQL frontend
+    passes) is parsed with the session's parser and its catalyst tree
+    walked the same way. ``q.col`` counts as ``col`` when ``q`` is in
+    ``quals`` (lowercase correlation names of the scanned table); any
+    other qualified name is another relation's column or a struct
+    field and contributes nothing.
 
     With ``schema``, every literal is coerced to its column's manifest
-    form by `_stat_literal` (the SELECT path's rule) BEFORE conjuncts
-    combine, and a conjunct on an unknown column or with a literal
-    that can't be coerced contributes nothing; without it, literals
-    are returned as written.
+    form by `_stat_literal` BEFORE conjuncts combine, and a conjunct
+    on an unknown column or with a literal that can't be coerced
+    contributes nothing; without it, literals are returned as written.
 
     Every extracted range is a NECESSARY condition of the predicate: a
     row can only match inside it, so files whose manifest bounds lie
@@ -684,6 +693,8 @@ def _condition_ranges(
         if kind(node) != "UnresolvedAttribute":
             return None
         parts = node.nameParts()
+        if parts.size() == 2 and parts.apply(0).lower() in quals:
+            return parts.apply(1)
         return parts.apply(0) if parts.size() == 1 else None
 
     def lit_value(node):
@@ -692,11 +703,20 @@ def _condition_ranges(
         v = node.value()
         if catalyst(node):
             dt = node.dataType().simpleString()
-            if dt not in _STAT_LITERAL_TYPES or v is None:
+            if v is None:
                 return None
-            if dt == "string":
+            if dt.startswith("decimal"):
+                # its exact text; a Decimal, unlike a str, never passes
+                # `_stat_literal` as a string literal
+                v = decimal.Decimal(v.toString())
+            elif dt not in _STAT_LITERAL_TYPES:
+                return None
+            elif dt == "string":
                 v = v.toString()
-        return v if isinstance(v, (bool, int, float, str)) else None
+        return (
+            v if isinstance(v, (bool, int, float, str, decimal.Decimal))
+            else None
+        )
 
     def bound(col, nodes) -> list | None:
         """The literal values of one conjunct on ``col``, in the
@@ -753,7 +773,8 @@ def _condition_ranges(
                 add(col, None, v)
 
     try:
-        walk(condition._jc.node())
+        walk(condition._jc.node() if isinstance(condition, Column)
+             else condition)
     except Exception:
         return {}
     return out
@@ -2337,7 +2358,7 @@ class LakeTable:
     def append(
         self,
         df: DataFrame,
-        retries: int = 3,
+        rebase: bool = True,
         summary_extra: dict | None = None,
         merge_schema: bool = False,
     ) -> Snapshot:
@@ -2347,10 +2368,10 @@ class LakeTable:
         another commit lands between staging and commit, the staged
         files are rebased onto the new head — never rewritten — and
         take their sequence number at commit, so a merge-on-read delete
-        committed first never applies to them. ``retries=0`` refuses
-        the rebase and raises :class:`CommitConflict` instead; every
-        positive value behaves the same (one rebase always suffices: it
-        is validated under the commit lock).
+        committed first never applies to them. One rebase always
+        suffices: it is validated under the commit lock.
+        ``rebase=False`` refuses it and raises :class:`CommitConflict`
+        instead.
         ``summary_extra`` stamps application metadata (e.g. a streaming
         sink's batch id) atomically with the commit. ``merge_schema``
         (Delta mergeSchema): new df columns evolve the table first,
@@ -2370,7 +2391,7 @@ class LakeTable:
                          "added_rows": sum(f["rows"] for f in adds)}
                 | (summary_extra or {}),
                 adds=adds,
-                clash=None if retries > 0 else _ANY,
+                clash=None if rebase else _ANY,
             )
 
         return self._commit_op("append", stage)

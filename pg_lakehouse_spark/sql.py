@@ -78,7 +78,7 @@ import os
 import json
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -87,7 +87,7 @@ from pg_lakehouse_spark.lakehouse import (
     LakehouseError,
     LakeTable,
     Snapshot,
-    _stat_literal,
+    _condition_ranges,
     assignment_cast,
 )
 
@@ -6533,28 +6533,6 @@ class LakeSQL:
                 return view  # explicit alias present (binds itself)
         return f"{view} AS {corr}"
 
-    # simple conjuncts a manifest can act on: col OP literal / BETWEEN
-    # (string literal alternative accepts PG '' quote escapes)
-    # the optional qualifier covers PG's now-bound implicit
-    # correlation spelling (``WHERE u.k = 2`` on a lone ``db.u``);
-    # the consumer rejects it when the "qualifier" is itself a
-    # column (struct-field access, not a correlation)
-    _PRUNE_CONJ = re.compile(
-        rf"^\s*(?:({_IDENT})\.)?({_IDENT})\s*(>=|<=|=|>|<)\s*"
-        rf"('(?:[^']|'')*'|-?\d+(?:\.\d+)?)\s*$"
-    )
-    # matched with finditer BEFORE the AND-split (the naive split tears
-    # ``col BETWEEN a AND b`` into two dead fragments). String literals
-    # appear as \x00<i>\x00 placeholders by the time this runs (masked by
-    # ``_mask_strings``) so BETWEEN ... AND ... text INSIDE a quoted
-    # string can never match — matching raw quoted text here corrupted
-    # the surviving conjunct and silently dropped rows.
-    _PRUNE_BETWEEN = re.compile(
-        rf"\b(?:({_IDENT})\.)?({_IDENT})\s+BETWEEN\s+"
-        rf"(\x00\d+\x00|-?\d+(?:\.\d+)?)"
-        r"\s+AND\s+(\x00\d+\x00|-?\d+(?:\.\d+)?)",
-        re.IGNORECASE,
-    )
     _STR_LIT = re.compile(r"'(?:[^']|'')*'")
     _PLACEHOLDER = re.compile(r"\x00(\d+)\x00")
     # one left-to-right scan over the three PG literal spellings:
@@ -6674,107 +6652,62 @@ class LakeSQL:
             masked, [lit.replace("\\", "\\\\") for lit in lits]
         )
 
-    def _where_filters(
-        self, stmt: str, schema: StructType,
-        quals: frozenset[str] | set[str] = frozenset(),
+    @classmethod
+    def _select_ranges(
+        cls, s: str, ns: str, name: str, schema: StructType
     ) -> dict:
-        """Extract manifest-actionable (lo, hi) ranges from a simple
-        single-table WHERE clause. Conservative: only top-level AND
-        conjuncts of ``col OP literal`` / ``col BETWEEN a AND b`` on
-        known columns contribute; anything else contributes nothing
-        (the FULL predicate always re-applies in Spark, so a partial
-        extraction can only skip files that cannot match — never
-        change results). Strict >/< relax to inclusive bounds (a
-        superset of files). Literals are cast to the bound column's
-        type first (`_stat_literal`) so manifest comparisons are
-        type-correct; un-castable literals drop their conjunct.
-
-        ``quals`` is the set of lowercase correlation names known to
-        refer to THE pruned table (its bare name + FROM alias). A
-        qualified conjunct whose qualifier is not in the set is
-        skipped: in ``db.t JOIN tmp ON .. WHERE tmp.k = 5`` the other
-        relation's predicate must not narrow this table's file scan
-        even when ``k`` happens to also be one of its columns —
-        non-lake relations (temp views, CTEs, TVFs) never register in
-        the lone-ref check, so qualifier identity is the only gate."""
-        m = re.search(
-            r"\bWHERE\s+(.*?)(?:\s+GROUP\s+BY\b|\s+ORDER\s+BY\b"
-            r"|\s+HAVING\b|\s+LIMIT\b|$)",
-            stmt,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not m:
+        """Manifest ranges for lake table ``ns.name`` in a one-SELECT
+        statement, read off Spark's own parse tree. The table must be
+        exactly ONE relation of the tree (a self-join shares one
+        binding, so it never prunes), and the predicate is the
+        ``Filter`` on the path from the root to it with only joins, a
+        ``TABLESAMPLE`` percentage and the table's own alias in between
+        — the WHERE clause. An aggregate's ``FILTER (WHERE ...)``,
+        ``HAVING`` and a join's ON are never that node. Conjuncts qualified by the table's alias,
+        or by its bare name when it has none (the only spellings Spark
+        resolves to it), count. The ranges come from
+        `_condition_ranges`, the DML shortlist's rule; its conjuncts
+        are null-rejecting comparisons, so a row of this table that
+        fails one can never reach the output, even through an outer
+        join. A statement Spark cannot parse prunes nothing; a
+        trailing ``FETCH ... WITH TIES`` (which `_select` rewrites
+        after binding, and which never narrows the WHERE) is dropped
+        first."""
+        try:
+            plan = (
+                SparkSession.active()._jsparkSession.sessionState()
+                .sqlParser().parsePlan(
+                    cls._spark_text(cls._FETCH_TIES.sub("", s))
+                )
+            )
+        except Exception:  # noqa: BLE001 — no pruning, never an error
             return {}
-        # mask string literals FIRST: every structural decision below
-        # (paren/OR bail, BETWEEN excision, AND-split) must only ever see
-        # placeholders where quoted text was, or literals containing
-        # "BETWEEN 1 AND 2" / "x AND y" corrupt the extraction
-        masked, literals = self._mask_strings(m.group(1))
-        if "(" in masked or re.search(r"\bOR\b", masked, re.IGNORECASE):
+        found = []
+
+        def walk(node, cond, alias) -> None:
+            k = node.getClass().getSimpleName()
+            if k == "UnresolvedRelation":
+                parts = node.multipartIdentifier()
+                ident = [parts.apply(i).lower() for i in range(parts.size())]
+                if ident == [ns, name]:
+                    found.append((cond, alias or name))
+                return
+            if k == "ExplainCommand":
+                return walk(node.logicalPlan(), None, None)
+            if k == "Filter":
+                cond = node.condition()
+            elif k not in ("Join", "SubqueryAlias", "Sample"):
+                cond = None
+            alias = node.alias().lower() if k == "SubqueryAlias" else None
+            ch = node.children()
+            for i in range(ch.size()):
+                walk(ch.apply(i), cond, alias)
+
+        walk(plan, None, None)
+        if len(found) != 1 or found[0][0] is None:
             return {}
-        types = {f.name: f.dataType for f in schema.fields}
-
-        def lit(v: str):
-            v = self._unmask_strings(v, literals)
-            if v.startswith("'"):
-                return v[1:-1].replace("''", "'")
-            return float(v) if "." in v else int(v)
-
-        filters: dict[str, list] = {}
-
-        def narrow(col: str, lo=None, hi=None) -> None:
-            b = filters.setdefault(col, [None, None])
-            if lo is not None:
-                b[0] = lo if b[0] is None else max(b[0], lo)
-            if hi is not None:
-                b[1] = hi if b[1] is None else min(b[1], hi)
-
-        # BETWEEN conjuncts first: consume them via finditer and excise
-        # them from the clause so the AND-split can't tear them apart
-        def grab_between(bm: re.Match) -> str:
-            qual, col = bm.group(1), bm.group(2)
-            # a qualifier must name THIS table (bare name or alias);
-            # anything else is another relation's column or a
-            # struct-field access — skip
-            if col in types and (qual is None or qual.lower() in quals):
-                lo = _stat_literal(lit(bm.group(3)), types[col])
-                hi = _stat_literal(lit(bm.group(4)), types[col])
-                if lo is not None and hi is not None:
-                    narrow(col, lo, hi)
-            # neutral token, NOT "": an empty hole would merge the two
-            # adjacent ANDs ("a AND <hole> AND b" → "a AND  AND b") and
-            # the split would glue "AND b" into one dead fragment,
-            # silently dropping b's contribution
-            return "TRUE"
-
-        remainder = self._PRUNE_BETWEEN.sub(grab_between, masked)
-        for part in re.split(r"\s+AND\s+", remainder, flags=re.IGNORECASE):
-            if not part.strip() or part.strip().upper() == "TRUE":
-                continue  # hole left by an excised BETWEEN
-            # split on MASKED text (an AND inside a string can't tear a
-            # conjunct), then restore literals for the conjunct match
-            cm = self._PRUNE_CONJ.match(self._unmask_strings(part, literals))
-            if not cm or cm.group(2) not in types:
-                continue
-            if cm.group(1) is not None and cm.group(1).lower() not in quals:
-                continue  # other relation / struct field — not ours
-            col, op = cm.group(2), cm.group(3)
-            v = _stat_literal(lit(cm.group(4)), types[col])
-            if v is None:
-                continue
-            if op in (">=", ">", "="):
-                narrow(col, lo=v)
-            if op in ("<=", "<", "="):
-                narrow(col, hi=v)
-        out = {}
-        for c, (lo, hi) in filters.items():
-            try:
-                if lo is not None and hi is not None and lo > hi:
-                    pass  # contradictory range is fine (skips everything)
-            except TypeError:
-                continue  # incomparable narrowed bounds: drop (conservative)
-            out[c] = (lo, hi)
-        return out
+        cond, qual = found[0]
+        return _condition_ranges(cond, schema, {qual})
 
     def _with_dml(self, s: str) -> tuple[bool, object]:
         """PG CTEs in front of DML: ``WITH x AS (SELECT ...) INSERT
@@ -6968,7 +6901,6 @@ class LakeSQL:
             )
         ):
             refs = set()
-            lone_quals: set[str] = set()
             for m2 in self._TT.finditer(s):
                 if any(m2.group(i) for i in (3, 4, 5, 6)):
                     refs.add(None)  # meta/branch/time-travel ref
@@ -6976,18 +6908,6 @@ class LakeSQL:
                     m2.group(1).lower(), m2.group(2).lower()
                 ):
                     refs.add((m2.group(1).lower(), m2.group(2).lower()))
-                    # correlation names that refer to THIS table: its
-                    # bare name plus a trailing FROM alias — the only
-                    # qualifiers _where_filters may accept (a joined
-                    # temp view / CTE never registers in refs, so its
-                    # predicates must not narrow this table's scan)
-                    lone_quals.add(m2.group(2).lower())
-                    am = re.match(
-                        rf"\s+(?:AS\s+)?({_IDENT})",
-                        s[m2.end():], re.IGNORECASE,
-                    )
-                    if am and am.group(1).lower() not in self._CORR_STOP:
-                        lone_quals.add(am.group(1).lower())
             if len(refs) == 1:
                 lone_ref = next(iter(refs))
 
@@ -7066,9 +6986,7 @@ class LakeSQL:
             if ver is not None:
                 df, view = tbl.read(int(ver)), f"__lake_{ns}_{name}_v{ver}"
             elif ts is None and lone_ref == (ns, name):
-                filters = self._where_filters(
-                    s, tbl.schema(), frozenset(lone_quals)
-                )
+                filters = self._select_ranges(s, ns, name, tbl.schema())
                 df = tbl.read_pruned(filters) if filters else tbl.read()
                 view = f"__lake_{ns}_{name}"
             elif ts is not None:
@@ -10672,8 +10590,12 @@ class LakeSQL:
         the manifest-pruned rewrite candidate set for the extractable
         part of the predicate (bounds + blooms + partition buckets,
         metadata-only): the cost story a PG user reads EXPLAIN for.
-        The estimate is a superset of the true rewrite set — the full
-        predicate re-applies at execution."""
+        A plain DELETE/UPDATE WHERE becomes the Column execution uses
+        (`_dml_condition`) and reports the shortlist execution scans
+        (`_shortlist_by_condition`); the join and subquery forms run
+        as a MERGE or an overwrite and report every file. The estimate
+        is a superset of the true rewrite set — the full predicate
+        re-applies at execution."""
         bm, _lits = self._mask_strings(body)
         m = re.match(
             rf"(?:DELETE\s+FROM|UPDATE|MERGE\s+INTO)\s+{_TBL}"
@@ -10701,36 +10623,37 @@ class LakeSQL:
             + f", snapshot v{snap.version}",
             f"write mode: {mode}",
         ]
-        where = None
-        wm = re.search(r"\bWHERE\s+(.*)$", bm, re.IGNORECASE | re.DOTALL)
-        if verb != "MERGE" and wm:
-            where = self._unmask_strings(wm.group(1).strip(), _lits)
-            lines.append(f"predicate: {where}")
-            quals = {name.lower()}
-            am = re.match(
-                rf"\s+(?:AS\s+)?({_IDENT})", bm[m.end():], re.IGNORECASE
-            )
-            if am and am.group(1).lower() not in self._CORR_STOP:
-                quals.add(am.group(1).lower())
-            filters = self._where_filters(
-                "WHERE " + where, tbl.schema(), frozenset(quals)
-            )
-            if filters:
+        selected = snap.files
+        hm = (self._DELETE if verb == "DELETE" else self._UPDATE).match(bm)
+        wm = hm and self._depth0_kw(hm.group(5), "WHERE")
+        if wm:
+            talias, rest = hm.group(4), hm.group(5)
+            where = rest[wm.end():].strip()
+            lines.append(f"predicate: {self._unmask_strings(where, _lits)}")
+            if self._depth0_kw(
+                rest, "USING" if verb == "DELETE" else "FROM"
+            ) or re.search(r"\(\s*SELECT\b", rest, re.IGNORECASE):
+                # `_delete`/`_update` run these as a MERGE or an
+                # overwrite: no shortlist by this predicate applies
+                lines.append(
+                    "manifest ranges: none (join or subquery predicate; "
+                    "full candidate set)"
+                )
+            else:
+                cond = self._dml_condition(tbl, where, _lits, ns, name, talias)
                 shown = ", ".join(
                     f"{c} in [{lo if lo is not None else '-inf'}, "
                     f"{hi if hi is not None else 'inf'}]"
-                    for c, (lo, hi) in filters.items()
+                    for c, (lo, hi) in _condition_ranges(
+                        cond, tbl.schema()
+                    ).items()
                 )
-                lines.append(f"manifest ranges: {shown}")
-                _, selected = tbl.pruned_entries(filters)
-            else:
                 lines.append(
-                    "manifest ranges: none extractable "
-                    "(full-scan candidate set)"
+                    "manifest ranges: "
+                    + (shown or "none extractable (full-scan candidate set)")
                 )
-                selected = snap.files
+                selected = tbl._shortlist_by_condition(snap, cond)
         elif verb == "MERGE":
-            selected = snap.files
             mm = self._MERGE.match(bm)
             if mm:
                 try:
@@ -10751,8 +10674,6 @@ class LakeSQL:
                 lines.append(
                     "candidate set: full (unparsed MERGE shape)"
                 )
-        else:
-            selected = snap.files
         sel_bytes = sum(f.get("bytes", 0) for f in selected)
         lines.append(
             f"rewrite candidates: {len(selected)} of {total_files} files"
@@ -10872,6 +10793,34 @@ class LakeSQL:
         return re.sub(
             rf"\b{name}\.({_IDENT})", r"\1", text, flags=re.IGNORECASE
         )
+
+    def _dml_cast_rounding(self, tbl: LakeTable, masked: str, lits) -> str:
+        """A DML SET list or WHERE takes the same PG cast-rounding
+        pass as SELECT, typed against the target table's schema
+        (``SET cnt = ratio::int`` must round, not truncate)."""
+        if self._INT_CAST_TGT.search(masked) or self._CAST_HEAD.search(
+            masked
+        ):
+            return self._rewrite_int_cast_rounding(
+                masked, lits, frame_df=tbl.read()
+            )
+        return masked
+
+    def _dml_condition(
+        self, tbl: LakeTable, where, lits, ns, name, talias
+    ) -> Column:
+        """The Column a plain (join-less, subquery-free) DELETE/UPDATE
+        WHERE becomes — the one conversion execution and EXPLAIN
+        share. The scan is unaliased, so the correlation qualifiers
+        PG exposes go first (``WHERE t.k = 1`` / ``WHERE db.t.k = 1``
+        without an alias); literals are re-escaped for Spark's
+        parser. No WHERE matches every row."""
+        if not where:
+            return F.lit(True)
+        where = self._dml_cast_rounding(
+            tbl, self._strip_dml_qualifiers(where, ns, name, talias), lits
+        )
+        return F.expr(self._spark_text(self._unmask_strings(where, lits)))
 
     def _subquery_where_dml(
         self, ns, name, branch, talias, where_raw, verb, set_items=None
@@ -11084,6 +11033,18 @@ class LakeSQL:
             .drop("__rid")
         )
 
+    # DELETE FROM t[@b] [[AS] a] <rest> / UPDATE t[@b] [[AS] a] SET <rest>
+    _DELETE = re.compile(
+        rf"DELETE\s+FROM\s+{_TBL}(?:@({_IDENT}))?"
+        rf"(?:\s+(?:AS\s+)?(?!USING\b|WHERE\b)({_IDENT}))?\s*(.*)$",
+        re.IGNORECASE | re.DOTALL,
+    )
+    _UPDATE = re.compile(
+        rf"UPDATE\s+{_TBL}(?:@({_IDENT}))?"
+        rf"(?:\s+(?:AS\s+)?(?!SET\b)({_IDENT}))?\s+SET\s+(.*)$",
+        re.IGNORECASE | re.DOTALL,
+    )
+
     def _delete(self, s: str) -> Snapshot:
         # PG join-delete: DELETE FROM t [[AS] a] USING src [[AS] b]
         # WHERE a.k = b.k [AND ...] — rows matching the source go;
@@ -11095,12 +11056,7 @@ class LakeSQL:
         # never tears the clause split.
         s, _lits = self._mask_strings(s)
         U = lambda t: self._unmask_strings(t, _lits)  # noqa: E731
-        hm = re.match(
-            rf"DELETE\s+FROM\s+{_TBL}(?:@({_IDENT}))?"
-            rf"(?:\s+(?:AS\s+)?(?!USING\b|WHERE\b)({_IDENT}))?\s*(.*)$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
+        hm = self._DELETE.match(s)
         if not hm:
             raise LakehouseError(f"cannot parse DELETE: {U(s)[:80]!r}")
         ns, name, branch, talias, rest = hm.groups()
@@ -11190,23 +11146,9 @@ class LakeSQL:
                     ns.lower(), name.lower(), branch, talias,
                     U(where), "DELETE",
                 )
-            # strip the correlation: the scan is unaliased. PG exposes
-            # the bare (and schema-qualified) table name when no alias
-            # is given — ``DELETE FROM db.t WHERE t.k = 1`` /
-            # ``WHERE db.t.k = 1`` are both valid PG
-            where = self._strip_dml_qualifiers(where, ns, name, talias)
         tbl = self._load(ns, name, branch)
-        if where and (
-            self._INT_CAST_TGT.search(where)
-            or self._CAST_HEAD.search(where)
-        ):
-            # r11: the DELETE predicate takes the same PG
-            # cast-rounding pass as SELECT (typed on the target table)
-            where = self._rewrite_int_cast_rounding(
-                where, _lits, frame_df=tbl.read()
-            )
         return self._apply_delete(
-            tbl, F.expr(self._spark_text(U(where))) if where else F.lit(True)
+            tbl, self._dml_condition(tbl, where, _lits, ns, name, talias)
         )
 
     def _update(self, s: str) -> Snapshot:
@@ -11224,12 +11166,7 @@ class LakeSQL:
         # before it reaches Spark.
         s, _lits = self._mask_strings(s)
         U = lambda t: self._unmask_strings(t, _lits)  # noqa: E731
-        hm = re.match(
-            rf"UPDATE\s+{_TBL}(?:@({_IDENT}))?"
-            rf"(?:\s+(?:AS\s+)?(?!SET\b)({_IDENT}))?\s+SET\s+(.*)$",
-            s,
-            re.IGNORECASE | re.DOTALL,
-        )
+        hm = self._UPDATE.match(s)
         if not hm:
             raise LakehouseError(f"cannot parse UPDATE: {U(s)[:80]!r}")
         ns, name, branch, talias, rest = hm.groups()
@@ -11325,32 +11262,13 @@ class LakeSQL:
                 ns.lower(), name.lower(), branch, talias,
                 U(where) if where else None, "UPDATE", items,
             )
-        # strip the correlation: the scan is unaliased. PG exposes the
-        # bare/schema-qualified table name when no alias is given
-        # (``UPDATE db.t SET s = upper(t.s) WHERE t.k = 1``). A
-        # qualified SET target (``SET t.s = ...``, which PG rejects)
-        # strips to the same column — lenient, never wrong.
-        sets = self._strip_dml_qualifiers(sets, ns, name, talias)
-        where = (
-            self._strip_dml_qualifiers(where, ns, name, talias)
-            if where
-            else None
-        )
+        # strip the correlation: the scan is unaliased. A qualified SET
+        # target (``SET t.s = ...``, which PG rejects) strips to the
+        # same column — lenient, never wrong.
         tbl = self._load(ns, name, branch)
-        # r11: SET values / WHERE take the same PG cast-rounding pass
-        # as SELECT, typed against the target table's schema
-        # (``SET cnt = ratio::int`` must round, not truncate)
-        if self._INT_CAST_TGT.search(sets + " " + (where or "")) or (
-            self._CAST_HEAD.search(sets + " " + (where or ""))
-        ):
-            fr = tbl.read()
-            sets = self._rewrite_int_cast_rounding(
-                sets, _lits, frame_df=fr
-            )
-            if where:
-                where = self._rewrite_int_cast_rounding(
-                    where, _lits, frame_df=fr
-                )
+        sets = self._dml_cast_rounding(
+            tbl, self._strip_dml_qualifiers(sets, ns, name, talias), _lits
+        )
         self._refuse_identity_always_set(tbl, _set_items(sets))
         defaults = tbl.column_defaults()
         ids, _ = tbl._effective_field_ids(tbl.snapshot())
@@ -11368,7 +11286,7 @@ class LakeSQL:
                 assignments[k] = F.expr(self._spark_text(U(v)))
         return self._apply_update(
             tbl,
-            F.expr(self._spark_text(U(where))) if where else F.lit(True),
+            self._dml_condition(tbl, where, _lits, ns, name, talias),
             assignments,
         )
 

@@ -269,14 +269,14 @@ def test_condition_ranges_coerce_literals_to_the_column_type(spark):
     dates zero-padded, timestamps 'T'-separated, and a number against
     a string column (a numeric compare in Spark) contributes nothing."""
     from pyspark.sql.types import (
-        DateType, LongType, StringType, StructField, StructType,
+        DateType, DoubleType, LongType, StringType, StructField, StructType,
         TimestampNTZType, TimestampType,
     )
 
     schema = StructType([
         StructField("k", LongType()), StructField("s", StringType()),
         StructField("d", DateType()), StructField("ts", TimestampType()),
-        StructField("n", TimestampNTZType()),
+        StructField("n", TimestampNTZType()), StructField("x", DoubleType()),
     ])
 
     def ranges(text):
@@ -298,6 +298,13 @@ def test_condition_ranges_coerce_literals_to_the_column_type(spark):
         "k": (3, 3), "d": ("2024-01-15", None)
     }
     assert ranges("s = 3") == {}
+    # a decimal literal is coerced from its text; only a number column
+    # takes it, and an integer column only a whole number
+    assert ranges("x >= 2.5 AND k < 3.5 AND s = 1.5") == {"x": (2.5, None)}
+    # a qualifier counts only when it names the scanned table
+    assert _condition_ranges(
+        F.expr("t.k = 3 AND u.x = 9"), schema, {"t"}
+    ) == {"k": (3, 3)}
     assert ranges("d = 'not a date'") == {}
     assert ranges("missing = 3") == {}
     assert _condition_ranges(F.col("d") >= "2024-1-15", schema) == {

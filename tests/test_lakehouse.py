@@ -223,7 +223,7 @@ def test_append_conflict_exhausts_retries(catalog, orders_df):
     other = catalog.load_table("db", "retry_app2")
     _inject_before_commit(tbl, lambda: other.append(orders_df.limit(5)))
     with pytest.raises(CommitConflict):
-        tbl.append(orders_df.limit(5), retries=0)
+        tbl.append(orders_df.limit(5), rebase=False)
 
 
 def test_compact_rebases_over_concurrent_append(catalog, orders_df):

@@ -275,6 +275,62 @@ def test_pruning_only_through_one_rule():
     assert not bad_hashes, f"bloom hash outside _bloom_positions: {bad_hashes}"
 
 
+def test_predicate_ranges_only_through_one_rule():
+    """A predicate becomes manifest ranges in one place:
+    ``_condition_ranges``, the only user of the literal coercion
+    ``_stat_literal``, for the DML shortlist, SQL SELECT and EXPLAIN
+    alike. The regex WHERE extractor (``_where_filters`` with
+    ``_PRUNE_CONJ``/``_PRUNE_BETWEEN``) is gone — as a second copy it
+    read an aggregate's FILTER clause as the WHERE and reported
+    EXPLAIN candidates execution never used."""
+    import ast
+
+    gone = {"_where_filters", "_PRUNE_CONJ", "_PRUNE_BETWEEN"}
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self):
+            self.scope: list[str] = []
+            self.defined: set[str] = set()
+            self.uses: list[tuple[str, ...]] = []  # scopes naming it
+
+        def visit_FunctionDef(self, node):
+            self.defined.add(node.name)
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Name(self, node):
+            if isinstance(node.ctx, ast.Store):
+                self.defined.add(node.id)
+            if node.id == "_stat_literal":
+                self.uses.append(tuple(self.scope))
+
+        def visit_alias(self, node):
+            if node.name == "_stat_literal":
+                self.uses.append(("import",))
+
+    offenders, present = [], []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, PKG_ROOT)
+            with open(path) as f:
+                finder = Finder()
+                finder.visit(ast.parse(f.read()))
+            present += [(rel, n) for n in sorted(gone & finder.defined)]
+            offenders += [
+                (rel, scope)
+                for scope in finder.uses
+                if rel != "lakehouse.py" or "_condition_ranges" not in scope
+            ]
+    assert not present, f"regex WHERE extractor still present: {present}"
+    assert not offenders, f"_stat_literal outside _condition_ranges: {offenders}"
+
+
 def test_commit_conflicts_only_through_one_loop():
     """Optimistic concurrency has one loop and one rebase rule: inside
     ``LakeTable`` only ``_commit_op`` catches ``CommitConflict`` and

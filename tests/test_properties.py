@@ -396,7 +396,7 @@ def test_pruned_read_equals_full_scan_filter(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# SQL WHERE-clause range extraction (sql.py _where_filters)
+# SQL WHERE-clause range extraction (sql.py _select_ranges)
 # ---------------------------------------------------------------------------
 
 _ADVERSARIAL_STRINGS = st.one_of(
@@ -444,14 +444,15 @@ _conjunct = st.one_of(
 
 @settings(max_examples=200, deadline=None)
 @given(conjuncts=st.lists(_conjunct, min_size=1, max_size=4))
-def test_where_filters_extraction_matches_reference(conjuncts):
+def test_where_filters_extraction_matches_reference(spark, conjuncts):
     """Differential parse check for the r4 wrong-results class: render
     random simple conjuncts — with adversarial string literals
     containing BETWEEN/AND/OR/paren/quote text — into a WHERE clause
-    and assert the extracted per-column ranges equal an independently
-    computed intersection of the conjuncts' true bounds. Any
-    corruption (keyword text inside a literal torn or excised) shows
-    up as a bogus or over-tight range."""
+    and assert the ranges the SELECT path extracts (Spark's parse
+    tree, then `_condition_ranges`) equal an independently computed
+    intersection of the conjuncts' true bounds. Any corruption
+    (keyword text inside a literal torn or excised) shows up as a
+    bogus or over-tight range."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -503,8 +504,7 @@ def test_where_filters_extraction_matches_reference(conjuncts):
             narrow(col, lo=sem1, hi=sem2)
 
     stmt = "SELECT * FROM db.t WHERE " + " AND ".join(parts)
-    sql = object.__new__(LakeSQL)
-    got = sql._where_filters(stmt, schema)
+    got = LakeSQL._select_ranges(stmt, "db", "t", schema)
     want = {c: (lo, hi) for c, (lo, hi) in ref.items()}
     assert got == want, f"stmt={stmt!r}"
 

@@ -7062,3 +7062,121 @@ def test_client_handshake_r11(lsql):
         r"PostgreSQL \d+\.\d+",
         lsql.sql("SELECT version() AS v").collect()[0].v,
     )
+
+
+# -- one predicate rule: SELECT and EXPLAIN ranges from the parse tree ---
+
+
+def _three_file_table(lsql, spark, name="pr"):
+    lsql.sql(f"CREATE TABLE db.{name} (k BIGINT, v DOUBLE)")
+    tbl = lsql.catalog.load_table("db", name)
+    for lo in (0, 100, 200):
+        tbl.append(
+            spark.createDataFrame(
+                [(lo + i, float(lo + i)) for i in range(100)],
+                "k long, v double",
+            ).coalesce(1)
+        )
+    assert len(tbl.snapshot().files) == 3
+    return tbl
+
+
+def test_aggregate_filter_clause_never_prunes_the_scan(lsql, spark):
+    """An aggregate's ``FILTER (WHERE ...)`` is no WHERE clause: the
+    scan feeding the other aggregates must stay whole."""
+    _three_file_table(lsql, spark)
+    r = lsql.sql(
+        "SELECT count(*) AS n, count(*) FILTER (WHERE k >= 250 AND v >= 0)"
+        " AS big FROM db.pr"
+    ).collect()[0]
+    assert (r.n, r.big) == (300, 50)
+    got = {
+        tuple(r)
+        for r in lsql.sql(
+            "SELECT k > 50 AS hi, count(*) AS n, "
+            "count(*) FILTER (WHERE k <= 10 AND k >= 0) AS lo "
+            "FROM db.pr GROUP BY k > 50"
+        ).collect()
+    }
+    assert got == {(False, 51, 11), (True, 249, 0)}
+
+
+def test_self_join_never_shares_a_pruned_binding(lsql, spark):
+    """Both sides of a self-join bind the same view, so one side's
+    WHERE conjunct must not narrow the other side's rows."""
+    _three_file_table(lsql, spark)
+    for q in (
+        "SELECT count(*) AS n FROM db.pr a JOIN db.pr b "
+        "ON a.k = b.k + 100 WHERE a.k = 150",
+        "SELECT count(*) AS n FROM db.pr a, db.pr b "
+        "WHERE a.k = b.k + 100 AND a.k = 150",
+    ):
+        assert lsql.sql(q).collect()[0].n == 1, q
+
+
+def test_select_in_list_and_qualified_conjuncts_bind_one_file(lsql, spark):
+    """SELECT takes its ranges through the DML shortlist's rule: IN
+    lists, qualified conjuncts and decimal literals prune."""
+    _three_file_table(lsql, spark)
+    for where, n in (
+        ("k IN (5, 7)", 2),
+        ("pr.k = 7", 1),
+        ("v >= 295.5", 4),
+    ):
+        out = lsql.sql(f"SELECT * FROM db.pr WHERE {where}")
+        assert out.count() == n, where
+        bound = spark.table("__lake_db_pr")
+        files = {
+            r[0]
+            for r in bound.select(F.input_file_name()).distinct().collect()
+        }
+        assert len(files) == 1, where
+
+
+def test_explain_dml_candidates_equal_the_executed_shortlist(lsql):
+    """EXPLAIN DELETE/UPDATE turns its WHERE into the Column execution
+    uses and reports the shortlist execution scans; join forms report
+    every file."""
+    import re as _re
+
+    from pg_lakehouse_spark.lakehouse import LakeTable
+
+    lsql.sql("CREATE TABLE db.ex (k BIGINT, s STRING)")
+    for lo in (0, 100, 200, 300):
+        lsql.sql(
+            f"INSERT INTO db.ex SELECT id AS k, 'v' AS s "
+            f"FROM range({lo}, {lo + 100}, 1, 1)"
+        )
+    real = LakeTable._shortlist_by_condition
+    shortlists = []
+
+    def spy(self, snap, condition):
+        out = real(self, snap, condition)
+        shortlists.append(len(out))
+        return out
+
+    for stmt, want in (
+        ("DELETE FROM db.ex WHERE k IN (5, 250)", 3),
+        ("DELETE FROM db.ex WHERE db.ex.k = 7", 1),
+        ("UPDATE db.ex SET s = 'x' WHERE k BETWEEN 120 AND 130", 1),
+        ("UPDATE db.ex AS e SET s = 'y' WHERE e.k = 310", 1),
+    ):
+        plan = lsql.sql(f"EXPLAIN {stmt}").collect()[0].plan
+        m = _re.search(r"rewrite candidates: (\d+) of 4 files", plan)
+        assert m, plan
+        shortlists.clear()
+        LakeTable._shortlist_by_condition = spy
+        try:
+            lsql.sql(stmt)
+        finally:
+            LakeTable._shortlist_by_condition = real
+        assert shortlists and int(m.group(1)) == shortlists[0] == want, (
+            stmt, plan, shortlists,
+        )
+    lsql.sql("CREATE TABLE db.exs (k BIGINT)")
+    lsql.sql("INSERT INTO db.exs VALUES (5)")
+    plan = lsql.sql(
+        "EXPLAIN DELETE FROM db.ex USING db.exs "
+        "WHERE ex.k = exs.k AND ex.k = 5"
+    ).collect()[0].plan
+    assert "rewrite candidates: 4 of 4 files" in plan, plan

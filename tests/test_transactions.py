@@ -264,7 +264,7 @@ def test_concurrent_appends_and_txns_no_lost_updates(catalog, orders_df):
         try:
             lo = 1000 * (i + 1)
             d1 = orders_df.limit(lo + 5).subtract(orders_df.limit(lo))
-            t1.append(d1, retries=25)
+            t1.append(d1)
             with LakeTransaction() as tx:
                 d2 = orders_df.limit(lo + 12).subtract(orders_df.limit(lo + 7))
                 d3 = orders_df.limit(lo + 20).subtract(orders_df.limit(lo + 16))
@@ -323,7 +323,7 @@ def test_concurrent_dml_compaction_and_wap_invariants(catalog, spark):
                     [(k, g, 0.0) for k in range(lo, lo + 100)],
                     "k long, grp string, v double",
                 )
-                tbl.append(chunk, retries=25)
+                tbl.append(chunk)
                 tbl.update(
                     (F.col("grp") == g)
                     & F.col("k").between(lo, lo + 49),
@@ -358,7 +358,7 @@ def test_concurrent_dml_compaction_and_wap_invariants(catalog, spark):
                     b = f"audit{it}_{attempt}"
                     tbl.create_branch(b)
                     h = tbl.for_branch(b)
-                    h.append(chunk, retries=25)
+                    h.append(chunk)
                     try:
                         tbl.fast_forward(b)
                         tbl.drop_branch(b)
