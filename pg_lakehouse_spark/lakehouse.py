@@ -4380,112 +4380,6 @@ class LakeTable:
             out[c] = e
         return out
 
-    def _mor_merge(
-        self,
-        snap: Snapshot,
-        source: DataFrame,
-        on: list[str],
-        *,
-        when_matched_update: dict[str, Column] | None,
-        when_matched_delete: bool,
-        when_matched_condition: Column | None,
-        when_not_matched_insert: bool,
-        when_not_matched_by_source_delete: bool,
-        when_not_matched_by_source_condition: Column | None,
-        when_not_matched_condition: Column | None,
-        when_not_matched_values: dict[str, Column] | None,
-        summary_extra: dict | None,
-    ) -> _Pending | None:
-        """Merge-on-read MERGE body: matched target rows retire via an
-        equality-delete key file; updated postimages and unmatched
-        inserts land as ordinary appends (seq-exempt from the delete).
-        Writes O(matched + inserted) rows — no target file rewrite —
-        the CDC-apply-at-scale shape. ``when_not_matched_by_source_
-        delete`` additionally retires target rows with no source match
-        (O(unmatched) keys — inherent to full-sync semantics)."""
-        target = self._read_entries(snap, snap.files)
-        src = source.select(
-            F.struct(*[F.col(c) for c in source.columns]).alias("__src"),
-            *[F.col(c).alias(f"__k_{c}") for c in on],
-        )
-        small_src = _is_small(source)
-        if small_src:
-            src = F.broadcast(src)
-        cond = F.expr(" AND ".join(f"`{c}` = `__k_{c}`" for c in on))
-        matched = target.join(src, cond, "inner")
-        if when_matched_condition is not None:
-            matched = matched.filter(when_matched_condition)
-        retire = []
-        if when_matched_update or when_matched_delete:
-            # matched rows retire only when a matched clause replaces or
-            # deletes them — an insert-only merge must leave them alone
-            retire.append(matched)
-        unmatched = None
-        if when_not_matched_by_source_delete:
-            anti_keys = src.select(*[F.col(f"__k_{c}").alias(c) for c in on])
-            if small_src:
-                # anti join builds on the right side — broadcastable
-                anti_keys = F.broadcast(anti_keys)
-            unmatched = target.join(anti_keys, on=on, how="left_anti")
-            if when_not_matched_by_source_condition is not None:
-                unmatched = unmatched.filter(
-                    when_not_matched_by_source_condition
-                )
-            retire.append(unmatched)
-        tcols = target.columns
-        post = inserts = None
-        if when_matched_update:
-            post = matched.select(
-                *[
-                    when_matched_update[c].alias(c)
-                    if c in when_matched_update
-                    else F.col(c)
-                    for c in tcols
-                ]
-            )
-        if when_not_matched_insert:
-            ins_frame = src.join(
-                target.select(
-                    *[F.col(c).alias(f"__k_{c}") for c in on]
-                ).distinct(),
-                on=[f"__k_{c}" for c in on],
-                how="left_anti",
-            )
-            if when_not_matched_condition is not None:
-                ins_frame = ins_frame.filter(when_not_matched_condition)
-            ins_vals = self._merge_insert_values(
-                tcols, when_not_matched_values
-            )
-            inserts = ins_frame.select(*[ins_vals[c].alias(c) for c in tcols])
-
-        def changes() -> list[DataFrame]:
-            parts = []
-            if when_matched_delete:
-                parts.append(matched.select(*tcols).withColumn(
-                    "_change_type", F.lit("delete")
-                ))
-            elif post is not None:
-                parts.append(matched.select(*tcols).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ))
-                parts.append(post.withColumn(
-                    "_change_type", F.lit("update_postimage")
-                ))
-            if inserts is not None:
-                parts.append(
-                    inserts.withColumn("_change_type", F.lit("insert"))
-                )
-            if unmatched is not None:
-                parts.append(unmatched.select(*tcols).withColumn(
-                    "_change_type", F.lit("delete")
-                ))
-            return parts
-
-        return self._stage_mor(
-            snap, retire, changes, post=post, inserts=inserts,
-            summary_extra=summary_extra,
-        )
-
     def merge(
         self,
         source: DataFrame,
@@ -4518,23 +4412,27 @@ class LakeTable:
         to the evolved schema (missing columns fill NULL/DEFAULT)
         before the join.
 
-        Copy-on-write with key-bounds file pruning: only files whose
-        per-column bounds (manifest stats) overlap the source's join-key
-        range are rewritten; the rest carry over by reference. Safe
+        One body (`_merge_stage`) serves both write modes, with
+        key-bounds file pruning: only files whose per-column bounds
+        (manifest stats) and blooms admit the source's join keys are
+        read and joined; the rest carry over by reference. Safe
         because a target row matching a source key must live in a file
         whose bounds contain that key — a source key overlapping no
         file is genuinely unmatched (insert). The bounds aggregation is
-        2 scalars per key column — metadata-scale, not data.
+        2 scalars per key column — metadata-scale, not data. A clause
+        condition that evaluates to NULL does not fire (PG).
 
         ``when_not_matched_by_source_delete`` adds the PG17/Delta
         ``WHEN NOT MATCHED BY SOURCE THEN DELETE`` clause (optionally
         gated by a condition over target columns) — the full-sync
         shape. It disables key-bounds pruning: any target row may be
-        source-unmatched, so every file is a rewrite candidate. That
-        cost is inherent to the semantics, not the implementation.
+        source-unmatched, so every file is a candidate. That cost is
+        inherent to the semantics, not the implementation.
 
-        ``mode='merge-on-read'`` (or the ``write_delete_mode`` table
-        property) switches to the no-rewrite path (`_mor_merge`).
+        Copy-on-write rewrites the candidate files. ``mode='merge-on-
+        read'`` (or the ``write_delete_mode`` table property) writes
+        instead an equality-delete file for the retired rows plus
+        appends of the post-images and inserts — no file rewrite.
         Positional-mode tables fall back to copy-on-write here: MERGE
         is key-addressed, so the equality-delete form is the natural
         MoR encoding; position deletes cover delete/update.
@@ -4570,13 +4468,10 @@ class LakeTable:
             when_not_matched_values=when_not_matched_values,
             summary_extra=summary_extra,
         )
-        body = (
-            self._mor_merge if self._delete_mode(mode) == "mor"
-            else self._merge_cow
-        )
+        mor = self._delete_mode(mode) == "mor"
         # Materialize the source ONCE for the whole statement (Delta's
-        # merge-source materialization). Both merge paths otherwise
-        # re-evaluate the source plan several times — the key-bounds/
+        # merge-source materialization). The merge body otherwise
+        # re-evaluates the source plan several times — the key-bounds/
         # NDV agg, the broadcast build of the join, the matched-key
         # set, the insert leg's anti-join probe — so a source that is
         # itself an aggregation (an incremental-rollup refresh delta)
@@ -4593,7 +4488,7 @@ class LakeTable:
             # a re-execution after a concurrent schema evolution must
             # reshape the source to the evolved schema again (r5 ADVICE)
             src = self._merge_write_schema(source) if merge_schema else source
-            return body(snap, src, on, **clauses)
+            return self._merge_stage(snap, src, on, mor, **clauses)
 
         try:
             return self._commit_op("merge", stage, rerun=True)
@@ -4601,11 +4496,12 @@ class LakeTable:
             if owns_cache:
                 source.unpersist()
 
-    def _merge_cow(
+    def _merge_stage(
         self,
         snap: Snapshot,
         source: DataFrame,
         on: list[str],
+        mor: bool,
         *,
         when_matched_update: dict[str, Column] | None,
         when_matched_delete: bool,
@@ -4616,14 +4512,21 @@ class LakeTable:
         when_not_matched_condition: Column | None,
         when_not_matched_values: dict[str, Column] | None,
         summary_extra: dict | None,
-    ) -> _Pending:
-        """Copy-on-write MERGE body (source already validated and
-        materialized by :meth:`merge`): rewrite the candidate files
-        ``_merge_candidates`` selects against ``snap``."""
+    ) -> _Pending | None:
+        """The one MERGE body (source already validated and
+        materialized by :meth:`merge`) for both write modes: it reads
+        the files ``_merge_candidates`` selects against ``snap``, joins
+        them with the source and evaluates every clause once; only the
+        write step forks. Copy-on-write rewrites the candidate files;
+        merge-on-read (``mor``) retires the updated or deleted matched
+        rows and the NOT MATCHED BY SOURCE deletes through an
+        equality-delete file and appends the post-images and the
+        inserts (`_stage_mor`)."""
         touched, key_ranges, key_probes, src_rows = self._merge_candidates(
             snap, source, on, when_not_matched_by_source_delete
         )
         target = self._read_entries(snap, touched)
+        tcols = target.columns
         src = source.select(
             F.struct(*[F.col(c) for c in source.columns]).alias("__src"),
             *[F.col(c).alias(f"__k_{c}") for c in on],
@@ -4633,61 +4536,98 @@ class LakeTable:
             _small_by_rowcount(source, src_rows), when_not_matched_insert,
             target_rows=sum(f.get("rows", 0) for f in touched),
         )
-        matched = F.col("__src").isNotNull() & F.col(on[0]).isNotNull()
-        if when_matched_condition is not None:
-            # WHEN MATCHED AND <cond>: rows failing the condition stay
-            # untouched (they are neither updated nor deleted)
-            matched = matched & when_matched_condition
+
+        def fires(cond: Column | None) -> Column:
+            # a clause condition that evaluates to NULL does not fire
+            # (PG): the row is neither updated, deleted nor inserted
+            return F.lit(True) if cond is None else F.coalesce(
+                cond, F.lit(False)
+            )
+
+        matched = (
+            F.col("__src").isNotNull() & F.col(on[0]).isNotNull()
+            & fires(when_matched_condition)
+        )
         # A source-only (insert) row has a source struct but no target
         # match; `on[0] IS NULL` alone would also catch target rows
         # whose merge key is NULL and wrongly clobber/drop them.
         src_only = F.col("__src").isNotNull() & F.col(on[0]).isNull()
-        # WHEN NOT MATCHED AND <cond>: source rows failing the gate are
-        # dropped, not inserted (NULL condition counts as failing)
         ins = (
-            src_only
-            if when_not_matched_condition is None
-            else src_only
-            & F.coalesce(when_not_matched_condition, F.lit(False))
+            src_only & fires(when_not_matched_condition)
+            if when_not_matched_insert else F.lit(False)
         )
-        ins_vals = self._merge_insert_values(
-            target.columns, when_not_matched_values
+        by_source_del = F.col("__src").isNull() & fires(
+            when_not_matched_by_source_condition
         )
+        # a matched DELETE wins over a matched UPDATE
+        update = None if when_matched_delete else when_matched_update
+        ins_vals = self._merge_insert_values(tcols, when_not_matched_values)
+        post = inserts = None
+        if update:
+            post = joined.filter(matched).select(
+                *[update.get(c, F.col(c)).alias(c) for c in tcols]
+            )
+        if when_not_matched_insert:
+            inserts = joined.filter(ins).select(
+                *[ins_vals[c].alias(c) for c in tcols]
+            )
 
+        def changes() -> list[DataFrame]:
+            pre = joined.filter(matched).select(*tcols)
+            parts = []
+            if when_matched_delete:
+                parts.append(pre.withColumn("_change_type", F.lit("delete")))
+            elif post is not None:
+                parts += [
+                    pre.withColumn("_change_type", F.lit("update_preimage")),
+                    post.withColumn("_change_type", F.lit("update_postimage")),
+                ]
+            if inserts is not None:
+                parts.append(
+                    inserts.withColumn("_change_type", F.lit("insert"))
+                )
+            if when_not_matched_by_source_delete:
+                parts.append(
+                    joined.filter(by_source_del)
+                    .select(*tcols)
+                    .withColumn("_change_type", F.lit("delete"))
+                )
+            return parts
+
+        pruned = {"pruned_files": len(snap.files) - len(touched)}
+        if mor:
+            retire = []
+            if update or when_matched_delete:
+                # matched rows retire only when a matched clause replaces
+                # or deletes them — an insert-only merge leaves them alone
+                retire.append(joined.filter(matched))
+            if when_not_matched_by_source_delete:
+                retire.append(joined.filter(by_source_del))
+            return self._stage_mor(
+                snap, retire, changes, post=post, inserts=inserts,
+                summary_extra=pruned | (summary_extra or {}),
+            )
+
+        drop = src_only & ~ins
+        if when_matched_delete:
+            drop = drop | matched
+        if when_not_matched_by_source_delete:
+            drop = drop | by_source_del
         cols = []
-        for name in target.columns:
+        for name in tcols:
             val = F.col(name)
-            if when_matched_update and name in when_matched_update:
-                val = F.when(matched, when_matched_update[name]).otherwise(val)
+            if update and name in update:
+                val = F.when(matched, update[name]).otherwise(val)
             if when_not_matched_insert:
                 val = F.when(ins, ins_vals[name]).otherwise(val)
             cols.append(val.alias(name))
-        target_only = F.col("__src").isNull()
-        by_source_del = (
-            target_only
-            if when_not_matched_by_source_condition is None
-            else (target_only & when_not_matched_by_source_condition)
-        )
-        out = joined
-        if when_matched_delete:
-            out = out.filter(~matched)
-        if when_not_matched_insert:
-            out = out.filter(~src_only | ins)
-        else:
-            out = out.filter(~src_only)
-        if when_not_matched_by_source_delete:
-            out = out.filter(~by_source_del)
         # CHECK guards cover exactly the rows this merge writes anew
         # (updated post-images + inserts); matched-but-unmodified and
         # carried-over rows are pre-existing and exempt (PG semantics —
         # a NOT VALID constraint over old rows must not fail the merge)
-        modified = F.lit(False)
-        if when_matched_update:
-            modified = modified | matched
-        if when_not_matched_insert:
-            modified = modified | ins
+        modified = (matched if update else F.lit(False)) | ins
         marked = self._align_to_schema(
-            out.select(*cols, modified.alias("__modified"))
+            joined.filter(~drop).select(*cols, modified.alias("__modified"))
         )
         result = self._apply_check_guards(
             marked, only=F.col("__modified")
@@ -4696,60 +4636,17 @@ class LakeTable:
             result, snap.version + 1, snap.partition_spec,
             schema_id=snap.schema_id, guard=False,
         )
-
-        # change feed (only when the table opted in): matched rows →
-        # delete or update pre/post images; source-only rows → inserts
         feed = self.change_feed_enabled()
-        change_parts = []
-        tcols = target.columns
-        if not feed:
-            pass
-        elif when_matched_delete:
-            change_parts.append(
-                joined.filter(matched)
-                .select(*tcols)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-        elif when_matched_update:
-            m = joined.filter(matched)
-            change_parts.append(
-                m.select(*tcols).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-            )
-            change_parts.append(
-                m.select(
-                    *[
-                        when_matched_update[c].alias(c)
-                        if c in when_matched_update
-                        else F.col(c)
-                        for c in tcols
-                    ]
-                ).withColumn("_change_type", F.lit("update_postimage"))
-            )
-        if feed and when_not_matched_insert:
-            change_parts.append(
-                joined.filter(ins)
-                .select(*[ins_vals[c].alias(c) for c in tcols])
-                .withColumn("_change_type", F.lit("insert"))
-            )
-        if feed and when_not_matched_by_source_delete:
-            change_parts.append(
-                joined.filter(by_source_del)
-                .select(*tcols)
-                .withColumn("_change_type", F.lit("delete"))
-            )
         touched_paths = {f["path"] for f in touched}
         return _Pending(
-            summary={
-                "added_files": len(adds),
-                "rewritten_files": len(touched),
-                "pruned_files": len(snap.files) - len(touched),
-            }
+            summary={"added_files": len(adds), "rewritten_files": len(touched)}
+            | pruned
             | ({"change_feed": "exact"} if feed else {})
             | (summary_extra or {}),
             adds=adds,
-            change_files=self._stage_changes(change_parts, snap.version + 1),
+            change_files=self._stage_changes(
+                changes() if feed else [], snap.version + 1
+            ),
             reads=touched_paths,
             replaces=touched_paths,
             # a full-sync merge reads the whole table
@@ -4768,8 +4665,8 @@ class LakeTable:
         full_sync: bool,
     ) -> tuple[list[dict], dict, dict, int]:
         """(candidate files, key ranges, bloom probes, source row
-        count) for a copy-on-write MERGE — EXPLAIN MERGE reports the
-        same candidate set. A target row matching a source key must
+        count) for a MERGE in either write mode — EXPLAIN MERGE reports
+        the same candidate set. A target row matching a source key must
         live in a file that ``_select_entries`` keeps for the source's
         key ranges and key probes, so every other file carries over by
         reference; the ranges and probes also judge files a concurrent

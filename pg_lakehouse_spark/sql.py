@@ -10657,9 +10657,18 @@ class LakeSQL:
             mm = self._MERGE.match(bm)
             if mm:
                 try:
-                    selected = self._explain_merge_candidates(
-                        tbl, snap, mm, _lits
+                    # the SAME candidate set the executed MERGE reads,
+                    # in either write mode (``_merge_candidates``: one
+                    # stats job over the source plus bloom probes for
+                    # sparse keys)
+                    source, keys = self._merge_using(mm, _lits)
+                    full_sync = re.search(
+                        r"\bNOT\s+MATCHED\s+BY\s+SOURCE\b", mm.group(8),
+                        re.IGNORECASE,
                     )
+                    selected = tbl._merge_candidates(
+                        snap, source, keys, bool(full_sync)
+                    )[0]
                     lines.append(
                         "candidate set: files overlapping the source "
                         "key bounds (one stats job over the source; "
@@ -10686,43 +10695,6 @@ class LakeSQL:
         return self.spark.createDataFrame(
             [("\n".join(lines),)], "plan string"
         )
-
-    def _explain_merge_candidates(
-        self, tbl: LakeTable, snap, mm: re.Match, lits: list[str]
-    ) -> list[dict]:
-        """MERGE rewrite candidates: parse the USING source and the ON
-        keys exactly like ``_merge``, then ask the table for the SAME
-        candidate set the executed copy-on-write MERGE rewrites
-        (``LakeTable._merge_candidates``: one stats job over the
-        source — the lookup PG's planner does from pg_statistic — plus
-        bloom probes for sparse keys)."""
-        U = lambda t: self._unmask_strings(t, lits)  # noqa: E731
-        _ns, _nm, _br, talias, src_ref, salias, on_cond, clauses = (
-            mm.groups()
-        )
-        talias, salias = talias.lower(), salias.lower()  # as ``_merge``
-        source = (
-            self._select(U(src_ref[1:-1].strip()))
-            if src_ref.startswith("(")
-            else self._source_ref_df(src_ref)
-        )
-        keys = []
-        for part in re.split(r"\s+AND\s+", on_cond, flags=re.IGNORECASE):
-            em = re.match(
-                rf"\s*({_IDENT})\.({_IDENT})\s*=\s*({_IDENT})\.({_IDENT})\s*$",
-                part,
-            )
-            if not em:
-                raise LakehouseError("non-equality ON")
-            pair = {em.group(1).lower(): em.group(2).lower(),
-                    em.group(3).lower(): em.group(4).lower()}
-            if set(pair) != {talias, salias} or pair[talias] != pair[salias]:
-                raise LakehouseError("asymmetric ON")
-            keys.append(pair[talias])
-        full_sync = re.search(
-            r"\bNOT\s+MATCHED\s+BY\s+SOURCE\b", clauses, re.IGNORECASE
-        )
-        return tbl._merge_candidates(snap, source, keys, bool(full_sync))[0]
 
     @staticmethod
     def _depth0_kw(text: str, kw: str) -> re.Match | None:
@@ -11307,24 +11279,21 @@ class LakeSQL:
         re.IGNORECASE | re.DOTALL,
     )
 
-    def _merge(self, s: str) -> Snapshot:
-        # Literals masked first (see _update): WHEN/THEN/AND/VALUES text
-        # (and parens/commas) inside a quoted string must never tear the
-        # clause grammar. Leaves unmask through ``rewrite``.
-        s, _lits = self._mask_strings(s)
-        U = lambda t: self._unmask_strings(t, _lits)  # noqa: E731
-        m = self._MERGE.match(s)
-        if not m:
-            raise LakehouseError(f"cannot parse MERGE: {U(s)[:80]!r}")
-        ns, name, branch, talias, src_ref, salias, on_cond, clauses = m.groups()
+    def _merge_using(
+        self, m: re.Match, lits: list[str]
+    ) -> tuple[DataFrame, list[str]]:
+        """(USING source frame, ON key columns) of a ``_MERGE`` match
+        over the masked statement — the one parse MERGE and EXPLAIN
+        MERGE share. ON must be a conjunction of alias-qualified
+        equalities pairing the same column on both sides."""
+        _ns, _nm, _br, talias, src_ref, salias, on_cond, _cl = m.groups()
         talias, salias = talias.lower(), salias.lower()  # PG ident folding
-        tbl = self._load(ns, name, branch)
         if src_ref.startswith("("):
-            source = self._select(U(src_ref[1:-1].strip()))
+            source = self._select(
+                self._unmask_strings(src_ref[1:-1].strip(), lits)
+            )
         else:
             source = self._source_ref_df(src_ref)
-
-        # ON must be a conjunction of alias-qualified key equalities
         keys = []
         for part in re.split(r"\s+AND\s+", on_cond, flags=re.IGNORECASE):
             em = re.match(
@@ -11343,6 +11312,21 @@ class LakeSQL:
                     f"sides: {part!r}"
                 )
             keys.append(pair[talias])
+        return source, keys
+
+    def _merge(self, s: str) -> Snapshot:
+        # Literals masked first (see _update): WHEN/THEN/AND/VALUES text
+        # (and parens/commas) inside a quoted string must never tear the
+        # clause grammar. Leaves unmask through ``rewrite``.
+        s, _lits = self._mask_strings(s)
+        U = lambda t: self._unmask_strings(t, _lits)  # noqa: E731
+        m = self._MERGE.match(s)
+        if not m:
+            raise LakehouseError(f"cannot parse MERGE: {U(s)[:80]!r}")
+        ns, name, branch, talias, _src, salias, _on, clauses = m.groups()
+        talias, salias = talias.lower(), salias.lower()  # PG ident folding
+        tbl = self._load(ns, name, branch)
+        source, keys = self._merge_using(m, _lits)
 
         def rewrite(expr: str):
             """target alias -> bare column, source alias -> __src.col"""

@@ -25,8 +25,11 @@ from pg_lakehouse_spark.workload import REGISTRY, _load_all  # noqa: E402
 TIMES: dict[str, list[float]] = defaultdict(list)
 
 
-def wrap_method(cls, name):
-    orig = getattr(cls, name)
+def wrap(owner, name):
+    """Time every call of ``owner.name`` (a class or module attribute).
+    A name that does not exist raises AttributeError, so a renamed
+    phase fails the run instead of silently dropping out of it."""
+    orig = getattr(owner, name)
 
     def timed(*a, **k):
         t0 = time.perf_counter()
@@ -35,20 +38,7 @@ def wrap_method(cls, name):
         finally:
             TIMES[name].append(time.perf_counter() - t0)
 
-    setattr(cls, name, timed)
-
-
-def wrap_fn(mod, name):
-    orig = getattr(mod, name)
-
-    def timed(*a, **k):
-        t0 = time.perf_counter()
-        try:
-            return orig(*a, **k)
-        finally:
-            TIMES[name].append(time.perf_counter() - t0)
-
-    setattr(mod, name, timed)
+    setattr(owner, name, timed)
 
 
 def main() -> None:
@@ -62,16 +52,15 @@ def main() -> None:
     spec.fn(spark, sf_dir).count()  # warm up
 
     for name in (
-        "_stage_dataframe", "_merge_cow", "_merge_bloom_refine",
+        "_stage_dataframe", "_merge_stage", "_merge_candidates",
         "_prepare_snapshot", "_publish", "_apply_check_guards",
         "_align_to_schema", "merge", "append", "overwrite",
-        "create_table_as", "read_incremental", "_read_entries",
-        "_rebase",
+        "read_incremental", "_read_entries", "_rebase",
     ):
-        if hasattr(lh.LakeTable, name):
-            wrap_method(lh.LakeTable, name)
+        wrap(lh.LakeTable, name)
+    wrap(lh.LakeCatalog, "create_table_as")
     for name in ("_parquet_footer_stats", "_build_merge_join"):
-        wrap_fn(lh, name)
+        wrap(lh, name)
 
     for rep in range(2):
         TIMES.clear()

@@ -1411,6 +1411,61 @@ def test_mor_merge_upsert(catalog, orders_df):
         F.col("o_orderkey") <= 20
     ).count()
 
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_null_clause_condition_does_not_fire(spark, catalog, mode):
+    """A MERGE clause condition that evaluates to NULL does not fire
+    (PG): a conditional DELETE keeps the row and a conditional UPDATE
+    leaves it as it was — in both write modes, through the API and
+    through SQL. Target (k, v) = (1,10) (2,NULL) (3,30) (4,NULL);
+    source keys 1, 2, 5."""
+    from pg_lakehouse_spark.sql import LakeSQL
+
+    target = spark.createDataFrame(
+        [(1, 10), (2, None), (3, 30), (4, None)], "k bigint, v bigint"
+    )
+    source = spark.createDataFrame(
+        [(1, 100), (2, 200), (5, 500)], "k bigint, v bigint"
+    )
+    source.createOrReplaceTempView("null_cond_src")
+    props = {"row_key": "k", "write_delete_mode": mode}
+    lsql = LakeSQL(spark, catalog)
+
+    def rows(tbl) -> set:
+        return {tuple(r) for r in tbl.read().collect()}
+
+    cases = [
+        (
+            dict(when_matched_delete=True,
+                 when_matched_condition=F.col("v") > 5),
+            "WHEN MATCHED AND t.v > 5 THEN DELETE",
+            {(2, None), (3, 30), (4, None)},
+        ),
+        (
+            dict(when_not_matched_by_source_delete=True,
+                 when_not_matched_by_source_condition=F.col("v") > 5),
+            "WHEN NOT MATCHED BY SOURCE AND t.v > 5 THEN DELETE",
+            {(1, 10), (2, None), (4, None)},
+        ),
+        (
+            dict(when_matched_update={"v": F.col("__src.v")},
+                 when_matched_condition=F.col("v") > 5),
+            "WHEN MATCHED AND t.v > 5 THEN UPDATE SET v = s.v",
+            {(1, 100), (2, None), (3, 30), (4, None)},
+        ),
+    ]
+    for i, (kwargs, clause, want) in enumerate(cases):
+        api = catalog.create_table_as("db", f"nc_api{i}", target,
+                                      properties=props)
+        api.merge(source, on=["k"], when_not_matched_insert=False, **kwargs)
+        assert rows(api) == want, kwargs
+        sql = catalog.create_table_as("db", f"nc_sql{i}", target,
+                                      properties=props)
+        lsql.sql(
+            f"MERGE INTO db.nc_sql{i} AS t USING null_cond_src AS s "
+            f"ON t.k = s.k {clause}"
+        )
+        assert rows(sql) == want, clause
+
 
 def test_maybe_compact_on_delete_file_pileup(catalog, orders_df):
     """Stacked MoR deletes trigger threshold compaction (each stacked

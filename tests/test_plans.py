@@ -423,6 +423,66 @@ def test_commit_conflicts_only_through_one_loop():
     assert not gone & finder.defined, sorted(gone & finder.defined)
 
 
+def test_merge_clauses_in_one_body():
+    """MERGE has one body for both write modes: ``_merge_stage`` is the
+    only caller of the join builder ``_build_merge_join`` and, with
+    EXPLAIN MERGE (``LakeSQL._explain_dml``), of the candidate rule
+    ``_merge_candidates``; the per-mode copies ``_merge_cow`` and
+    ``_mor_merge`` are gone — as two bodies they each encoded the
+    clause semantics, and only one of them let a NULL clause condition
+    delete rows."""
+    import ast
+
+    allowed = {
+        "_build_merge_join": {("lakehouse.py", "_merge_stage")},
+        "_merge_candidates": {
+            ("lakehouse.py", "_merge_stage"),
+            ("sql.py", "_explain_dml"),
+        },
+    }
+    gone = {"_merge_cow", "_mor_merge"}
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self):
+            self.scope: list[str] = []
+            self.calls: list[tuple[str, str]] = []
+            self.defined: set[str] = set()
+
+        def visit_FunctionDef(self, node):
+            self.defined.add(node.name)
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name in allowed:
+                self.calls.append((name, self.scope[-1] if self.scope else ""))
+            self.generic_visit(node)
+
+    offenders, present = [], []
+    for root, _dirs, files in os.walk(PKG_ROOT):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, PKG_ROOT)
+            with open(path) as f:
+                finder = Finder()
+                finder.visit(ast.parse(f.read()))
+            present += [(rel, n) for n in sorted(gone & finder.defined)]
+            offenders += [
+                (rel, fn, name)
+                for name, fn in finder.calls
+                if (rel, fn) not in allowed[name]
+            ]
+    assert not present, f"a second MERGE body is back: {present}"
+    assert not offenders, f"MERGE join/candidates outside _merge_stage: {offenders}"
+
+
 def test_broadcast_hints_on_dim_joins(spark, sf_dir):
     """q5's nation/region/supplier/customer joins must end up
     broadcast, not shuffled — r7 dropped the forced hints on the

@@ -108,7 +108,11 @@ def test_mor_equals_cow_under_random_dml(spark, sf_dir, tmp_path):
     equality-MoR, positional-MoR and copy-on-write twins must converge
     to identical states at every step. Evolution mid-sequence is the
     highest-risk composition: position deletes and equality deletes
-    must keep applying across schema epochs and layout changes."""
+    must keep applying across schema epochs and layout changes. Three
+    clause-conditioned MERGEs close the sequence: a conditional matched
+    DELETE and a matched UPDATE whose condition is NULL for a third of
+    the rows (a NULL condition must not fire), then a full-sync MERGE
+    with NOT MATCHED BY SOURCE DELETE."""
     import random
 
     from pyspark.sql import functions as F
@@ -149,13 +153,21 @@ def test_mor_equals_cow_under_random_dml(spark, sf_dir, tmp_path):
             ]
         )
 
-    for step in range(8):
-        if step == 2:
-            op = "evolve"       # forced: schema evolution mid-sequence
-        elif step == 4:
-            op = "respec"       # forced: partition-spec switch
-        elif step == 5:
-            op = "merge_evolve"  # forced: schema-merging MERGE
+    # NULL for o_orderkey % 3 = 0, else whether the key is even
+    gate = F.when(F.col("o_orderkey") % 3 == 0, F.lit(None)).otherwise(
+        F.col("o_orderkey") % 2 == 0
+    )
+    forced = {
+        2: "evolve",        # schema evolution mid-sequence
+        4: "respec",        # partition-spec switch
+        5: "merge_evolve",  # schema-merging MERGE
+        8: "merge_cond_delete",
+        9: "merge_null_update",
+        10: "merge_full_sync",
+    }
+    for step in range(11):
+        if step in forced:
+            op = forced[step]
         else:
             op = rng.choice(["delete", "update", "append", "merge"])
         lo = rng.randrange(0, 280)
@@ -208,16 +220,30 @@ def test_mor_equals_cow_under_random_dml(spark, sf_dir, tmp_path):
             for t_ in tables:
                 t_.set_partition_spec(["o_orderstatus"])
         else:
-            src = orders.filter(cond).withColumn(
-                "o_totalprice", F.col("o_totalprice") + 7.0
-            )
-            kwargs = dict(
-                on=["o_orderkey"],
-                when_matched_update={
-                    "o_totalprice": F.col("__src.o_totalprice")
-                },
-                when_not_matched_insert=True,
-            )
+            src = orders.filter(
+                ~cond if op == "merge_full_sync" else cond
+            ).withColumn("o_totalprice", F.col("o_totalprice") + 7.0)
+            upsert = {"o_totalprice": F.col("__src.o_totalprice")}
+            kwargs = {
+                "merge": dict(
+                    when_matched_update=upsert, when_not_matched_insert=True
+                ),
+                "merge_cond_delete": dict(
+                    when_matched_delete=True,
+                    when_matched_condition=gate,
+                    when_not_matched_insert=False,
+                ),
+                "merge_null_update": dict(
+                    when_matched_update=upsert,
+                    when_matched_condition=gate,
+                    when_not_matched_insert=False,
+                ),
+                "merge_full_sync": dict(
+                    when_matched_update=upsert,
+                    when_not_matched_insert=True,
+                    when_not_matched_by_source_delete=True,
+                ),
+            }[op] | {"on": ["o_orderkey"]}
             mor.merge(conform(src), **kwargs)
             cow.merge(conform(src), **kwargs)
             # positional tables run MERGE through the CoW path (merge

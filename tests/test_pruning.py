@@ -183,14 +183,19 @@ def _filters_match(tbl, lsql, name, cases) -> None:
 
 
 def _explain_then_merge(lsql, tbl, stmt: str) -> None:
-    """EXPLAIN MERGE's candidate count is what the MERGE rewrites."""
+    """EXPLAIN MERGE's candidate count is what the MERGE reads — the
+    files it did not prune — and, copy-on-write, what it rewrites."""
     plan = lsql.sql("EXPLAIN " + stmt).collect()[0].plan
     m = re.search(r"rewrite candidates: (\d+) of (\d+) files", plan)
     assert m, plan
+    n_files = len(tbl.snapshot().files)
+    assert int(m.group(2)) == n_files, plan
     lsql.sql(stmt)
     snap = tbl.snapshot()
     assert snap.operation == "merge"
-    assert snap.summary["rewritten_files"] == int(m.group(1)), plan
+    assert n_files - snap.summary["pruned_files"] == int(m.group(1)), plan
+    if "delete_mode" not in snap.summary:  # copy-on-write
+        assert snap.summary["rewritten_files"] == int(m.group(1)), plan
 
 
 def _apply(model: dict, tbl, key: str) -> None:
@@ -352,6 +357,41 @@ def test_evolved_table_paths_match_unpruned(spark, cat):
     tbl.compact(small_file_bytes=1 << 30, min_files=1,
                 filters={"c": (5, 5)})
     _apply(model, tbl, "c")
+
+
+def test_mor_merge_reads_only_the_explained_candidates(spark, cat):
+    """Merge-on-read MERGE shortlists like copy-on-write: it reads the
+    files EXPLAIN MERGE reports, and a full-sync MERGE reads them all."""
+    base = spark.range(0, 90).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    tbl = cat.create_table(
+        "db", "mm", base.schema,
+        properties=SEGMENTED | {"row_key": "k",
+                                "write_delete_mode": "merge-on-read"},
+    )
+    for lo in (0, 30, 60):
+        tbl.append(base.filter(F.col("k").between(lo, lo + 29)).coalesce(1))
+    lsql = LakeSQL(spark, cat)
+    model = {k: (k, k * 10) for k in range(90)}
+    _explain_then_merge(
+        lsql, tbl,
+        "MERGE INTO db.mm AS t USING (SELECT CAST(40 AS BIGINT) AS k, "
+        "CAST(7 AS BIGINT) AS v) AS s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v",
+    )
+    assert tbl.snapshot().summary["pruned_files"] == 2
+    model[40] = (40, 7)
+    _apply(model, tbl, "k")
+    _explain_then_merge(
+        lsql, tbl,
+        "MERGE INTO db.mm AS t USING (SELECT id AS k "
+        "FROM range(0, 80)) AS s ON t.k = s.k "
+        "WHEN NOT MATCHED BY SOURCE THEN DELETE",
+    )
+    assert tbl.snapshot().summary["pruned_files"] == 0
+    model = {k: r for k, r in model.items() if k < 80}
+    _apply(model, tbl, "k")
 
 
 def test_rename_and_drop_are_metadata_only(spark, cat):
