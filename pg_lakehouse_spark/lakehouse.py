@@ -64,6 +64,7 @@ from __future__ import annotations
 
 import contextlib
 import copy
+import datetime
 import decimal
 import fcntl
 import functools
@@ -333,6 +334,12 @@ class Snapshot:
     # an update's postimages — are never suppressed. Inherited forward
     # by every commit until compaction retires them.
     delete_files: list = field(default_factory=list)
+    # --- the statement's change rows, as the writer that published
+    # this snapshot staged them: a zero-arg callable returning one
+    # DataFrame tagged with ``_change_type`` (empty for a no-op
+    # statement). Not a field: never written to the metadata JSON,
+    # and None on a snapshot read from disk.
+    changes = None
 
     @property
     def total_rows(self) -> int:
@@ -357,7 +364,9 @@ class _Pending:
     says how files a concurrent commit added conflict with it: None
     (never), ``_ANY`` (any concurrent commit does), or a callable
     ``(head, added_entries)`` returning the reason for a conflict or
-    a falsy value."""
+    a falsy value. ``changes``: a zero-arg callable returning the
+    statement's change rows — frames tagged with ``_change_type``,
+    built from the same frames the writer staged — or None."""
 
     summary: dict
     adds: list = field(default_factory=list)  # staged data-file entries
@@ -366,22 +375,7 @@ class _Pending:
     reads: set = field(default_factory=set)
     replaces: set = field(default_factory=set)
     clash: object = None
-
-
-def _file_stats(path: str, fmt: str = "parquet") -> tuple[int, int]:
-    """(rows, bytes) from the file footer — metadata-only read (avro:
-    OCF block headers carry per-block record counts)."""
-    if fmt == "orc":
-        import pyarrow.orc as po
-
-        return po.ORCFile(path).nrows, os.path.getsize(path)
-    if fmt == "avro":
-        from pg_lakehouse_spark import avro_io
-
-        return avro_io.count_rows(path), os.path.getsize(path)
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows, os.path.getsize(path)
+    changes: object = None
 
 
 _TIME_TRANSFORMS = {
@@ -531,6 +525,15 @@ def _json_stat(v):
     return None
 
 
+def _utc_session() -> bool:
+    """Whether the active session reads zoned timestamps in UTC (the
+    zone ``get_spark`` pins; `_json_stat` stores zoned stats as naive
+    UTC)."""
+    spark = SparkSession.getActiveSession()
+    zone = spark and spark.conf.get("spark.sql.session.timeZone")
+    return zone in ("UTC", "Etc/UTC", "GMT", "Z")
+
+
 def _stat_literal(v, dtype):
     """Coerce a predicate literal to the manifest's representation for
     the bound column's Spark type, mirroring how file stats are stored
@@ -571,11 +574,8 @@ def _stat_literal(v, dtype):
                 return None
             y, mo, d = (int(g) for g in m.groups())
             return f"{y:04d}-{mo:02d}-{d:02d}"
-        if isinstance(dtype, T.TimestampType):
-            spark = SparkSession.getActiveSession()
-            zone = spark and spark.conf.get("spark.sql.session.timeZone")
-            if zone not in ("UTC", "Etc/UTC", "GMT", "Z"):
-                return None
+        if isinstance(dtype, T.TimestampType) and not _utc_session():
+            return None
         if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
             m = re.match(
                 r"(\d{4})-(\d{1,2})-(\d{1,2})"
@@ -612,12 +612,14 @@ _CATALYST_OPS = {
     "LessThanOrEqual": "<=", "GreaterThan": ">", "GreaterThanOrEqual": ">=",
 }
 # a parsed literal's value is its internal form: only these types map
-# to a Python value (a DATE is an int of days; a decimal is read from
-# its text)
+# to a Python value as they are (a decimal is read from its text; a
+# DATE is an int of days and a TIMESTAMP one of micros, see
+# `_condition_ranges`)
 _STAT_LITERAL_TYPES = {
     "tinyint", "smallint", "int", "bigint", "float", "double", "string",
     "boolean",
 }
+_TEMPORAL_TYPES = {"date", "timestamp", "timestamp_ntz"}
 
 
 def _condition_ranges(
@@ -633,14 +635,17 @@ def _condition_ranges(
     plan's ``Filter`` condition). Walks its node tree for top-level
     AND conjuncts of the forms ``col <op> literal`` (op in =, <, <=,
     >, >=), ``literal <op> col``, ``col IN (literals)`` and ``col
-    BETWEEN lo AND hi`` — plain int/float/decimal/str/bool literals
-    only (casts, expressions and typed date/timestamp literals
-    contribute nothing). SQL text (``F.expr``, as the SQL frontend
-    passes) is parsed with the session's parser and its catalyst tree
-    walked the same way. ``q.col`` counts as ``col`` when ``q`` is in
-    ``quals`` (lowercase correlation names of the scanned table); any
-    other qualified name is another relation's column or a struct
-    field and contributes nothing.
+    BETWEEN lo AND hi`` — int/float/decimal/str/bool literals and,
+    given a ``schema``, date/timestamp ones: a typed literal (``DATE
+    '…'``, its internal days or micros read as UTC) or a string cast
+    to a date or timestamp (``'…'::timestamp``, ``CAST('…' AS
+    date)``); other casts and expressions contribute nothing. SQL
+    text (``F.expr``, as the SQL frontend passes) is parsed with the
+    session's parser and its catalyst tree walked the same way.
+    ``q.col`` counts as ``col`` when ``q`` is in ``quals`` (lowercase
+    correlation names of the scanned table); any other qualified name
+    is another relation's column or a struct field and contributes
+    nothing.
 
     With ``schema``, every literal is coerced to its column's manifest
     form by `_stat_literal` BEFORE conjuncts combine, and a conjunct
@@ -697,7 +702,41 @@ def _condition_ranges(
             return parts.apply(1)
         return parts.apply(0) if parts.size() == 1 else None
 
+    def temporal(v, dt: str):
+        """A date/timestamp literal as a naive ``datetime.date`` or
+        ``datetime.datetime`` — which `_stat_literal` takes for a
+        date or timestamp column only — from a cast string or a
+        typed literal's internal days/micros. None without a schema,
+        and for a zoned timestamp outside a UTC session (Spark reads
+        its text, and compares it to a TIMESTAMP_NTZ column, in the
+        session zone)."""
+        if types is None or (dt == "timestamp" and not _utc_session()):
+            return None
+        if isinstance(v, str):
+            from pyspark.sql import types as T
+
+            if dt == "date":
+                text = _stat_literal(v, T.DateType())
+                parse = datetime.date.fromisoformat
+            else:
+                text = _stat_literal(v, T.TimestampNTZType())
+                parse = datetime.datetime.fromisoformat
+            try:
+                return None if text is None else parse(text)
+            except ValueError:  # '2024-02-30'
+                return None
+        epoch = datetime.datetime(1970, 1, 1)
+        if dt == "date":
+            return (epoch + datetime.timedelta(days=v)).date()
+        return epoch + datetime.timedelta(microseconds=v)
+
     def lit_value(node):
+        if kind(node) == "Cast":
+            dt = node.dataType().simpleString()
+            v = lit_value(node.child())
+            if dt in _TEMPORAL_TYPES and isinstance(v, str):
+                return temporal(v, dt)
+            return None
         if kind(node) != "Literal":
             return None
         v = node.value()
@@ -709,12 +748,16 @@ def _condition_ranges(
                 # its exact text; a Decimal, unlike a str, never passes
                 # `_stat_literal` as a string literal
                 v = decimal.Decimal(v.toString())
+            elif dt in _TEMPORAL_TYPES:
+                v = temporal(v, dt)
             elif dt not in _STAT_LITERAL_TYPES:
                 return None
             elif dt == "string":
                 v = v.toString()
         return (
-            v if isinstance(v, (bool, int, float, str, decimal.Decimal))
+            v if isinstance(
+                v, (bool, int, float, str, decimal.Decimal, datetime.date)
+            )
             else None
         )
 
@@ -780,15 +823,28 @@ def _condition_ranges(
     return out
 
 
-def _parquet_footer_stats(
-    path: str,
+def _file_stats(
+    path: str, fmt: str = "parquet"
 ) -> tuple[int, int, dict[str, list], dict[str, int]]:
-    """(rows, bytes, column ranges, null counts) from ONE parquet
-    footer open. The staging path previously opened the footer three
-    times per committed file (`_file_stats` + `_file_column_ranges` +
-    `_file_null_counts`); commits are driver-side serial per file, so
-    at bulk-load file counts the redundant opens are pure commit
-    latency."""
+    """(rows, bytes, column ranges, null counts) from ONE footer open —
+    a metadata-only read. Ranges are per-column [min, max] over the
+    parquet row groups, the manifest-stats analog of Iceberg's
+    per-file column bounds (ref A22: the reference stubs stats
+    entirely, iceberg_am.c:401-413; here they drive file-level
+    skipping); null counts are PG ANALYZE's ``null_frac`` numerator
+    and power IS [NOT] NULL skipping. ORC and avro files return row
+    counts only (pyarrow exposes no stripe statistics; avro OCF block
+    headers carry record counts but no column bounds); a missing
+    statistic skips nothing, so correctness is format-independent."""
+    nbytes = os.path.getsize(path)
+    if fmt == "orc":
+        import pyarrow.orc as po
+
+        return po.ORCFile(path).nrows, nbytes, {}, {}
+    if fmt == "avro":
+        from pg_lakehouse_spark import avro_io
+
+        return avro_io.count_rows(path), nbytes, {}, {}
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -811,46 +867,6 @@ def _parquet_footer_stats(
             try:
                 lo, hi = _json_stat(st.min), _json_stat(st.max)
             except Exception:
-                continue
-            if lo is None or hi is None:
-                continue
-            if name not in ranges:
-                ranges[name] = [lo, hi]
-            else:
-                ranges[name][0] = min(ranges[name][0], lo)
-                ranges[name][1] = max(ranges[name][1], hi)
-    return md.num_rows, os.path.getsize(path), ranges, nulls
-
-
-def _file_column_ranges(path: str, fmt: str = "parquet") -> dict[str, list]:
-    """Per-column [min, max] aggregated over row groups from the
-    parquet footer — the manifest-stats analog of Iceberg's per-file
-    column bounds (ref A22: the reference stubs stats entirely,
-    iceberg_am.c:401-413; here they drive file-level skipping).
-
-    ORC and avro files return no ranges (pyarrow exposes no stripe
-    statistics; OCF blocks carry no column bounds); every consumer
-    treats missing stats conservatively (no skipping), so correctness
-    is format-independent."""
-    if fmt in ("orc", "avro"):
-        return {}
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    ranges: dict[str, list] = {}
-    for rg in range(md.num_row_groups):
-        group = md.row_group(rg)
-        for ci in range(group.num_columns):
-            col = group.column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            name = col.path_in_schema
-            if "." in name:  # nested columns: skip (no simple bound)
-                continue
-            try:
-                lo, hi = _json_stat(st.min), _json_stat(st.max)
-            except Exception:
                 # types pyarrow can't extract stats for (e.g. ntz
                 # timestamps) → no bounds → consumers skip nothing
                 continue
@@ -861,32 +877,7 @@ def _file_column_ranges(path: str, fmt: str = "parquet") -> dict[str, list]:
             else:
                 ranges[name][0] = min(ranges[name][0], lo)
                 ranges[name][1] = max(ranges[name][1], hi)
-    return ranges
-
-
-def _file_null_counts(path: str, fmt: str = "parquet") -> dict[str, int]:
-    """Per-column NULL counts from the parquet footer (PG ANALYZE's
-    ``null_frac`` numerator; also powers IS [NOT] NULL file skipping).
-    Missing statistics for a column omit it — consumers treat absence
-    conservatively."""
-    if fmt in ("orc", "avro"):
-        return {}
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    out: dict[str, int] = {}
-    for rg in range(md.num_row_groups):
-        group = md.row_group(rg)
-        for ci in range(group.num_columns):
-            col = group.column(ci)
-            st = col.statistics
-            if st is None or st.null_count is None:
-                continue
-            name = col.path_in_schema
-            if "." in name:
-                continue
-            out[name] = out.get(name, 0) + int(st.null_count)
-    return out
+    return md.num_rows, nbytes, ranges, nulls
 
 
 class LakeTable:
@@ -1369,18 +1360,43 @@ class LakeTable:
         files are removed here; then a ``rerun`` writer (statement DML)
         re-executes ``stage`` on the fresh head — as if the statement
         had started after the winning commit — and every other writer
-        re-raises."""
+        re-raises.
+
+        The returned snapshot carries the statement's change rows
+        (``Snapshot.changes``, from ``_Pending.changes``). With the
+        change feed on, a delete, update or merge first stages those
+        rows as its change files — the only place change files are
+        written — and RETURNING then reads the same files."""
         for _ in range(self._DML_ATTEMPTS if rerun else 1):
             snap = self.snapshot()
             op = stage(snap)
             if op is None:
+                snap.changes = lambda: self._change_frame(snap, [])
                 return snap
+            if (
+                op.changes is not None
+                and operation in ("delete", "update", "merge")
+                and self.change_feed_enabled(snap)
+            ):
+                op.change_files = self._stage_changes(
+                    op.changes(), snap.version + 1
+                )
+                op.summary["change_feed"] = "exact"
             try:
-                return self._rebase_and_publish(operation, snap, op)
+                out = self._rebase_and_publish(operation, snap, op)
             except CommitConflict:
                 self._discard_staged(op)
                 if not rerun:
                     raise
+                continue
+            if op.change_files:
+                paths = [
+                    os.path.join(self.location, p) for p in op.change_files
+                ]
+                out.changes = lambda: self.spark.read.parquet(*paths)
+            elif op.changes is not None:
+                out.changes = lambda: self._change_frame(snap, op.changes())
+            return out
         raise CommitConflict(
             f"{operation} kept conflicting with concurrent commits "
             "(retries exhausted)"
@@ -1463,6 +1479,20 @@ class LakeTable:
             if why:
                 raise CommitConflict(stale + why)
         return head
+
+    def _change_frame(
+        self, snap: Snapshot, parts: list[DataFrame]
+    ) -> DataFrame:
+        """One frame of ``_change_type``-tagged change rows (an empty
+        one, in ``snap``'s schema, for no parts)."""
+        if parts:
+            return functools.reduce(DataFrame.unionByName, parts)
+        from pyspark.sql.types import StringType
+
+        schema = StructType.fromJson(json.loads(snap.schema_json))
+        return self.spark.createDataFrame(
+            [], schema.add("_change_type", StringType())
+        )
 
     def _discard_staged(self, op: _Pending) -> None:
         """Remove a lost attempt's staged data, delete and change files
@@ -1632,6 +1662,7 @@ class LakeTable:
         inline_files, descriptors = self._segment_files(snap)
         snap.manifests = descriptors
         d = dict(snap.__dict__)
+        d.pop("changes", None)  # the statement's rows are not metadata
         d["files"] = inline_files
         d["manifests"] = descriptors
         _atomic_write(self._meta_path(snap.version), d)
@@ -1959,12 +1990,7 @@ class LakeTable:
                 _DATA_DIR, part_dirs
             )
             dst = _move_staged(src, os.path.join(self.location, rel_dir), name)
-            if fmt == "parquet":
-                rows, nbytes, ranges, nulls = _parquet_footer_stats(dst)
-            else:
-                rows, nbytes = _file_stats(dst, fmt)
-                ranges = _file_column_ranges(dst, fmt)
-                nulls = _file_null_counts(dst, fmt)
+            rows, nbytes, ranges, nulls = _file_stats(dst, fmt)
             # partition columns live in the dir name, not the file —
             # lift their (single) value into the manifest ranges so
             # metadata-level skipping covers them like any other column
@@ -2375,7 +2401,9 @@ class LakeTable:
         ``summary_extra`` stamps application metadata (e.g. a streaming
         sink's batch id) atomically with the commit. ``merge_schema``
         (Delta mergeSchema): new df columns evolve the table first,
-        missing ones fill with NULL/DEFAULT."""
+        missing ones fill with NULL/DEFAULT. The returned snapshot's
+        ``changes()`` reads the appended files back as ``insert``
+        rows."""
         if merge_schema:
             df = self._merge_write_schema(df)
         self._check_schema(df)
@@ -2392,6 +2420,12 @@ class LakeTable:
                 | (summary_extra or {}),
                 adds=adds,
                 clash=None if rebase else _ANY,
+                # staged files carry no sequence number yet: no delete
+                # file of the base applies to them
+                changes=lambda: [
+                    self._read_entries(snap, adds, apply_deletes=False)
+                    .withColumn("_change_type", F.lit("insert"))
+                ],
             )
 
         return self._commit_op("append", stage)
@@ -4007,14 +4041,16 @@ class LakeTable:
                     break
         return out
 
-    def change_feed_enabled(self) -> bool:
+    def change_feed_enabled(self, snap: Snapshot | None = None) -> bool:
         """Row-level change feed is OPT-IN per table (property
         ``change_data_feed``), like Delta's ``enableChangeDataFeed``:
         exact change files double the DML write work (the change rows
         are a second job over the rewrite join), which no table should
         pay unless a CDC consumer exists. Appends/overwrites still
         serve derived changes with the feed off (no write cost)."""
-        v = self.snapshot().properties.get("change_data_feed", "false")
+        v = (snap or self.snapshot()).properties.get(
+            "change_data_feed", "false"
+        )
         return str(v).lower() in ("true", "on", "1")
 
     def _cow_dml(
@@ -4022,7 +4058,8 @@ class LakeTable:
     ) -> Snapshot:
         """Copy-on-write DELETE/UPDATE: rewrite the files holding
         matching rows (``transform`` maps their rows to the new
-        content; ``changes`` maps them to change-feed parts). A
+        content; ``changes`` maps them to the statement's change
+        rows). A
         concurrent commit rebases under it unless it touched the read
         set or added rows matching ``condition``; then the statement
         re-executes on the fresh head (serializable re-execution)."""
@@ -4050,18 +4087,14 @@ class LakeTable:
                 transform(touched), snap.version + 1, snap.partition_spec,
                 schema_id=snap.schema_id, guard=False,
             )
-            feed = self.change_feed_enabled()
             return _Pending(
                 summary={"rewritten_files": len(affected),
-                         "added_files": len(adds)}
-                | ({"change_feed": "exact"} if feed else {}),
+                         "added_files": len(adds)},
                 adds=adds,
-                change_files=self._stage_changes(
-                    changes(touched) if feed else [], snap.version + 1
-                ),
                 reads=affected,
                 replaces=affected,
                 clash=clash,
+                changes=lambda: changes(touched),
             )
 
         return self._commit_op(operation, stage, rerun=True)
@@ -4117,8 +4150,9 @@ class LakeTable:
         retired rows; skipped when nothing retired) and ``inserts``
         land as ordinary data files, which take a higher sequence
         number than the delete at commit and so are exempt from it.
-        ``changes()`` builds the change-feed parts, only when the table
-        has the feed on. None when nothing is retired or added."""
+        ``changes`` is the statement's change-row callable
+        (``_Pending.changes``). None when nothing is retired or
+        added."""
         hint = snap.version + 1
         cols = ["__file", "__pos"] if positional else self._row_key(snap)
         deletes, rows = [], 0
@@ -4152,7 +4186,6 @@ class LakeTable:
         )
         if not deletes and not adds:
             return None
-        feed = self.change_feed_enabled()
         mode, counted = (
             ("merge-on-read-positional", "delete_positions") if positional
             else ("merge-on-read", "delete_keys")
@@ -4160,14 +4193,11 @@ class LakeTable:
         return _Pending(
             summary={"delete_mode": mode, counted: rows,
                      "added_files": len(adds)}
-            | ({"change_feed": "exact"} if feed else {})
             | (summary_extra or {}),
             adds=adds,
             deletes=deletes,
-            change_files=self._stage_changes(
-                changes() if feed else [], hint
-            ),
             clash=_ANY,
+            changes=changes,
         )
 
     def _mor_dml(
@@ -4260,7 +4290,11 @@ class LakeTable:
         Concurrent commits: copy-on-write rebases over any commit that
         leaves its read set, the schema and the delete files alone and
         adds no matching row; otherwise — and in merge-on-read mode
-        always — the statement re-executes on the fresh head."""
+        always — the statement re-executes on the fresh head.
+
+        The returned snapshot's ``changes()`` serves the deleted rows
+        (``_change_type`` ``delete``) — what the change feed records
+        and SQL ``DELETE ... RETURNING`` projects."""
         dm = self._delete_mode(mode)
         if dm in ("mor", "mor-pos"):
             return self._mor_dml(
@@ -4289,7 +4323,12 @@ class LakeTable:
         (``_align_to_schema``, the PG assignment cast) — without it a
         wider-typed assignment (array<double> onto array<float>) would
         silently write type-drifted files. Concurrent commits are
-        handled as for :meth:`delete`."""
+        handled as for :meth:`delete`.
+
+        The returned snapshot's ``changes()`` serves each updated row's
+        ``update_preimage`` and ``update_postimage``; a post-image is
+        the stored row (same assignment cast), so ``SET v = 2.5`` on
+        an int column reports 3, as it stores."""
         known = set(self.schema().names)
         bad = sorted(set(assignments) - known)
         if bad:
@@ -4342,7 +4381,7 @@ class LakeTable:
             pre = df.filter(condition)
             return [
                 pre.withColumn("_change_type", F.lit("update_preimage")),
-                post(pre).withColumn(
+                self._align_to_schema(post(pre)).withColumn(
                     "_change_type", F.lit("update_postimage")
                 ),
             ]
@@ -4444,6 +4483,11 @@ class LakeTable:
         Otherwise — and in merge-on-read mode always — the MERGE
         re-executes on the fresh head over the same materialized
         source.
+
+        The returned snapshot's ``changes()`` serves the statement's
+        rows tagged ``insert``, ``update_preimage``/``update_postimage``
+        and ``delete`` (a deleted row once, however many source rows
+        match it); post-images and inserts are the stored rows.
         """
         if merge_schema:
             source = self._merge_write_schema(source)
@@ -4573,19 +4617,36 @@ class LakeTable:
             )
 
         def changes() -> list[DataFrame]:
-            pre = joined.filter(matched).select(*tcols)
             parts = []
             if when_matched_delete:
-                parts.append(pre.withColumn("_change_type", F.lit("delete")))
-            elif post is not None:
-                parts += [
-                    pre.withColumn("_change_type", F.lit("update_preimage")),
-                    post.withColumn("_change_type", F.lit("update_postimage")),
-                ]
-            if inserts is not None:
-                parts.append(
-                    inserts.withColumn("_change_type", F.lit("insert"))
+                # once per deleted target row, however many source
+                # rows match it
+                gone = target.join(
+                    src,
+                    functools.reduce(
+                        Column.__and__,
+                        [F.col(c) == F.col(f"__k_{c}") for c in on],
+                    ) & fires(when_matched_condition),
+                    "left_semi",
                 )
+                parts.append(gone.withColumn("_change_type", F.lit("delete")))
+            elif post is not None:
+                parts.append(
+                    joined.filter(matched).select(*tcols)
+                    .withColumn("_change_type", F.lit("update_preimage"))
+                )
+            # post-images and inserts take the assignment cast of the
+            # staged rows (`_stage_mor` aligns the same union): the
+            # change rows are the stored rows
+            written = [
+                f.withColumn("_change_type", F.lit(tag))
+                for f, tag in ((post, "update_postimage"), (inserts, "insert"))
+                if f is not None
+            ]
+            if written:
+                parts.append(self._align_to_schema(
+                    functools.reduce(DataFrame.unionByName, written)
+                ))
             if when_not_matched_by_source_delete:
                 parts.append(
                     joined.filter(by_source_del)
@@ -4636,17 +4697,13 @@ class LakeTable:
             result, snap.version + 1, snap.partition_spec,
             schema_id=snap.schema_id, guard=False,
         )
-        feed = self.change_feed_enabled()
         touched_paths = {f["path"] for f in touched}
         return _Pending(
             summary={"added_files": len(adds), "rewritten_files": len(touched)}
             | pruned
-            | ({"change_feed": "exact"} if feed else {})
             | (summary_extra or {}),
             adds=adds,
-            change_files=self._stage_changes(
-                changes() if feed else [], snap.version + 1
-            ),
+            changes=changes,
             reads=touched_paths,
             replaces=touched_paths,
             # a full-sync merge reads the whole table

@@ -48,9 +48,9 @@ a reference user can keep their SQL:
   ``COPY ns.t FROM 'path' [(FORMAT fmt, ...)]`` — PG bulk I/O over
   the parquet/orc/avro/csv/json sources
 - ``CREATE/DROP SCHEMA [CASCADE]``, ``SHOW SCHEMAS`` — namespace DDL
-- ``INSERT/UPDATE/DELETE ... RETURNING * | cols`` — affected rows
-  from the commit's row-level changes (inserts feed-free; DELETE/
-  UPDATE need ``change_data_feed``)
+- ``INSERT/UPDATE/DELETE/MERGE ... RETURNING * | exprs`` — the
+  stored rows, from the change rows the commit staged (no change
+  feed needed)
 - MERGE insert clause: ``WHEN NOT MATCHED [AND cond] THEN INSERT * |
   INSERT (cols) VALUES (exprs)`` (unlisted columns take DEFAULT)
 - CREATE TABLE column grammar: ``NOT NULL`` / ``DEFAULT expr`` per
@@ -555,11 +555,6 @@ class LakeSQL:
         self.catalog = catalog
         self._txn = None  # active LakeTransaction between BEGIN..COMMIT
         self._prepared: dict[str, tuple[str, list[str]]] = {}
-        # RETURNING support for DELETE/UPDATE on feed-less tables: the
-        # dispatcher arms capture; the applier binds the affected rows
-        # to the pre-commit snapshot (see _apply_delete/_apply_update)
-        self._capture_returning: str | None = None
-        self._returned_df: DataFrame | None = None
         # PG session settings (SET/RESET/SHOW): timezone is WIRED to
         # Spark's session zone (it changes timestamp rendering);
         # everything else is stored for SHOW and otherwise advisory —
@@ -6303,9 +6298,9 @@ class LakeSQL:
             return self._alter(s)
         if re.match(r"INSERT\s+OVERWRITE\b", s, re.IGNORECASE):
             return self._insert_overwrite(s)
-        if head in ("INSERT", "DELETE", "UPDATE"):
-            # PG RETURNING: peel the clause, run the DML, then serve
-            # the affected rows from the commit's row-level changes.
+        if head in ("INSERT", "DELETE", "UPDATE", "MERGE"):
+            # PG RETURNING: peel the clause, run the DML, then project
+            # the change rows its commit staged (``Snapshot.changes``).
             # Peel on literal-masked text so 'RETURNING x'-looking text
             # inside a trailing string literal is never torn off; the
             # statement handed down is re-unmasked (each DML verb
@@ -6325,45 +6320,15 @@ class LakeSQL:
                 s = self._unmask_strings(
                     _pm[: rm.start()], _plits
                 ).rstrip()
-            self._capture_returning = head if returning else None
-            self._returned_df = None
-            try:
-                snap = {
-                    "INSERT": self._insert,
-                    "DELETE": self._delete,
-                    "UPDATE": self._update,
-                }[head](s)
-            finally:
-                self._capture_returning = None
+            snap = {
+                "INSERT": self._insert,
+                "DELETE": self._delete,
+                "UPDATE": self._update,
+                "MERGE": self._merge,
+            }[head](s)
             if returning is None:
                 return snap
-            return self._returning_rows(head, s, snap, returning)
-        if head == "MERGE":
-            _pm, _plits = self._mask_strings(s)
-            rm = self._depth0_kw(_pm, "RETURNING")
-            if rm:
-                if self._txn is not None:
-                    raise LakehouseError(
-                        "RETURNING is not available inside a transaction "
-                        "(rows are visible only at COMMIT)"
-                    )
-                returning = self._unmask_strings(
-                    _pm[rm.end():], _plits
-                ).strip()
-                snap = self._merge(
-                    self._unmask_strings(_pm[: rm.start()], _plits).rstrip()
-                )
-                # PG17 MERGE RETURNING: every row the merge touched
-                tm = re.search(rf"\bMERGE\s+INTO\s+{_TBL}", s, re.IGNORECASE)
-                tbl = self._load(tm.group(1), tm.group(2))
-                changes = tbl.read_changes(
-                    snap.parent or 0, snap.version
-                ).filter(F.col("_change_type") != "update_preimage")
-                # '*' keeps _change_type (the merge action tag)
-                return self._serve_returning(
-                    changes.drop("_commit_version"), returning
-                )
-            return self._merge(s)
+            return self._returning_rows(head, snap, returning)
         if head == "CLUSTER":
             # PG CLUSTER t USING idx: rewrite the table physically in
             # index order → sort-clustered full compaction (manifest
@@ -9447,13 +9412,6 @@ class LakeSQL:
         if self._txn is not None:
             self._txn.delete(tbl, condition)
             return None
-        if self._capture_returning == "DELETE":
-            # PG RETURNING without requiring the change feed: bind the
-            # affected rows to the PRE-commit snapshot now (the file
-            # list resolves at read() time; CoW keeps the old files on
-            # disk until VACUUM, so evaluating after the commit still
-            # serves the deleted rows — one predicate-pushed scan)
-            self._returned_df = tbl.read().filter(condition)
         return tbl.delete(condition)
 
     def _apply_update(self, tbl: LakeTable, condition, assignments):
@@ -9487,22 +9445,6 @@ class LakeSQL:
         if self._txn is not None:
             self._txn.update(tbl, condition, assignments)
             return None
-        if self._capture_returning == "UPDATE":
-            # PG UPDATE ... RETURNING serves the POST-images; compute
-            # them from the pre-commit snapshot + the assignments (the
-            # same frame the CoW rewrite writes), so no change feed is
-            # needed and no-op assignments still return their rows —
-            # exactly PG
-            pre = tbl.read().filter(condition)
-            schema = tbl.schema()
-            self._returned_df = pre.select(
-                *[
-                    assignments[c].cast(schema[c].dataType).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in pre.columns
-                ]
-            )
         return tbl.update(condition, assignments)
 
     def _apply_merge(
@@ -10053,32 +9995,26 @@ class LakeSQL:
             )
         return df.selectExpr(*exprs)
 
+    # the change rows each verb's RETURNING serves; an INSERT ... ON
+    # CONFLICT DO UPDATE returns its updated rows too (PG)
     _RETURNING_TYPES = {
-        "INSERT": ("insert",),
-        "DELETE": ("delete",),
+        "INSERT": ("insert", "update_postimage"),
         "UPDATE": ("update_postimage",),
+        "DELETE": ("delete",),
+        "MERGE": ("insert", "update_postimage", "delete"),
     }
 
-    def _returning_rows(self, head, stmt, snap, returning) -> DataFrame:
-        """Affected rows of the just-committed DML: inserts derive
-        from the commit's added files; plain AND join DML
-        (DELETE ... USING / UPDATE ... FROM) serve rows captured
-        against the pre-commit snapshot by their applier (no change
-        feed required — PG's RETURNING always works); only
-        ON-CONFLICT merges fall back to the change feed."""
-        if self._returned_df is not None:
-            rows, self._returned_df = self._returned_df, None
-            return self._serve_returning(rows, returning)
-        tm = re.search(rf"\b{_TBL}(?:@({_IDENT}))?", stmt)
-        tbl = self._load(tm.group(1), tm.group(2), tm.group(3))
-        # a MERGE-backed INSERT (ON CONFLICT) or multi-commit txn path
-        # still lands one visible snapshot; its parent anchors the diff
-        changes = tbl.read_changes(
-            snap.parent or 0, snap.version
-        ).filter(F.col("_change_type").isin(*self._RETURNING_TYPES[head]))
-        return self._serve_returning(
-            changes.drop("_change_type", "_commit_version"), returning
+    def _returning_rows(self, head, snap, returning) -> DataFrame:
+        """Affected rows of the just-committed DML: the change rows its
+        writer staged (``Snapshot.changes``) — the rows the table
+        stores, with or without a change feed. MERGE keeps
+        ``_change_type`` (PG17's ``merge_action()`` analog)."""
+        rows = snap.changes().filter(
+            F.col("_change_type").isin(*self._RETURNING_TYPES[head])
         )
+        if head != "MERGE":
+            rows = rows.drop("_change_type")
+        return self._serve_returning(rows, returning)
 
     # PG CREATE INDEX → the lake's data-skipping indexes. There is no
     # secondary-index file in a lakehouse; the honest mapping is:
@@ -10842,10 +10778,7 @@ class LakeSQL:
                 )
         if verb == "DELETE":
             keep = self._select(f"SELECT * FROM {src} WHERE NOT {cond}")
-            if self._capture_returning == "DELETE" and self._txn is None:
-                self._returned_df = self._select(
-                    f"SELECT * FROM {src} WHERE {cond}"
-                )
+            ret = ["*"]
         else:
             schema = tbl.schema()
             assigns = dict(set_items or ())
@@ -10868,14 +10801,20 @@ class LakeSQL:
             keep = self._select(
                 f"SELECT {', '.join(post)} FROM {src}"
             )
-            if self._capture_returning == "UPDATE" and self._txn is None:
-                self._returned_df = self._select(
-                    f"SELECT {', '.join(ret)} FROM {src} WHERE {cond}"
-                )
         if self._txn is not None:
             self._txn.overwrite(tbl, keep)
             return None
-        return tbl.overwrite(keep)
+        # an overwrite stages no statement rows: bind the affected rows
+        # to the pre-commit snapshot now and attach them to the commit
+        affected = self._select(
+            f"SELECT {', '.join(ret)} FROM {src} WHERE {cond}"
+        ).withColumn(
+            "_change_type",
+            F.lit("delete" if verb == "DELETE" else "update_postimage"),
+        )
+        snap = tbl.overwrite(keep)
+        snap.changes = lambda: affected
+        return snap
 
     def _subquery_dml_mor(
         self, tbl, dm, ns, name, corr, cond, verb, set_items
@@ -10919,16 +10858,6 @@ class LakeSQL:
                     f"SELECT {', '.join(exprs)} FROM {view} "
                     f"AS {corr} WHERE {cond}"
                 )
-            if self._capture_returning == verb:
-                self._returned_df = (
-                    post
-                    if verb == "UPDATE"
-                    else (
-                        matched.drop("__file", "__pos")
-                        if dm == "mor-pos"
-                        else matched
-                    )
-                )
             postimage = (lambda _m: post) if post is not None else None
             return tbl._mor_dml(
                 verb.lower(), None, postimage=postimage, matched=matched,
@@ -10936,74 +10865,6 @@ class LakeSQL:
             )
         finally:
             self.spark.catalog.dropTempView(view)
-
-    def _join_dml_on(self, keys, extra, salias, talias, U):
-        """Join condition between the pre-commit target (``__tgt``)
-        and the DML source (``__src``) — the same key equalities and
-        extra conjuncts the MERGE applies, for serving RETURNING
-        without a change feed."""
-        on = None
-        for k in keys:
-            e = F.col(f"__tgt.{k}") == F.col(f"__src.{k}")
-            on = e if on is None else on & e
-        if extra:
-            x = " AND ".join(extra)
-            x = re.sub(
-                rf"\b{salias}\.({_IDENT})", r"__src.\1", x,
-                flags=re.IGNORECASE,
-            )
-            x = re.sub(
-                rf"\b{talias}\.({_IDENT})", r"__tgt.\1", x,
-                flags=re.IGNORECASE,
-            )
-            on = on & F.expr(self._spark_text(U(x)))
-        return on
-
-    def _join_dml_postimage(
-        self, tbl, source, keys, extra, salias, talias, sets, U
-    ):
-        """POST-images of an UPDATE ... FROM, computed from the
-        pre-commit snapshot joined with the source (the same frame
-        the MERGE rewrite writes) — PG's join-update RETURNING with
-        no change feed. One row per matched target row (a surrogate
-        row id dedupes multi-match sources, as the merge keeps one
-        match)."""
-        schema = tbl.schema()
-        tgt = (
-            tbl.read()
-            .withColumn("__rid", F.monotonically_increasing_id())
-            .alias("__tgt")
-        )
-        j = tgt.join(
-            source.alias("__src"),
-            self._join_dml_on(keys, extra, salias, talias, U),
-            "inner",
-        )
-        assign = {}
-        for k, v in _set_items(sets):
-            k = re.sub(rf"^{talias}\.", "", k, flags=re.IGNORECASE)
-            e = re.sub(
-                rf"\b{salias}\.({_IDENT})", r"__src.\1", v,
-                flags=re.IGNORECASE,
-            )
-            e = re.sub(
-                rf"\b{talias}\.({_IDENT})", r"__tgt.\1", e,
-                flags=re.IGNORECASE,
-            )
-            assign[k] = F.expr(self._spark_text(U(e)))
-        cols = [
-            (
-                assign[f.name].cast(f.dataType)
-                if f.name in assign
-                else F.col(f"__tgt.{f.name}")
-            ).alias(f.name)
-            for f in schema.fields
-        ]
-        return (
-            j.select(F.col("__tgt.__rid").alias("__rid"), *cols)
-            .dropDuplicates(["__rid"])
-            .drop("__rid")
-        )
 
     # DELETE FROM t[@b] [[AS] a] <rest> / UPDATE t[@b] [[AS] a] SET <rest>
     _DELETE = re.compile(
@@ -11084,17 +10945,6 @@ class LakeSQL:
                         U(re.sub(rf"\b{talias}\.({_IDENT})", r"\1", e,
                              flags=re.IGNORECASE))
                     )
-                )
-            if self._capture_returning == "DELETE" and self._txn is None:
-                # feed-free join-DML RETURNING: the deleted rows are
-                # the pre-commit target rows with >= 1 source match
-                # (left-semi on the same ON the MERGE applies); CoW
-                # keeps the old files until VACUUM, so evaluating
-                # after the commit still serves them
-                self._returned_df = tbl.read().alias("__tgt").join(
-                    source.alias("__src"),
-                    self._join_dml_on(keys, extra, salias, talias, U),
-                    "left_semi",
                 )
             return self._apply_merge(
                 tbl,
@@ -11199,12 +11049,6 @@ class LakeSQL:
             for k, v in _set_items(sets):
                 k = re.sub(rf"^{talias}\.", "", k, flags=re.IGNORECASE)
                 assignments[k] = rewrite(v)
-            if self._capture_returning == "UPDATE" and self._txn is None:
-                # feed-free join-DML RETURNING: post-images from the
-                # pre-commit snapshot + the assignments
-                self._returned_df = self._join_dml_postimage(
-                    tbl, source, keys, extra, salias, talias, sets, U
-                )
             return self._apply_merge(
                 tbl,
                 source,

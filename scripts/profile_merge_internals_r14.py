@@ -59,7 +59,7 @@ def main() -> None:
     ):
         wrap(lh.LakeTable, name)
     wrap(lh.LakeCatalog, "create_table_as")
-    for name in ("_parquet_footer_stats", "_build_merge_join"):
+    for name in ("_file_stats", "_build_merge_join"):
         wrap(lh, name)
 
     for rep in range(2):

@@ -310,6 +310,31 @@ def test_condition_ranges_coerce_literals_to_the_column_type(spark):
     assert _condition_ranges(F.col("d") >= "2024-1-15", schema) == {
         "d": ("2024-01-15", None)
     }
+    # a string cast to a date or timestamp stands for that string, and
+    # a typed literal for its internal days or micros read as UTC
+    assert ranges(
+        "d >= '2024-1-5'::date AND ts < CAST('2024-01-01 10:00' AS timestamp)"
+    ) == {"d": ("2024-01-05", None), "ts": (None, "2024-01-01T10:00:00")}
+    assert ranges("d BETWEEN DATE '2024-01-05' AND DATE'2024-1-9'") == {
+        "d": ("2024-01-05", "2024-01-09")
+    }
+    assert ranges("ts = TIMESTAMP '2024-01-01 10:00:00.5'") == {
+        "ts": ("2024-01-01T10:00:00.500000", "2024-01-01T10:00:00.500000")
+    }
+    assert ranges("n >= TIMESTAMP_NTZ '2024-01-01 10:00'") == {
+        "n": ("2024-01-01T10:00:00", None)
+    }
+    assert ranges("ts >= DATE '2024-01-05'") == {
+        "ts": ("2024-01-05T00:00:00", None)
+    }
+    assert _condition_ranges(
+        F.col("d") >= F.lit("2024-1-5").cast("date"), schema
+    ) == {"d": ("2024-01-05", None)}
+    # only a date/timestamp column takes one; a date column no
+    # timestamp; an impossible date and other casts contribute nothing
+    assert ranges("s >= DATE '2024-01-01' AND k < CAST('3' AS date)") == {}
+    assert ranges("d >= TIMESTAMP '2024-01-01 10:00:00'") == {}
+    assert ranges("d = '2024-02-30'::date AND x > CAST('2' AS int)") == {}
     # a zoned stat is stored as naive UTC, the form a TIMESTAMP literal
     # takes in a UTC session; in any other zone it does not prune
     import datetime
@@ -322,6 +347,12 @@ def test_condition_ranges_coerce_literals_to_the_column_type(spark):
     try:
         assert ranges("ts = '2024-01-01 09:00:00'") == {}
         assert ranges("n = '2024-01-01 09:00:00'") != {}
+        # Spark compares a TIMESTAMP with a TIMESTAMP_NTZ column in the
+        # session zone, which UTC stats do not follow
+        assert ranges("ts = TIMESTAMP '2024-01-01 09:00:00'") == {}
+        assert ranges("n = TIMESTAMP '2024-01-01 09:00:00'") == {}
+        assert ranges("n = '2024-01-01 09:00'::timestamp") == {}
+        assert ranges("n = TIMESTAMP_NTZ '2024-01-01 09:00:00'") != {}
     finally:
         spark.conf.set("spark.sql.session.timeZone", zone)
 
@@ -380,3 +411,51 @@ def test_sql_dml_with_untyped_temporal_literals(spark, tmp_path, mode):
         before = keys()
         lsql.sql(f"DELETE FROM db.tt WHERE {pred}")
         assert keys() == sorted(set(before) - set(want)), pred
+
+
+def test_sql_select_prunes_typed_temporal_literals(spark, tmp_path):
+    """A SQL SELECT whose WHERE compares a date or timestamp column
+    with a typed literal (``DATE '…'``, ``TIMESTAMP '…'``) or a cast
+    string (``'…'::timestamp``) binds only the files whose manifest
+    ranges can match, and returns the rows ``read().filter`` does
+    (4 files of 6 hours / 6 days each)."""
+    from pg_lakehouse_spark.sql import LakeSQL
+
+    cat = LakeCatalog(spark, str(tmp_path / "whs"))
+    lsql = LakeSQL(spark, cat)
+
+    def batch(lo):
+        return spark.sql(
+            "SELECT id AS k, date_add(DATE'2024-01-01', CAST(id AS INT)) AS d, "
+            "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, "
+            "CAST(id AS INT)) AS ts, "
+            "TIMESTAMP_NTZ'2024-01-01 00:00:00' + make_interval(0, 0, 0, "
+            f"0, CAST(id AS INT)) AS n FROM range({lo}, {lo + 6})"
+        ).coalesce(1)
+
+    tbl = cat.create_table("db", "tl", batch(0).schema)
+    for lo in (0, 6, 12, 18):
+        tbl.append(batch(lo))
+    assert len(tbl.snapshot().files) == 4
+    preds = {
+        "ts BETWEEN '2024-01-01 07:00'::timestamp "
+        "AND '2024-01-01 08:00'::timestamp": 1,
+        "d BETWEEN DATE '2024-01-05' AND CAST('2024-01-09' AS date)": 2,
+        "ts >= TIMESTAMP '2024-01-01 20:00:00'": 1,
+        "n < TIMESTAMP_NTZ '2024-01-01 03:00:00'": 1,
+        "d = DATE '2024-01-20'": 1,
+    }
+    for pred, nfiles in preds.items():
+        got = sorted(
+            r.k for r in lsql.sql(f"SELECT k FROM db.tl WHERE {pred}").collect()
+        )
+        bound = spark.table("__lake_db_tl")
+        files = {
+            r[0]
+            for r in bound.select(F.input_file_name()).distinct().collect()
+        }
+        assert len(files) == nfiles, pred
+        want = sorted(
+            r.k for r in tbl.read().filter(F.expr(pred)).select("k").collect()
+        )
+        assert got == want and want, pred

@@ -1510,6 +1510,47 @@ def test_change_feed_dml_row_level(catalog, orders_df):
     assert ch.filter(F.col("_commit_version") == v2 + 1).count() == n_del
 
 
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_change_feed_postimages_are_the_stored_rows(catalog, spark, mode):
+    """The feed records the rows each writer stages: an UPDATE and a
+    MERGE assigning fractional values to an int column report the
+    rounded values the table stores, and the feed keeps ``v int``.
+    The same rows ride on the returned snapshot (``changes``), which
+    is never persisted."""
+    import json
+    from decimal import Decimal
+
+    tbl = catalog.create_table_as(
+        "db", "cfs",
+        spark.createDataFrame([(1, 1), (2, 2), (3, 3)], "k int, v int"),
+        properties={"change_data_feed": "on", "write_delete_mode": mode,
+                    "row_key": "k"},
+    )
+    v0 = tbl.current_version()
+    snap = tbl.update(F.col("k") == 1, {"v": F.expr("2.5")})
+    tbl.merge(
+        spark.createDataFrame(
+            [(2, Decimal("4.5")), (4, Decimal("40.5"))], "k int, v decimal(3,1)"
+        ),
+        on=["k"],
+        when_matched_update={"v": F.col("__src.v")},
+    )
+    stored = {tuple(r) for r in tbl.read().filter("k IN (1, 2, 4)").collect()}
+    assert stored == {(1, 3), (2, 5), (4, 41)}
+    ch = tbl.read_changes(v0)
+    assert dict(ch.dtypes)["v"] == "int"
+    post = ch.filter(
+        F.col("_change_type").isin("update_postimage", "insert")
+    ).select("k", "v")
+    assert {tuple(r) for r in post.collect()} == stored
+    assert sorted(tuple(r) for r in snap.changes().collect()) == [
+        (1, 1, "update_preimage"), (1, 3, "update_postimage"),
+    ]
+    assert tbl.snapshot(snap.version).changes is None
+    with open(tbl._meta_path(snap.version)) as f:
+        assert "changes" not in json.load(f)
+
+
 def test_change_feed_off_by_default(catalog, orders_df):
     """DML on a table without the feed property stages NO change files
     (no second job over the rewrite join); read_changes over a window

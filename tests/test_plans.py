@@ -483,6 +483,66 @@ def test_merge_clauses_in_one_body():
     assert not offenders, f"MERGE join/candidates outside _merge_stage: {offenders}"
 
 
+def test_change_rows_from_one_record():
+    """A statement's change rows have one source: the frames its writer
+    stages (``_Pending.changes``), which the change feed and SQL
+    RETURNING both read. ``_stage_changes`` (the change-file writer)
+    has one caller in ``lakehouse.py``, inside ``_commit_op``;
+    ``sql.py`` never calls ``read_changes``; and the RETURNING
+    recomputations ``_returned_df``, ``_capture_returning``,
+    ``_join_dml_on`` and ``_join_dml_postimage`` are gone — each
+    rebuilt the statement with its own cast, and RETURNING disagreed
+    with the stored rows."""
+    import ast
+
+    gone = {
+        "_returned_df", "_capture_returning", "_join_dml_on",
+        "_join_dml_postimage",
+    }
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self):
+            self.scope: list[str] = []
+            self.calls: list[tuple[str, str]] = []
+            self.names: set[str] = set()
+
+        def visit_FunctionDef(self, node):
+            self.names.add(node.name)
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Attribute(self, node):
+            self.names.add(node.attr)
+            self.generic_visit(node)
+
+        def visit_Name(self, node):
+            self.names.add(node.id)
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            self.calls.append((name, self.scope[-1] if self.scope else ""))
+            self.generic_visit(node)
+
+    found = {}
+    for fname in ("lakehouse.py", "sql.py"):
+        with open(os.path.join(PKG_ROOT, fname)) as f:
+            found[fname] = Finder()
+            found[fname].visit(ast.parse(f.read()))
+    stagers = [fn for name, fn in found["lakehouse.py"].calls
+               if name == "_stage_changes"]
+    assert stagers == ["_commit_op"], (
+        f"change files staged outside _commit_op: {stagers}"
+    )
+    assert not [fn for name, fn in found["sql.py"].calls
+                if name == "read_changes"], "sql.py reads the change feed"
+    back = sorted(gone & found["sql.py"].names)
+    assert not back, f"a RETURNING recomputation is back: {back}"
+
+
 def test_broadcast_hints_on_dim_joins(spark, sf_dir):
     """q5's nation/region/supplier/customer joins must end up
     broadcast, not shuffled — r7 dropped the forced hints on the

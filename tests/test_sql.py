@@ -3261,7 +3261,9 @@ def test_join_dml_returning_feed_free_r8(lsql):
 def test_join_dml_returning_parity_with_feed(lsql):
     """Feed-free join-DML RETURNING must return the same rows the
     change-feed path records for an identical table WITH the feed."""
-    for name, props in (("jf_on", " WITH (change_feed='true')"), ("jf_off", "")):
+    for name, props in (
+        ("jf_on", " WITH (change_data_feed='on')"), ("jf_off", ""),
+    ):
         lsql.sql(f"CREATE TABLE db.{name} (k BIGINT, v BIGINT){props}")
         lsql.sql(f"INSERT INTO db.{name} VALUES (1,1), (2,2), (3,3)")
     lsql.sql("CREATE TABLE db.jf_src (k BIGINT, d BIGINT)")
@@ -3276,6 +3278,7 @@ def test_join_dml_returning_parity_with_feed(lsql):
             ).collect()
         )
     assert out["jf_on"] == out["jf_off"] == [(2, 22), (3, 33)]
+    assert lsql.catalog.load_table("db", "jf_on").snapshot().change_files
     for name in ("jf_on", "jf_off"):
         out[name] = sorted(
             tuple(r)
@@ -3285,6 +3288,69 @@ def test_join_dml_returning_parity_with_feed(lsql):
             ).collect()
         )
     assert out["jf_on"] == out["jf_off"] == [(2, 22)]
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_returning_is_the_committed_rows(lsql, spark, mode):
+    """RETURNING projects the change rows the writer staged, so it
+    equals what SELECT reads back after each statement: a fractional
+    SET into an int column returns the rounded stored value (PG's
+    assignment cast, not Spark's truncating one), in the plain and the
+    join form; MERGE and INSERT ... ON CONFLICT RETURNING work with no
+    change feed, and ON CONFLICT DO UPDATE returns the updated rows as
+    well as the inserted ones, feed on or off."""
+    from decimal import Decimal
+
+    for name, feed in (("rc", "off"), ("rc_feed", "on")):
+        lsql.sql(
+            f"CREATE TABLE db.{name} (k INT, v INT) WITH "
+            f"(write_delete_mode='{mode}', row_key='k', "
+            f"change_data_feed='{feed}')"
+        )
+        lsql.sql(f"INSERT INTO db.{name} VALUES (1, 1), (2, 2), (3, 3)")
+
+    def rows(stmt):
+        return sorted(tuple(r) for r in lsql.sql(stmt).collect())
+
+    def stored(keys, name="rc"):
+        return rows(
+            f"SELECT k, v FROM db.{name} WHERE k IN ({', '.join(map(str, keys))})"
+        )
+
+    got = rows("UPDATE db.rc SET v = 2.5 WHERE k = 1 RETURNING k, v")
+    assert got == stored([1]) == [(1, 3)]
+    spark.createDataFrame([(2,)], "k int").createOrReplaceTempView("rc_s")
+    got = rows(
+        "UPDATE db.rc AS x SET v = 6.5 FROM rc_s WHERE x.k = rc_s.k "
+        "RETURNING k, v"
+    )
+    assert got == stored([2]) == [(2, 7)]
+    spark.createDataFrame(
+        [(3, Decimal("4.5")), (4, Decimal("40.0"))], "k int, v decimal(3,1)"
+    ).createOrReplaceTempView("rc_m")
+    got = rows(
+        "MERGE INTO db.rc AS t USING rc_m AS s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT * RETURNING k, v, _change_type"
+    )
+    assert got == [(3, 5, "update_postimage"), (4, 40, "insert")]
+    assert stored([3, 4]) == [(3, 5), (4, 40)]
+    for name in ("rc", "rc_feed"):
+        got = rows(
+            f"INSERT INTO db.{name} VALUES (1, 10), (5, 50) "
+            "ON CONFLICT (k) DO UPDATE SET v = excluded.v RETURNING k, v"
+        )
+        assert got == stored([1, 5], name) == [(1, 10), (5, 50)], name
+    assert rows("DELETE FROM db.rc WHERE k = 99 RETURNING *") == []
+    # a target row matched by two source rows is deleted, and
+    # returned, once
+    spark.createDataFrame([(5,), (5,)], "k int").createOrReplaceTempView(
+        "rc_d"
+    )
+    got = rows(
+        "DELETE FROM db.rc USING rc_d WHERE rc.k = rc_d.k RETURNING k, v"
+    )
+    assert got == [(5, 50)] and stored([5]) == []
 
 
 def test_manifest_pruning_qualified_where_r8(lsql, spark):
