@@ -48,8 +48,8 @@ Scale posture (100 TB):
   pushdown and pruning are Spark-native; metadata lists files, never
   rows.
 - DELETE/UPDATE rewrite only the files that contain matching rows
-  (file-level pruning via ``input_file_name``); untouched files are
-  carried by reference into the new snapshot.
+  (file-level pruning by each row's lineage file name); untouched
+  files are carried by reference into the new snapshot.
 - Commits are O(metadata). The only driver-side collects are file
   lists and counts — never data.
 - Past ``manifest.inline_max`` files the metadata itself goes
@@ -352,6 +352,11 @@ class Snapshot:
 
 # ``_Pending.clash`` value: every concurrent commit conflicts
 _ANY = "any"
+
+# the correlation name of the target row in every frame a DML
+# condition is evaluated against, so a subquery can reference it:
+# ``delete(F.expr("EXISTS (SELECT 1 FROM u WHERE u.k = __target.k)"))``
+_DML_ALIAS = "__target"
 
 
 @dataclass
@@ -2077,7 +2082,7 @@ class LakeTable:
         if (not bloom_prop and not ndv_prop) or not entries:
             return
         if fmt == "avro":
-            return  # pure-Python OCF path surfaces no input_file_name
+            return  # the pure-Python OCF path has no Spark scan to read
         paths = [os.path.join(self.location, e["path"]) for e in entries]
         df = self.spark.read.format(fmt).load(paths)
         bloom_cols = [
@@ -2093,10 +2098,10 @@ class LakeTable:
         if not bloom_cols and not ndv_cols:
             return
         by_name = {os.path.basename(e["path"]): e for e in entries}
-        base = df.select(F.input_file_name().alias("f"), *df.columns)
+        base = df.select(*self._lineage_select(fmt), *df.columns)
         if ndv_cols:
             rows = (
-                base.groupBy("f")
+                base.groupBy("__file")
                 .agg(
                     *[
                         F.approx_count_distinct(c).alias(c)
@@ -2106,7 +2111,7 @@ class LakeTable:
                 .collect()
             )
             for r in rows:
-                e = by_name.get(os.path.basename(r["f"]))
+                e = by_name.get(r["__file"])
                 if e is not None:
                     e["ndv"] = {c: int(r[c]) for c in ndv_cols}
         if not bloom_cols:
@@ -2131,15 +2136,15 @@ class LakeTable:
         # driver (they live sharded across manifest segments, hydrated
         # per segment on demand)
         rows = (
-            base.select("f", F.explode(F.array(*probes)).alias("x"))
-            .select("f", "x.c", F.explode("x.ps").alias("p"))
-            .groupBy("f", "c")
+            base.select("__file", F.explode(F.array(*probes)).alias("x"))
+            .select("__file", "x.c", F.explode("x.ps").alias("p"))
+            .groupBy("__file", "c")
             .agg(F.collect_set("p").alias("ps"))
-            .select("f", "c", pack("ps").alias("bits"))
+            .select("__file", "c", pack("ps").alias("bits"))
             .collect()
         )
         for r in rows:
-            e = by_name.get(os.path.basename(r["f"]))
+            e = by_name.get(r["__file"])
             if e is not None:
                 e.setdefault("blooms", {})[r["c"]] = r["bits"]
 
@@ -3045,7 +3050,7 @@ class LakeTable:
         )
         df = reader.load(paths)
         if lineage:
-            df = df.select("*", *self._lineage_select())
+            df = df.select("*", *self._lineage_select(fmt))
         return df
 
     @staticmethod
@@ -3094,15 +3099,25 @@ class LakeTable:
 
     _LINEAGE_COLS = ("__file", "__pos")
 
-    def _lineage_select(self):
+    @staticmethod
+    def _lineage_select(fmt: str):
         """(file name, row index) of every scanned row — Spark's
-        parquet ``_metadata`` hidden column. File names are uuid-unique
-        in this layout, so the name alone identifies the file."""
+        ``_metadata`` hidden column. File names are uuid-unique in this
+        layout, so the name alone identifies the file. Only parquet
+        scans carry a row index: another format's ``__pos`` raises
+        when a plan reads it (position deletes), and costs nothing
+        when a plan only reads ``__file``."""
+        pos = (
+            F.col("_metadata.row_index") if fmt == "parquet"
+            else F.raise_error(
+                F.lit(f"position deletes need parquet data files, not {fmt}")
+            ).cast("long")
+        )
         return [
             F.substring_index(
                 F.col("_metadata.file_path"), "/", -1
             ).alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
+            pos.alias("__pos"),
         ]
 
     def _read_entries(
@@ -3462,14 +3477,6 @@ class LakeTable:
         directories."""
         s = self.snapshot(snapshot)
         return self._read_entries(s, s.files)
-
-    def lineage_scan(self) -> DataFrame:
-        """Current-snapshot scan with ``__file``/``__pos`` row-identity
-        columns appended (existing deletes applied) — the frame a
-        caller filters to hand ``_mor_dml(positional=True)`` a pre-computed
-        match set (r9 subquery-DML path)."""
-        s = self.snapshot()
-        return self._read_entries(s, s.files, with_lineage=True)
 
     def read_incremental(
         self, from_snapshot: int, to_snapshot: int | None = None
@@ -3981,65 +3988,39 @@ class LakeTable:
         the shortlist instead of the table."""
         schema = StructType.fromJson(json.loads(snap.schema_json))
         return self._select_entries(
-            snap, snap.files, _condition_ranges(condition, schema)
+            snap, snap.files,
+            _condition_ranges(condition, schema, {_DML_ALIAS}),
         )
 
     def _affected_files(
         self, condition: Column, snap: Snapshot | None = None
     ) -> list[str]:
-        """Relative paths of data files containing matching rows.
-        File-level pruning: everything else is carried by reference.
-        Runs on the RAW scan (MoR deletes not applied): a superset is
-        safe for file selection, and input_file_name() requires a
-        single-source plan (no anti-join).
-
-        Before the probe scan, manifest column bounds shortlist the
-        candidate files (`_condition_ranges` extracts necessary
-        [lo, hi] ranges from the predicate's AND/comparison/IN
-        structure): a DELETE/UPDATE keyed on a clustered or
-        partitioned column then opens only the overlapping files —
-        at scale the probe reads the candidate slice, not the table.
-        EQUALITY conjuncts on bloom-indexed columns additionally
-        probe each file's bloom (same machinery as the read path's
-        ``pruned_entries``): a point DELETE on a bloom column opens
-        only files that might contain the key, even when the column
-        is not clustered and every file's min/max straddles it.
-        ``snap`` defaults to the head."""
+        """Relative paths of the data files holding rows that match
+        ``condition``; every other file is carried by reference. The
+        manifest shortlist (`_shortlist_by_condition`: column bounds,
+        partition transforms, and blooms for equality conjuncts) picks
+        the candidate files, and one probe scan over them names each
+        matching row's file by its lineage ``__file`` — read in the
+        scan, so it survives whatever plan the condition needs (a
+        subquery's semi-join included). The probe reads the RAW files
+        (merge-on-read deletes not applied): a superset is safe for
+        file selection. ``snap`` defaults to the head."""
         snap = snap or self.snapshot()
         files = self._shortlist_by_condition(snap, condition)
         if not files:
             return []
-        if self.file_format() == "avro":
-            # the pure-Python OCF decode path surfaces no
-            # input_file_name(); lineage's __file (uuid-unique basename)
-            # identifies files instead
-            cur = self._read_entries(
+        hit = (
+            self._read_entries(
                 snap, files, apply_deletes=False, with_lineage=True
             )
-            hit = cur.filter(condition).select("__file").distinct().collect()
-            by_name = {
-                os.path.basename(f["path"]): f["path"] for f in files
-            }
-            return [
-                by_name[r["__file"]] for r in hit if r["__file"] in by_name
-            ]
-        cur = self._read_entries(snap, files, apply_deletes=False)
-        hit = (
-            cur.filter(condition)
-            .select(F.input_file_name().alias("f"))
+            .alias(_DML_ALIAS)
+            .filter(condition)
+            .select("__file")
             .distinct()
             .collect()
         )
-        loc = "file:" + self.location  # input_file_name returns URIs
-        out = []
-        for r in hit:
-            p = r["f"]
-            for prefix in (loc + "/", "file://" + self.location + "/",
-                           self.location + "/"):
-                if p.startswith(prefix):
-                    out.append(p[len(prefix):])
-                    break
-        return out
+        by_name = {os.path.basename(f["path"]): f["path"] for f in files}
+        return [by_name[r["__file"]] for r in hit]
 
     def change_feed_enabled(self, snap: Snapshot | None = None) -> bool:
         """Row-level change feed is OPT-IN per table (property
@@ -4067,6 +4048,7 @@ class LakeTable:
         def clash(head: Snapshot, added: list[dict]):
             hit = (
                 self._read_entries(head, added, apply_deletes=False)
+                .alias(_DML_ALIAS)
                 .filter(condition)
                 .limit(1)
                 .count()
@@ -4079,7 +4061,7 @@ class LakeTable:
                 return None  # no-op: nothing matched
             touched = self._read_entries(
                 snap, [f for f in snap.files if f["path"] in affected]
-            )
+            ).alias(_DML_ALIAS)
             # guard=False: the staged frame is dominated by pre-existing
             # carry-over rows; transforms that modify rows (UPDATE)
             # apply check guards to exactly those rows themselves
@@ -4203,9 +4185,8 @@ class LakeTable:
     def _mor_dml(
         self,
         operation: str,
-        condition: Column | None,
+        condition: Column,
         postimage=None,
-        matched: DataFrame | None = None,
         positional: bool = False,
     ) -> Snapshot:
         """Merge-on-read DELETE/UPDATE: the matched rows retire through
@@ -4213,25 +4194,17 @@ class LakeTable:
         or, ``positional``, position deletes recorded as (file name,
         row index), which work on tables with no identifier columns.
         UPDATE's ``postimage`` maps the matched rows to their new
-        images. ``matched`` (r9) lets a caller supply the match frame
-        directly (carrying ``__file``/``__pos`` from
-        ``lineage_scan()`` when positional) — the subquery DML path
-        computes it through the SQL frontend, where the predicate is
-        not expressible as a Column. Such a frame is bound to its
-        snapshot, so a lost race raises :class:`CommitConflict`;
-        otherwise the statement re-executes on the fresh head."""
+        images. A lost race re-executes the statement on the fresh
+        head."""
 
         def stage(snap: Snapshot) -> _Pending | None:
-            m = matched
-            if m is None:
-                # manifest-range/bloom shortlist before the match scan
-                # (r14, VERDICT #6): a keyed MoR DELETE/UPDATE opens
-                # the candidate slice, not the table. Deletes still
-                # apply (live rows only).
-                m = self._read_entries(
-                    snap, self._shortlist_by_condition(snap, condition),
-                    with_lineage=positional,
-                ).filter(condition)
+            # manifest-range/bloom shortlist before the match scan: a
+            # keyed DELETE/UPDATE opens the candidate slice, not the
+            # table. Deletes still apply (live rows only).
+            m = self._read_entries(
+                snap, self._shortlist_by_condition(snap, condition),
+                with_lineage=positional,
+            ).alias(_DML_ALIAS).filter(condition)
             rows = m.drop("__file", "__pos") if positional else m
             post = (
                 self._align_to_schema(postimage(rows))
@@ -4250,7 +4223,7 @@ class LakeTable:
                 snap, [m], changes, positional, post=post
             )
 
-        return self._commit_op(operation, stage, rerun=matched is None)
+        return self._commit_op(operation, stage, rerun=True)
 
     def delete_by_keys(self, keys: DataFrame) -> Snapshot:
         """Equality-delete by a KEY FRAME — the CDC-apply / tombstone
@@ -4287,6 +4260,12 @@ class LakeTable:
         key file; ``'merge-on-read-positional'`` writes (file, row
         index) position deletes — no row_key property required.
 
+        ``condition`` is any Column Spark evaluates against the table's
+        rows, subqueries included; the target row's correlation name is
+        ``__target`` (``F.expr("k IN (SELECT k FROM u)")``, ``F.expr(
+        "EXISTS (SELECT 1 FROM u WHERE u.k = __target.k)")``). A row
+        whose condition is NULL stays, as in PG.
+
         Concurrent commits: copy-on-write rebases over any commit that
         leaves its read set, the schema and the delete files alone and
         adds no matching row; otherwise — and in merge-on-read mode
@@ -4302,7 +4281,7 @@ class LakeTable:
             )
         return self._cow_dml(
             "delete", condition,
-            lambda df: df.filter(~condition),
+            lambda df: df.filter(~F.coalesce(condition, F.lit(False))),
             lambda df: [
                 df.filter(condition).withColumn(
                     "_change_type", F.lit("delete")
@@ -4322,8 +4301,11 @@ class LakeTable:
         from the delete. Post-image frames align to the table schema
         (``_align_to_schema``, the PG assignment cast) — without it a
         wider-typed assignment (array<double> onto array<float>) would
-        silently write type-drifted files. Concurrent commits are
-        handled as for :meth:`delete`.
+        silently write type-drifted files. ``condition`` and the
+        assignments are Columns over the table's rows, subqueries and
+        the ``__target`` correlation name included (as for
+        :meth:`delete`); concurrent commits are handled as for
+        :meth:`delete`.
 
         The returned snapshot's ``changes()`` serves each updated row's
         ``update_preimage`` and ``update_postimage``; a post-image is
@@ -4389,12 +4371,17 @@ class LakeTable:
         return self._cow_dml("update", condition, transform, changes)
 
     def _merge_insert_values(
-        self, tcols: list[str], values: dict[str, Column] | None
+        self, joined: DataFrame, tcols: list[str],
+        values: dict[str, Column] | None,
     ) -> dict[str, Column]:
         """Per-target-column insert expression for a merge: the
         explicit VALUES mapping when given (unmapped columns fall to
         their declared DEFAULT, else NULL), otherwise the source
-        column pass-through."""
+        column pass-through. An explicit value takes the PG assignment
+        cast from its type analyzed over ``joined`` (`assignment_cast`,
+        as INSERT and UPDATE store), so NUMERIC 4.5 into an int column
+        stores 5; same-shaped types (maps that differ only in
+        nullability) take no cast."""
         if values is None:
             return {c: F.col(f"__src.{c}") for c in tcols}
         schema = self.schema()
@@ -4403,20 +4390,20 @@ class LakeTable:
         out = {}
         for c in tcols:
             if c in values:
-                e = values[c]
+                out[c] = values[c]
             else:
                 d = defaults.get(str(ids.get(c)))
-                e = _pg_expr(d) if d is not None else F.lit(None)
-            if c in schema.fieldNames():
-                from pyspark.sql.types import MapType
-
-                # map-to-map casts are unsupported in Spark (even for
-                # identical shapes, on nullability grounds); the staged
-                # frame is aligned downstream (_align_to_schema), which
-                # compares analyzed types and skips same-shaped maps
-                if not isinstance(schema[c].dataType, MapType):
-                    e = e.cast(schema[c].dataType)
-            out[c] = e
+                out[c] = _pg_expr(d) if d is not None else F.lit(None)
+        analyzed = joined.select(*[e.alias(c) for c, e in out.items()]).schema
+        for f in analyzed.fields:
+            if (
+                f.name in schema.names
+                and f.dataType.simpleString()
+                != schema[f.name].dataType.simpleString()
+            ):
+                out[f.name] = assignment_cast(
+                    out[f.name], f.dataType, schema[f.name].dataType
+                )
         return out
 
     def merge(
@@ -4605,7 +4592,9 @@ class LakeTable:
         )
         # a matched DELETE wins over a matched UPDATE
         update = None if when_matched_delete else when_matched_update
-        ins_vals = self._merge_insert_values(tcols, when_not_matched_values)
+        ins_vals = self._merge_insert_values(
+            joined, tcols, when_not_matched_values
+        )
         post = inserts = None
         if update:
             post = joined.filter(matched).select(

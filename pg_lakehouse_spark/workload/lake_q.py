@@ -1893,9 +1893,9 @@ WHERE NOT (k % 5 = 0
 def lake_subquery_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r8: plain UPDATE/DELETE with correlated subqueries in WHERE —
     everyday PG (``WHERE EXISTS (SELECT 1 FROM db.v WHERE v.c =
-    t.c)``), previously TABLE_OR_VIEW_NOT_FOUND. Evaluated by the
-    full SQL frontend over the aliased scan and committed as a
-    snapshot overwrite."""
+    t.c)``), previously TABLE_OR_VIEW_NOT_FOUND. Each runs as ordinary
+    Column DML: the WHERE, subquery included, is one condition over
+    the target's rows, and only the files holding matches rewrite."""
     from pg_lakehouse_spark.sql import LakeSQL
 
     views(spark, sf_dir, "orders")

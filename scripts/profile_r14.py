@@ -25,17 +25,7 @@ from pg_lakehouse_spark.session import (  # noqa: E402
     shuffle_partitions_for,
 )
 from pg_lakehouse_spark.workload import REGISTRY, _load_all  # noqa: E402
-
-HEADLINE = [
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_revenue_forecast", "q8_market_share", "q9_product_profit",
-    "q13_customer_distribution", "q18_large_volume_orders",
-    "q_window_topk_per_group", "q_window_running_agg", "q_asof_join",
-    "q_cube", "dedup_exact_documents", "dedup_minhash_lsh",
-    "embed_knn_bruteforce", "text_quality_signals", "stream_tumbling_hourly",
-    "stream_session_windows", "multimodal_decode", "lake_delete_update",
-    "rollup_incremental", "pack_sequences_stream", "ts_gapfill_hourly",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:

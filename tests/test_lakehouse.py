@@ -2923,3 +2923,77 @@ def test_merge_schema_retry_realigns_source(catalog, orders_df):
     assert got.count() == 12
     assert got.filter(F.col("o_totalprice") == 2.0).count() == 2
     assert "extra" in got.columns
+
+
+def test_subquery_condition_dml_changes_the_filtered_rows(catalog, spark):
+    """``delete``/``update`` take any Column Spark evaluates, an IN
+    subquery or a correlated EXISTS over ``__target`` included: on a
+    copy-on-write table they change exactly the rows ``read().filter``
+    of the same Column returns, rewriting only the files holding them
+    (file identity comes from each scanned row's lineage, which a
+    subquery's semi-join keeps). A row whose condition is NULL stays,
+    as in PG, also when it shares a file with a deleted row."""
+    tbl = catalog.create_table_as(
+        "db", "sqc",
+        spark.range(400).selectExpr("CAST(id AS INT) AS k", "CAST(id AS INT) AS v")
+        .repartitionByRange(4, "k"),
+    )
+    assert len(tbl.snapshot().files) == 4
+    spark.createDataFrame([(3,), (9,), (250,)], "k int").createOrReplaceTempView(
+        "sqc_u"
+    )
+
+    def keys(df):
+        return sorted(r["k"] for r in df.collect())
+
+    cond = F.expr("k IN (SELECT k FROM sqc_u) AND k < 100")
+    doomed = keys(tbl.read().filter(cond))
+    assert doomed == [3, 9]
+    snap = tbl.delete(cond)
+    assert snap.summary["rewritten_files"] == 1
+    assert keys(tbl.read()) == [k for k in range(400) if k not in doomed]
+
+    cond = F.expr("EXISTS (SELECT 1 FROM sqc_u WHERE sqc_u.k + 1 = __target.k)")
+    hit = keys(tbl.read().alias("__target").filter(cond))
+    assert hit == [4, 10, 251]
+    snap = tbl.update(cond, {"v": F.expr("-(SELECT max(k) FROM sqc_u)")})
+    assert snap.summary["rewritten_files"] == 2
+    assert keys(tbl.read().filter("v = -250")) == hit
+    assert tbl.read().count() == 398
+
+    # 3VL: (NULL > 15) is NULL, so the NULL row is kept, not deleted
+    nul = catalog.create_table_as(
+        "db", "sqn",
+        spark.createDataFrame([(5, None), (6, 1), (7, 20)], "k int, v int")
+        .coalesce(1),
+    )
+    assert len(nul.snapshot().files) == 1
+    nul.delete(F.expr("v > 15"))
+    assert sorted(tuple(r) for r in nul.read().collect()) == [(5, None), (6, 1)]
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_insert_values_round_like_insert(catalog, spark, mode):
+    """An explicit MERGE insert value takes PG's assignment cast, as
+    INSERT and UPDATE store: NUMERIC 4.5 into an int column stores 5
+    (Spark's cast truncates to 4), in both write modes."""
+    from decimal import Decimal
+
+    tbl = catalog.create_table_as(
+        "db", "miv",
+        spark.createDataFrame([(1, 1)], "k int, v int"),
+        properties={"write_delete_mode": mode, "row_key": "k"},
+    )
+    tbl.merge(
+        spark.createDataFrame(
+            [(1, Decimal("7.5")), (3, Decimal("4.5")), (4, Decimal("-2.5"))],
+            "k int, v decimal(3,1)",
+        ),
+        on=["k"],
+        when_not_matched_insert=True,
+        when_not_matched_values={"k": F.col("__src.k"), "v": F.col("__src.v")},
+    )
+    assert sorted(tuple(r) for r in tbl.read().collect()) == [
+        (1, 1), (3, 5), (4, -3)
+    ]
+    assert tbl.schema()["v"].dataType.simpleString() == "int"

@@ -543,6 +543,63 @@ def test_change_rows_from_one_record():
     assert not back, f"a RETURNING recomputation is back: {back}"
 
 
+def test_dml_expressions_through_one_path():
+    """Every SQL DELETE/UPDATE is one Column condition plus Column
+    assignments (`_apply_delete`/`_apply_update`) or, for the join
+    forms, a MERGE; its expressions, subqueries included, are bound
+    and typed by the one step `_select` uses. So the subquery forks
+    (``_subquery_where_dml``, a whole-table overwrite; and
+    ``_subquery_dml_mor``, a precomputed match frame through
+    ``lineage_scan`` and ``_mor_dml(matched=)``) are gone, no file
+    is identified by ``input_file_name`` (empty after a subquery's
+    semi-join), and the typed post-bind pass list appears once in
+    ``sql.py``."""
+    import ast
+
+    gone = {"_subquery_where_dml", "_subquery_dml_mor", "lineage_scan",
+            "input_file_name"}
+    passes = (
+        "_rewrite_typed_arith", "_rewrite_float_round",
+        "_rewrite_int_cast_rounding", "_rewrite_interval_dateformat",
+        "_rewrite_array_scalar_concat", "_rewrite_array_text_cast",
+    )
+    trees = {}
+    for fname in ("lakehouse.py", "sql.py"):
+        with open(os.path.join(PKG_ROOT, fname)) as f:
+            trees[fname] = ast.parse(f.read())
+    for fname, tree in trees.items():
+        names = set()
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names.add(node.name)
+            elif isinstance(node, ast.Attribute):
+                names.add(node.attr)
+            elif isinstance(node, ast.Name):
+                names.add(node.id)
+        back = sorted(gone & names)
+        assert not back, f"{fname}: a second DML path is back: {back}"
+    mor_dml = [
+        node for node in ast.walk(trees["lakehouse.py"])
+        if isinstance(node, ast.FunctionDef) and node.name == "_mor_dml"
+    ]
+    assert len(mor_dml) == 1
+    params = {a.arg for a in mor_dml[0].args.args + mor_dml[0].args.kwonlyargs}
+    assert "matched" not in params, "_mor_dml takes a precomputed match frame"
+    # each pass is referenced once outside its own definition, in one
+    # sequence: the pass list of `_bind_and_type`
+    refs = {p: [] for p in passes}
+    for node in ast.walk(trees["sql.py"]):
+        if isinstance(node, ast.Attribute) and node.attr in refs:
+            refs[node.attr].append(node.lineno)
+    assert all(len(v) == 1 for v in refs.values()), (
+        f"a typed pass is invoked outside the one pass list: {refs}"
+    )
+    lines = [refs[p][0] for p in passes]
+    assert lines == sorted(lines) and lines[-1] - lines[0] == len(passes) - 1, (
+        f"the typed passes are not one ordered list: {refs}"
+    )
+
+
 def test_broadcast_hints_on_dim_joins(spark, sf_dir):
     """q5's nation/region/supplier/customer joins must end up
     broadcast, not shuffled — r7 dropped the forced hints on the

@@ -7202,7 +7202,7 @@ def test_select_in_list_and_qualified_conjuncts_bind_one_file(lsql, spark):
 def test_explain_dml_candidates_equal_the_executed_shortlist(lsql):
     """EXPLAIN DELETE/UPDATE turns its WHERE into the Column execution
     uses and reports the shortlist execution scans; join forms report
-    every file."""
+    the candidate files of the MERGE they execute."""
     import re as _re
 
     from pg_lakehouse_spark.lakehouse import LakeTable
@@ -7241,8 +7241,121 @@ def test_explain_dml_candidates_equal_the_executed_shortlist(lsql):
         )
     lsql.sql("CREATE TABLE db.exs (k BIGINT)")
     lsql.sql("INSERT INTO db.exs VALUES (5)")
-    plan = lsql.sql(
-        "EXPLAIN DELETE FROM db.ex USING db.exs "
-        "WHERE ex.k = exs.k AND ex.k = 5"
-    ).collect()[0].plan
-    assert "rewrite candidates: 4 of 4 files" in plan, plan
+    stmt = "DELETE FROM db.ex USING db.exs WHERE ex.k = exs.k AND ex.k = 5"
+    plan = lsql.sql(f"EXPLAIN {stmt}").collect()[0].plan
+    assert "rewrite candidates: 1 of 4 files" in plan, plan
+    lsql.sql(stmt)
+    snap = lsql.catalog.load_table("db", "ex").snapshot()
+    assert 4 - snap.summary["pruned_files"] == 1, snap.summary
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_dml_expressions_type_as_select(lsql, mode):
+    """A DELETE/UPDATE expression is bound and typed as SELECT binds
+    its statement: ``k / 2`` is PG's integer division in a WHERE and
+    in a SET, so DELETE removes the rows SELECT's WHERE returns and
+    UPDATE stores what SELECT computes — qualified or not. A subquery
+    that binds the target's own name reads its own rows through it,
+    as in PG."""
+    lsql.sql(
+        f"CREATE TABLE db.dt (k INT, v INT) "
+        f"WITH (write_delete_mode='{mode}', row_key='k')"
+    )
+    lsql.sql("INSERT INTO db.dt SELECT id, 0 FROM range(1, 11)")
+
+    def rows(q):
+        return sorted(tuple(r) for r in lsql.sql(q).collect())
+
+    doomed = rows("SELECT k FROM db.dt WHERE k / 2 = 3")
+    assert doomed == [(6,), (7,)]
+    lsql.sql("DELETE FROM db.dt WHERE k / 2 = 3")
+    assert rows("SELECT k FROM db.dt WHERE k IN (6, 7)") == []
+    assert len(rows("SELECT k FROM db.dt")) == 8
+    want = rows("SELECT k, k / 2 FROM db.dt")
+    lsql.sql("UPDATE db.dt AS d SET v = d.k / 2 WHERE d.k > 0")
+    assert rows("SELECT k, v FROM db.dt") == want
+    assert (9, 4) in want
+    # dt.* inside the subquery is its own row: k IN (v of rows k > 8)
+    inner = "k IN (SELECT dt.v FROM db.dt WHERE dt.k > 8)"
+    assert rows(f"SELECT k FROM db.dt WHERE {inner}") == [(4,), (5,)]
+    lsql.sql(f"DELETE FROM db.dt WHERE {inner}")
+    assert rows("SELECT k FROM db.dt") == [(1,), (2,), (3,), (8,), (9,), (10,)]
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_insert_values_round_like_insert_sql(lsql, mode):
+    """MERGE ... WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+    stores a NUMERIC 4.5 into an int column as INSERT does: 5."""
+    lsql.sql(
+        f"CREATE TABLE db.mv (k INT, v INT) "
+        f"WITH (write_delete_mode='{mode}', row_key='k')"
+    )
+    lsql.sql("INSERT INTO db.mv VALUES (1, 1), (2, 4.5)")
+    lsql.sql(
+        "MERGE INTO db.mv t USING (SELECT 3 AS k, 4.5 AS v) s ON t.k = s.k "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)"
+    )
+    assert sorted(tuple(r) for r in lsql.sql("SELECT k, v FROM db.mv").collect()) == [
+        (1, 1), (2, 5), (3, 5)
+    ]
+
+
+def test_subquery_delete_rewrites_only_matching_files(lsql):
+    """A copy-on-write DELETE whose WHERE holds a subquery is ordinary
+    Column DML: it rewrites the one file holding its match (not the
+    whole table as an overwrite), commits a ``delete`` that rebases
+    like any other, and RETURNING reads the rows its writer deleted.
+    EXPLAIN reports the shortlist it executes with."""
+    lsql.sql("CREATE TABLE db.sqd (k BIGINT, s STRING)")
+    for lo in (0, 100, 200, 300):
+        lsql.sql(
+            f"INSERT INTO db.sqd SELECT id AS k, 'v' || id AS s "
+            f"FROM range({lo}, {lo + 100}, 1, 1)"
+        )
+    lsql.sql("CREATE TABLE db.sqds (k BIGINT)")
+    lsql.sql("INSERT INTO db.sqds VALUES (5), (305)")
+    stmt = (
+        "DELETE FROM db.sqd AS d WHERE d.k IN (SELECT k FROM db.sqds) "
+        "AND d.k < 50"
+    )
+    plan = lsql.sql(f"EXPLAIN {stmt}").collect()[0].plan
+    assert "rewrite candidates: 1 of 4 files" in plan, plan
+    got = sorted(tuple(r) for r in lsql.sql(f"{stmt} RETURNING k, s").collect())
+    assert got == [(5, "v5")]
+    snap = lsql.catalog.load_table("db", "sqd").snapshot()
+    assert snap.operation == "delete"
+    assert snap.summary["rewritten_files"] == 1
+    assert lsql.sql("SELECT count(*) AS n FROM db.sqd").collect()[0].n == 399
+    # a correlated EXISTS naming the target by its bare table name
+    got = sorted(tuple(r) for r in lsql.sql(
+        "DELETE FROM db.sqd WHERE EXISTS (SELECT 1 FROM db.sqds "
+        "WHERE sqds.k = sqd.k) RETURNING k"
+    ).collect())
+    assert got == [(305,)]
+    assert lsql.catalog.load_table("db", "sqd").snapshot().summary[
+        "rewritten_files"
+    ] == 1
+
+
+def test_subquery_delete_on_fk_parent_restricts(lsql):
+    """A subquery DELETE on a foreign-key parent is checked like any
+    DELETE: RESTRICT while a child references a doomed key, and it
+    runs when none does."""
+    lsql.sql("CREATE TABLE db.fkp (pid BIGINT)")
+    lsql.sql("INSERT INTO db.fkp VALUES (1), (2), (3)")
+    lsql.sql("CREATE TABLE db.fkc (cid BIGINT, pid BIGINT)")
+    lsql.sql("INSERT INTO db.fkc VALUES (10, 2)")
+    lsql.sql(
+        "ALTER TABLE db.fkc ADD CONSTRAINT fk_c "
+        "FOREIGN KEY (pid) REFERENCES db.fkp (pid)"
+    )
+    lsql.sql("CREATE TABLE db.fkq (pid BIGINT)")
+    lsql.sql("INSERT INTO db.fkq VALUES (2), (3)")
+    with pytest.raises(LakehouseError, match="RESTRICT"):
+        lsql.sql("DELETE FROM db.fkp WHERE pid IN (SELECT pid FROM db.fkq)")
+    lsql.sql(
+        "DELETE FROM db.fkp WHERE pid IN (SELECT pid FROM db.fkq WHERE pid > 2)"
+    )
+    assert sorted(r.pid for r in lsql.sql("SELECT pid FROM db.fkp").collect()) == [
+        1, 2
+    ]
