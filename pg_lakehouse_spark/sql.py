@@ -6326,8 +6326,8 @@ class LakeSQL:
                 ).rstrip()
             snap = {
                 "INSERT": self._insert,
-                "DELETE": self._delete,
-                "UPDATE": self._update,
+                "DELETE": lambda t: self._dml("DELETE", t),
+                "UPDATE": lambda t: self._dml("UPDATE", t),
                 "MERGE": self._merge,
             }[head](s)
             if returning is None:
@@ -6901,8 +6901,9 @@ class LakeSQL:
         the literal-masked text and its literals. ``lone_ref`` names
         the one lake table a single-select statement scans, which
         binds manifest-pruned; ``frame`` (a zero-argument callable,
-        for DML the target's rows) types the passes' operands, else
-        each pass types against the statement's FROM scope."""
+        for DML the target's rows) types the passes' operands outside
+        any subquery, else each pass types against the statement's
+        FROM scope."""
 
         def bind(m: re.Match) -> str:
             view = bind_target(m)
@@ -7029,15 +7030,43 @@ class LakeSQL:
         )
         s = self._unmask_strings(_bpm, _bplits)
         masked, lits = self._mask_strings(self._TT.sub(bind, s))
-        for rewrite in (
-            self._rewrite_typed_arith,
-            self._rewrite_float_round,
-            self._rewrite_int_cast_rounding,
-            self._rewrite_interval_dateformat,
-            self._rewrite_array_scalar_concat,
-            self._rewrite_array_text_cast,
+
+        def typed(text: str, frame) -> str:
+            for rewrite in (
+                self._rewrite_typed_arith,
+                self._rewrite_float_round,
+                self._rewrite_int_cast_rounding,
+                self._rewrite_interval_dateformat,
+                self._rewrite_array_scalar_concat,
+                self._rewrite_array_text_cast,
+            ):
+                text = rewrite(text, lits, frame)
+            return text
+
+        if frame is None:
+            return typed(masked, None), lits
+        # ``frame`` types only the operands outside any subquery: a
+        # (SELECT ...) is its own scope, so as in a SELECT whose WHERE
+        # holds one, its column operands stay untyped (only literals
+        # type) while it stands in the outer text as an untypable name
+        subs: list[str] = []
+        outer, pos = [], 0
+        for m in re.finditer(
+            r"\(\s*(?:SELECT|WITH)\b", masked, re.IGNORECASE
         ):
-            masked = rewrite(masked, lits, frame)
+            end = self._balanced_end(masked, m.start())
+            if m.start() < pos or end < 0:
+                continue  # nested in a held subquery, or unbalanced
+            subs.append(typed(masked[m.start() + 1: end - 1], lambda: None))
+            outer.append(
+                f"{masked[pos: m.start()]}(__subquery_{len(subs) - 1})"
+            )
+            pos = end
+        outer.append(masked[pos:])
+        masked = re.sub(
+            r"\b__subquery_(\d+)\b", lambda m: subs[int(m.group(1))],
+            typed("".join(outer), frame),
+        )
         return masked, lits
 
     def _render_calendar_cols(self, df: DataFrame) -> DataFrame:
@@ -8395,8 +8424,8 @@ class LakeSQL:
             m.group(3).lower(),
             m.group(4).strip(),
         )
-        # literals masked (see _update): a DEFAULT/CHECK/WITH value
-        # containing clause keywords or parens must never tear the
+        # literals masked (see _dml_statement): a DEFAULT/CHECK/WITH
+        # value containing clause keywords or parens must never tear the
         # structural split; leaves unmask through U
         rest, _lits = self._mask_strings(rest)
         U = lambda t: self._unmask_strings(t, _lits)  # noqa: E731
@@ -9499,8 +9528,8 @@ class LakeSQL:
     def _insert(self, s: str) -> Snapshot:
         # PG upsert: INSERT ... ON CONFLICT (k) DO NOTHING|UPDATE SET —
         # peeled off here, executed as a keyed MERGE after binding.
-        # Literals masked first (see _update): 'ON CONFLICT'-looking
-        # text or an unbalanced paren inside a VALUES string literal
+        # Literals masked first (see _dml_statement): 'ON CONFLICT'-
+        # looking text or an unbalanced paren inside a VALUES string literal
         # must never tear the statement split.
         s, _lits = self._mask_strings(s)
         U = lambda t: self._unmask_strings(t, _lits)  # noqa: E731
@@ -10696,10 +10725,11 @@ class LakeSQL:
         lakehouse DML scan, so outer references inside subqueries
         resolve against the target row. Each expression is bound and
         typed by `_bind_and_type`, as `_select` binds a statement,
-        against the target's rows — a frame built on first use only,
-        so an expression no typed pass fires on builds no frame and
-        runs no job. No WHERE matches every row; ``SET c = DEFAULT``
-        restores the declared default."""
+        its operands outside any subquery against the target's rows —
+        a frame built on first use only, so an expression no typed
+        pass fires on builds no frame and runs no job. No WHERE
+        matches every row; ``SET c = DEFAULT`` restores the declared
+        default."""
         qual = talias or rf"(?:{ns}\s*\.\s*)?{name}"
         corr = re.compile(
             rf"(?<![\w.]){qual}\s*\.(?=\s*{_IDENT})", re.IGNORECASE
@@ -10908,22 +10938,16 @@ class LakeSQL:
             "condition": cond, "assignments": assignments,
         }
 
-    def _delete(self, s: str) -> Snapshot:
-        # PG join-delete (DELETE FROM t [[AS] a] USING src [[AS] b]
-        # WHERE a.k = b.k [AND ...]) runs as a matched-delete MERGE;
-        # every other DELETE as one Column condition
-        tbl, _where, call = self._dml_statement("DELETE", s)
+    def _dml(self, verb: str, s: str) -> Snapshot:
+        # PG join DML (DELETE FROM t [[AS] a] USING src [[AS] b] /
+        # UPDATE t [[AS] a] SET ... FROM src [[AS] b], WHERE a.k = b.k
+        # [AND ...]) runs as a matched MERGE; every other DELETE/UPDATE
+        # as one Column condition plus Column assignments
+        tbl, _where, call = self._dml_statement(verb, s)
         if "source" in call:
             return self._apply_merge(tbl, **call)
-        return self._apply_delete(tbl, call["condition"])
-
-    def _update(self, s: str) -> Snapshot:
-        # PG join-update (UPDATE t [[AS] a] SET ... FROM src [[AS] b]
-        # WHERE a.k = b.k [AND ...]) runs as a matched-update MERGE;
-        # every other UPDATE as one condition plus Column assignments
-        tbl, _where, call = self._dml_statement("UPDATE", s)
-        if "source" in call:
-            return self._apply_merge(tbl, **call)
+        if verb == "DELETE":
+            return self._apply_delete(tbl, call["condition"])
         return self._apply_update(
             tbl, call["condition"], call["assignments"]
         )
@@ -10969,8 +10993,8 @@ class LakeSQL:
         return source, keys
 
     def _merge(self, s: str) -> Snapshot:
-        # Literals masked first (see _update): WHEN/THEN/AND/VALUES text
-        # (and parens/commas) inside a quoted string must never tear the
+        # Literals masked first (see _dml_statement): WHEN/THEN/AND/
+        # VALUES text (and parens/commas) inside a quoted string must never tear the
         # clause grammar. Leaves unmask through ``rewrite``.
         s, _lits = self._mask_strings(s)
         U = lambda t: self._unmask_strings(t, _lits)  # noqa: E731

@@ -7283,6 +7283,44 @@ def test_dml_expressions_type_as_select(lsql, mode):
 
 
 @pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_dml_subquery_operands_never_type_against_the_target(lsql, mode):
+    """A subquery inside a DELETE/UPDATE is its own scope, which the
+    target's columns never type. With ``u.v`` a DOUBLE 9.0 and the
+    target's ``v`` an INT, ``v / 2`` in the subquery is 4.5 as in PG,
+    and ``round(r)`` over the subquery's NUMERIC 2.5 is 3, though the
+    target's ``r`` is a DOUBLE: DELETE and UPDATE change the rows
+    SELECT returns. Operands outside the subquery still type against
+    the target."""
+    lsql.sql(
+        f"CREATE TABLE db.st (k INT, v INT, r DOUBLE) "
+        f"WITH (write_delete_mode='{mode}', row_key='k')"
+    )
+    lsql.sql("INSERT INTO db.st SELECT id, 0, 0.0 FROM range(1, 11)")
+    lsql.sql("CREATE TABLE db.su (v DOUBLE, r DECIMAL(3, 1))")
+    lsql.sql("INSERT INTO db.su VALUES (9.0, 2.5)")
+
+    def rows(q):
+        return sorted(tuple(r) for r in lsql.sql(q).collect())
+
+    inner = "k IN (SELECT v / 2 FROM db.su)"
+    assert rows(f"SELECT k FROM db.st WHERE {inner}") == []
+    lsql.sql(f"DELETE FROM db.st WHERE {inner}")
+    lsql.sql(f"UPDATE db.st SET v = 1 WHERE {inner}")
+    assert rows("SELECT k, v FROM db.st") == [(k, 0) for k in range(1, 11)]
+    want = rows("SELECT k, (SELECT v / 2 * 2 FROM db.su) FROM db.st WHERE k = 1")
+    assert want == [(1, 9.0)]
+    lsql.sql("UPDATE db.st SET v = (SELECT v / 2 * 2 FROM db.su) WHERE k = 1")
+    assert rows("SELECT k, v FROM db.st WHERE k = 1") == [(1, 9)]
+    inner = "k IN (SELECT round(r) FROM db.su)"
+    assert rows(f"SELECT k FROM db.st WHERE {inner}") == [(3,)]
+    lsql.sql(f"DELETE FROM db.st WHERE {inner}")
+    assert rows("SELECT k FROM db.st WHERE k IN (2, 3)") == [(2,)]
+    lsql.sql("DELETE FROM db.st WHERE k / 2 = 3 AND EXISTS (SELECT 1 FROM db.su)")
+    assert rows("SELECT k FROM db.st WHERE k IN (6, 7)") == []
+    assert len(rows("SELECT k FROM db.st")) == 7
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
 def test_merge_insert_values_round_like_insert_sql(lsql, mode):
     """MERGE ... WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
     stores a NUMERIC 4.5 into an int column as INSERT does: 5."""
