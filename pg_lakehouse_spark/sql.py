@@ -72,18 +72,27 @@ a reference user can keep their SQL:
 Statement routing is keyword-based; expressions inside (predicates,
 SET clauses, the SELECT body) are handed to Spark's own parser via
 ``F.expr``/``spark.sql`` — this module never re-implements expression
-semantics.
+semantics. Where PG's operator semantics depend on operand types
+(integer division, ``round(float8)``, ``::int`` rounding, ...), one
+step, ``LakeSQL._bind_and_type``, types every expression's operands
+per query block (``_query_scopes``: each set-op branch and each
+parenthesized SELECT/WITH body), against that block's FROM clause or,
+for DML, MERGE and ON CONFLICT, the target's schema and source row.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import json
 import re
+import threading
+from typing import NamedTuple
 
+from pyspark.logger import PySparkLogger
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructField, StructType
 
 from pg_lakehouse_spark.lakehouse import (
     LakeCatalog,
@@ -127,6 +136,94 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
     tail = "".join(cur).strip()
     if tail:
         out.append(tail)
+    return out
+
+
+# the paren-depth-0 keywords that end a FROM clause
+_FROM_END = (
+    "WHERE", "GROUP", "HAVING", "WINDOW", "ORDER", "LIMIT", "OFFSET",
+    "FETCH", "FOR", "UNION", "INTERSECT", "EXCEPT",
+)
+_SET_OPS = ("UNION", "INTERSECT", "EXCEPT")
+_SET_QUANTIFIER = re.compile(r"\s*(?:(?:ALL|DISTINCT)\b)?", re.IGNORECASE)
+_SCOPE_TOKEN = re.compile(
+    rf"\(\s*(?:SELECT|WITH)\b|[()]|\b(?:FROM|{'|'.join(_FROM_END)})\b",
+    re.IGNORECASE,
+)
+
+
+class _QueryScope(NamedTuple):
+    """One query block of a statement's text, ``text[start:end]``,
+    nested in block ``parent`` (None for the statement itself);
+    ``items`` spans its FROM clause's items when it has one."""
+
+    start: int
+    end: int
+    parent: int | None
+    items: tuple[int, int] | None
+
+
+def _query_scopes(masked: str) -> list[_QueryScope]:
+    """The query blocks of literal-masked SQL text, each parent before
+    its children: the text itself, each set-operation branch and each
+    parenthesized ``(SELECT ...)``/``(WITH ...)`` body, at any depth.
+    A set operation's text has no FROM clause of its own: its
+    branches do, and an ORDER BY/LIMIT after the last branch stays
+    with the set operation. Unbalanced parentheses fail open to one
+    block without a FROM clause."""
+    close, opened = {}, []
+    for i, ch in enumerate(masked):
+        if ch == "(":
+            opened.append(i)
+        elif ch == ")" and opened:
+            close[opened.pop()] = i
+        elif ch == ")":
+            opened.append(i)
+            break
+    if opened:
+        return [_QueryScope(0, len(masked), None, None)]
+    out: list[_QueryScope] = []
+
+    def block(start: int, end: int, parent: int | None) -> None:
+        i = len(out)
+        out.append(_QueryScope(start, end, parent, None))
+        bodies, kws, depth, pos = [], [], 0, start
+        while m := _SCOPE_TOKEN.search(masked, pos, end):
+            tok, pos = m.group(0), m.end()
+            if tok[0] == "(" and len(tok) > 1:  # a query body
+                bodies.append((m.start() + 1, close[m.start()]))
+                pos = close[m.start()] + 1
+            elif tok in "()":
+                depth += 1 if tok == "(" else -1
+            elif depth == 0:
+                kws.append((tok.upper(), m))
+        ops = [m for kw, m in kws if kw in _SET_OPS]
+        if ops:
+            tail = next(
+                (m.start() for kw, m in kws if m.start() > ops[-1].start()
+                 and kw in ("ORDER", "LIMIT", "OFFSET", "FETCH")),
+                end,
+            )
+            a = start
+            for op in ops:
+                block(a, op.start(), i)
+                a = _SET_QUANTIFIER.match(masked, op.end()).end()
+            block(a, tail, i)
+            bodies = [b for b in bodies if b[0] > tail]
+        else:
+            frm = next((m for kw, m in kws if kw == "FROM"), None)
+            if frm is not None:
+                stop = next(
+                    (m.start() for kw, m in kws
+                     if m.start() > frm.start() and kw != "FROM"),
+                    end,
+                )
+                if masked[frm.end(): stop].strip():
+                    out[i] = out[i]._replace(items=(frm.end(), stop))
+        for a, b in bodies:
+            block(a, b, i)
+
+    block(0, len(masked), None)
     return out
 
 
@@ -549,6 +646,129 @@ def _set_items(sets: str) -> list[tuple[str, str]]:
         else:
             out.append((k, v))
     return out
+
+
+# what feeds an operand: an explicit float cast/ctor (PG types it
+# float, not numeric); an aggregate PG types NUMERIC over integer
+# inputs (Spark: double); a call Spark types integral where PG types
+# it numeric (floor, extract since PG 14, round/trunc/sign on ints)
+_FLOAT_MARK = re.compile(
+    r"::\s*(?:float[48]?|double(?:\s+precision)?|real)\b"
+    r"|\bCAST\s*\([^()]*\bAS\s+(?:float[48]?|double(?:\s+precision)?"
+    r"|real)\s*\)|\b(?:random|pi)\s*\(",
+    re.IGNORECASE,
+)
+_NUMERIC_AGG = re.compile(
+    r"\b(?:avg|stddev|stddev_pop|stddev_samp|variance|var_pop|var_samp)"
+    r"\s*\(", re.IGNORECASE,
+)
+_PG_NUMERIC_FNS = re.compile(
+    r"\b(?:floor|ceil|ceiling|round|trunc|extract|date_part|sign)\s*\(",
+    re.IGNORECASE,
+)
+_SCOPE_REF = re.compile(r"__scope_(\d+)(?!\d)")  # a held-out block
+# PySpark logs each failed analysis, traceback and all, at ERROR: a
+# trial that fails by design (`_trial`) stays out of that log
+_IN_TRIAL = threading.local()
+for _name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+    PySparkLogger.getLogger(_name).addFilter(
+        lambda _r: not getattr(_IN_TRIAL, "on", False)
+    )
+
+
+def _trial(analyze):
+    """``analyze()``, or None when it fails (fail-open typing)."""
+    was, _IN_TRIAL.on = getattr(_IN_TRIAL, "on", False), True
+    try:
+        return analyze()
+    except Exception:  # any analysis failure: untyped
+        return None
+    finally:
+        _IN_TRIAL.on = was
+
+
+class _Scope:
+    """One query block's typing. The typed passes see the block's text
+    with each nested block held out as a ``__scope_N`` placeholder and
+    ask a `_Scope` about an operand of it: its type (`type_of`, the one
+    trial typing, memoized) and what feeds it (`float_fed`,
+    `numeric_agg`, `pg_numeric`), a nested block answering for its
+    select list from its own scope, so no operand is ever typed or
+    named against another block's columns. The frame (a zero-argument
+    callable) is built on first use only."""
+
+    def __init__(self, lsql, lits, restore, frame, blocks, value) -> None:
+        self._lsql, self._lits, self._build = lsql, lits, frame
+        # `_restore` puts the nested blocks' typed text back in place;
+        # `_blocks` holds every block's scope, `_value` its select list
+        self._restore, self._blocks, self._value = restore, blocks, value
+        self._frame: DataFrame | None = None
+        self._types: dict[str, DataType | None] = {}
+
+    def frame(self) -> DataFrame:
+        if self._frame is None:
+            self._frame = self._build()
+        return self._frame
+
+    def type_of(self, text: str) -> DataType | None:
+        """The Spark type operand ``text`` analyzes to over the frame
+        (a nested block types as its scalar subquery); None when it
+        does not analyze (an unresolved column fails open, never
+        loudly), and for a lambda fragment (the age() emission's
+        ``__p``/``__q`` without the ``->`` binding them), which cannot
+        type standalone and is never tried."""
+        text = text.strip()
+        if text not in self._types:
+            self._types[text] = None
+            if "->" in text or not re.search(r"\b__[pq]\b", text):
+                lsql = self._lsql
+                self._types[text] = _trial(lambda: self.frame().select(
+                    F.expr(lsql._spark_text(lsql._unmask_strings(
+                        self._restore(text), self._lits
+                    )))
+                ).schema[0].dataType)
+        return self._types[text]
+
+    def _parts(self, text: str):
+        """``text`` with this scope, then what each nested block in it
+        yields with that block's scope, at any depth."""
+        yield text, self
+        for m in _SCOPE_REF.finditer(text):
+            inner = self._blocks[int(m.group(1))]
+            yield from inner._parts(inner._value)
+
+    def float_fed(self, text: str) -> bool:
+        """An explicit float cast or constructor, or a float column of
+        its own block's frame, feeds operand ``text``."""
+        return any(
+            _FLOAT_MARK.search(t) or any(
+                f.dataType.simpleString() in ("double", "float")
+                and re.search(rf"\b{re.escape(f.name)}\b", t, re.IGNORECASE)
+                for f in sc.frame().schema.fields
+            )
+            for t, sc in self._parts(text)
+        )
+
+    def numeric_agg(self, text: str) -> bool:
+        """An avg/stddev/variance call feeds operand ``text``."""
+        return any(_NUMERIC_AGG.search(t) for t, _ in self._parts(text))
+
+    def pg_numeric(self, text: str) -> bool:
+        """PG types operand ``text`` numeric where Spark may say
+        integral: a `_PG_NUMERIC_FNS` call feeds it, or a sum() whose
+        argument types bigint (or not at all: fail open)."""
+        for t, sc in self._parts(text):
+            if _PG_NUMERIC_FNS.search(t):
+                return True
+            for sm in re.finditer(r"\bsum\s*\(", t, re.IGNORECASE):
+                end = sc._lsql._balanced_end(t, sm.end() - 1)
+                arg = sc.type_of(re.sub(
+                    r"^\s*(?:DISTINCT|ALL)\b", "", t[sm.end(): end - 1],
+                    flags=re.IGNORECASE,
+                )) if end > 0 else None
+                if arg is None or arg.simpleString() == "bigint":
+                    return True
+        return False
 
 
 class LakeSQL:
@@ -6502,7 +6722,6 @@ class LakeSQL:
                 return view  # explicit alias present (binds itself)
         return f"{view} AS {corr}"
 
-    _STR_LIT = re.compile(r"'(?:[^']|'')*'")
     _PLACEHOLDER = re.compile(r"\x00(\d+)\x00")
     # one left-to-right scan over the three PG literal spellings:
     # E'...' escape strings (C escapes are decoded — PG's only literal
@@ -6859,16 +7078,12 @@ class LakeSQL:
         rcte = self._match_recursive_union(s)
         if rcte is not None:
             return self._recursive_union_distinct(*rcte)
-        # the pruning rewrite applies only to a SINGLE-select statement
-        # over ONE lake table (set ops / subqueries / CTEs have other
-        # WHERE clauses that must not leak into the shared binding)
+        # the pruning rewrite applies only to a statement of ONE query
+        # block over ONE lake table (set ops / subqueries / CTEs have
+        # other WHERE clauses that must not leak into the shared
+        # binding); split on masked text, so a 'select' literal is data
         lone_ref = None
-        if (
-            len(re.findall(r"\bSELECT\b", s, re.IGNORECASE)) == 1
-            and not re.search(
-                r"\bUNION\b|\bINTERSECT\b|\bEXCEPT\b", s, re.IGNORECASE
-            )
-        ):
+        if len(_query_scopes(self._mask_strings(s)[0])) == 1:
             refs = set()
             for m2 in self._TT.finditer(s):
                 if any(m2.group(i) for i in (3, 4, 5, 6)):
@@ -6900,10 +7115,11 @@ class LakeSQL:
         view, then the typed post-bind passes run in order. Returns
         the literal-masked text and its literals. ``lone_ref`` names
         the one lake table a single-select statement scans, which
-        binds manifest-pruned; ``frame`` (a zero-argument callable,
-        for DML the target's rows) types the passes' operands outside
-        any subquery, else each pass types against the statement's
-        FROM scope."""
+        binds manifest-pruned. The passes type each query block's
+        operands (`_query_scopes`) against that block's one frame:
+        ``frame`` (a zero-argument callable: for DML and MERGE the
+        target's schema) for the outermost block, else the block's
+        own FROM clause (`_typing_frame`)."""
 
         def bind(m: re.Match) -> str:
             view = bind_target(m)
@@ -7031,7 +7247,36 @@ class LakeSQL:
         s = self._unmask_strings(_bpm, _bplits)
         masked, lits = self._mask_strings(self._TT.sub(bind, s))
 
-        def typed(text: str, frame) -> str:
+        # each query block types innermost first against its own
+        # frame, its nested blocks held out as placeholders, so no
+        # operand ever types against another block's columns
+        scopes = _query_scopes(masked)
+        blocks: dict[int, _Scope] = {}
+        typed: dict[int, str] = {}
+
+        def held(i: int, start: int, end: int) -> str:
+            out, pos = [], start
+            for j, sc in enumerate(scopes):
+                if sc.parent == i and start <= sc.start < end:
+                    out += [masked[pos: sc.start], f"__scope_{j}"]
+                    pos = sc.end
+            return "".join(out) + masked[pos:end]
+
+        def restore(text: str) -> str:
+            return _SCOPE_REF.sub(lambda m: typed[int(m.group(1))], text)
+
+        for i in reversed(range(len(scopes))):
+            sc = scopes[i]
+            items = sc.items and self._unmask_strings(
+                restore(held(i, *sc.items)), lits
+            )
+            # what the block yields: its text before ``FROM``
+            value = held(i, sc.start, sc.items[0] - 4 if sc.items else sc.end)
+            scope = blocks[i] = _Scope(self, lits, restore, (
+                frame if i == 0 and frame
+                else functools.partial(self._typing_frame, items)
+            ), blocks, value)
+            text = held(i, sc.start, sc.end)
             for rewrite in (
                 self._rewrite_typed_arith,
                 self._rewrite_float_round,
@@ -7040,34 +7285,9 @@ class LakeSQL:
                 self._rewrite_array_scalar_concat,
                 self._rewrite_array_text_cast,
             ):
-                text = rewrite(text, lits, frame)
-            return text
-
-        if frame is None:
-            return typed(masked, None), lits
-        # ``frame`` types only the operands outside any subquery: a
-        # (SELECT ...) is its own scope, so as in a SELECT whose WHERE
-        # holds one, its column operands stay untyped (only literals
-        # type) while it stands in the outer text as an untypable name
-        subs: list[str] = []
-        outer, pos = [], 0
-        for m in re.finditer(
-            r"\(\s*(?:SELECT|WITH)\b", masked, re.IGNORECASE
-        ):
-            end = self._balanced_end(masked, m.start())
-            if m.start() < pos or end < 0:
-                continue  # nested in a held subquery, or unbalanced
-            subs.append(typed(masked[m.start() + 1: end - 1], lambda: None))
-            outer.append(
-                f"{masked[pos: m.start()]}(__subquery_{len(subs) - 1})"
-            )
-            pos = end
-        outer.append(masked[pos:])
-        masked = re.sub(
-            r"\b__subquery_(\d+)\b", lambda m: subs[int(m.group(1))],
-            typed("".join(outer), frame),
-        )
-        return masked, lits
+                text = rewrite(text, lits, scope)
+            typed[i] = restore(text)
+        return typed[0], lits
 
     def _render_calendar_cols(self, df: DataFrame) -> DataFrame:
         """Top-level projections typed CalendarIntervalType (age()
@@ -7096,7 +7316,7 @@ class LakeSQL:
         return df.select(*cols)
 
     def _rewrite_float_round(
-        self, masked: str, lits: list[str], frame=None
+        self, masked: str, lits: list[str], scope: _Scope
     ) -> str:
         """r10 battery find: PG ``round(float8)`` is HALF-EVEN (C
         rint: round(2.5::float8) = 2) while Spark's round is half-up
@@ -7105,10 +7325,6 @@ class LakeSQL:
         ``bround`` (HALF_EVEN). Numeric/decimal operands keep round
         (PG numeric rounding is half-away, which Spark's round
         matches). Fails OPEN on untypable operands."""
-        if not re.search(r"\bround\s*\(", masked, re.IGNORECASE):
-            return masked
-        frame = self._frame_of(masked, lits, frame)
-
         out = masked
         for m in reversed(
             list(re.finditer(r"\bround\s*\(", out, re.IGNORECASE))
@@ -7120,28 +7336,9 @@ class LakeSQL:
             if len(args) != 1:
                 continue  # two-arg round: numeric path in PG
             a0 = args[0].strip()
-            if "->" in a0 or re.search(r"\b__[pq]\b", a0):
-                continue
-            fr = frame()
-            if fr is None:
-                continue
-            try:
-                dt = (
-                    fr.select(
-                        F.expr(
-                            self._spark_text(
-                                self._unmask_strings(a0, lits)
-                            )
-                        )
-                    ).schema[0].dataType.simpleString()
-                )
-            except Exception:
-                continue
-            if dt not in ("double", "float"):
-                continue
-            out = (
-                out[: m.start()] + f"bround({a0})" + out[end:]
-            )
+            dt = scope.type_of(a0)
+            if dt and dt.simpleString() in ("double", "float"):
+                out = out[: m.start()] + f"bround({a0})" + out[end:]
         return out
 
     # integer cast targets in PG spelling (this pass runs BEFORE
@@ -7150,24 +7347,9 @@ class LakeSQL:
         r"::\s*(integer|int2|int4|int8|smallint|bigint|int)\b(?!\s*\[)",
         re.IGNORECASE,
     )
-    # operands whose Spark type is double but whose PG type would be
-    # genuinely float: an explicit float cast/ctor anywhere inside
-    _FLOAT_MARK = re.compile(
-        r"::\s*(?:float[48]?|double(?:\s+precision)?|real)\b"
-        r"|\bCAST\s*\([^()]*\bAS\s+(?:float[48]?|double(?:\s+precision)?"
-        r"|real)\s*\)"
-        r"|\b(?:random|pi)\s*\(",
-        re.IGNORECASE,
-    )
-    # aggregates PG types NUMERIC over integer inputs (Spark: double)
-    _NUMERIC_AGG = re.compile(
-        r"\b(?:avg|stddev|stddev_pop|stddev_samp|variance|var_pop"
-        r"|var_samp)\s*\(",
-        re.IGNORECASE,
-    )
 
     def _rewrite_int_cast_rounding(
-        self, masked: str, lits: list[str], frame=None
+        self, masked: str, lits: list[str], scope: _Scope
     ) -> str:
         """PG ROUNDS fractional→integer casts; Spark's cast TRUNCATES
         toward zero — ``2.5::int`` = 2 where PG says 3, silently
@@ -7184,49 +7366,20 @@ class LakeSQL:
         native cast (pre-r11 truncation), never loudly."""
         if "::" not in masked and not self._CAST_HEAD.search(masked):
             return masked
-        # no reconstructible FROM scope (subquery / set op / multi-
-        # select): an EMPTY frame still types column-free operands —
-        # literal casts round PG-style everywhere; column refs fail
-        # analysis → fail OPEN as before
-        frame = self._frame_of(masked, lits, frame, or_empty=True)
-
-        def float_cols() -> set[str]:
-            return {
-                f.name.lower()
-                for f in frame().schema.fields
-                if f.dataType.simpleString() in ("double", "float")
-            }
 
         def wrap_fn(txt: str) -> str | None:
             """'round' | 'bround' | None (=leave the cast alone)."""
-            t = txt.strip()
-            if "->" in t or re.search(r"\b__[pq]\b", t):
-                return None  # lambda fragment: untypable standalone
-            fr = frame()
-            try:
-                dt = (
-                    fr.select(
-                        F.expr(
-                            self._spark_text(
-                                self._unmask_strings(t, lits)
-                            )
-                        )
-                    ).schema[0].dataType.simpleString()
-                )
-            except Exception:
+            dt = scope.type_of(txt)
+            dt = dt and dt.simpleString()
+            if dt is None:
                 return None
             if dt.startswith("decimal"):
                 return "round"
             if dt not in ("double", "float"):
                 return None  # already integral / string / date ...
-            if self._FLOAT_MARK.search(t):
+            if scope.float_fed(txt):
                 return "bround"
-            if any(
-                re.search(rf"\b{re.escape(c)}\b", t, re.IGNORECASE)
-                for c in float_cols()
-            ):
-                return "bround"  # a float column feeds the expression
-            if self._NUMERIC_AGG.search(t):
+            if scope.numeric_agg(txt):
                 return "round"  # PG types avg(int)/stddev(int) numeric
             return "bround"  # double from float math (power, ln, /)
 
@@ -7318,7 +7471,7 @@ class LakeSQL:
     )
 
     def _rewrite_interval_dateformat(
-        self, masked: str, lits: list[str], frame=None
+        self, masked: str, lits: list[str], scope: _Scope
     ) -> str:
         """``to_char(<runtime interval>, tpl)`` — the elapsed-time
         report idiom (``to_char(t2 - t1, 'HH24:MI:SS')``). The
@@ -7333,7 +7486,6 @@ class LakeSQL:
         with tokens meaningless for intervals stay loud."""
         if not re.search(r"\bdate_format\s*\(", masked, re.IGNORECASE):
             return masked
-        frame = self._frame_of(masked, lits, frame)
 
         def L(raw: str) -> str:
             lits.append("'" + raw.replace("'", "''") + "'")
@@ -7347,24 +7499,9 @@ class LakeSQL:
             if not pm:
                 continue
             x = args[0].strip()
-            if "->" in x or re.search(r"\b__[pq]\b", x):
-                continue
-            fr = frame()
-            if fr is None:
-                continue
-            try:
-                ds = (
-                    fr.select(
-                        F.expr(
-                            self._spark_text(
-                                self._unmask_strings(x, lits)
-                            )
-                        )
-                    ).schema[0].dataType.simpleString()
-                )
-            except Exception:
-                continue
-            if not ds.startswith("interval ") or ds == "interval":
+            ds = scope.type_of(x)
+            ds = ds.simpleString() if ds is not None else ""
+            if not ds.startswith("interval "):
                 continue  # not an interval / calendar: leave as-is
             is_dt = "day" in ds or "hour" in ds or "second" in ds \
                 or "minute" in ds
@@ -7446,7 +7583,7 @@ class LakeSQL:
         return out
 
     def _rewrite_array_scalar_concat(
-        self, masked: str, lits: list[str], frame=None
+        self, masked: str, lits: list[str], scope: _Scope
     ) -> str:
         """PG ``array || element`` / ``element || array`` (arrayfuncs.c
         array_append/array_prepend operators): ``array[1,2] || 3`` is
@@ -7462,25 +7599,10 @@ class LakeSQL:
         matches PG's left-associative parse."""
         if "||" not in masked:
             return masked
-        frame = self._frame_of(masked, lits, frame)
 
         def dtype(txt: str) -> str | None:
-            t = txt.strip()
-            if "->" in t or re.search(r"\b__[pq]\b", t):
-                return None
-            fr = frame()
-            if fr is None:
-                return None
-            try:
-                return fr.select(
-                    F.expr(
-                        self._spark_text(
-                            self._unmask_strings(t, lits)
-                        )
-                    )
-                ).schema[0].dataType.simpleString()
-            except Exception:
-                return None
+            dt = scope.type_of(txt)
+            return dt and dt.simpleString()
 
         out = masked
         # bounded fixpoint: in ``array[1] || 2 || 3`` the RIGHT site
@@ -7515,7 +7637,7 @@ class LakeSQL:
         return out
 
     def _rewrite_array_text_cast(
-        self, masked: str, lits: list[str], frame=None
+        self, masked: str, lits: list[str], scope: _Scope
     ) -> str:
         """``array_expr::text`` renders PG's ``{1,2,3}`` form, not
         Spark's ``[1, 2, 3]`` — a silent divergence for anything
@@ -7532,7 +7654,6 @@ class LakeSQL:
             lits.append("'" + raw.replace("'", "''") + "'")
             return f"\x00{len(lits) - 1}\x00"
 
-        frame = self._frame_of(masked, lits, frame)
         out = masked
         for m in reversed(
             list(re.finditer(r"::\s*string\b", out, re.IGNORECASE))
@@ -7541,16 +7662,8 @@ class LakeSQL:
             if left is None:
                 continue
             expr = out[left[0]: left[1]]
-            fr = frame()
-            if fr is None:
-                continue
-            try:
-                dt = fr.select(
-                    F.expr(
-                        self._spark_text(self._unmask_strings(expr, lits))
-                    )
-                ).schema[0].dataType
-            except Exception:
+            dt = scope.type_of(expr)
+            if dt is None:
                 continue
             ds = dt.simpleString()
             if ds == "double":
@@ -7562,24 +7675,11 @@ class LakeSQL:
                 # operands rescales; float inputs keep PG float8 text.
                 t = expr.strip()
                 am = re.match(r"avg\s*\(", t, re.IGNORECASE)
-                if (
-                    am
-                    and self._balanced_end(t, am.end() - 1) == len(t)
-                    and not self._FLOAT_MARK.search(t)
-                    and not any(
-                        f.dataType.simpleString() in ("double", "float")
-                        and re.search(
-                            rf"\b{re.escape(f.name)}\b", t,
-                            re.IGNORECASE,
-                        )
-                        for f in fr.schema.fields
-                    )
-                ):
-                    out = (
-                        out[: left[0]]
-                        + f"cast(cast({t} as decimal(38,16)) as string)"
-                        + out[m.end():]
-                    )
+                if am and self._balanced_end(t, am.end() - 1) == len(t) \
+                        and not scope.float_fed(t):
+                    out = out[: left[0]] + (
+                        f"cast(cast({t} as decimal(38,16)) as string)"
+                    ) + out[m.end():]
                 continue
             if ds == "interval" or ds.startswith("interval "):
                 rep = self._interval_text_expr(expr, ds, L)
@@ -7795,94 +7895,27 @@ class LakeSQL:
     # date - date. Both are SILENT divergences that no DuckDB
     # differential can see (DuckDB shares Spark's float-division and
     # interval-subtraction behavior) — only PG-pinned unit tests hold
-    # them. Typing is trial-resolution against a frame built from the
-    # statement's own FROM clause (analysis only, never a job), the
-    # same machinery _fetch_with_ties uses for ORDER BY keys.
+    # them. Typing is trial-resolution against the query block's frame
+    # (`_Scope.type_of`; analysis only, never a job), the same
+    # machinery _fetch_with_ties uses for ORDER BY keys.
     # ------------------------------------------------------------------
 
     _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
-    # Spark types these INTEGRAL where PG types them NUMERIC/double
-    # (floor/ceil return same-as-input numeric in PG, extract is
-    # numeric since PG 14, date_part is double, round/trunc/sign on
-    # ints implicitly go through numeric) — an operand containing one
-    # must never trigger the integer-division rewrite: PG would do
-    # numeric (non-truncating) division there.
-    _PG_NUMERIC_FNS = re.compile(
-        r"\b(?:floor|ceil|ceiling|round|trunc|extract|date_part|sign)"
-        r"\s*\(",
-        re.IGNORECASE,
-    )
-    _SUM_CALL = re.compile(r"\bsum\s*\(", re.IGNORECASE)
 
-    def _frame_of(self, masked: str, lits: list[str], frame=None,
-                  or_empty: bool = False):
-        """A typed pass's frame getter: ``frame`` (the caller's
-        zero-argument callable) or the statement's FROM scope
-        (`_typing_frame`), built on the first call and only then — a
-        pass that finds nothing to type builds none. ``or_empty``
-        stands an empty one-row frame in for a missing scope."""
-        memo: list = []
-
-        def get():
-            if not memo:
-                fr = frame() if frame else self._typing_frame(masked, lits)
-                if fr is None and or_empty:
-                    fr = self.spark.range(1).select()
-                memo.append(fr)
-            return memo[0]
-
-        return get
-
-    # the depth-0 keywords that end a FROM clause
-    _FROM_END = (
-        "WHERE", "GROUP", "HAVING", "WINDOW", "ORDER", "LIMIT", "OFFSET",
-        "FETCH", "FOR", "UNION", "INTERSECT", "EXCEPT",
-    )
-
-    def _typing_frame(self, masked: str, lits: list[str]):
-        """A DataFrame whose schema carries the statement's FROM-scope
-        columns, for static typing of operand expressions. None when
-        the scope can't be reconstructed (set ops, unparseable FROM,
-        subqueries OUTSIDE the FROM clause) — callers must fail OPEN
-        to the unrewritten text. One outer SELECT only, but derived
-        tables are fine (r12, verdict missing #2): a SELECT nested
-        inside the FROM clause span is part of the outer scope
-        (``FROM (SELECT ts1 t1, ts2 t2) x``), while a scalar subquery
-        in the select list or WHERE has its OWN scope whose names
-        wouldn't resolve against the outer frame — a wrong frame must
-        never mistype an operand."""
-        sels = list(re.finditer(r"\bSELECT\b", masked, re.IGNORECASE))
-        if not sels:
-            return None
-        for kw in ("UNION", "INTERSECT", "EXCEPT"):
-            if self._depth0_kw(masked, kw) is not None:
-                return None
-        fm = self._depth0_kw(masked, "FROM")
-        if fm is None:
-            return self.spark.range(1).select() if len(sels) == 1 else None
-        tail = masked[fm.end():]
-        end = len(tail)
-        for kw in self._FROM_END:
-            m = self._depth0_kw(tail, kw)
-            if m is not None:
-                end = min(end, m.start())
-        if any(
-            not (fm.end() <= m.start() < fm.end() + end)
-            for m in sels[1:]
-        ):
-            return None
-        frm = self._unmask_strings(tail[:end], lits).strip()
-        if not frm:
-            return None
-        try:
-            return self.spark.sql(
-                self._spark_text(f"SELECT * FROM {frm}")
-            )
-        except Exception:
-            return None
+    def _typing_frame(self, items: str | None) -> DataFrame:
+        """The frame a query block's operands type against: the rows
+        of its FROM clause ``items`` (unmasked, derived tables already
+        typed), analysis only, never a job. With no FROM clause, or
+        one that does not analyze alone (a CTE's name, a LATERAL
+        reference), an empty one-row frame stands in: column operands
+        then fail open and literals still type."""
+        df = _trial(lambda: self.spark.sql(
+            self._spark_text(f"SELECT * FROM {items}")
+        )) if items else None
+        return df if df is not None else self.spark.range(1).select()
 
     def _rewrite_typed_arith(
-        self, masked: str, lits: list[str], frame=None
+        self, masked: str, lits: list[str], scope: _Scope
     ) -> str:
         """PG ``int / int`` truncates toward zero (7/2 = 3, -7/2 = -3);
         Spark's ``/`` always yields double. PG ``date - date`` is an
@@ -7891,14 +7924,12 @@ class LakeSQL:
         rewrites to ``div(l, r)`` (Spark's IntegralDivide — verified
         trunc-toward-zero like PG) resp. ``datediff(l, r)``. Integer
         literals type directly; other operands trial-resolve against
-        the FROM-scope frame. Uncapturable or untypable operands fail
+        the query block's frame. Uncapturable or untypable operands fail
         OPEN to Spark's native operator (never loudly): a missed
         rewrite leaves the pre-r9 behavior, a wrong one would corrupt
         float math."""
         if "/" not in masked and "-" not in masked:
             return masked
-        frame = self._frame_of(masked, lits, frame)
-        type_memo: dict[str, str] = {}
 
         def dtype_of(txt: str) -> str | None:
             """'integral' | 'date' | 'other' | None (=unknown)."""
@@ -7911,67 +7942,16 @@ class LakeSQL:
                 return "other"
             if t.startswith("\x00"):
                 return "other"  # string literal
-            if "->" in txt or re.search(r"\b__[pq]\b", txt):
-                # lambda fragment (e.g. from the age() emission):
-                # cannot type standalone — skip the trial entirely
-                # instead of paying a guaranteed analysis failure
-                return "other"
-            if txt in type_memo:
-                return type_memo[txt]
-            fr = frame()
-            out: str | None = None
-            if fr is not None:
-                try:
-                    nm = spark_type(txt)
-                    if nm in self._INTEGRAL_TYPES:
-                        if self._PG_NUMERIC_FNS.search(txt):
-                            # Spark says integral but PG types the
-                            # expression numeric — never int-divide
-                            out = "other"
-                        elif sum_over_bigint(txt):
-                            # PG sum(bigint) returns NUMERIC (only
-                            # sum over int/smallint stays integral)
-                            out = "other"
-                        else:
-                            out = "integral"
-                    elif nm == "date":
-                        out = "date"
-                    else:
-                        out = "other"
-                except Exception:
-                    out = None
-            type_memo[txt] = out
-            return out
-
-        def spark_type(txt: str) -> str:
-            return (
-                frame()
-                .select(
-                    F.expr(
-                        self._spark_text(self._unmask_strings(txt, lits))
-                    )
-                )
-                .schema[0]
-                .dataType.simpleString()
-            )
-
-        def sum_over_bigint(txt: str) -> bool:
-            """True when any sum() inside ``txt`` aggregates a bigint
-            (PG result type numeric → non-truncating division)."""
-            for sm in self._SUM_CALL.finditer(txt):
-                end = self._balanced_end(txt, sm.end() - 1)
-                if end < 0:
-                    return True  # unparseable: fail open
-                inner = re.sub(
-                    r"^\s*(?:DISTINCT|ALL)\b", "",
-                    txt[sm.end(): end - 1], flags=re.IGNORECASE,
-                )
-                try:
-                    if spark_type(inner) == "bigint":
-                        return True
-                except Exception:
-                    return True  # untypable arg: fail open
-            return False
+            dt = scope.type_of(txt)
+            if dt is None:
+                return None
+            nm = dt.simpleString()
+            if nm in self._INTEGRAL_TYPES:
+                # Spark says integral where PG types the expression
+                # numeric (floor, extract, ...; sum(bigint) returns
+                # NUMERIC): never int-divide
+                return "other" if scope.pg_numeric(txt) else "integral"
+            return "date" if nm == "date" else "other"
 
         def chain_left(i: int) -> tuple[int, int] | None:
             """Left operand of / extends through the whole preceding
@@ -8113,11 +8093,9 @@ class LakeSQL:
             parsed.append((kt, desc, nulls))
 
         def resolves(expr_txt: str) -> bool:
-            try:
-                body_df.select(F.expr(self._spark_text(U(expr_txt))))
-                return True
-            except Exception:
-                return False
+            return _trial(lambda: body_df.select(
+                F.expr(self._spark_text(U(expr_txt)))
+            )) is not None
 
         # PG resolves ORDER BY expressions against the FROM relation,
         # not just the projected columns. When a key doesn't resolve
@@ -9577,23 +9555,26 @@ class LakeSQL:
                 # rows failing the condition are left UNCHANGED)
                 set_txt = cm.group(3)
                 tm1 = re.match(rf"INSERT\s+INTO\s+{_TBL}", s, re.IGNORECASE)
-                tns = tm1.group(1).lower() if tm1 else ""
-                tnm = tm1.group(2).lower() if tm1 else ""
+                if not tm1:
+                    raise LakehouseError(f"cannot parse INSERT: {U(s)[:80]!r}")
+                tns, tnm = tm1.group(1).lower(), tm1.group(2).lower()
+                tgt = self._load(tns, tnm)
+                # ``excluded`` is the incoming row, in the target's shape
+                frame = self._schema_frame(tgt, tgt.schema)
 
                 def excl_to_src(txt: str) -> Column:
-                    return self._merge_expr(txt, tns, tnm, "excluded", _lits)
+                    return self._merge_expr(
+                        txt, tns, tnm, "excluded", _lits, frame
+                    )
 
                 cwm = self._depth0_kw(set_txt, "WHERE")
                 cond = None
                 if cwm is not None:
                     cond = excl_to_src(set_txt[cwm.end():].strip())
                     set_txt = set_txt[: cwm.start()]
-                if tns and tnm and self.catalog.table_exists(tns, tnm):
-                    # PG refuses SET of a GENERATED ALWAYS identity
-                    # column in ON CONFLICT DO UPDATE too (r12)
-                    self._refuse_identity_always_set(
-                        self._load(tns, tnm), _set_items(set_txt)
-                    )
+                # PG refuses SET of a GENERATED ALWAYS identity column
+                # in ON CONFLICT DO UPDATE too (r12)
+                self._refuse_identity_always_set(tgt, _set_items(set_txt))
                 assignments = {
                     k: excl_to_src(v) for k, v in _set_items(set_txt)
                 }
@@ -10725,16 +10706,15 @@ class LakeSQL:
         lakehouse DML scan, so outer references inside subqueries
         resolve against the target row. Each expression is bound and
         typed by `_bind_and_type`, as `_select` binds a statement,
-        its operands outside any subquery against the target's rows —
-        a frame built on first use only, so an expression no typed
-        pass fires on builds no frame and runs no job. No WHERE
+        its operands outside any subquery against the target's schema
+        (`_schema_frame`). No WHERE
         matches every row; ``SET c = DEFAULT`` restores the declared
         default."""
         qual = talias or rf"(?:{ns}\s*\.\s*)?{name}"
         corr = re.compile(
             rf"(?<![\w.]){qual}\s*\.(?=\s*{_IDENT})", re.IGNORECASE
         )
-        frame = self._frame_of("", lits, lambda: tbl.read().alias(_DML_ALIAS))
+        frame = self._schema_frame(tbl)
 
         def column(text: str) -> Column:
             # PG scoping: inside a subquery whose FROM binds the same
@@ -10770,20 +10750,15 @@ class LakeSQL:
     def _rebinding_subqueries(
         self, masked: str, corr: str
     ) -> list[tuple[int, int]]:
-        """Spans of the ``(SELECT ...)`` subqueries in ``masked`` whose
-        own FROM clause binds the correlation name ``corr`` — an
-        unaliased ``[ns.]corr`` or any item aliased ``corr`` — where,
-        as in PG, ``corr.col`` names the inner relation."""
+        """Spans of the query blocks nested in ``masked`` whose own
+        FROM clause binds the correlation name ``corr`` — an unaliased
+        ``[ns.]corr`` or any item aliased ``corr`` — where, as in PG,
+        ``corr.col`` names the inner relation."""
         spans = []
-        for m in re.finditer(r"\(\s*SELECT\b", masked, re.IGNORECASE):
-            end = self._balanced_end(masked, m.start())
-            body = masked[m.start() + 1: end - 1] if end > 0 else ""
-            fm = self._depth0_kw(body, "FROM")
-            if fm is None:
+        for sc in _query_scopes(masked)[1:]:
+            if sc.items is None:
                 continue
-            items = body[fm.end():]
-            stops = [self._depth0_kw(items, kw) for kw in self._FROM_END]
-            items = items[: min([k.start() for k in stops if k] or [len(items)])]
+            items = masked[sc.items[0]: sc.items[1]]
             while "(" in items:  # derived tables and ON-clause calls
                 flat = re.sub(r"\([^()]*\)", " __d ", items)
                 if flat == items:
@@ -10801,7 +10776,7 @@ class LakeSQL:
                 if alias is None or alias.lower() in self._CORR_STOP:
                     alias = im.group(1)
                 if alias.lower() == corr.lower():
-                    spans.append((m.start(), end))
+                    spans.append((sc.start, sc.end))
                     break
         return spans
 
@@ -10830,14 +10805,28 @@ class LakeSQL:
                 extra.append(part)
         return keys, extra
 
+    def _schema_frame(self, tbl: LakeTable, src=None):
+        """The schema-only frame DML and MERGE-side expressions type
+        against, built on first use, so typing never lists files: the
+        target's columns aliased ``__target`` plus, given ``src`` (a
+        zero-argument callable returning the source row's schema),
+        ``__src`` holding the source row, the shape
+        `_build_merge_join` evaluates MERGE-side expressions over."""
+        return functools.cache(lambda: self.spark.createDataFrame([], (
+            StructType([*tbl.schema().fields, *(
+                [StructField("__src", src())] if src else []
+            )])
+        )).alias(_DML_ALIAS))
+
     def _merge_expr(
-        self, text: str, ns: str, talias: str, salias: str, lits
+        self, text: str, ns: str, talias: str, salias: str, lits, frame
     ) -> Column:
         """A MERGE-side expression (MERGE clauses, join DML, ON
         CONFLICT): a column qualified by the target's correlation name
         (``ns.`` prefix allowed) is the bare target column, one
         qualified by the source's is ``__src.`` — the struct the MERGE
-        join carries the source row in."""
+        join carries the source row in. Bound and typed by
+        `_bind_and_type` against ``frame`` (`_schema_frame`)."""
         e = re.sub(
             rf"(?<![\w.]){salias}\s*\.\s*({_IDENT})", r"__src.\1", text,
             flags=re.IGNORECASE,
@@ -10846,7 +10835,10 @@ class LakeSQL:
             rf"(?<![\w.])(?:{ns}\s*\.\s*)?{talias}\s*\.\s*({_IDENT})",
             r"\1", e, flags=re.IGNORECASE,
         )
-        return F.expr(self._spark_text(self._unmask_strings(e, lits)))
+        masked, blits = self._bind_and_type(
+            self._unmask_strings(e, lits), frame=frame
+        )
+        return F.expr(self._spark_text(self._unmask_strings(masked, blits)))
 
     # DELETE FROM t[@b] [[AS] a] <rest> / UPDATE t[@b] [[AS] a] SET <rest>
     _DELETE = re.compile(
@@ -10909,8 +10901,11 @@ class LakeSQL:
                     f"{what} needs alias-qualified key equalities in "
                     f"WHERE: {where[:80]!r}"
                 )
+            frame = self._schema_frame(tbl, lambda: source.schema)
             cond = (
-                self._merge_expr(" AND ".join(extra), ns, corr, salias, _lits)
+                self._merge_expr(
+                    " AND ".join(extra), ns, corr, salias, _lits, frame
+                )
                 if extra else None
             )
             call = {
@@ -10923,7 +10918,7 @@ class LakeSQL:
             else:
                 call["when_matched_update"] = {
                     re.sub(rf"^{corr}\.", "", k.strip(), flags=re.IGNORECASE):
-                    self._merge_expr(v, ns, corr, salias, _lits)
+                    self._merge_expr(v, ns, corr, salias, _lits, frame)
                     for k, v in _set_items(sets)
                 }
             return tbl, U(where), call
@@ -11005,9 +11000,10 @@ class LakeSQL:
         talias, salias = talias.lower(), salias.lower()  # PG ident folding
         tbl = self._load(ns, name, branch)
         source, keys = self._merge_using(m, _lits)
+        frame = self._schema_frame(tbl, lambda: source.schema)
 
         def rewrite(expr: str) -> Column:
-            return self._merge_expr(expr, ns, talias, salias, _lits)
+            return self._merge_expr(expr, ns, talias, salias, _lits, frame)
 
         kw = {
             "when_matched_update": None,

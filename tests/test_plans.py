@@ -600,6 +600,53 @@ def test_dml_expressions_through_one_path():
     )
 
 
+def test_one_typing_scope_rule():
+    """Every SQL expression's operands type per query block through one
+    frame and one trial-typing helper: the per-pass frame getter
+    (``_frame_of`` and its ``or_empty`` flag) is gone, ``.schema[0]``
+    (trial-typing an operand over a frame) appears once in ``sql.py``,
+    the MERGE-side expression path (MERGE clauses, join DML, ON
+    CONFLICT) binds and types through `_bind_and_type`, and no typed
+    pass reads restored text or the frame itself."""
+    import ast
+
+    with open(os.path.join(PKG_ROOT, "sql.py")) as f:
+        src = f.read()
+    assert "_frame_of" not in src and "or_empty" not in src
+    tree = ast.parse(src)
+    trials = [
+        node.lineno for node in ast.walk(tree)
+        if isinstance(node, ast.Subscript)
+        and isinstance(node.value, ast.Attribute)
+        and node.value.attr == "schema"
+        and isinstance(node.slice, ast.Constant) and node.slice.value == 0
+    ]
+    assert len(trials) == 1, f"more than one trial-typing site: {trials}"
+    merge_expr = [
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef) and node.name == "_merge_expr"
+    ]
+    assert len(merge_expr) == 1
+    assert any(
+        isinstance(node, ast.Attribute) and node.attr == "_bind_and_type"
+        for node in ast.walk(merge_expr[0])
+    ), "_merge_expr hands Spark untyped text"
+    # a pass asks `_Scope` about an operand of its own block's text: it
+    # neither puts nested blocks' text back nor names the frame's columns
+    passes = [
+        fn for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        and any(a.arg == "scope" for a in fn.args.args)
+    ]
+    assert len(passes) == 6
+    for fn in passes:
+        seen = {
+            node.attr for node in ast.walk(fn)
+            if isinstance(node, ast.Attribute)
+        } | {node.id for node in ast.walk(fn) if isinstance(node, ast.Name)}
+        assert not seen & {"restore", "_restore", "frame"}, fn.name
+
+
 def test_broadcast_hints_on_dim_joins(spark, sf_dir):
     """q5's nation/region/supplier/customer joins must end up
     broadcast, not shuffled — r7 dropped the forced hints on the

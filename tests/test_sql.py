@@ -10,7 +10,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from pg_lakehouse_spark.lakehouse import LakeCatalog, LakehouseError
-from pg_lakehouse_spark.sql import LakeSQL
+from pg_lakehouse_spark.sql import LakeSQL, _query_scopes
 
 
 @pytest.fixture()
@@ -1125,6 +1125,25 @@ def test_sql_manifest_pruning_string_literal_masking(lsql, spark):
     assert [r.k for r in out.collect()] == [1]
     # pruning still engages on this table (bound view exists + exact)
     assert lsql.sql("SELECT * FROM db.sl WHERE k >= 2").count() == 2
+
+
+def test_sql_manifest_pruning_keyword_literal(lsql, spark):
+    """A SELECT or UNION inside a string literal is data: the lookup
+    is still one SELECT over one table and binds manifest-pruned."""
+    lsql.sql("CREATE TABLE db.kl (k BIGINT, c STRING)")
+    tbl = lsql.catalog.load_table("db", "kl")
+    for lo in (0, 10, 20):
+        tbl.append(
+            spark.createDataFrame(
+                [(lo + i, "select") for i in range(10)], "k long, c string"
+            ).coalesce(1)
+        )
+    out = lsql.sql(
+        "SELECT k FROM db.kl WHERE c IN ('select', 'a UNION b') AND k = 7"
+    )
+    assert [r.k for r in out.collect()] == [7]
+    bound = spark.table("__lake_db_kl")
+    assert bound.select(F.input_file_name()).distinct().count() == 1
 
 
 def test_sql_show_create_table(lsql):
@@ -7318,6 +7337,201 @@ def test_dml_subquery_operands_never_type_against_the_target(lsql, mode):
     lsql.sql("DELETE FROM db.st WHERE k / 2 = 3 AND EXISTS (SELECT 1 FROM db.su)")
     assert rows("SELECT k FROM db.st WHERE k IN (6, 7)") == []
     assert len(rows("SELECT k FROM db.st")) == 7
+
+
+def test_query_scopes_split_each_query_block():
+    """The scope splitter (no Spark): one block for the text, each
+    set-operation branch and each parenthesized SELECT/WITH body at
+    any depth, parents first; each block's FROM items end at its own
+    WHERE. A ``(SELECT`` inside a string literal stays data, and
+    unbalanced parentheses fail open to one block without a FROM."""
+    def blocks(sql):
+        masked, _ = LakeSQL._mask_strings(sql)
+        return [
+            (masked[sc.start: sc.end].strip(), sc.parent,
+             sc.items and masked[sc.items[0]: sc.items[1]].strip())
+            for sc in _query_scopes(masked)
+        ]
+
+    sql = (
+        "WITH c AS (SELECT k FROM t) SELECT a FROM (SELECT k / 2 AS a "
+        "FROM c) d WHERE a IN (SELECT max(k) FROM u WHERE k > "
+        "(SELECT 1))"
+    )
+    assert blocks(sql) == [
+        (sql, None, "(SELECT k / 2 AS a FROM c) d"),
+        ("SELECT k FROM t", 0, "t"),
+        ("SELECT k / 2 AS a FROM c", 0, "c"),
+        ("SELECT max(k) FROM u WHERE k > (SELECT 1)", 0, "u"),
+        ("SELECT 1", 3, None),
+    ]
+    sql = (
+        "SELECT k FROM t UNION ALL SELECT k FROM u INTERSECT "
+        "(SELECT k FROM v) EXCEPT DISTINCT SELECT 1 ORDER BY 1"
+    )
+    assert blocks(sql) == [
+        (sql, None, None),
+        ("SELECT k FROM t", 0, "t"),
+        ("SELECT k FROM u", 0, "u"),
+        ("(SELECT k FROM v)", 0, None),
+        ("SELECT k FROM v", 3, "v"),
+        ("SELECT 1", 0, None),
+    ]
+    sql = "SELECT '(SELECT 1 FROM x) UNION' FROM t WHERE k = (SELECT 2)"
+    assert [b[1:] for b in blocks(sql)] == [(None, "t"), (0, None)]
+    for sql in ("SELECT (k FROM t", "SELECT k) FROM (SELECT 1"):
+        assert blocks(sql) == [(sql, None, None)]
+
+
+def test_select_operands_type_per_query_block(lsql):
+    """Every query block types its own operands against its own FROM
+    clause, as PG's analyzer does: a subquery in the WHERE or select
+    list, a derived table, a CTE body and each set-operation branch
+    no longer leave ``int / int``, ``round(float8)`` or ``::int``
+    with Spark's semantics. Each result is PG's and the matching
+    plain SELECT's."""
+    lsql.sql("CREATE TABLE db.tq (k INT)")
+    lsql.sql("INSERT INTO db.tq VALUES (5), (6), (7)")
+    lsql.sql("CREATE TABLE db.uq (k INT, r DOUBLE)")
+    lsql.sql("INSERT INTO db.uq VALUES (2, 2.5)")
+
+    def rows(q):
+        return sorted(tuple(r) for r in lsql.sql(q).collect())
+
+    plain = rows("SELECT k FROM db.tq WHERE k / 2 = 3")
+    assert plain == [(6,), (7,)]
+    assert rows(
+        "SELECT k FROM db.tq WHERE k / 2 = 3 AND EXISTS (SELECT 1 FROM db.uq)"
+    ) == plain
+    halves = rows("SELECT k / 2 FROM db.tq")
+    assert halves == [(2,), (3,), (3,)]
+    assert rows(
+        "SELECT k / 2, (SELECT max(k) FROM db.uq) FROM db.tq"
+    ) == [(2, 2), (3, 2), (3, 2)]
+    assert rows("SELECT a FROM (SELECT k / 2 AS a FROM db.tq) d") == halves
+    assert rows("SELECT k / (SELECT max(k) FROM db.uq) FROM db.tq") == halves
+    assert rows("SELECT (SELECT avg(k) FROM db.tq WHERE k < 7)::int") == [(6,)]
+    assert rows("WITH c AS (SELECT k / 2 AS h FROM db.tq) SELECT h FROM c") \
+        == halves
+    assert rows("SELECT round(r) FROM db.uq") == [(2.0,)]  # rint: even
+    assert rows(
+        "SELECT k FROM db.uq WHERE k IN (SELECT round(r) FROM db.uq)"
+    ) == [(2,)]
+    assert rows("SELECT round(r) FROM db.uq UNION ALL SELECT 1") \
+        == [(1.0,), (2.0,)]
+    assert rows("SELECT (7) / 2 UNION ALL SELECT 1") == [(1,), (3,)]
+    assert rows("SELECT k / 2 FROM db.tq EXCEPT SELECT 2") == [(3,)]
+    assert rows(
+        "SELECT k FROM db.tq INTERSECT SELECT round(r) + 5 FROM db.uq"
+    ) == [(7,)]
+    # a nested block's operands are named and typed against its own
+    # columns, never an outer column of the same name and another type
+    lsql.sql("CREATE TABLE db.fq (k DOUBLE)")
+    lsql.sql("INSERT INTO db.fq VALUES (1.0)")
+    lsql.sql("CREATE TABLE db.bq (k BIGINT)")
+    lsql.sql("INSERT INTO db.bq VALUES (2), (3)")
+    assert rows("SELECT avg(k)::int FROM db.bq") == [(3,)]  # numeric 2.5
+    assert rows("SELECT (SELECT avg(k) FROM db.bq)::int FROM db.fq") \
+        == [(3,)]
+    assert rows("SELECT sum(k) / 2 FROM db.bq") == [(2.5,)]  # numeric 5
+    assert rows(
+        "SELECT (SELECT sum(k) FROM db.bq) / 2 FROM db.tq WHERE k = 5"
+    ) == [(2.5,)]
+
+
+def test_failed_trial_typing_logs_nothing(lsql):
+    """Fail-open trial typing (a FROM clause naming a CTE, an operand
+    correlated to an outer block) writes no error record, while a
+    statement that fails still logs as PySpark logs it."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    records = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    logger = PySparkLogger.getLogger("SQLQueryContextLogger")
+    logger.addHandler(handler)
+    try:
+        lsql.sql("CREATE TABLE db.lq (k INT)")
+        lsql.sql("INSERT INTO db.lq VALUES (2)")
+        assert lsql.sql(
+            "WITH c AS (SELECT 7 AS k) SELECT k::int FROM c"
+        ).collect()[0][0] == 7
+        assert lsql.sql(
+            "SELECT k FROM db.lq WHERE EXISTS "
+            "(SELECT 1 FROM db.lq AS i WHERE db.lq.k / 2 = 1)"
+        ).collect()[0][0] == 2
+        assert records == []
+        with pytest.raises(Exception):
+            lsql.sql("SELECT nosuch FROM db.lq")
+        assert records
+    finally:
+        logger.removeHandler(handler)
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_side_operands_type_as_select(lsql, mode):
+    """Join-DML SET, MERGE conditions, SET and INSERT VALUES, and
+    ON CONFLICT DO UPDATE type their operands against the target's
+    columns and the source row, so they store what the same SELECT
+    computes, as in PG: ``s.k / 2`` is integer division and a NUMERIC
+    2.5 ``::int`` rounds to 3."""
+    lsql.sql(
+        f"CREATE TABLE db.mq (k INT, v INT, w INT) "
+        f"WITH (write_delete_mode='{mode}', row_key='k')"
+    )
+    lsql.sql("CREATE TABLE db.sq (k INT, x DECIMAL(10, 1))")
+    lsql.sql("INSERT INTO db.sq VALUES (7, 2.5), (9, 4.5)")
+
+    def rows(q):
+        return sorted(tuple(r) for r in lsql.sql(q).collect())
+
+    want = rows("SELECT s.k, s.k / 2, s.x::int FROM db.sq AS s")
+    assert want == [(7, 3, 3), (9, 4, 5)]
+    lsql.sql("INSERT INTO db.mq VALUES (7, 0, 0)")
+    lsql.sql(
+        "UPDATE db.mq SET v = s.k / 2, w = s.x::int FROM db.sq AS s "
+        "WHERE mq.k = s.k"
+    )
+    assert rows("SELECT * FROM db.mq") == want[:1]
+    lsql.sql("UPDATE db.mq SET v = 0, w = 0")
+    lsql.sql(
+        "MERGE INTO db.mq AS m USING db.sq AS s ON m.k = s.k "
+        "WHEN MATCHED AND s.k / 2 = 3 THEN UPDATE SET v = s.k / 2, "
+        "w = s.x::int WHEN NOT MATCHED THEN INSERT (k, v, w) "
+        "VALUES (s.k, s.k / 2, s.x::int)"
+    )
+    assert rows("SELECT * FROM db.mq") == want
+    lsql.sql(
+        "INSERT INTO db.mq VALUES (7, 0, 0) "
+        "ON CONFLICT (k) DO UPDATE SET v = excluded.k / 2 + 10"
+    )
+    assert rows("SELECT k, v FROM db.mq") == [(7, 13), (9, 4)]
+
+
+def test_window_agg_shape_builds_one_typing_frame(lsql, monkeypatch):
+    """A SELECT that two typed passes fire on (``round(float)`` and
+    ``::bigint``) builds its FROM frame once, shared by every pass."""
+    lsql.sql(
+        "CREATE TABLE db.oq (o_orderpriority STRING, o_totalprice DOUBLE, "
+        "o_orderdate DATE)"
+    )
+    lsql.sql("INSERT INTO db.oq VALUES ('1-URGENT', 10.125, DATE '1995-03-01')")
+    built = []
+    frame = LakeSQL._typing_frame
+    monkeypatch.setattr(
+        LakeSQL, "_typing_frame",
+        lambda self, *a: built.append(a) or frame(self, *a),
+    )
+    got = lsql.sql(
+        "SELECT o_orderpriority, count(*) AS n, "
+        "sum(round(o_totalprice * 100)::bigint)::bigint AS cents "
+        "FROM db.oq WHERE o_orderdate BETWEEN '1995-01-01'::timestamp "
+        "AND '1995-06-01'::timestamp GROUP BY o_orderpriority"
+    ).collect()
+    assert [tuple(r) for r in got] == [("1-URGENT", 1, 1012)]
+    assert len(built) == 1
 
 
 @pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
